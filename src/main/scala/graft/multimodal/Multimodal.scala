@@ -232,55 +232,16 @@ ph AS (
     * semantics as in SimHash: a pair is lost only when every block it
     * agrees on is degenerate). */
   def phashPairs(spark: SparkSession, dir: String): DataFrame =
-    phashPairsOver(
-      phashOver(Tables.documents(spark, dir)
-        .repartition(spark.sparkContext.defaultParallelism)),
-      PhashBucketCap)
+    phashPairsOver(phashOver(Tables.documents(spark, dir)), PhashBucketCap)
 
-  /** Parameterized core over any (doc_id, phash60) frame (spec drives
-    * it with an adversarial constant-payload corpus and a tiny cap). */
-  private[graft] def phashPairsOver(sh: DataFrame, bucketCap: Int): DataFrame = {
-    val blocks = sh.select(col("doc_id"), col("phash60"),
-      posexplode(expr(
-        """array(phash60 & 4095,
-                 shiftright(phash60, 12) & 4095,
-                 shiftright(phash60, 24) & 4095,
-                 shiftright(phash60, 36) & 4095,
-                 shiftright(phash60, 48) & 4095)"""))
-        .as(Seq("block", "block_bits")))
-    val hot = blocks.groupBy("block", "block_bits")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") > bucketCap)
-      .select("block", "block_bits")
-    val kept = blocks.join(broadcast(hot), Seq("block", "block_bits"), "left_anti")
-    kept.as("a")
-      .join(kept.as("b"),
-        col("a.block") === col("b.block") &&
-          col("a.block_bits") === col("b.block_bits") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        expr("bit_count(a.phash60 ^ b.phash60)").cast("long").as("hamming"))
-      .filter(col("hamming") <= 4)
-      .dropDuplicates("doc_a", "doc_b")
-  }
+  /** Parameterized core over any (doc_id, phash60) frame (BandedPairsSpec
+    * drives it with an adversarial constant-payload corpus and a tiny
+    * cap) — the SimHash pigeonhole banding, shared verbatim. */
+  private[graft] def phashPairsOver(sh: DataFrame, bucketCap: Int): DataFrame =
+    graft.sim.BandedPairs.hamming60Pairs(sh, "phash60", bucketCap)
 
-  val phashPairsSql: String = s"""
-WITH $phashCte,
-blocks AS (
-  SELECT doc_id, phash60, b.block,
-         CASE b.block WHEN 0 THEN phash60 & 4095
-                      WHEN 1 THEN (phash60 >> 12) & 4095
-                      WHEN 2 THEN (phash60 >> 24) & 4095
-                      WHEN 3 THEN (phash60 >> 36) & 4095
-                      ELSE (phash60 >> 48) & 4095 END AS block_bits
-  FROM ph CROSS JOIN (SELECT unnest(generate_series(0, 4)) AS block) b),
-hot AS (SELECT block, block_bits FROM blocks GROUP BY 1, 2 HAVING COUNT(*) > $PhashBucketCap),
-kept AS (SELECT * FROM blocks ANTI JOIN hot USING (block, block_bits))
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(bit_count(xor(a.phash60, b.phash60)) AS BIGINT) AS hamming
-FROM kept a JOIN kept b
-  ON a.block = b.block AND a.block_bits = b.block_bits AND a.doc_id < b.doc_id
-WHERE bit_count(xor(a.phash60, b.phash60)) <= 4"""
+  val phashPairsSql: String = s"WITH $phashCte," +
+    graft.sim.BandedPairs.hamming60PairsSql("ph", "phash60", PhashBucketCap)
 
   val inventory: Map[String, Q] = Map(
     "multimodal_features" -> (mediaFeatures _),

@@ -2,6 +2,8 @@ package graft.orchestrate
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 /** Sequential pipeline orchestration — the reference's step runner
   * (reference: scripts/pipeline_orchestrator.py:46-161): ordered steps,
   * per-step retry x3 with [1,2,4]s backoff, fail-fast on exhaustion, and
@@ -22,7 +24,10 @@ object Orchestrator {
 
   /** Run `steps` in order; each retried up to `maxAttempts` with
     * `sleeper` between attempts (injectable so tests don't sleep).
-    * Fail-fast: the first exhausted step stops the pipeline. */
+    * Fail-fast: the first exhausted step stops the pipeline. Only
+    * non-fatal errors are retried: a fatal one (OutOfMemoryError,
+    * InterruptedException, ...) propagates on its first attempt, since
+    * backing off and re-running cannot help a JVM in that state. */
   def run(steps: Seq[(String, () => Unit)], maxAttempts: Int = 3,
           sleeper: Int => Unit = s => Thread.sleep(s * 1000L)): Report = {
     val t0 = System.nanoTime()
@@ -39,7 +44,7 @@ object Orchestrator {
         attempt += 1
         try { fn(); ok = true; lastErr = None }
         catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             lastErr = Some(e.toString)
             if (attempt < maxAttempts)
               sleeper(Backoff(math.min(attempt - 1, Backoff.size - 1)))

@@ -376,10 +376,21 @@ FROM s GROUP BY bucket"""
     annLshNearDupPairsOver(Tables.embeddings(spark, dir),
       bands, rows, threshold, LshBucketCap)
 
-  /** Core over any (vec_id, embedding) frame — the spec drives it with
-    * an adversarial near-constant corpus and a tiny cap
-    * (AnnLshCapSpec), mirroring the text side's
-    * [[graft.text.TextOps.simhashPairsOverDocs]]. */
+  /** The `bands` bucket keys of a 64-plane SrpSig64 column `sig`: band
+    * b's bucket is the `rows`-bit slice starting at plane b·rows. */
+  private def srpBandKeys(bands: Int, rows: Int): org.apache.spark.sql.Column = {
+    // 1L shift: (1 << 32) == 1 in Int, which would mask every bucket to
+    // 0 and silently degenerate the join to all-pairs; buckets are
+    // BIGINT because rows can legitimately reach 64
+    val mask = if (rows == 64) -1L else (1L << rows) - 1
+    array((0 until bands).map(b => shiftright(col("sig"), b * rows).bitwiseAND(lit(mask))): _*)
+  }
+
+  /** Core over any (vec_id, embedding) frame — AnnLshCapSpec drives
+    * it with an adversarial near-constant corpus and a tiny cap. The
+    * banding is [[BandedPairs.candidates]] over one (vec_id, SrpSig64)
+    * exchange, so the 64-dim arrays are read only by the banding scan
+    * and the rescore side. */
   private[graft] def annLshNearDupPairsOver(e: DataFrame,
                                             bands: Int, rows: Int,
                                             threshold: Double,
@@ -387,47 +398,9 @@ FROM s GROUP BY bucket"""
     require(bands >= 1 && rows >= 1 && bands * rows <= 64,
       s"need bands >= 1, rows >= 1, bands*rows <= 64; got $bands x $rows " +
         "(rows = 0 would mask every bucket to 0 and degenerate to all-pairs)")
-    // repartition: a single-file embeddings input is ONE partition, and
-    // Spark broadcast-joins the (small) build side — leaving the entire
-    // multi-million-pair join output to be computed in a single probe
-    // task (measured: one 350s serial task at the 10× rung). Same
-    // single-file guard as embeddingNearDupPairs / dedupMinhashLsh.
-    //
-    // The signature is computed BELOW that exchange and the vec_id-null
-    // filter (a no-op: vec_id is the collection's primary key, and a
-    // null id could never pair anyway — the candidate join's a.vec_id <
-    // b.vec_id drops it) is made explicit, so the hot-cell count pass
-    // and the kept pair stream consume IDENTICAL (vec_id, sig) rows and
-    // the planner's ReusedExchange collapses them onto ONE scan + ONE
-    // shuffle of 16-byte rows. The previous form scanned + round-robin-
-    // shuffled the full embedding ARRAYS once per branch (hot, kept, and
-    // the rescore side: 3 scans, 3 wide exchanges, SrpSig evaluated
-    // twice) because each branch's column pruning specialized the
-    // exchange subtree past recognition. `hot` counts vec_id — not
-    // lit(1) — for the same reason: pruning the id off the count side
-    // would re-split the shared exchange. §2.3 (shuffle fewer bytes) +
-    // §2.4 (one exchange, reused).
-    val ein = e.filter(col("vec_id").isNotNull)
-      .select(col("vec_id"),
-        graft.functions.SrpSig64.of(col("embedding")).as("sig"))
-      .repartition(e.sparkSession.sparkContext.defaultParallelism)
-    val banded = ein
-      .select(col("vec_id"),
-        explode(sequence(lit(0), lit(bands - 1))).as("band"), col("sig"))
-      .selectExpr("vec_id", "band",
-        // 1L shift: (1 << 32) == 1 in Int, which would mask every bucket
-        // to 0 and silently degenerate the join to all-pairs; bucket is
-        // BIGINT because rows can legitimately reach 64
-        s"cast(shiftright(sig, band * $rows) & ${if (rows == 64) -1L else (1L << rows) - 1} as bigint) as bucket")
-    val hot = banded.groupBy("band", "bucket")
-      .agg(count(col("vec_id")).as("df"))
-      .filter(col("df") > bucketCap)
-      .select("band", "bucket")
-    val kept = banded.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
-    val cand = kept.as("a")
-      .join(kept.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
+    val cand = BandedPairs.candidates(
+      e.select(col("vec_id"), graft.functions.SrpSig64.of(col("embedding")).as("sig")),
+      "vec_id", srpBandKeys(bands, rows), bucketCap)
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
       .distinct()
     // rescore side reads the arrays straight off the source: it joins by
@@ -466,17 +439,17 @@ b AS (
                        * CASE WHEN (CAST(('0x' || substr(md5(CAST(g.band * c.r + j AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 8))::UBIGINT AS BIGINT) & 1) = 1
                               THEN CAST(1 AS BIGINT) ELSE CAST(-1 AS BIGINT) END)) > 0
                 THEN (CAST(1 AS BIGINT) << j) ELSE 0 END)) AS BIGINT) AS bucket
-  FROM n CROSS JOIN cfg c CROSS JOIN g),
-hot AS (SELECT band, bucket FROM b GROUP BY 1, 2 HAVING COUNT(*) > $cap),
-kept AS (SELECT * FROM b ANTI JOIN hot USING (band, bucket)),
-cand AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b2.vec_id AS vec_b
-  FROM kept a JOIN kept b2 ON a.band = b2.band AND a.bucket = b2.bucket AND a.vec_id < b2.vec_id)
-SELECT c.vec_a, c.vec_b,
+  FROM n CROSS JOIN cfg c CROSS JOIN g),${BandedPairs.candidateCtes("b", "vec_id", "vec", cap)}
+${rescoreSql("n", threshold)}"""
+
+  /** The exact-rescore tail shared by both oracle builders: every
+    * `cand` pair joined to `vecs` (vec_id, embedding, nrm) and kept at
+    * integer-quantized cosine ≥ `threshold`. */
+  private def rescoreSql(vecs: String, threshold: Double): String = s"""SELECT c.vec_a, c.vec_b,
        CAST(list_sum(list_transform(generate_series(1, len(x.embedding)),
               i -> ${duckQz("x.embedding[i]")} * ${duckQz("y.embedding[i]")})) AS DOUBLE)
          / (x.nrm * y.nrm) AS cosine
-FROM cand c JOIN n x ON c.vec_a = x.vec_id JOIN n y ON c.vec_b = y.vec_id
+FROM cand c JOIN $vecs x ON c.vec_a = x.vec_id JOIN $vecs y ON c.vec_b = y.vec_id
 WHERE CAST(list_sum(list_transform(generate_series(1, len(x.embedding)),
              i -> ${duckQz("x.embedding[i]")} * ${duckQz("y.embedding[i]")})) AS DOUBLE)
         / (x.nrm * y.nrm) >= $threshold"""
@@ -543,24 +516,9 @@ chosen AS (
                                AND m.mass <= $LshMassTargetPerVec * b.n), $LshMassMaxRows)
          END AS r
   FROM base b),
-kept AS (
-  SELECT bu.vec_id, bu.band, bu.bucket
-  FROM buckets bu
-  JOIN chosen ch ON bu.r = ch.r
-  JOIN cells ce ON ce.r = bu.r AND ce.band = bu.band AND ce.bucket = bu.bucket
-  WHERE ce.c <= $LshBucketCap),
-vecs AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS nrm FROM embeddings),
-cand AS (
-  SELECT DISTINCT a.vec_id AS vec_a, b2.vec_id AS vec_b
-  FROM kept a JOIN kept b2 ON a.band = b2.band AND a.bucket = b2.bucket AND a.vec_id < b2.vec_id)
-SELECT c.vec_a, c.vec_b,
-       CAST(list_sum(list_transform(generate_series(1, len(x.embedding)),
-              i -> ${duckQz("x.embedding[i]")} * ${duckQz("y.embedding[i]")})) AS DOUBLE)
-         / (x.nrm * y.nrm) AS cosine
-FROM cand c JOIN vecs x ON c.vec_a = x.vec_id JOIN vecs y ON c.vec_b = y.vec_id
-WHERE CAST(list_sum(list_transform(generate_series(1, len(x.embedding)),
-             i -> ${duckQz("x.embedding[i]")} * ${duckQz("y.embedding[i]")})) AS DOUBLE)
-        / (x.nrm * y.nrm) >= $threshold"""
+sel AS (SELECT bu.vec_id, bu.band, bu.bucket FROM buckets bu JOIN chosen ch ON bu.r = ch.r),${BandedPairs.candidateCtes("sel", "vec_id", "vec", LshBucketCap)},
+vecs AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS nrm FROM embeddings)
+${rescoreSql("vecs", threshold)}"""
 
   // ------------------------------------------- bounded-state dedup reps
 
@@ -606,19 +564,14 @@ WHERE CAST(list_sum(list_transform(generate_series(1, len(x.embedding)),
       s"need bands >= 1, rows >= 1, bands*rows <= 64; got $bands x $rows")
     val spark = e.sparkSession
     import spark.implicits._
-    val ein = e.repartition(spark.sparkContext.defaultParallelism)
-    val banded = ein
-      .select(col("vec_id"), col("embedding"),
-        graft.functions.SrpSig64.of(col("embedding")).as("sig"))
-      .select(col("vec_id"), col("embedding"),
-        explode(sequence(lit(0), lit(bands - 1))).as("band"), col("sig"))
-      .selectExpr("vec_id", "embedding", "band",
-        s"cast(shiftright(sig, band * $rows) & ${if (rows == 64) -1L else (1L << rows) - 1} as bigint) as bucket")
-    val hot = banded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") > bucketCap)
-      .select("band", "bucket")
-    val kept = banded.join(broadcast(hot), Seq("band", "bucket"), "left_anti")
+    // the per-cell union-find needs every kept row's embedding inside its
+    // cell group, so the arrays ride the banding exchange (the hot-cell
+    // count still reads only (vec_id, sig)): rejoining them to narrow kept
+    // rows would add a second exchange of arrays before the groupByKey
+    val kept = BandedPairs.kept(
+      e.select(col("vec_id"), col("embedding"),
+        graft.functions.SrpSig64.of(col("embedding")).as("sig")),
+      "vec_id", srpBandKeys(bands, rows), bucketCap)
     kept.select(col("band"), col("bucket"), col("vec_id"), col("embedding"))
       .as[(Int, Long, Long, Array[Float])]
       .groupByKey { case (band, bucket, _, _) => (band, bucket) }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Incremental corpus deduplication — the shape that actually runs at
   * 100 TB. Nobody re-minhashes an exabyte-class corpus every time a new
   * crawl increment lands; the corpus is represented by its persisted
-  * MinHash-LSH BAND INDEX — `(band, band_hash)` distinct, a few dozen
+  * MinHash-LSH BAND INDEX — `(band, bucket)` distinct, a few dozen
   * bytes per document instead of its text — and each increment is
   * signed once and probed against that index:
   *
@@ -18,12 +18,12 @@ import org.apache.spark.sql.functions._
   *     operating point and joins the corpus (and its bands join the
   *     index — the index is append-only under ingestion).
   *
-  * Unlike the pairwise candidate join ([[TextOps.minhashPairsOverDocs]]),
+  * Unlike the pairwise candidate join ([[TextOps.dedupMinhashLsh]]),
   * the index probe needs NO bucket cap: the index side is distinct per
-  * `(band, band_hash)`, so the join output is bounded by the increment's
+  * `(band, bucket)`, so the join output is bounded by the increment's
   * own band count (4 rows/doc) however hot the corpus bucket — a
   * membership test, not a pair enumeration. At scale the index is
-  * bucketed/bloom-indexed on `band_hash` so the probe shuffles only the
+  * bucketed/bloom-indexed on `bucket` so the probe shuffles only the
   * increment's signatures; Spark expresses the same join and, when the
   * increment is a daily-sized sliver, broadcasts it.
   *
@@ -53,10 +53,10 @@ object Incremental {
   private[graft] def dedupIncrementalOver(d: DataFrame): DataFrame = {
     val bands = TextOps.minhashBands(d)
     val index = bands.filter(col("doc_id") % 10 < 8)
-      .select("band", "band_hash").distinct()
+      .select("band", "bucket").distinct()
     bands.filter(col("doc_id") % 10 >= 8)
-      .select("doc_id", "band", "band_hash")
-      .join(index.withColumn("hit", lit(1L)), Seq("band", "band_hash"), "left")
+      .select("doc_id", "band", "bucket")
+      .join(index.withColumn("hit", lit(1L)), Seq("band", "bucket"), "left")
       .groupBy("doc_id")
       .agg(sum(coalesce(col("hit"), lit(0L))).as("matched_bands"))
       .select(col("doc_id"), col("matched_bands"),
@@ -65,12 +65,12 @@ object Incremental {
   }
 
   private[text] val dedupIncrementalSql: String = TextOps.minhashBandCtes + """,
-idx AS (SELECT DISTINCT band, band_hash FROM bands WHERE doc_id % 10 < 8),
-inc AS (SELECT doc_id, band, band_hash FROM bands WHERE doc_id % 10 >= 8)
+idx AS (SELECT DISTINCT band, bucket FROM bands WHERE doc_id % 10 < 8),
+inc AS (SELECT doc_id, band, bucket FROM bands WHERE doc_id % 10 >= 8)
 SELECT inc.doc_id,
        CAST(SUM(CASE WHEN idx.band IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS matched_bands,
        CAST(SUM(CASE WHEN idx.band IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) = 0 AS is_novel
-FROM inc LEFT JOIN idx ON inc.band = idx.band AND inc.band_hash = idx.band_hash
+FROM inc LEFT JOIN idx ON inc.band = idx.band AND inc.bucket = idx.bucket
 GROUP BY inc.doc_id
 ORDER BY doc_id"""
 

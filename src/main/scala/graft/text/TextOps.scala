@@ -830,7 +830,7 @@ FROM c"""
           array_min(transform($shinglesE,
             s -> cast(conv(substr(md5(concat(cast(i as string), ':', s)), 1, 14), 16, 10) as bigint))))"""
 
-  /** Size cap for a MinHash (band, band_hash) bucket — the
+  /** Size cap for a MinHash (band, bucket) cell — the
     * [[SimhashBucketCap]] posture applied to the wide-hash bands. A
     * MinHash band hash carries 4×56 bits, so unlike the 6-7-bit simhash
     * blocks a hot bucket here means MANY DOCUMENTS WITH THE SAME BAND
@@ -843,7 +843,7 @@ FROM c"""
     * on is hot; such piles are [[dedupExact]] / [[dedupClusters]]
     * territory (the members are near-clones of each other by
     * construction — wide-hash band equality certifies it), not pairwise
-    * enumeration territory. Mirrored in the oracle via a placeholder. */
+    * enumeration territory. Mirrored in the oracle's candidate CTEs. */
   val MinhashBandCap = 200
 
   /** MinHash + LSH near-duplicate candidates: 16 minhashes → 4 bands of 4
@@ -852,62 +852,42 @@ FROM c"""
     * matching signature positions. Fully oracle-verified (hashes are
     * md5-derived in both engines). */
   def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame =
-    // repartition: the single-file input would otherwise compute every
-    // signature on one core
-    minhashPairsOverDocs(
-      docs(spark, dir).repartition(spark.sparkContext.defaultParallelism),
-      MinhashBandCap)
+    minhashPairsOverDocs(docs(spark, dir), MinhashBandCap)
 
-  /** (doc_id, mhs, band, band_hash) rows — one per LSH band per doc with
-    * ≥ 3 tokens: the shared signature→band projection behind both the
-    * full pairwise candidate join ([[minhashPairsOverDocs]]) and the
-    * incremental corpus-index membership probe
-    * ([[Incremental.dedupIncremental]]). */
-  private[text] def minhashBands(d: DataFrame): DataFrame = {
-    val sigs = d
-      .filter(expr(s"size($toksE)") >= 3)
-      .select(col("doc_id"), shinglesNative.as("sh"))
-      .select(col("doc_id"),
-        graft.functions.MinHashSig.signatureOf("sh").as("mhs"))
-    sigs.select(
-      col("doc_id"), col("mhs"),
-      posexplode(expr(
-        "transform(sequence(0, 3), b -> md5(concat_ws(',', transform(slice(mhs, b * 4 + 1, 4), x -> cast(x as string)))))"))
-        .as(Seq("band", "band_hash")))
-  }
-
-  /** Parameterized core over any (doc_id, text) frame — the spec drives
-    * it with an adversarial single-signature corpus and a tiny cap
-    * (MinhashCapSpec), mirroring [[simhashPairsOverDocs]]. Carrying mhs
-    * through the band join (instead of joining sigs back per side)
-    * evaluates the md5 signature subtree once per side instead of three
-    * times; graft.functions.MinHashSig is the compiled twin of the
+  /** (doc_id, mhs) for every doc with ≥ 3 tokens: the 16-hash signature.
+    * graft.functions.MinHashSig is the compiled twin of the
     * higher-order-function formulation in [[minhashE]] (kept above as
     * the executable spec) — same md5-derived values, ~4x faster. */
-  private[graft] def minhashPairsOverDocs(d: DataFrame, bucketCap: Int): DataFrame = {
-    val bands = minhashBands(d)
-    val hot = bands.groupBy("band", "band_hash")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") > bucketCap)
-      .select("band", "band_hash")
-    val kept = bands.join(broadcast(hot), Seq("band", "band_hash"), "left_anti")
-    kept.as("a")
-      .join(kept.as("b"),
-        col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash")
-          && col("a.doc_id") < col("b.doc_id"))
-      // score BEFORE deduplicating the multi-band candidates: a pair's
-      // est_jaccard is the same from whichever band certified it, so
-      // max() over the pair group is the one shared value — and unlike
-      // the previous dropDuplicates (a first() over the carried mhs
-      // ARRAYS, not hash-aggregatable → two SortAggregate passes with
-      // 2×16-long rows through the exchange), a (long, long, double)
-      // HashAggregate combines map-side and shuffles 8-byte scores
+  private def minhashSigs(d: DataFrame): DataFrame =
+    d.filter(expr(s"size($toksE)") >= 3)
+      .select(col("doc_id"), shinglesNative.as("sh"))
+      .select(col("doc_id"), graft.functions.MinHashSig.signatureOf("sh").as("mhs"))
+
+  /** The 4 band hashes of `mhs`: md5 over each run of 4 minhashes. */
+  private val minhashBandKeys: org.apache.spark.sql.Column = expr(
+    "transform(sequence(0, 3), b -> md5(concat_ws(',', transform(slice(mhs, b * 4 + 1, 4), x -> cast(x as string)))))")
+
+  /** (doc_id, mhs, band, bucket) rows — one per LSH band per doc with
+    * ≥ 3 tokens: the signature→band projection behind the incremental
+    * corpus-index membership probe ([[Incremental.dedupIncremental]]). */
+  private[text] def minhashBands(d: DataFrame): DataFrame =
+    graft.sim.BandedPairs.banded(minhashSigs(d), minhashBandKeys)
+
+  /** Parameterized core over any (doc_id, text) frame — BandedPairsSpec
+    * drives it with an adversarial single-signature corpus and a tiny
+    * cap. The pair is scored BEFORE deduplicating the multi-band
+    * candidates: a pair's est_jaccard is the same from whichever band
+    * certified it, so max() over the pair group is the one shared value,
+    * and a (long, long, double) HashAggregate combines map-side and
+    * shuffles 8-byte scores (a first() over the carried mhs ARRAYS is
+    * not hash-aggregatable). */
+  private[graft] def minhashPairsOverDocs(d: DataFrame, bucketCap: Int): DataFrame =
+    graft.sim.BandedPairs.candidates(minhashSigs(d), "doc_id", minhashBandKeys, bucketCap)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         (expr("size(filter(zip_with(a.mhs, b.mhs, (x, y) -> x = y), v -> v))").cast("double")
           / lit(16.0)).as("est_jaccard"))
       .groupBy("doc_a", "doc_b")
       .agg(max(col("est_jaccard")).as("est_jaccard"))
-  }
 
   /** Shared DuckDB CTE block reproducing [[minhashBands]]'s
     * tokens → shingles → 16-hash signature → 4 band hashes, used by both
@@ -924,21 +904,14 @@ mh AS (SELECT doc_id,
                   s -> CAST(('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || s), 1, 14))::UBIGINT AS BIGINT)))) AS mhs
        FROM shl),
 bands AS (SELECT doc_id, b.b AS band,
-                 md5(array_to_string(list_transform(mhs[b.b*4+1:b.b*4+4], x -> CAST(x AS VARCHAR)), ',')) AS band_hash
+                 md5(array_to_string(list_transform(mhs[b.b*4+1:b.b*4+4], x -> CAST(x AS VARCHAR)), ',')) AS bucket
           FROM mh CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS b) b)"""
 
-  private val dedupMinhashLshSqlRaw: String = minhashBandCtes + """,
-hot AS (SELECT band, band_hash FROM bands GROUP BY 1, 2 HAVING COUNT(*) > __MINHASH_CAP__),
-kept AS (SELECT * FROM bands ANTI JOIN hot USING (band, band_hash)),
-cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         FROM kept a JOIN kept b
-           ON a.band = b.band AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id)
+  val dedupMinhashLshSql: String = minhashBandCtes + "," +
+    graft.sim.BandedPairs.candidateCtes("bands", "doc_id", "doc", MinhashBandCap) + """
 SELECT doc_a, doc_b,
        CAST(len(list_filter(list_transform(generate_series(1, 16), i -> x.mhs[i] = y.mhs[i]), v -> v)) AS DOUBLE) / 16.0 AS est_jaccard
 FROM cand JOIN mh x ON doc_a = x.doc_id JOIN mh y ON doc_b = y.doc_id"""
-
-  val dedupMinhashLshSql: String =
-    dedupMinhashLshSqlRaw.replace("__MINHASH_CAP__", MinhashBandCap.toString)
 
   /** Pairs at or above this estimated Jaccard count as near-dups in the
     * cross-source matrix (8 of 16 minhashes agreeing). */
@@ -1032,41 +1005,17 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
   val SimhashBucketCap = 200
 
   def dedupSimhashPairs(spark: SparkSession, dir: String): DataFrame =
-    simhashPairsOverDocs(
-      docs(spark, dir).repartition(spark.sparkContext.defaultParallelism),
-      SimhashBucketCap)
+    simhashPairsOverDocs(docs(spark, dir), SimhashBucketCap)
 
-  /** Parameterized core over any (doc_id, text) frame — the spec drives
-    * it with an adversarial single-simhash corpus and a tiny cap
-    * (SimhashCapSpec), mirroring [[jaccardPairsOverShingles]]. */
-  private[graft] def simhashPairsOverDocs(d: DataFrame, bucketCap: Int): DataFrame = {
-    val sh = d.select(col("doc_id"),
-      graft.functions.SimHashSig.of(expr(contentToksE)).as("simhash60"))
-    // blocks: five exact 12-bit slices [0-11], [12-23], ..., [48-59]
-    val blocks = sh.select(col("doc_id"), col("simhash60"),
-      posexplode(expr(
-        """array(simhash60 & 4095,
-                 shiftright(simhash60, 12) & 4095,
-                 shiftright(simhash60, 24) & 4095,
-                 shiftright(simhash60, 36) & 4095,
-                 shiftright(simhash60, 48) & 4095)"""))
-        .as(Seq("block", "block_bits")))
-    val hot = blocks.groupBy("block", "block_bits")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") > bucketCap)
-      .select("block", "block_bits")
-    val kept = blocks.join(broadcast(hot), Seq("block", "block_bits"), "left_anti")
-    kept.as("a")
-      .join(kept.as("b"),
-        col("a.block") === col("b.block") && col("a.block_bits") === col("b.block_bits")
-          && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        expr("bit_count(a.simhash60 ^ b.simhash60)").cast("long").as("hamming"))
-      .filter(col("hamming") <= 4)
-      .dropDuplicates("doc_a", "doc_b")
-  }
+  /** Parameterized core over any (doc_id, text) frame — BandedPairsSpec
+    * drives it with an adversarial single-simhash corpus and a tiny cap;
+    * the pigeonhole banding is [[graft.sim.BandedPairs.hamming60Pairs]],
+    * shared with the pHash pairs. */
+  private[graft] def simhashPairsOverDocs(d: DataFrame, bucketCap: Int): DataFrame =
+    graft.sim.BandedPairs.hamming60Pairs(d.select(col("doc_id"),
+      graft.functions.SimHashSig.of(expr(contentToksE)).as("simhash60")), "simhash60", bucketCap)
 
-  private val dedupSimhashPairsSqlRaw: String = """
+  val dedupSimhashPairsSql: String = """
 WITH tok AS (SELECT doc_id,
              list_filter(regexp_split_to_array(trim(text), '\s+'),
                          t -> t NOT IN ('the', 'a', 'of', 'and', 'to', 'in', 'is', 'it')) AS w
@@ -1079,25 +1028,7 @@ sh AS (SELECT doc_id,
                 CASE WHEN list_sum(list_transform(harr, h ->
                             CASE WHEN (h >> j) & 1 = 1 THEN 1 ELSE -1 END)) > 0
                      THEN (CAST(1 AS BIGINT) << j) ELSE CAST(0 AS BIGINT) END)) AS BIGINT) AS simhash60
-       FROM hs),
-blocks AS (
-  SELECT doc_id, simhash60, b.block,
-         CASE b.block WHEN 0 THEN simhash60 & 4095
-                      WHEN 1 THEN (simhash60 >> 12) & 4095
-                      WHEN 2 THEN (simhash60 >> 24) & 4095
-                      WHEN 3 THEN (simhash60 >> 36) & 4095
-                      ELSE (simhash60 >> 48) & 4095 END AS block_bits
-  FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 4)) AS block) b),
-hot AS (SELECT block, block_bits FROM blocks GROUP BY 1, 2 HAVING COUNT(*) > __SIMHASH_CAP__),
-kept AS (SELECT * FROM blocks ANTI JOIN hot USING (block, block_bits))
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(bit_count(xor(a.simhash60, b.simhash60)) AS BIGINT) AS hamming
-FROM kept a JOIN kept b
-  ON a.block = b.block AND a.block_bits = b.block_bits AND a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash60, b.simhash60)) <= 4"""
-
-  val dedupSimhashPairsSql: String =
-    dedupSimhashPairsSqlRaw.replace("__SIMHASH_CAP__", SimhashBucketCap.toString)
+       FROM hs),""" + graft.sim.BandedPairs.hamming60PairsSql("sh", "simhash60", SimhashBucketCap)
 
   // -------------------------------------------- BPE merge-pair mining
 

@@ -5,16 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** The perceptual-hash (dHash) payload dedup: gradient-sign hashing of
   * the strided thumbnail, pigeonhole banding for candidates, exact
-  * Hamming verify — and the bucket cap as the low-entropy safety valve
-  * (the SimhashCapSpec posture applied to the multimodal family). */
+  * Hamming verify (the bucket cap is covered with the other banded
+  * families in BandedPairsSpec). */
 class PhashSpec extends SparkSpec {
   import spark.implicits._
-
-  // payload long enough for the 8×8 grid; varied bytes so the gradient
-  // signs carry entropy
-  private def payload(seed: Int): String =
-    (0 until 96).map(i => ('a' + ((i * 7 + seed * 13 + i * i * seed) % 26)).toChar)
-      .mkString
+  import PhashSpec.payload
 
   test("identical payloads hash identically and pair at Hamming 0") {
     val d = Seq(
@@ -72,22 +67,6 @@ class PhashSpec extends SparkSpec {
     assert(mismatches == 0L)
   }
 
-  test("bucket cap keeps a constant-payload pile from exploding the join") {
-    // 150 identical payloads: every block bucket is hot; with a small
-    // cap the pile drops wholesale while a distinct small pair survives
-    val pile = (1 to 150).map(i => (i.toLong, payload(2)))
-    val other = Seq((301L, payload(6)), (302L, payload(6)))
-    val d = (pile ++ other).toDF("doc_id", "text")
-    val sh = Multimodal.phashOver(d)
-    val uncapped = Multimodal.phashPairsOver(sh, Int.MaxValue).count()
-    assert(uncapped > 11000, s"expected ~C(150,2)+1 uncapped, got $uncapped")
-    val capped = Multimodal.phashPairsOver(sh, 50).collect()
-    assert(capped.length < 50, s"cap did not bound the join: ${capped.length}")
-    assert(capped.exists(r =>
-      r.getLong(0) == 301L && r.getLong(1) == 302L && r.getLong(2) == 0L),
-      "the non-hot duplicate pair must still be found")
-  }
-
   test("generated media piles land within Hamming 4 and the pair detector recalls them") {
     // the planted-near-dup contract of DataGen's media piles (ids
     // [b+10, b+13) per 50): each member's dHash sits within Hamming <=
@@ -113,4 +92,12 @@ class PhashSpec extends SparkSpec {
       assert(pairs.contains((b, m)), s"planted pair ($b, $m) not recalled")
     }
   }
+}
+
+object PhashSpec {
+  // payload long enough for the 8×8 grid; varied bytes so the gradient
+  // signs carry entropy
+  def payload(seed: Int): String =
+    (0 until 96).map(i => ('a' + ((i * 7 + seed * 13 + i * i * seed) % 26)).toChar)
+      .mkString
 }

@@ -33,6 +33,16 @@ class PipelineSpec extends SparkSpec {
     assert(json.contains("\"status\":\"failed\"") && json.contains("never_runs"))
   }
 
+  test("orchestrator propagates a fatal error on its first attempt") {
+    var calls = 0
+    val sleeps = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val err = intercept[OutOfMemoryError](Orchestrator.run(
+      Seq("oom" -> (() => { calls += 1; throw new OutOfMemoryError("heap") })),
+      sleeper = sleeps += _))
+    assert(err.getMessage == "heap")
+    assert(calls == 1 && sleeps.isEmpty)
+  }
+
   test("csv round-trip with explicit schema") {
     val dir = Files.createTempDirectory("graft_csv").toString
     val df = Tables.nation(spark, sf)

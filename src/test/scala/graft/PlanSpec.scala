@@ -404,20 +404,29 @@ class PlanSpec extends SparkSpec {
     try physicalPlan(build) finally spark.conf.set(key, prev)
   }
 
-  test("ann_lsh pair core: one shared banding exchange, two embeddings scans") {
+  test("banded pair cores: one shared banding exchange, one signature evaluation") {
     // hot-cell counting and the kept pair stream must consume the SAME
-    // (vec_id, sig) exchange (ReusedExchange) — the pre-r17 shape
-    // scanned and round-robin-shuffled the full embedding arrays once
-    // per branch (3 scans, 3 wide exchanges, SrpSig evaluated twice).
-    // Only the banding pass and the rescore side may read the source.
-    Seq("ann_lsh_near_dup_pairs_demo", "ann_lsh_dedup_pairs_t45").foreach { name =>
+    // narrow (id, sig) exchange (ReusedExchange) — the pre-shared shape
+    // scanned and round-robin-shuffled the full source rows once per
+    // branch and evaluated the signature in every branch (minhashsig 3
+    // operators, simhashsig and dhash60 4, srpsig64 2). Only the banding
+    // pass may read the source, plus ANN's rescore side.
+    Seq(
+      // (op, source table, max source scans, signature expression)
+      ("dedup_minhash_lsh", "documents", 1, "minhashsig"),
+      ("dedup_simhash_pairs", "documents", 1, "simhashsig"),
+      ("multimodal_phash_pairs", "documents", 1, "dhash60"),
+      ("ann_lsh_near_dup_pairs_demo", "embeddings", 2, "srpsig64"),
+      ("ann_lsh_dedup_pairs_t45", "embeddings", 2, "srpsig64")
+    ).foreach { case (name, table, maxScans, sig) =>
       val plan = staticPlan(SparkEntry.queries(name)(spark, sf))
-      val scans = plan.linesIterator.count(l =>
-        l.contains("FileScan") && l.contains("embeddings"))
-      assert(scans <= 2,
-        s"$name reads embeddings $scans times (banding exchange not shared):\n${plan.take(3000)}")
+      val scans = plan.linesIterator.count(l => l.contains("FileScan") && l.contains(table))
+      assert(scans >= 1 && scans <= maxScans,
+        s"$name reads $table $scans times (banding exchange not shared):\n${plan.take(3000)}")
       assert(plan.contains("ReusedExchange"),
         s"$name lost the shared banding exchange:\n${plan.take(3000)}")
+      val sigOps = plan.linesIterator.count(_.contains(s"$sig("))
+      assert(sigOps == 1, s"$name evaluates $sig in $sigOps operators:\n${plan.take(3000)}")
     }
   }
 

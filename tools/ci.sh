@@ -4,7 +4,9 @@
 # -> DDL -> generate -> ingest -> transform -> load -> pytest -> row
 # sanity). Here the stages are: compile -> full test suite -> oracle
 # correctness gate at sf0.01 (every registered query vs DuckDB) -> one
-# end-to-end Pipeline smoke run. Nonzero exit on any failure.
+# end-to-end Pipeline smoke run -> benchmark self-test (every benchmarked
+# op's output hash against perfbench/expected.json). Nonzero exit on any
+# failure.
 #
 # Usage: tools/ci.sh [sfDir]   (default /root/testdata/sf0.01)
 set -euo pipefail
@@ -14,19 +16,25 @@ SF="${1:-/root/testdata/sf0.01}"
 WORK="$(mktemp -d /tmp/graft-ci.XXXXXX)"
 trap 'rm -rf "$WORK"' EXIT
 
-echo "== [1/4] compile =="
+echo "== [1/5] compile =="
 sbt -batch compile Test/compile
 
-echo "== [2/4] test suite =="
+echo "== [2/5] test suite =="
 sbt -batch test
 
-echo "== [3/4] oracle correctness gate ($SF) =="
+echo "== [3/5] oracle correctness gate ($SF) =="
 sbt -batch "runMain graft.Verify $SF $WORK/verify"
 # check.py exits nonzero on any FAIL line (set -e propagates it)
 python3 tools/check.py "$SF" "$WORK/verify"
 
-echo "== [4/4] pipeline smoke run =="
+echo "== [4/5] pipeline smoke run =="
 sbt -batch "runMain graft.Pipeline $SF $WORK/pipeline"
 test -s "$WORK/pipeline/pipeline_execution_report.json"
+
+echo "== [5/5] benchmark self-test =="
+# Both benchmark workloads briefly, every output checked against the
+# recorded DuckDB hashes: a refactor that changes a benchmarked op's
+# result fails here, not only in a full benchmark run.
+python3 perfbench/run.py --selftest
 
 echo "CI OK"
