@@ -6,6 +6,9 @@ import graft.sources.Sources
 import graft.warehouse.Scd2
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 class PipelineSpec extends SparkSpec {
 
@@ -41,6 +44,60 @@ class PipelineSpec extends SparkSpec {
       sleeper = sleeps += _))
     assert(err.getMessage == "heap")
     assert(calls == 1 && sleeps.isEmpty)
+  }
+
+  test("fan-out: a failed job surfaces after its slow sibling, then the step retries") {
+    var attempt = 0
+    val slowDone = new AtomicInteger
+    val sleeps = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val r = Orchestrator.run(
+      Seq("step" -> { () =>
+        attempt += 1
+        Orchestrator.fanOut(spark, "step", Seq(
+          "fails" -> { () => if (attempt < 3) sys.error("boom") },
+          "slow" -> { () => Thread.sleep(300); slowDone.incrementAndGet(); () }))
+      }),
+      // the retry's backoff starts only once the failed attempt's slow
+      // job has finished writing
+      sleeper = { s => assert(slowDone.get == attempt); sleeps += s })
+    assert(r.status == "success" && r.steps.head.attempts == 3)
+    assert(sleeps.toSeq == Seq(1, 2) && slowDone.get == 3)
+    // the first failure in job order is thrown as itself, the others
+    // ride along as suppressed
+    val err = intercept[IllegalStateException](Orchestrator.fanOut(spark, "step", Seq(
+      "a" -> (() => throw new IllegalStateException("a")),
+      "b" -> (() => throw new IllegalArgumentException("b")))))
+    assert(err.getMessage == "a" && err.getSuppressed.map(_.getMessage).toSeq == Seq("b"))
+  }
+
+  test("fan-out: a fatal error in a job propagates as itself on the first attempt") {
+    var calls = 0
+    val sleeps = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val err = intercept[OutOfMemoryError](Orchestrator.run(
+      Seq("oom" -> { () =>
+        calls += 1
+        Orchestrator.fanOut(spark, "oom", Seq(
+          "fails" -> (() => sys.error("boom")),
+          "heap" -> (() => throw new OutOfMemoryError("heap"))))
+      }),
+      sleeper = sleeps += _))
+    assert(err.getMessage == "heap" && err.getSuppressed.map(_.getMessage).toSeq == Seq("boom"))
+    assert(calls == 1 && sleeps.isEmpty)
+  }
+
+  test("fan-out: jobs run concurrently, each under its <step>/<output> description") {
+    val latch = new CountDownLatch(2)
+    val seen = new ConcurrentLinkedQueue[String]
+    Orchestrator.fanOut(spark, "meet", Seq("a", "b").map { n =>
+      n -> { () =>
+        latch.countDown()
+        // a job run alone would wait out the timeout and fail the test
+        assert(latch.await(60, TimeUnit.SECONDS), s"job $n never met its sibling")
+        seen.add(spark.sparkContext.getLocalProperty("spark.job.description"))
+        ()
+      }
+    })
+    assert(seen.asScala.toSet == Set("meet/a", "meet/b"))
   }
 
   test("csv round-trip with explicit schema") {
@@ -181,8 +238,24 @@ class PipelineSpec extends SparkSpec {
       "cleanse_production", "quality_checks", "load_warehouse", "analytics",
       "monitoring", "curate_corpus", "retention_cleanup"))
     assert(new java.io.File(s"$out/quality/quality_report.json").exists())
-    assert(spark.read.parquet(s"$out/warehouse/fact_sales").count() > 0)
-    assert(new java.io.File(s"$out/analytics/q01_top_products").exists())
+    // every output the concurrent writes produce landed, with rows: a
+    // silently dropped write fails here
+    val outputs =
+      graft.analytics.Analytics.inventory.keys.map(k => s"analytics/$k" -> "csv") ++
+        (graft.warehouse.WarehouseQueries.inventory.keys.map("warehouse/" + _) ++
+          Seq("customers", "products", "lineitems").map("production/" + _) ++
+          Seq("volume_anomaly", "freshness").map("monitoring/" + _) ++
+          Seq("quality/checks", "streaming/events", "corpus")).map(_ -> "parquet")
+    assert(outputs.size == 28)
+    outputs.foreach { case (rel, format) =>
+      assert(new java.io.File(s"$out/$rel").isDirectory, s"$rel missing")
+      val rows = spark.read.format(format).option("header", "true").load(s"$out/$rel").count()
+      assert(rows > 0, s"$rel is empty")
+    }
+    val loadStatus = "\"status\":\"(\\w+)\"".r.findAllMatchIn(new String(
+      Files.readAllBytes(java.nio.file.Paths.get(s"$out/warehouse/load_report.json"))))
+      .map(_.group(1)).toSeq
+    assert(loadStatus.size == 5 && loadStatus.forall(_ == "loaded"), loadStatus)
 
     // streaming stage landed every distinct event exactly once …
     val landed = spark.read.parquet(s"$out/streaming/events")

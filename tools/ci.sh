@@ -30,6 +30,16 @@ python3 tools/check.py "$SF" "$WORK/verify"
 echo "== [4/5] pipeline smoke run =="
 sbt -batch "runMain graft.Pipeline $SF $WORK/pipeline"
 test -s "$WORK/pipeline/pipeline_execution_report.json"
+# the run succeeded and every warehouse table loaded its source's rows
+python3 - "$WORK/pipeline" <<'PY'
+import json, sys
+out = sys.argv[1]
+report = json.load(open(f"{out}/pipeline_execution_report.json"))
+assert report["status"] == "success", f"pipeline status {report['status']}"
+loads = json.load(open(f"{out}/warehouse/load_report.json"))
+bad = {t: v["status"] for t, v in loads.items() if v["status"] != "loaded"}
+assert loads and not bad, f"warehouse load report: {bad or 'empty'}"
+PY
 
 echo "== [5/5] benchmark self-test =="
 # Both benchmark workloads briefly, every output checked against the
