@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times the 10 headline analytics queries (the set
-  * BASELINE.md measures) at SPARK_GRAFT_SF_DIR and prints one JSON line.
-  * A single warm-up run of q01 first amortizes JVM/codegen startup, like
-  * the baseline's warm local DB.
+  * BASELINE.md measures) plus the extension-operator roster at
+  * SPARK_GRAFT_SF_DIR and prints one JSON line. Every timed op goes
+  * through [[measure]] after [[warmUp]] passes, like the baseline's warm
+  * local DB.
   */
 object Bench {
   val headline: Seq[String] = Seq(
@@ -14,65 +15,78 @@ object Bench {
     "q07_customer_ltv", "q08_product_profitability", "q09_dow_pattern",
     "q10_discount_impact")
 
+  /** The extension-operator roster (dedup, ANN, text, curation, temporal):
+    * timed in Bench's ext pass, and the `ext`/`listing` classes of
+    * [[SparkEntry.rosterClass]]. */
+  val extOps: Seq[String] = Seq(
+    "dedup_exact", "dedup_minhash_lsh", "dedup_simhash_pairs",
+    "dedup_clusters", "ann_cosine_topk", "ann_lsh_buckets",
+    "ann_lsh_near_dup_pairs_demo", "ann_lsh_dedup_pairs", "ann_dedup_reps",
+    "ivf_search",
+    "text_stats", "corpus_curation", "quantiles_line_total",
+    "asof_click_attribution", "range_join_click_purchase",
+    "doc_fingerprint_winnow", "winnow_overlap_pairs",
+    "dedup_canonical", "heavy_hitter_ngrams", "bloom_decontamination",
+    "chunk_documents", "events_type_transitions", "cdc_orders_diff",
+    "ivm_daily_sales", "bm25_search", "rfm_segments", "basket_pairs",
+    "events_active_users", "embedding_drift",
+    "pq_search", "pq_search_rerank", "ivfpq_search", "fuzzy_name_pairs",
+    "token_budget_exact", "pagerank_nation_trade", "scd2_pit_orders",
+    "monitor_seasonal_anomaly",
+    "ivf_delta_assign", "hybrid_rrf_search",
+    "stratified_sample_exact", "pii_referential_rollup",
+    // the output-bounded dedup-family rollups: the rows a 300× rung runs
+    // where the pair LISTING's collect can't
+    "ann_dedup_pair_stats", "ann_dedup_cluster_hist",
+    "multimodal_phash_pairs",
+    "dedup_containment_pairs", "semantic_dedup_reps",
+    // the DOULION-sampled census is the exact census's scale-path twin;
+    // the exact census is an eval row (SparkEntry.evalOnly), which never
+    // rides a rung
+    "triangle_doulion_copurchase",
+    "hybrid_rerank_search", "dedup_stream_phash", "bpe_merge_pairs",
+    "bpe_train_merges", "bpe_token_histogram",
+    "bpe_source_token_accounting",
+    "contrastive_triples",
+    "length_bucket_batches",
+    "cluster_balanced_sample",
+    "dedup_source_matrix",
+    "pack_sequences_bpe",
+    // the warehouse aggregate tables: timed so their collapse grains
+    // (no COUNT(DISTINCT) Expand) are measured, not only plan-dumped
+    "agg_daily_sales", "agg_product_performance", "agg_customer_metrics",
+    "bpe_merge_drift")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle sizing is per-DATA, not per-core: at bench scale (~600k
-    // fact rows, ~15 MB cached) 8 partitions keeps ~75k rows/partition;
-    // 32 just multiplies task-scheduling overhead (measured 0.71s→0.34s
-    // per shuffle query). AQE off for the same reason — its extra stage
-    // materializations cost ~0.2s/query here. A cluster run at real
-    // scale flips both: partitions sized to ~64-128 MB of shuffle data,
-    // AQE on for skew splits and runtime coalescing.
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8")
-    // the shared local profile (Sessions.local) — one place for the
-    // AQE-off/compression-off/locality-wait tuning story.
-    // SPARK_GRAFT_AQE=1 switches to the ladder profile (AQE coalescing
-    // from a high initial partition count — ONE config honest at every
-    // rung, replacing the per-rung SPARK_GRAFT_SHUFFLE guesswork).
-    val spark = Sessions.local(cores = cpus.toInt,
-      shufflePartitions = shufflePartitions.toInt,
-      adaptive = sys.env.get("SPARK_GRAFT_AQE").contains("1"))
-    spark.sparkContext.setLogLevel("WARN")
-    Sessions.muteBoundedWindowWarning() // setLogLevel rewrites all logger configs
+    // Sessions.fromEnv: 8 shuffle partitions and AQE off (its extra stage
+    // materializations cost ~0.2s/query at bench scale); SPARK_GRAFT_AQE=1
+    // switches to the ladder profile. A cluster run at real scale flips
+    // both (Sessions.clusterDefaults).
+    val spark = Sessions.fromEnv()
 
     val qs = headline.filter(SparkEntry.queries.contains)
     // Warm-up: materialize the star schema once (the reference times its
     // queries against a pre-loaded warehouse, generate_analytics.py:20-24)
-    // and run each query once so JIT/codegen is steady-state — the
-    // baseline's numbers are from a warm local DB (BASELINE.md).
+    // and run each query so JIT/codegen is steady-state — the baseline's
+    // numbers are from a warm local DB (BASELINE.md). 4 passes: C2 JIT of
+    // the generated code needs several executions to reach steady state
+    // (measured: pass 1 ≈ 2-3× pass 5).
     try {
       warehouse.Warehouse.fact(spark, sfDir).count()
       warehouse.Warehouse.dimDate(spark, sfDir).count()
       warehouse.Warehouse.dimCustomer(spark, sfDir).count()
       warehouse.Warehouse.dimPayment(spark, sfDir).count()
-      // 4 passes: C2 JIT of the generated code needs several executions
-      // to reach steady state (measured: pass 1 ≈ 2-3× pass 5). Per-query
-      // try: one failing query must not leave the REST of the warm-up
-      // unrun (they'd be measured cold and read as regressions).
-      (1 to 4).foreach(_ =>
-        qs.foreach(q =>
-          try SparkEntry.queries(q)(spark, sfDir).collect()
-          catch {
-            // warm-up only: the failure will surface as -1 in the timed
-            // pass below, but log it so warm-up problems are visible
-            case e: Throwable =>
-              System.err.println(s"[bench] warm-up $q failed: ${e.getClass.getName}: ${e.getMessage}")
-          }))
-      System.gc() // drain warm-up garbage so GC pauses don't land in the timed pass
+      warmUp(spark, sfDir, qs, passes = 4, label = "warm-up")
     } catch {
       case e: Throwable => // fact/dim materialization above
         System.err.println(s"[bench] warm-up failed: ${e.getClass.getName}: ${e.getMessage}")
     }
 
-    // Timed pass: MEDIAN of 5 consecutive runs per query with the
-    // relative spread (max-min)/median alongside — the BenchExt
-    // methodology, adopted for the headline artifact too: best-of-3
-    // systematically flatters and was measured drifting 2-4× against
-    // the committed median artifacts, making round-over-round per-query
-    // deltas unreadable. A failing query must not record a near-zero
-    // time and silently improve the total: emit -1 for it, count it,
-    // and exit nonzero.
+    // Timed pass: [[measure]]'s median of 5 runs per query with the
+    // relative spread alongside. A failing query must not record a
+    // near-zero time and silently improve the total: emit -1 for it,
+    // count it, and exit nonzero.
     // Output row count rides along (free — the timed pass collects
     // anyway): at scale the interesting failures are output-cardinality
     // cliffs, not slow scans — e.g. a capped bucket join silently
@@ -80,58 +94,29 @@ object Bench {
     // 14× "speed-up" unless the artifact shows the rows went to zero.
     def timed(name: String): (String, Double, Double, Long) =
       try {
-        // drain the PREVIOUS op's garbage before timing this one: a
-        // pair-listing op that collects millions of rows (9.9M for
-        // ann_lsh_dedup_pairs at the 100x rung) leaves the old gen full,
-        // and without this the NEXT three ops in sequence measured 3-5x
-        // their fresh-JVM cost — a sick-JVM artifact misattributed to
-        // the ops (text_stats read as 10x superlinear; it is exactly
-        // linear). The pause lands outside the timed window.
-        System.gc()
-        var rows = 0L
-        val runs = (1 to TimedRuns).map { _ =>
-          val t0 = System.nanoTime()
-          rows = SparkEntry.queries(name)(spark, sfDir).collect().length.toLong
-          (System.nanoTime() - t0) / 1e9
-        }
-        val med = median(runs)
-        (name, med, (runs.max - runs.min) / med, rows)
+        val (med, spread, rows) =
+          measure(TimedRuns)(SparkEntry.queries(name)(spark, sfDir).collect().length.toLong)
+        (name, med, spread, rows)
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
           (name, -1.0, 0.0, -1L)
       }
     val results = qs.map(timed)
-    // Extension-operator pass (dedup/ANN/text/curation/temporal): folded
-    // into the same artifact so a regression in the native expressions
-    // (WordShingles/MinHashSig/SimHashSig/SrpSig/QDot/TopKBy) is caught
-    // round-over-round, not only in the dev-tool BenchExt run. "value"
+    // Extension-operator pass: folded into the same artifact so a
+    // regression in the native expressions (WordShingles/MinHashSig/
+    // SimHashSig/SrpSig/QDot/TopKBy) is caught round-over-round. "value"
     // stays the headline total — the BASELINE.md-comparable number.
-    // SPARK_GRAFT_BENCH_SKIP: comma-separated ext ops to leave out of a
-    // run (a scale-ladder knob — e.g. the pair-LISTING dedup ops whose
-    // output is intrinsically quadratic in clone multiplicity and whose
-    // collect() dominates a 300× rung). Never set by the driver; skips
-    // are visible because the op's key is absent from the artifact.
-    val skip = sys.env.get("SPARK_GRAFT_BENCH_SKIP")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty)
     // SPARK_GRAFT_BENCH_SKIP_CLASS: roster CLASSES to leave out (see
     // SparkEntry.rosterClass) — the ladder sets `listing` at the 300×
-    // rung, so the skip list is derived from the in-code tags instead
-    // of a hand-maintained op list (the round-12 failure mode).
+    // rung, so skips derive from the in-code tags; a skipped op's key is
+    // absent from the artifact.
     val skipClasses = sys.env.get("SPARK_GRAFT_BENCH_SKIP_CLASS")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty)
     val rosterClass = SparkEntry.rosterClass
-    val extQs = BenchExt.ops.filter(SparkEntry.queries.contains)
-      .filterNot(skip)
+    val extQs = extOps.filter(SparkEntry.queries.contains)
       .filterNot(q => skipClasses.contains(rosterClass(q)))
-    (1 to 2).foreach(_ =>
-      extQs.foreach(q =>
-        try SparkEntry.queries(q)(spark, sfDir).collect()
-        catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] ext warm-up $q failed: ${e.getClass.getName}: ${e.getMessage}")
-        }))
-    System.gc()
+    warmUp(spark, sfDir, extQs, passes = 2, label = "ext warm-up")
     val extResults = extQs.map(timed)
 
     val failures = results.count(_._2 < 0) + extResults.count(_._2 < 0)
@@ -172,6 +157,48 @@ object Bench {
   }
 
   private val TimedRuns = 5
+
+  /** Runs every op in `qs` `passes` times to bring JIT/codegen to steady
+    * state, then drains the warm-up garbage so GC pauses don't land in a
+    * timed run. Per-op try: one failing op must not leave the REST of the
+    * warm-up unrun (they'd be measured cold and read as regressions); its
+    * failure surfaces as -1 in the timed pass, logged here too. */
+  private def warmUp(spark: SparkSession, sfDir: String, qs: Seq[String],
+                     passes: Int, label: String): Unit = {
+    (1 to passes).foreach(_ =>
+      qs.foreach(q =>
+        try SparkEntry.queries(q)(spark, sfDir).collect()
+        catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $label $q failed: ${e.getClass.getName}: ${e.getMessage}")
+        }))
+    System.gc()
+  }
+
+  /** The one timing routine: GC, then `runs` back-to-back calls of `f`.
+    * Returns the MEDIAN seconds, the relative spread (max-min)/median and
+    * the last call's result. Median, not best-of-N: best-of-3
+    * systematically flatters and drifted 2-4× against the committed
+    * median artifacts.
+    *
+    * The GC drains the PREVIOUS op's garbage before timing this one: a
+    * pair-listing op that collects millions of rows (9.9M for
+    * ann_lsh_dedup_pairs at the 100x rung) leaves the old gen full, and
+    * without this the NEXT three ops in sequence measured 3-5x their
+    * fresh-JVM cost — a sick-JVM artifact misattributed to the ops
+    * (text_stats read as 10x superlinear; it is exactly linear). The
+    * pause lands outside the timed window. */
+  private[graft] def measure[A](runs: Int)(f: => A): (Double, Double, A) = {
+    System.gc()
+    val timedRuns = (1 to runs).map { _ =>
+      val t0 = System.nanoTime()
+      val r = f
+      ((System.nanoTime() - t0) / 1e9, r)
+    }
+    val secs = timedRuns.map(_._1)
+    val med = median(secs)
+    (med, (secs.max - secs.min) / med, timedRuns.last._2)
+  }
 
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-evidence dump (dev tool): writes `explain("formatted")` output
   * for the headline queries and representative extension operators to a
   * markdown file, so the physical-plan properties claimed in SURVEY §8
@@ -64,18 +62,9 @@ object ExplainDump {
       if (args(2) == "ALL") Some(SparkEntry.queries.keySet)
       else Some(args(2).split(",").map(_.trim).toSet)
     else None
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // queries may reference graft SQL functions by name (e.g.
-    // nfc_normalize in the canonical-dedup digest) — the 80-pick
-    // roster never did, but the ALL surface does
-    graft.functions.GraftExtensions.register(spark)
+    // 4 partitions, AQE off: static plans are easier to review, and the
+    // partition count is part of every dumped plan's text
+    val spark = Sessions.local(cores = 4, shufflePartitions = 4)
 
     val sb = new StringBuilder
     sb.append("# Physical plans (generated by `runMain graft.ExplainDump`)\n\n")

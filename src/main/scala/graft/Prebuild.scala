@@ -28,12 +28,7 @@ object Prebuild {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val spark = Sessions.local(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
-      shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt,
-      adaptive = sys.env.get("SPARK_GRAFT_AQE").contains("1"))
-    spark.sparkContext.setLogLevel("WARN")
-    Sessions.muteBoundedWindowWarning() // setLogLevel rewrites all logger configs
+    val spark = Sessions.fromEnv()
 
     val t0 = System.nanoTime()
     var failed = 0

@@ -1,10 +1,12 @@
 package graft
 
-/** Dev-tool main: time a single registered query once (or N times) at a
-  * given SF dir — the per-op triage step between "the full bench ladder
-  * is slow" and knowing WHICH operator crossed a scale cliff. Prints
-  * the row count too, because at scale the interesting failures are
-  * output-cardinality explosions, not slow scans.
+/** Dev-tool main: time a single registered query (median over N runs)
+  * at a given SF dir — the per-op triage step between "the full bench
+  * ladder is slow" and knowing WHICH operator crossed a scale cliff.
+  * Same session ([[Sessions.fromEnv]]) and timing routine
+  * ([[Bench.measure]]) as Bench, so a probe number is a Bench number.
+  * Prints the row count too, because at scale the interesting failures
+  * are output-cardinality explosions, not slow scans.
   *
   * Usage: runMain graft.Probe <sfDir> <queryName> [runs]
   */
@@ -13,18 +15,17 @@ object Probe {
     val sfDir = args(0)
     val name = args(1)
     val runs = if (args.length > 2) args(2).toInt else 1
-    val spark = Sessions.local(cores = 32,
-      shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt)
-    spark.sparkContext.setLogLevel("WARN")
-    val q = SparkEntry.queries(name)
+    val q = SparkEntry.queries.getOrElse(name, {
+      System.err.println(s"[probe] $name is not in SparkEntry.queries")
+      sys.exit(1)
+    })
+    val spark = Sessions.fromEnv()
     // noop sink (guide §1.4): count() lets the optimizer prune aggregate
     // expressions (a probed COUNT(DISTINCT) op would lose its Expand and
     // time the wrong plan); noop computes every column of every row
-    (1 to runs).foreach { i =>
-      val t0 = System.nanoTime()
-      q(spark, sfDir).write.format("noop").mode("overwrite").save()
-      println(f"[probe] $name run $i: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
+    val (med, spread, _) =
+      Bench.measure(runs)(q(spark, sfDir).write.format("noop").mode("overwrite").save())
+    println(f"[probe] $name median of $runs: $med%.2fs spread $spread%.3f")
     println(s"[probe] $name rows=${q(spark, sfDir).count()}")
     spark.stop()
   }

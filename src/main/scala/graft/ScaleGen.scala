@@ -78,8 +78,8 @@ object ScaleGen {
       case Array(s, o, f, df) => (s, o, f.toInt, df.toInt)
       case _ => sys.error("usage: ScaleGen <srcDir> <outDir> <factor> [dimFactor]")
     }
+    // 32 partitions: the count sets the replica's file layout
     val spark = Sessions.local(cores = 32, shufflePartitions = 32)
-    spark.sparkContext.setLogLevel("WARN")
     val n = generate(spark, src, out, factor, dimFactor)
     println(s"wrote ${factor}x replica of $src to $out " +
       s"(dims ${dimFactor}x; lineitem rows: $n)")

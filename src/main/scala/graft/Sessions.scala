@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * is tuned for. The settings differ because the bottlenecks differ:
   * locally, task-scheduling overhead dominates tiny shuffles; on a
   * cluster, data volume dominates and the adaptive machinery earns its
-  * overhead. Bench.scala documents the local measurements behind the
+  * overhead. [[fromEnv]] documents the local measurements behind the
   * small-scale numbers.
   */
 object Sessions {
@@ -32,9 +32,34 @@ object Sessions {
     * FLOOR of the initial (pre-coalesce) partition count — AQE needs
     * headroom to coalesce DOWN from, so a small static value is raised
     * to 256, while a caller sizing for a bigger box can pass more and
-    * be honored (previously the argument was silently ignored). */
+    * be honored (previously the argument was silently ignored).
+    *
+    * The session starts at log level WARN with the bounded-window
+    * WARN muted, so no caller has to order those two calls itself. */
   def local(cores: Int = 4, shufflePartitions: Int = 8,
             adaptive: Boolean = false): SparkSession = {
+    val s = localBuilder(cores, shufflePartitions, adaptive).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    muteBoundedWindowWarning()
+    s
+  }
+
+  /** The one env-driven session every timing/dump main starts from:
+    * `SPARK_GRAFT_CPUS` cores (default 4), 8 shuffle partitions, and
+    * the ladder profile when `SPARK_GRAFT_AQE=1`. Shuffle sizing is
+    * per-DATA, not per-core: at bench scale (~600k fact rows) 8
+    * partitions keep ~75k rows each, while 32 only multiplied
+    * task-scheduling overhead (measured 0.71 s at 32 vs 0.34 s at 8 per
+    * shuffle query); a bigger run takes the adaptive profile, which
+    * coalesces down from 256. */
+  def fromEnv(): SparkSession = local(
+    cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
+    shufflePartitions = 8,
+    adaptive = sys.env.get("SPARK_GRAFT_AQE").contains("1"))
+
+  /** [[local]]'s builder, unstarted, so a spec can read its options. */
+  private[graft] def localBuilder(cores: Int, shufflePartitions: Int,
+                                  adaptive: Boolean): SparkSession.Builder = {
     val initialPartitions = math.max(shufflePartitions, 256)
     val b = SparkSession.builder()
       .master(s"local[$cores]")
@@ -60,11 +85,7 @@ object Sessions {
       else b
         .config("spark.sql.shuffle.partitions", shufflePartitions)
         .config("spark.sql.adaptive.enabled", "false")
-    val s = tuned
-      .withExtensions(new functions.GraftExtensions)
-      .getOrCreate()
-    muteBoundedWindowWarning()
-    s
+    tuned.withExtensions(new functions.GraftExtensions)
   }
 
   /** Every unpartitioned window a registered query plans runs over a
@@ -81,10 +102,8 @@ object Sessions {
     *
     * `sparkContext.setLogLevel` goes through log4j2's `setAllLevels`,
     * which rewrites EVERY existing logger config — including this one —
-    * so mains that lower their log level (Bench/Verify/Prebuild) must
-    * re-apply the mute AFTER that call; the registration here covers
-    * sessions that never touch the log level. */
-  private[graft] def muteBoundedWindowWarning(): Unit =
+    * so [[local]] applies the mute right AFTER its own setLogLevel. */
+  private def muteBoundedWindowWarning(): Unit =
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window",
       org.apache.logging.log4j.Level.ERROR)

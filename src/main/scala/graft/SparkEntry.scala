@@ -71,7 +71,7 @@ object SparkEntry {
     * (Verify runs every registered query) but must NEVER ride a bench
     * rung: round 12's 300× rung overran its round boundary by hours
     * because the capture row sat on the roster — RosterSpec now turns
-    * red if any of these reappears in [[BenchExt.ops]]. */
+    * red if any of these reappears in [[Bench.extOps]]. */
   private[graft] val evalOnly: Set[String] = Set(
     "ivf_recall", "pq_recall", "pq_rerank_recall", "ivfpq_recall",
     "semantic_dedup_capture_t45", "ann_lsh_dedup_pairs_t45",
@@ -89,7 +89,7 @@ object SparkEntry {
     * policy, mechanized (it lived in prose through round 12 and was
     * violated once at a five-hour cost):
     *   - `headline`: the 10 BASELINE.md-comparable analytics queries.
-    *   - `ext`: the extension-operator bench roster ([[BenchExt.ops]]),
+    *   - `ext`: the extension-operator bench roster ([[Bench.extOps]]),
     *     run at every ladder rung.
     *   - `listing`: on the roster, class-skipped at the 300× rung
     *     ([[listingOps]]).
@@ -103,7 +103,7 @@ object SparkEntry {
       k -> (if (Bench.headline.contains(k)) "headline"
             else if (listingOps.contains(k)) "listing"
             else if (evalOnly.contains(k)) "eval"
-            else if (BenchExt.ops.contains(k)) "ext"
+            else if (Bench.extOps.contains(k)) "ext"
             else "eval")
     }.toMap
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,18 +9,10 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Sessions.muteBoundedWindowWarning() // setLogLevel rewrites all logger configs
-    // queries may reference graft SQL functions by name (nfc_normalize
-    // in the canonical-dedup digest); register on the running session
-    functions.GraftExtensions.register(spark)
+    // the bench session (Sessions.fromEnv), whose GraftExtensions make
+    // graft SQL functions (nfc_normalize in the canonical-dedup digest)
+    // resolvable by name
+    val spark = Sessions.fromEnv()
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     SparkEntry.queries

@@ -31,14 +31,14 @@ class RosterSpec extends AnyFunSuite {
 
   test("the bench roster is exactly the ext+listing classes (tags are the source of truth)") {
     val rostered = classes.filter(kv => kv._2 == "ext" || kv._2 == "listing").keySet
-    assert(BenchExt.ops.toSet == rostered,
-      s"roster/tag drift: onRosterNotTagged=${BenchExt.ops.toSet diff rostered}, " +
-        s"taggedNotOnRoster=${rostered diff BenchExt.ops.toSet}")
-    assert(BenchExt.ops.distinct == BenchExt.ops, "duplicate roster entries")
+    assert(Bench.extOps.toSet == rostered,
+      s"roster/tag drift: onRosterNotTagged=${Bench.extOps.toSet diff rostered}, " +
+        s"taggedNotOnRoster=${rostered diff Bench.extOps.toSet}")
+    assert(Bench.extOps.distinct == Bench.extOps, "duplicate roster entries")
   }
 
   test("eval rows NEVER appear on the bench roster (the round-12 five-hour lesson)") {
-    val offending = BenchExt.ops.filter(q => classes(q) == "eval" ||
+    val offending = Bench.extOps.filter(q => classes(q) == "eval" ||
       SparkEntry.evalOnly.contains(q))
     assert(offending.isEmpty,
       s"eval/driver-SF-only rows on the bench roster: $offending — these are " +

@@ -2,8 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The cluster profile's load-bearing settings — asserted on the BUILDER
-  * options (via reflection over the builder's internal option map, no
+/** The cluster and local profiles' load-bearing settings — asserted on
+  * the BUILDER options (via reflection over the builder's internal option map, no
   * session is started: getOrCreate would collide with the suite's
   * shared session) so a refactor that drops the UTC timezone (every
   * date oracle depends on it), the nanos flag (the events vintage
@@ -40,5 +40,50 @@ class SessionsSpec extends AnyFunSuite {
     assert(opts("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(opts("spark.sql.autoBroadcastJoinThreshold").toLong == 64L * 1024 * 1024)
     assert(opts("spark.sql.files.maxPartitionBytes") == "256m")
+  }
+
+  test("local profile: UTC, nanos-as-long, compression off, AQE off at the given partition count") {
+    val opts = builderOptions(Sessions.localBuilder(cores = 4, shufflePartitions = 8, adaptive = false))
+    assert(opts("spark.master") == "local[4]")
+    assert(opts("spark.sql.session.timeZone") == "UTC")
+    assert(opts("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(opts("spark.sql.adaptive.enabled") == "false")
+    assert(opts("spark.sql.shuffle.partitions") == "8")
+    assert(opts("spark.shuffle.compress") == "false")
+    assert(opts("spark.shuffle.spill.compress") == "false")
+  }
+
+  test("local adaptive profile: 256-partition floor, parallelismFirst off, a larger count honored") {
+    val opts = builderOptions(Sessions.localBuilder(cores = 4, shufflePartitions = 8, adaptive = true))
+    assert(opts("spark.sql.adaptive.enabled") == "true")
+    assert(opts("spark.sql.shuffle.partitions") == "256")
+    assert(opts("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "256")
+    assert(opts("spark.sql.adaptive.coalescePartitions.parallelismFirst") == "false")
+    assert(opts("spark.sql.session.timeZone") == "UTC")
+    assert(opts("spark.shuffle.compress") == "false")
+    val big = builderOptions(Sessions.localBuilder(cores = 4, shufflePartitions = 512, adaptive = true))
+    assert(big("spark.sql.shuffle.partitions") == "512")
+    assert(big("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "512")
+  }
+
+  test("no main builds its own SparkSession outside Sessions") {
+    // Pipeline keeps its own session: the local profile changes its
+    // written output size (output_mb 0.960 -> 1.330 MB, AQE profile),
+    // beyond what its benchmark bound allows
+    val allowed = Set("Sessions.scala", "Pipeline.scala")
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"source root not found from ${root.getAbsolutePath}")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    val builder = """SparkSession\s*\.\s*builder\s*\(""".r
+    val offenders = walk(root)
+      .filter(f => f.getName.endsWith(".scala") && !allowed(f.getName))
+      .filter { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try builder.findFirstIn(src.mkString).isDefined finally src.close()
+      }
+      .map(_.getPath)
+    assert(offenders.isEmpty,
+      s"SparkSession.builder() outside Sessions (start through Sessions.local/fromEnv): $offenders")
   }
 }

@@ -18,7 +18,7 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    // mirror the production sessions (Sessions.local / Verify): queries
+    // mirror the production sessions (Sessions.local): queries
     // may reference graft SQL functions by name, e.g. nfc_normalize in
     // the canonical-dedup digest
     graft.functions.GraftExtensions.register(s)

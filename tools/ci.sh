@@ -3,8 +3,9 @@
 # reference's end-to-end workflow (.github/workflows/ci.yml: service DB
 # -> DDL -> generate -> ingest -> transform -> load -> pytest -> row
 # sanity). Here the stages are: compile -> full test suite -> oracle
-# correctness gate at sf0.01 (every registered query vs DuckDB) -> one
-# end-to-end Pipeline smoke run -> benchmark self-test (every benchmarked
+# correctness gate at sf0.01 (every registered query vs DuckDB) -> a
+# smoke of the Probe and ExplainDump dev mains -> one end-to-end
+# Pipeline smoke run -> benchmark self-test (every benchmarked
 # op's output hash against perfbench/expected.json). Nonzero exit on any
 # failure.
 #
@@ -16,18 +17,26 @@ SF="${1:-/root/testdata/sf0.01}"
 WORK="$(mktemp -d /tmp/graft-ci.XXXXXX)"
 trap 'rm -rf "$WORK"' EXIT
 
-echo "== [1/5] compile =="
+echo "== [1/6] compile =="
 sbt -batch compile Test/compile
 
-echo "== [2/5] test suite =="
+echo "== [2/6] test suite =="
 sbt -batch test
 
-echo "== [3/5] oracle correctness gate ($SF) =="
+echo "== [3/6] oracle correctness gate ($SF) =="
 sbt -batch "runMain graft.Verify $SF $WORK/verify"
 # check.py exits nonzero on any FAIL line (set -e propagates it)
 python3 tools/check.py "$SF" "$WORK/verify"
 
-echo "== [4/5] pipeline smoke run =="
+echo "== [4/6] dev mains smoke ($SF) =="
+# Probe and ExplainDump start through the same Sessions path as Bench and
+# Verify; run each once so a rewiring cannot rot them silently
+sbt -batch "runMain graft.Probe $SF q01_top_products 2" | tee "$WORK/probe.log"
+grep -q 'q01_top_products rows=' "$WORK/probe.log"
+sbt -batch "runMain graft.ExplainDump $SF $WORK/plans.md q01_top_products"
+grep -q '^## q01_top_products' "$WORK/plans.md"
+
+echo "== [5/6] pipeline smoke run =="
 sbt -batch "runMain graft.Pipeline $SF $WORK/pipeline"
 test -s "$WORK/pipeline/pipeline_execution_report.json"
 # the run succeeded and every warehouse table loaded its source's rows
@@ -41,7 +50,7 @@ bad = {t: v["status"] for t, v in loads.items() if v["status"] != "loaded"}
 assert loads and not bad, f"warehouse load report: {bad or 'empty'}"
 PY
 
-echo "== [5/5] benchmark self-test =="
+echo "== [6/6] benchmark self-test =="
 # Both benchmark workloads briefly, every output checked against the
 # recorded DuckDB hashes: a refactor that changes a benchmarked op's
 # result fails here, not only in a full benchmark run.

@@ -43,12 +43,12 @@ if ! flock -n 9; then echo "another ladder holds the lock; refusing"; exit 1; fi
 DEADLINE="${GRAFT_LADDER_DEADLINE:-$(( $(date +%s) + 4*3600 ))}"
 # watchdog: whatever happens, nothing of ours survives 10min past the deadline
 ( while [ "$(date +%s)" -lt $(( DEADLINE + 600 )) ]; do sleep 30; done
-  pkill -TERM -f 'graft\.(Bench|BenchExt|Prebuild|ScaleGen|Verify)' ) &
+  pkill -TERM -f 'graft\.(Bench|Prebuild|ScaleGen|Verify)' ) &
 WATCHDOG=$!
 cleanup() {
   pkill -TERM -P $$ 2>/dev/null
   kill "$WATCHDOG" 2>/dev/null
-  pkill -TERM -f 'graft\.(Bench|BenchExt|Prebuild|ScaleGen)' 2>/dev/null
+  pkill -TERM -f 'graft\.(Bench|Prebuild|ScaleGen)' 2>/dev/null
 }
 trap cleanup EXIT TERM INT
 
