@@ -1,7 +1,7 @@
 package graft
 
 import graft.orchestrate.Orchestrator
-import graft.orchestrate.Orchestrator.fanOut
+import graft.orchestrate.Orchestrator.{described, fanOut}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** End-to-end pipeline main — the runnable analogue of the reference's
@@ -12,10 +12,19 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * Stages here are in-process DataFrame jobs over one SparkSession; the
   * inter-stage medium is Parquet in `outDir` (the reference's is CSV +
   * Postgres tables). Steps run in sequence, in their declared order;
-  * the independent outputs of a step (its tables, CSVs and reports) run
-  * as concurrent Spark jobs via [[Orchestrator.fanOut]]. Steps are not
+  * the independent outputs of a step (its tables and CSVs) run as
+  * concurrent Spark jobs via [[Orchestrator.fanOut]]. Steps are not
   * overlapped: each would then run longer on shared cores, and the
   * report's per-step durations would stop measuring one step each.
+  *
+  * Each result is computed once. A step's report reads the outputs just
+  * written, as the reference's stages hand their results on: the quality
+  * report scores `quality/checks`, the monitoring report rolls up
+  * `monitoring/freshness`, `monitoring/volume_anomaly` and
+  * `quality/checks`, and the load report reads
+  * `warehouse/warehouse_load_report`. Every Spark job a step starts
+  * carries the description `<step>/<output>`, except the stream's
+  * micro-batches, which keep Spark's streaming description.
   * Usage: `runMain graft.Pipeline <sfDir> <outDir>`.
   */
 object Pipeline {
@@ -41,11 +50,22 @@ object Pipeline {
 
   /** The eight-stage DAG as orchestrated steps. */
   def run(spark: SparkSession, sfDir: String, outDir: String): Orchestrator.Report = {
+    // handles on the parquet outputs this run wrote, keyed `<dir>/<name>`
+    // and read with the schema they were written with (no inference job)
+    val written = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    def output(rel: String): DataFrame =
+      Option(written.get(rel)).getOrElse(sys.error(s"$rel has not been written in this run"))
     // one job per query of a step: build it and overwrite
     // `<outDir>/<dir>/<name>` as Parquet
     def parquetJobs(dir: String, qs: Seq[(String, Q)]): Seq[(String, () => Unit)] =
       qs.map { case (name, q) =>
-        name -> { () => q(spark, sfDir).write.mode("overwrite").parquet(s"$outDir/$dir/$name") }
+        name -> { () =>
+          val df = q(spark, sfDir)
+          val path = s"$outDir/$dir/$name"
+          df.write.mode("overwrite").parquet(path)
+          written.put(s"$dir/$name", spark.read.schema(df.schema).parquet(path))
+          ()
+        }
       }
     Orchestrator.run(Seq(
       // Streaming ingest FIRST — the events feed lands via the
@@ -53,10 +73,13 @@ object Pipeline {
       // at-least-once upstream) appends only unseen event_ids: the
       // anti-join keyed sink makes the whole stage idempotent, which is
       // what lets the orchestrator retry it safely (PipelineSpec replays
-      // it end-to-end and asserts the count is unchanged).
+      // it end-to-end and asserts the count is unchanged). Its
+      // micro-batch jobs carry Spark's own streaming description.
       "stream_ingest_events" -> { () =>
-        streaming.Streams.streamToIncrementalParquet(
-          spark, sfDir, s"$outDir/streaming/events").awaitTermination()
+        described(spark, "stream_ingest_events", "events") {
+          streaming.Streams.streamToIncrementalParquet(
+            spark, sfDir, s"$outDir/streaming/events").awaitTermination()
+        }
       },
       "cleanse_production" -> { () =>
         fanOut(spark, "cleanse_production", parquetJobs("production", Seq(
@@ -66,15 +89,14 @@ object Pipeline {
       },
       "quality_checks" -> { () =>
         fanOut(spark, "quality_checks", parquetJobs("quality", Seq(
-          "checks" -> quality.Quality.qualityChecks _)) :+ ("quality_report" -> { () =>
-          val score = quality.Quality.qualityScore(spark, sfDir).head()
+          "checks" -> quality.Quality.qualityChecks _)))
+        // scored from the checks just written: the suite runs once
+        described(spark, "quality_checks", "quality_report") {
           sources.Sources.writeJsonReport(
-            s"""{"total_records":${score.getAs[Long]("total_records")},""" +
-              s""""total_violations":${score.getAs[Long]("total_violations")},""" +
-              s""""quality_score":${score.getAs[Double]("quality_score")},""" +
-              s""""grade":"${score.getAs[String]("grade")}"}""",
+            quality.Quality.reportJson(
+              quality.Quality.qualityScoreOver(spark, sfDir, output("quality/checks"))),
             s"$outDir/quality/quality_report.json")
-        }))
+        }
       },
       "load_warehouse" -> { () =>
         // the tables build concurrently: the store serialises each
@@ -87,17 +109,20 @@ object Pipeline {
         // reconciliation into its report; the reference fails the stage
         // on a mismatch — so do we, which also makes the retry honest).
         // Read back from the five rows just written, so the check
-        // validates what was loaded and the counts run once.
-        val rep = spark.read.parquet(s"$outDir/warehouse/warehouse_load_report")
-          .orderBy("table_name").collect()
-        def status(r: Row) = r.getAs[String]("status")
-        sources.Sources.writeJsonReport(
-          rep.map(r => s""""${r.getAs[String]("table_name")}":{"rows":${r.getAs[Long]("row_count")},""" +
-              s""""source_rows":${r.getAs[Long]("source_rows")},"status":"${status(r)}"}""")
-            .mkString("{", ",", "}"),
-          s"$outDir/warehouse/load_report.json")
-        require(rep.forall(status(_) == "loaded"),
-          s"warehouse load mismatch: ${rep.filter(status(_) != "loaded").mkString(",")}")
+        // validates what was loaded and the counts run once; the five
+        // rows are sorted after the collect, not by a Spark sort.
+        described(spark, "load_warehouse", "load_report") {
+          val rep = output("warehouse/warehouse_load_report").collect()
+            .sortBy(_.getAs[String]("table_name"))
+          def status(r: Row) = r.getAs[String]("status")
+          sources.Sources.writeJsonReport(
+            rep.map(r => s""""${r.getAs[String]("table_name")}":{"rows":${r.getAs[Long]("row_count")},""" +
+                s""""source_rows":${r.getAs[Long]("source_rows")},"status":"${status(r)}"}""")
+              .mkString("{", ",", "}"),
+            s"$outDir/warehouse/load_report.json")
+          require(rep.forall(status(_) == "loaded"),
+            s"warehouse load mismatch: ${rep.filter(status(_) != "loaded").mkString(",")}")
+        }
       },
       "analytics" -> { () =>
         fanOut(spark, "analytics", analytics.Analytics.inventory.toSeq.map { case (name, q) =>
@@ -109,13 +134,16 @@ object Pipeline {
       "monitoring" -> { () =>
         fanOut(spark, "monitoring", parquetJobs("monitoring", Seq(
           "volume_anomaly" -> monitor.Monitor.volumeAnomaly _,
-          "freshness" -> monitor.Monitor.freshnessLag _)) :+ ("monitoring_report" -> { () =>
-          // Consolidated report (pipeline_monitor.py:213-266). The reference
-          // reads the PREVIOUS run's end time from its execution report. With
-          // a prior report we pair its mtime with wall-clock now; WITHOUT one
-          // (first run) both ends fall back to the fixed Det pair — mixing the
-          // fixed 2024 LastRunTs with wall-clock now would report a spurious
-          // 22,000-hour gap and a 'critical' health on every fresh outDir.
+          "freshness" -> monitor.Monitor.freshnessLag _)))
+        // Consolidated report (pipeline_monitor.py:213-266), rolled up from
+        // the freshness and volume rows just written and the quality step's
+        // checks. The reference reads the PREVIOUS run's end time from its
+        // execution report. With a prior report we pair its mtime with
+        // wall-clock now; WITHOUT one (first run) both ends fall back to the
+        // fixed Det pair — mixing the fixed 2024 LastRunTs with wall-clock
+        // now would report a spurious 22,000-hour gap and a 'critical'
+        // health on every fresh outDir.
+        described(spark, "monitoring", "monitoring_report") {
           val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
             .withZone(java.time.ZoneOffset.UTC)
           val prev = java.nio.file.Paths.get(s"$outDir/pipeline_execution_report.json")
@@ -124,10 +152,13 @@ object Pipeline {
               (fmt.format(java.nio.file.Files.getLastModifiedTime(prev).toInstant),
                 fmt.format(java.time.Instant.now()))
             else (Det.LastRunTs, Det.AsOfTs)
+          val rollup = monitor.Monitor.healthRollupOver(lastRun, now)(spark,
+            output("monitoring/freshness"), output("monitoring/volume_anomaly"),
+            quality.Quality.qualityScoreOver(spark, sfDir, output("quality/checks")))
           sources.Sources.writeJsonReport(
-            monitor.Monitor.monitoringReportJson(spark, sfDir, lastRun, now),
+            monitor.Monitor.reportJsonOver(rollup, lastRun, now),
             s"$outDir/monitoring/monitoring_report.json")
-        }))
+        }
       },
       // The curated training corpus ships as a fixed number of
       // hash-stable shards (the layout dataloaders consume; membership
@@ -138,9 +169,11 @@ object Pipeline {
       // — the decontamination gate every training pipeline runs before
       // publishing.
       "curate_corpus" -> { () =>
-        sources.Sources.writeSharded(
-          text.Curation.publishedCorpus(spark, sfDir),
-          s"$outDir/corpus", "doc_id", shards = CorpusShards)
+        described(spark, "curate_corpus", "corpus") {
+          sources.Sources.writeSharded(
+            text.Curation.publishedCorpus(spark, sfDir),
+            s"$outDir/corpus", "doc_id", shards = CorpusShards)
+        }
       },
       "retention_cleanup" -> { () =>
         orchestrate.Housekeeping.cleanupOldFiles(s"$outDir/tmp", retentionDays = 7)

@@ -1,6 +1,8 @@
 package graft
 
+import graft.sim.IndexStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table adapters over the driver test data (TESTDATA.md).
   *
@@ -11,10 +13,43 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pushes filters and prunes columns into the scan, so downstream
   * operators never pay for unused columns (unlike the reference's
   * `SELECT *` into pandas).
+  *
+  * Each table's schema is inferred once per on-disk vintage and every
+  * later read passes it in: a plain `spark.read.parquet` starts a
+  * one-task footer-reading job per call, which a small DAG used to pay
+  * dozens of times for the same files.
   */
 object Tables {
+  /** Inferred schemas keyed by (path, [[IndexStore.tableFingerprint]],
+    * `nanosAsLong`). A rewritten table lists new part files, so its
+    * fingerprint and key change and it is inferred again; the legacy
+    * nanos flag changes what a TIMESTAMP(NANOS) column reads as. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, String), StructType]()
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** The schema `spark.read.parquet` infers for `<dir>/<name>.parquet`,
+    * inferred once per vintage; concurrent first readers wait for one
+    * inference instead of each starting a job. */
+  private[graft] def schemaOf(spark: SparkSession, dir: String, name: String): StructType = {
+    val path = s"$dir/$name.parquet"
+    val key = (path, IndexStore.tableFingerprint(spark, dir, name),
+      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+    Option(schemas.get(key)).getOrElse {
+      locks.computeIfAbsent(path, _ => new Object).synchronized {
+        Option(schemas.get(key)).getOrElse {
+          val schema = spark.read.parquet(path).schema
+          // a superseded vintage of this path can never be read again
+          schemas.keySet.removeIf(k => k._1 == path && k._2 != key._2)
+          schemas.put(key, schema)
+          schema
+        }
+      }
+    }
+  }
+
   private def rd(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.schema(schemaOf(spark, dir, name)).parquet(s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame   = rd(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = rd(spark, dir, "nation")

@@ -211,20 +211,30 @@ GROUP BY event_type"""
     * no data-sized shuffle is added.
     */
   def healthRollupAt(lastRunTs: String, asOfTs: String = Det.AsOfTs)(
-      spark: SparkSession, dir: String): DataFrame = {
+      spark: SparkSession, dir: String): DataFrame =
+    healthRollupOver(lastRunTs, asOfTs)(spark, freshnessLag(spark, dir),
+      volumeAnomaly(spark, dir), graft.quality.Quality.qualityScore(spark, dir))
+
+  /** [[healthRollupAt]] over already computed inputs: the rows of
+    * [[freshnessLag]] and [[volumeAnomaly]] and a [[graft.quality.Quality
+    * .qualityScore]] relation. The pipeline's monitoring step passes the
+    * outputs it and the quality step just wrote, so none is worked out
+    * again from the source tables. */
+  def healthRollupOver(lastRunTs: String, asOfTs: String)(
+      spark: SparkSession, freshness: DataFrame, volume: DataFrame,
+      score: DataFrame): DataFrame = {
     val fmt = "yyyy-MM-dd HH:mm:ss"
     val hours = (unix_timestamp(lit(asOfTs), fmt) -
       unix_timestamp(lit(lastRunTs), fmt)).cast(DoubleType) / lit(3600.0)
     val lastExec = spark.range(1).select(hours.as("hours_since_last_run"))
-    val fresh = freshnessLag(spark, dir).agg(
+    val fresh = freshness.agg(
       max("lag_hours").as("max_lag_hours"),
       max(when(col("status") =!= "fresh", 1L).otherwise(0L)).as("fresh_warn"))
     // day is yyyy-MM-dd formatted → lexicographic max is chronological;
     // days are unique (group key) so max_by is deterministic.
-    val vol = volumeAnomaly(spark, dir).agg(
+    val vol = volume.agg(
       max_by(col("is_anomaly"), col("day")).as("anomaly_detected"))
-    val qual = graft.quality.Quality.qualityScore(spark, dir)
-      .select(col("quality_score"))
+    val qual = score.select(col("quality_score"))
 
     val critical = when(col("hours_since_last_run") > 25.0, 1L).otherwise(0L)
     val warnings = col("fresh_warn") +
@@ -294,8 +304,14 @@ FROM c"""
     * written by the pipeline's monitoring stage. */
   def monitoringReportJson(spark: SparkSession, dir: String,
                            lastRunTs: String = Det.LastRunTs,
-                           monitoringTime: String = Det.AsOfTs): String = {
-    val r = healthRollupAt(lastRunTs, monitoringTime)(spark, dir).head()
+                           monitoringTime: String = Det.AsOfTs): String =
+    reportJsonOver(healthRollupAt(lastRunTs, monitoringTime)(spark, dir),
+      lastRunTs, monitoringTime)
+
+  /** [[monitoringReportJson]] for a rollup relation built with the same
+    * `lastRunTs` and `monitoringTime` (e.g. by [[healthRollupOver]]). */
+  def reportJsonOver(rollup: DataFrame, lastRunTs: String, monitoringTime: String): String = {
+    val r = rollup.head()
     def s(c: String) = r.getAs[String](c)
     def d(c: String) = r.getAs[Double](c)
     def alert(sev: String, check: String, msg: String) =

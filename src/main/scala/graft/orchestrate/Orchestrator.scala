@@ -95,7 +95,7 @@ object Orchestrator {
     val pool = Executors.newFixedThreadPool(math.min(jobs.size, MaxFanOut), threads)
     val errors = try {
       val running = jobs.map { case (name, job) =>
-        pool.submit[Unit] { () => sc.setJobDescription(s"$step/$name"); job() }
+        pool.submit[Unit] { () => described(spark, step, name)(job()) }
       }
       running.flatMap { f =>
         try { f.get(); None }
@@ -107,6 +107,17 @@ object Orchestrator {
       errors.filter(_ ne first).foreach(first.addSuppressed)
       throw first
     }
+  }
+
+  /** Run `body` on this thread under the Spark job description
+    * `<step>/<name>`, so listener and event-log records of its jobs name
+    * the output they produce; the thread's previous description is put
+    * back afterwards. */
+  def described[T](spark: SparkSession, step: String, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"$step/$name")
+    try body finally sc.setJobDescription(prev)
   }
 
   /** Minimal JSON rendering (no dependencies), mirroring the reference's

@@ -1,7 +1,7 @@
 package graft.quality
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,18 +21,31 @@ import org.apache.spark.sql.types._
   *
   * Scale: value checks are conditional aggregates (one scan per table,
   * map-side partial); orphan checks are key-projected joins that shuffle
-  * only (key, 1) pairs. Nothing collects to the driver.
+  * only (key, 1) pairs, and the three orders-to-lineitems checks share
+  * one join against a per-order rollup. Nothing collects to the driver.
   */
 object Quality {
   type Q = (SparkSession, String) => DataFrame
 
-  private def named(name: String, category: String, df: DataFrame): DataFrame =
-    df.select(lit(name).as("check_name"), lit(category).as("category"),
-      col("violations"))
+  /** Checks over one relation as one aggregate: a single pass computes
+    * every `(name, category, violations)` aggregate, then the one-row
+    * result melts to one row per check, in the given order. */
+  private def checksOver(df: DataFrame, checks: (String, String, Column)*): DataFrame = {
+    val counts = checks.zipWithIndex.map { case ((_, _, v), i) => v.as(s"v$i") }
+    val rows = checks.zipWithIndex.map { case ((name, category, _), i) =>
+      struct(lit(name).as("check_name"), lit(category).as("category"),
+        col(s"v$i").as("violations"))
+    }
+    df.agg(counts.head, counts.tail: _*)
+      .select(explode(array(rows: _*)).as("r"))
+      .select(col("r.check_name"), col("r.category"), col("r.violations"))
+  }
 
-  private def cnt(df: DataFrame): DataFrame = df.agg(count(lit(1)).as("violations"))
-
-  /** All 12 checks as one unioned relation. */
+  /** All 12 checks as one unioned relation. Checks over the same table
+    * or join share one pass: the value checks are one conditional
+    * aggregate per table (`count_if` counts a row only where its
+    * predicate is true, as `filter` keeps it), and the three
+    * orders-to-lineitems checks read one outer join. */
   def qualityChecks(spark: SparkSession, dir: String): DataFrame = {
     val cust = Tables.customer(spark, dir)
     val part = Tables.part(spark, dir)
@@ -40,65 +53,68 @@ object Quality {
     val ord  = Tables.orders(spark, dir)
 
     // completeness (data_quality_checks.sql:5-13)
-    val nullName = named("customers_null_name", "completeness",
-      cnt(cust.filter(col("c_name").isNull || col("c_name") === "")))
+    val custValues = checksOver(cust,
+      ("customers_null_name", "completeness",
+        count_if(col("c_name").isNull || col("c_name") === "")))
     // uniqueness (data_quality_checks.sql:27-36: GROUP BY HAVING COUNT>1)
-    val dupKey = named("customers_duplicate_key", "uniqueness",
-      cnt(cust.groupBy("c_custkey").agg(count(lit(1)).as("n")).filter(col("n") > 1)))
+    val dupKey = checksOver(cust.groupBy("c_custkey").agg(count(lit(1)).as("n")),
+      ("customers_duplicate_key", "uniqueness", count_if(col("n") > 1)))
     // validity (data_quality_checks.sql:41-63)
-    val badPrice = named("products_nonpositive_price", "validity",
-      cnt(part.filter(col("p_retailprice") <= 0)))
-    val costVsPrice = {
+    val partValues = {
       val price = graft.Pricing.price(col("p_retailprice"))
       val cost  = graft.Pricing.cost(price)
-      named("products_cost_exceeds_price", "validity",
-        cnt(part.filter(cost >= price)))
+      checksOver(part,
+        ("products_nonpositive_price", "validity", count_if(col("p_retailprice") <= 0)),
+        ("products_cost_exceeds_price", "validity", count_if(cost >= price)))
     }
-    val badQty = named("lineitems_nonpositive_quantity", "validity",
-      cnt(li.filter(col("l_quantity") <= 0)))
-    val badDisc = named("lineitems_discount_out_of_range", "validity",
-      cnt(li.filter(col("l_discount") < 0 || col("l_discount") > 0.5)))
-    // consistency (data_quality_checks.sql:66-76)
-    val lineConsistency = {
+    // validity, then consistency (data_quality_checks.sql:66-76)
+    val liValues = {
       val unitPrice = col("l_extendedprice") / col("l_quantity")
       val recomputed = (col("l_quantity") * unitPrice * (lit(1.0) - col("l_discount")))
         .cast(DecimalType(18, 6))
       val stored = (col("l_extendedprice") * (lit(1.0) - col("l_discount")))
         .cast(DecimalType(18, 6))
-      named("lineitems_total_consistency", "consistency",
-        cnt(li.filter(abs(recomputed - stored) > lit(BigDecimal("0.01")))))
+      checksOver(li,
+        ("lineitems_nonpositive_quantity", "validity", count_if(col("l_quantity") <= 0)),
+        ("lineitems_discount_out_of_range", "validity",
+          count_if(col("l_discount") < 0 || col("l_discount") > 0.5)),
+        ("lineitems_total_consistency", "consistency",
+          count_if(abs(recomputed - stored) > lit(BigDecimal("0.01")))))
     }
-    val orderTotal = {
-      val itemSums = li.groupBy("l_orderkey").agg(
+    // consistency and referential integrity between orders and lineitems
+    // (data_quality_checks.sql:66-76, 88-107) over ONE full outer join of
+    // the orders with their lineitems rolled up per order key: a matched
+    // row compares the totals, an unmatched lineitem group counts its rows
+    // as orphans, an unmatched order has no items. NULL keys match nothing,
+    // as in the reference's left joins.
+    val orderChecks = {
+      val perOrder = li.groupBy("l_orderkey").agg(
+        count(lit(1)).as("n_items"),
         sum(((col("l_extendedprice") * (lit(1.0) + col("l_tax")))
-          * (lit(1.0) - col("l_discount"))).cast(DecimalType(18, 6))).as("items_total"))
-      named("orders_total_mismatch", "consistency",
-        cnt(ord.join(itemSums, col("o_orderkey") === col("l_orderkey"))
-          .filter(abs(col("o_totalprice").cast(DecimalType(18, 6)) - col("items_total"))
-            > lit(BigDecimal("0.01")))))
+          * (lit(1.0) - col("l_discount"))).cast(DecimalType(18, 6))).as("items_total"),
+        lit(true).as("has_items"))
+      val joined = ord.select(col("o_orderkey"), col("o_totalprice"), lit(true).as("has_order"))
+        .join(perOrder, col("o_orderkey") === col("l_orderkey"), "full_outer")
+      checksOver(joined,
+        // NULL unless both sides matched
+        ("orders_total_mismatch", "consistency",
+          count_if(abs(col("o_totalprice").cast(DecimalType(18, 6)) - col("items_total"))
+            > lit(BigDecimal("0.01")))),
+        ("orphan_lineitems_orders", "referential_integrity",
+          coalesce(sum(when(col("has_order").isNull, col("n_items"))), lit(0L))),
+        ("orders_without_items", "referential_integrity",
+          count_if(col("has_items").isNull)))
     }
     // referential integrity: left join + null test (data_quality_checks.sql:88-107)
-    val orphanLiOrd = named("orphan_lineitems_orders", "referential_integrity",
-      cnt(li.select("l_orderkey")
-        .join(ord.select("o_orderkey"), col("l_orderkey") === col("o_orderkey"), "left")
-        .filter(col("o_orderkey").isNull)))
-    val orphanLiPart = named("orphan_lineitems_parts", "referential_integrity",
-      cnt(li.select("l_partkey")
-        .join(part.select("p_partkey"), col("l_partkey") === col("p_partkey"), "left")
-        .filter(col("p_partkey").isNull)))
-    val orphanOrdCust = named("orphan_orders_customers", "referential_integrity",
-      cnt(ord.select("o_custkey")
-        .join(cust.select("c_custkey"), col("o_custkey") === col("c_custkey"), "left")
-        .filter(col("c_custkey").isNull)))
-    val ordersNoItems = named("orders_without_items", "referential_integrity",
-      cnt(ord.select("o_orderkey")
-        .join(li.select("l_orderkey").distinct(),
-          col("o_orderkey") === col("l_orderkey"), "left")
-        .filter(col("l_orderkey").isNull)))
+    val orphanLiPart = checksOver(li.select("l_partkey")
+        .join(part.select("p_partkey"), col("l_partkey") === col("p_partkey"), "left"),
+      ("orphan_lineitems_parts", "referential_integrity", count_if(col("p_partkey").isNull)))
+    val orphanOrdCust = checksOver(ord.select("o_custkey")
+        .join(cust.select("c_custkey"), col("o_custkey") === col("c_custkey"), "left"),
+      ("orphan_orders_customers", "referential_integrity", count_if(col("c_custkey").isNull)))
 
-    Seq(nullName, dupKey, badPrice, costVsPrice, badQty, badDisc,
-      lineConsistency, orderTotal, orphanLiOrd, orphanLiPart, orphanOrdCust,
-      ordersNoItems).reduce(_.unionByName(_))
+    Seq(custValues, dupKey, partValues, liValues, orderChecks, orphanLiPart,
+      orphanOrdCust).reduce(_.unionByName(_))
   }
 
   val qualityChecksSql: String = """
@@ -145,14 +161,19 @@ UNION ALL SELECT 'orders_without_items', 'referential_integrity',
     * by the actual record count rather than the reference's hard-coded
     * 50000 (validate_data.py:170) — documented deviation, SURVEY §7.4.
     */
-  def qualityScore(spark: SparkSession, dir: String): DataFrame = {
-    val viol = qualityChecks(spark, dir)
-      .agg(sum("violations").as("total_violations"))
-    val records = Tables.customer(spark, dir).agg(count(lit(1)).as("c"))
-      .crossJoin(Tables.part(spark, dir).agg(count(lit(1)).as("p")))
-      .crossJoin(Tables.orders(spark, dir).agg(count(lit(1)).as("o")))
-      .crossJoin(Tables.lineitem(spark, dir).agg(count(lit(1)).as("l")))
-      .select((col("c") + col("p") + col("o") + col("l")).as("total_records"))
+  def qualityScore(spark: SparkSession, dir: String): DataFrame =
+    qualityScoreOver(spark, dir, qualityChecks(spark, dir))
+
+  /** [[qualityScore]] over an already computed check relation of the
+    * tables in `dir` — the pipeline passes the `quality/checks` it just
+    * wrote, so the 12 checks run once per DAG. */
+  def qualityScoreOver(spark: SparkSession, dir: String, checks: DataFrame): DataFrame = {
+    val viol = checks.agg(sum("violations").as("total_violations"))
+    // the four tables' rows counted in one pass over their row counts
+    val records = Seq(Tables.customer(spark, dir), Tables.part(spark, dir),
+        Tables.orders(spark, dir), Tables.lineitem(spark, dir))
+      .map(_.select(lit(1).as("row"))).reduce(_.unionAll(_))
+      .agg(count(lit(1)).as("total_records"))
     val score = greatest(lit(0.0),
       (lit(1.0) - col("total_violations").cast(DoubleType)
         / col("total_records").cast(DoubleType)) * lit(100.0))
@@ -161,6 +182,16 @@ UNION ALL SELECT 'orders_without_items', 'referential_integrity',
       score.as("quality_score"),
       when(score >= 95, "A").when(score >= 85, "B").when(score >= 70, "C")
         .otherwise("D").as("grade"))
+  }
+
+  /** The pipeline's `quality_report.json` document for a score relation
+    * (validate_data.py:162-177). */
+  def reportJson(score: DataFrame): String = {
+    val r = score.head()
+    s"""{"total_records":${r.getAs[Long]("total_records")},""" +
+      s""""total_violations":${r.getAs[Long]("total_violations")},""" +
+      s""""quality_score":${r.getAs[Double]("quality_score")},""" +
+      s""""grade":"${r.getAs[String]("grade")}"}"""
   }
 
   val qualityScoreSql: String = {

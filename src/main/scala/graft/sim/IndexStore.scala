@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.Paths
@@ -190,59 +191,68 @@ object IndexStore {
       s"$version\n${tables.mkString(",")}", fingerprint)
     val hit = served.get(key)
     if (hit != null) return hit
-    // Eviction on the miss path, two rules:
-    //  - SUPERSEDED vintages of THIS index for THIS app (same dataDir +
-    //    name, different version/fingerprint) can never hit again — a
-    //    collection rewrite changed the fingerprint — and would
-    //    otherwise pin their DataFrame plans for the session's
-    //    lifetime.
-    //  - entries of STOPPED applications only: a blanket
-    //    "everything foreign" sweep made two live sessions in one JVM
-    //    mutually evict each other's memo on every miss, defeating it.
-    //    Liveness is read off the stored handles themselves (a
-    //    DataFrame carries its session); a handle-less entry is dead
-    //    weight either way.
-    served.entrySet().removeIf { e =>
-      val k = e.getKey
-      (k._1 == appId && k._2 == dataDir && k._3 == name && k != key) ||
-        (k._1 != appId && e.getValue.values.headOption.forall(
-          _.sparkSession.sparkContext.isStopped))
+    val dir = indexDir(dataDir, name)
+    locks.computeIfAbsent(dir, _ => new Object).synchronized {
+      // a thread that waited here while another built this vintage
+      // serves that thread's handles instead of reading the store again
+      val built = served.get(key)
+      if (built != null) built
+      else {
+        // Eviction on the miss path, two rules:
+        //  - SUPERSEDED vintages of THIS index for THIS app (same dataDir +
+        //    name, different version/fingerprint) can never hit again — a
+        //    collection rewrite changed the fingerprint — and would
+        //    otherwise pin their DataFrame plans for the session's
+        //    lifetime.
+        //  - entries of STOPPED applications only: a blanket
+        //    "everything foreign" sweep made two live sessions in one JVM
+        //    mutually evict each other's memo on every miss, defeating it.
+        //    Liveness is read off the stored handles themselves (a
+        //    DataFrame carries its session); a handle-less entry is dead
+        //    weight either way.
+        served.entrySet().removeIf { e =>
+          val k = e.getKey
+          (k._1 == appId && k._2 == dataDir && k._3 == name && k != key) ||
+            (k._1 != appId && e.getValue.values.headOption.forall(
+              _.sparkSession.sparkContext.isStopped))
+        }
+        val loaded = loadOrBuildLocked(spark, dir, name, version, fingerprint, tables)(build)
+        served.put(key, loaded)
+        loaded
+      }
     }
-    val loaded = loadOrBuildUncached(spark, dataDir, name, version,
-      fingerprint, tables)(build)
-    served.put(key, loaded)
-    loaded
   }
 
-  private def loadOrBuildUncached(spark: SparkSession, dataDir: String,
-                                  name: String, version: String,
-                                  fingerprint: String, tables: Seq[String])
+  /** The manifest check and, on a miss, the build and commit; the
+    * caller holds `dir`'s lock. */
+  private def loadOrBuildLocked(spark: SparkSession, dir: String, name: String,
+                                version: String, fingerprint: String, tables: Seq[String])
                  (build: => Map[String, DataFrame]): Map[String, DataFrame] = {
-    val dir = indexDir(dataDir, name)
-    val lock = locks.computeIfAbsent(dir, _ => new Object)
-    lock.synchronized {
-      val fs = fsOf(spark, dir)
-      val dirP = new HPath(dir)
-      // sweep vintages stranded by a crash mid-commit: a `.tmp-*` whose
-      // build never swapped in, or a `.old-*` parked copy whose final
-      // delete (or best-effort restore) failed — both are dead weight
-      // that would otherwise accumulate on disk indefinitely. Under the
-      // per-path lock, and only siblings of THIS index's directory.
-      val parent = dirP.getParent
-      if (parent != null && fs.exists(parent)) {
-        val base = dirP.getName
-        fs.listStatus(parent).foreach { st =>
-          val n = st.getPath.getName
-          if (n.startsWith(base + ".tmp-") || n.startsWith(base + ".old-")) {
-            if (!fs.delete(st.getPath, true))
-              System.err.println(s"[indexstore] could not sweep stale vintage ${st.getPath}")
-          }
+    val fs = fsOf(spark, dir)
+    val dirP = new HPath(dir)
+    // sweep vintages stranded by a crash mid-commit: a `.tmp-*` whose
+    // build never swapped in, or a `.old-*` parked copy whose final
+    // delete (or best-effort restore) failed — both are dead weight
+    // that would otherwise accumulate on disk indefinitely. Under the
+    // per-path lock, and only siblings of THIS index's directory.
+    val parent = dirP.getParent
+    if (parent != null && fs.exists(parent)) {
+      val base = dirP.getName
+      fs.listStatus(parent).foreach { st =>
+        val n = st.getPath.getName
+        if (n.startsWith(base + ".tmp-") || n.startsWith(base + ".old-")) {
+          if (!fs.delete(st.getPath, true))
+            System.err.println(s"[indexstore] could not sweep stale vintage ${st.getPath}")
         }
       }
-      val manifest = new HPath(dirP, "_manifest")
-      val want = s"version=$version\nfingerprint=$fingerprint\ntables=${tables.mkString(",")}"
-      val hit = readManifest(fs, manifest).contains(want)
-      if (!hit) {
+    }
+    val manifest = new HPath(dirP, "_manifest")
+    val want = s"version=$version\nfingerprint=$fingerprint\ntables=${tables.mkString(",")}"
+    // a vintage built here is served with the schemas it was written
+    // with; a stored one is read with inference (one footer job per table)
+    val written: Map[String, StructType] =
+      if (readManifest(fs, manifest).contains(want)) Map.empty
+      else {
         val built = build
         require(tables.forall(built.contains),
           s"index build for $name must produce ${tables.mkString(",")}; got ${built.keys.mkString(",")}")
@@ -280,8 +290,11 @@ object IndexStore {
         }
         if (parked && !fs.delete(oldP, true))
           System.err.println(s"[indexstore] could not delete parked vintage $oldP (swept at next entry)")
+        tables.map(t => t -> built(t).schema).toMap
       }
-      tables.map(t => t -> spark.read.parquet(new HPath(dirP, t).toString)).toMap
-    }
+    tables.map { t =>
+      val path = new HPath(dirP, t).toString
+      t -> written.get(t).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+    }.toMap
   }
 }

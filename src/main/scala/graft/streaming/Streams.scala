@@ -129,10 +129,9 @@ GROUP BY user_id, session_seq"""
     * batch reader, so watermarks always see an event-time-capable type. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
     Tables.normalizeTs(
       spark.readStream
-        .schema(raw.schema)
+        .schema(Tables.schemaOf(spark, dir, "events"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir))
   }
@@ -403,9 +402,8 @@ SELECT phash60, MIN(doc_id) AS keeper_doc_id FROM ph GROUP BY phash60"""
   /** The documents parquet as a bounded file stream (the ingest-time
     * view of the corpus). */
   def docsStream(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/documents.parquet")
     spark.readStream
-      .schema(raw.schema)
+      .schema(Tables.schemaOf(spark, dir, "documents"))
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
   }

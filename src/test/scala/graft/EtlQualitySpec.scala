@@ -35,6 +35,42 @@ class EtlQualitySpec extends SparkSpec {
     assert(orphans.nonEmpty && orphans.forall(_.getAs[Long]("violations") == 0))
   }
 
+  test("quality checks on NULL keys, duplicates and orphans on both sides of each join") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("quality_edges").toString
+    Seq[(Option[Long], String)]((Some(1L), "Alice"), (Some(2L), null), (Some(3L), ""),
+        (Some(3L), "Carol"), (None, "NoKey"))
+      .toDF("c_custkey", "c_name").write.parquet(s"$dir/customer.parquet")
+    Seq((10L, 100.0), (11L, 0.0), (12L, -5.0))
+      .toDF("p_partkey", "p_retailprice").write.parquet(s"$dir/part.parquet")
+    Seq[(Option[Long], Long, Double, Double, Double, Double)](
+        (Some(100L), 10L, 1.0, 10.0, 0.0, 0.0), // order 100's items total 10 + 18
+        (Some(100L), 10L, 2.0, 20.0, 0.1, 0.0),
+        (Some(200L), 99L, 1.0, 5.0, 0.0, 0.0),  // no order 200, no part 99
+        (Some(200L), 10L, -1.0, 5.0, 0.6, 0.0), // bad quantity and discount
+        (None, 11L, 3.0, 30.0, 0.0, 0.0))       // NULL order key
+      .toDF("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice", "l_discount", "l_tax")
+      .write.parquet(s"$dir/lineitem.parquet")
+    Seq[(Option[Long], Option[Long], Double)](
+        (Some(100L), Some(1L), 28.0),
+        (Some(100L), Some(2L), 50.0), // duplicate key, total off
+        (Some(300L), Some(7L), 10.0), // no items, no customer 7
+        (None, None, 5.0))
+      .toDF("o_orderkey", "o_custkey", "o_totalprice").write.parquet(s"$dir/orders.parquet")
+    val got = Quality.qualityChecks(spark, dir).collect()
+      .map(r => r.getAs[String]("check_name") -> r.getAs[Long]("violations")).toMap
+    assert(got == Map(
+      "customers_null_name" -> 2L, "customers_duplicate_key" -> 1L,
+      "products_nonpositive_price" -> 2L, "products_cost_exceeds_price" -> 2L,
+      "lineitems_nonpositive_quantity" -> 1L, "lineitems_discount_out_of_range" -> 1L,
+      "lineitems_total_consistency" -> 0L, "orders_total_mismatch" -> 1L,
+      "orphan_lineitems_orders" -> 3L, "orphan_lineitems_parts" -> 1L,
+      "orphan_orders_customers" -> 2L, "orders_without_items" -> 2L))
+    val score = Quality.qualityScore(spark, dir).head()
+    assert(score.getAs[Long]("total_records") == 17L && score.getAs[Long]("total_violations") == 18L)
+    assert(score.getAs[Double]("quality_score") == 0.0 && score.getAs[String]("grade") == "D")
+  }
+
   test("quality_score is a valid grade over actual records") {
     val r = Quality.qualityScore(spark, sf).head
     val score = r.getAs[Double]("quality_score")

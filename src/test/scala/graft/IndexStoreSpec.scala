@@ -108,4 +108,55 @@ class IndexStoreSpec extends SparkSpec {
       k._2 == dir && k._3 == "memo_probe" && k._5 == "fpB"),
       "a miss on another index must not evict this session's live entries")
   }
+
+  test("a built vintage is served with the schema its files read back with") {
+    // a private copy of the warehouse's sources, so every asset builds here
+    val dir = java.nio.file.Files.createTempDirectory("idxstore-wh").toString
+    Seq("region", "nation", "customer", "part", "orders", "lineitem").foreach { t =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/$t.parquet"),
+        java.nio.file.Paths.get(s"$dir/$t.parquet"))
+    }
+    import graft.warehouse.Warehouse
+    Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)](
+      "dim_part" -> Warehouse.dimPart, "dim_customer" -> Warehouse.dimCustomer,
+      "dim_date" -> Warehouse.dimDate, "dim_payment" -> Warehouse.dimPayment,
+      "fact" -> Warehouse.fact).foreach { case (name, asset) =>
+      val served = asset(spark, dir)
+      val stored = new org.apache.hadoop.fs.Path(served.inputFiles.head).getParent.toString
+      assert(stored.endsWith(s"warehouse_$name/$name"), stored)
+      assert(served.schema == spark.read.parquet(stored).schema, name)
+    }
+  }
+
+  test("a thread that waited on the build lock serves the handles built meanwhile") {
+    val dir = java.nio.file.Files.createTempDirectory("idxstore-wait").toString
+    val building = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val waiterBuilt = new java.util.concurrent.atomic.AtomicBoolean(false)
+    @volatile var fromOwner: Map[String, org.apache.spark.sql.DataFrame] = null
+    @volatile var fromWaiter: Map[String, org.apache.spark.sql.DataFrame] = null
+    @volatile var waiterJobs = -1
+    def load(onBuild: => Unit) =
+      IndexStore.loadOrBuild(spark, dir, "wait_probe", "v1", "fp", Seq("t")) {
+        onBuild
+        Map("t" -> spark.range(3).toDF("v"))
+      }
+    val owner = new Thread(() => fromOwner = load { building.countDown(); release.await() })
+    owner.start()
+    assert(building.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    val waiter = new Thread(() =>
+      waiterJobs = jobsIn("idxstore-waiter") { fromWaiter = load(waiterBuilt.set(true)) })
+    waiter.start()
+    // the owner holds the lock until released: wait until the waiter blocks on it
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (waiter.getState != Thread.State.BLOCKED && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    assert(waiter.getState == Thread.State.BLOCKED, "waiter never blocked on the build lock")
+    release.countDown()
+    owner.join(120000); waiter.join(120000)
+    assert(!waiterBuilt.get, "the waiter must not build again")
+    assert(fromOwner != null && (fromWaiter eq fromOwner))
+    assert(waiterJobs == 0, s"the waiter started $waiterJobs jobs")
+    assert(fromWaiter("t").count() == 3)
+  }
 }

@@ -90,20 +90,8 @@ class IvfSpec extends SparkSpec {
   }
 
   test("ivf search job count is independent of query count") {
-    def jobsFor(n: Int): Int = {
-      val group = s"ivf-jobs-$n"
-      spark.sparkContext.setJobGroup(group, group)
-      try Ivf.search(spark, sf, k = 8, nprobe = 2, nQueries = n).count()
-      finally spark.sparkContext.clearJobGroup()
-      // the status tracker is fed asynchronously; poll until stable
-      var prev = -1
-      var cur = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-      while (cur != prev) {
-        prev = cur; Thread.sleep(200)
-        cur = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
-      }
-      cur
-    }
+    def jobsFor(n: Int): Int =
+      jobsIn(s"ivf-jobs-$n")(Ivf.search(spark, sf, k = 8, nprobe = 2, nQueries = n).count())
     val few = jobsFor(2)
     val many = jobsFor(8)
     assert(few == many,

@@ -4,6 +4,7 @@ import graft.multimodal.Multimodal
 import graft.orchestrate.Orchestrator
 import graft.sources.Sources
 import graft.warehouse.Scd2
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
@@ -232,12 +233,46 @@ class PipelineSpec extends SparkSpec {
 
   test("end-to-end pipeline produces all artifacts with a success report") {
     val out = java.nio.file.Files.createTempDirectory("graft_pipe").toString
-    val report = Pipeline.run(spark, sf, out)
+    // every job the DAG starts, by its description; micro-batch jobs carry
+    // the stream's query id instead of a pipeline label
+    val jobs = new ConcurrentLinkedQueue[(String, Boolean)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((e.properties.getProperty("spark.job.description"),
+          e.properties.getProperty("sql.streaming.queryId") != null))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val report = try {
+      val r = Pipeline.run(spark, sf, out)
+      // events reach a listener in order: once this marker job is seen,
+      // every job of the DAG has been recorded
+      Orchestrator.described(spark, "drain", "marker")(spark.range(1).count())
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!jobs.asScala.exists(_._1 == "drain/marker") && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
     assert(report.status == "success")
-    assert(report.steps.map(_.name) == Seq("stream_ingest_events",
+    val steps = Seq("stream_ingest_events",
       "cleanse_production", "quality_checks", "load_warehouse", "analytics",
-      "monitoring", "curate_corpus", "retention_cleanup"))
-    assert(new java.io.File(s"$out/quality/quality_report.json").exists())
+      "monitoring", "curate_corpus", "retention_cleanup")
+    assert(report.steps.map(_.name) == steps)
+    assert(jobs.asScala.exists(_._1 == "drain/marker"), "the marker job was never seen")
+    val dagJobs = jobs.asScala.toSeq.filter(_._1 != "drain/marker")
+    val unlabelled = dagJobs.collect {
+      case (d, false) if d == null || !steps.exists(st => d.matches(s"$st/[a-z0-9_]+")) => d
+    }
+    assert(unlabelled.isEmpty, s"jobs without a <step>/<output> description: $unlabelled")
+    assert(dagJobs.exists(_._2), "the stream's micro-batch jobs were not seen")
+
+    // the reports read the outputs just written and say what the
+    // registered queries say (a fresh outDir, so the fixed Det timestamps)
+    def text(rel: String) =
+      new String(Files.readAllBytes(java.nio.file.Paths.get(s"$out/$rel")), "UTF-8")
+    assert(text("quality/quality_report.json") ==
+      graft.quality.Quality.reportJson(graft.quality.Quality.qualityScore(spark, sf)))
+    assert(text("monitoring/monitoring_report.json") ==
+      graft.monitor.Monitor.monitoringReportJson(spark, sf))
     // every output the concurrent writes produce landed, with rows: a
     // silently dropped write fails here
     val outputs =

@@ -7,6 +7,22 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf = "/root/testdata/sf0.001"
+
+  /** Spark jobs `body` starts on this thread, counted under job group
+    * `group` (the status tracker is fed asynchronously; poll until the
+    * count is stable). */
+  def jobsIn(group: String)(body: => Any): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    var prev = -1
+    var cur = sc.statusTracker.getJobIdsForGroup(group).length
+    while (cur != prev) {
+      prev = cur; Thread.sleep(200)
+      cur = sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    cur
+  }
 }
 
 object SparkSpec {

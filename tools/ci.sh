@@ -39,7 +39,8 @@ grep -q '^## q01_top_products' "$WORK/plans.md"
 echo "== [5/6] pipeline smoke run =="
 sbt -batch "runMain graft.Pipeline $SF $WORK/pipeline"
 test -s "$WORK/pipeline/pipeline_execution_report.json"
-# the run succeeded and every warehouse table loaded its source's rows
+# the run succeeded, every warehouse table loaded its source's rows, and
+# the monitoring report carries the score the quality step handed on
 python3 - "$WORK/pipeline" <<'PY'
 import json, sys
 out = sys.argv[1]
@@ -48,6 +49,10 @@ assert report["status"] == "success", f"pipeline status {report['status']}"
 loads = json.load(open(f"{out}/warehouse/load_report.json"))
 bad = {t: v["status"] for t, v in loads.items() if v["status"] != "loaded"}
 assert loads and not bad, f"warehouse load report: {bad or 'empty'}"
+quality = json.load(open(f"{out}/quality/quality_report.json"))["quality_score"]
+monitored = json.load(open(f"{out}/monitoring/monitoring_report.json"))[
+    "checks"]["data_quality"]["quality_score"]
+assert monitored == quality, f"monitoring quality_score {monitored} != quality report's {quality}"
 PY
 
 echo "== [6/6] benchmark self-test =="
