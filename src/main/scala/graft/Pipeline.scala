@@ -19,9 +19,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *
   * Each result is computed once. A step's report reads the outputs just
   * written, as the reference's stages hand their results on: the quality
-  * report scores `quality/checks`, the monitoring report rolls up
-  * `monitoring/freshness`, `monitoring/volume_anomaly` and
-  * `quality/checks`, and the load report reads
+  * report scores `quality/checks` once, the monitoring report rolls up
+  * `monitoring/freshness`, `monitoring/volume_anomaly` and that score,
+  * and the load report reads
   * `warehouse/warehouse_load_report`. Every Spark job a step starts
   * carries the description `<step>/<output>`, except the stream's
   * micro-batches, which keep Spark's streaming description.
@@ -50,8 +50,9 @@ object Pipeline {
 
   /** The eight-stage DAG as orchestrated steps. */
   def run(spark: SparkSession, sfDir: String, outDir: String): Orchestrator.Report = {
-    // handles on the parquet outputs this run wrote, keyed `<dir>/<name>`
-    // and read with the schema they were written with (no inference job)
+    // the results this run computed, keyed `<dir>/<name>`: handles on the
+    // parquet outputs, read with the schema they were written with (no
+    // inference job), and the quality score collected to the driver
     val written = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
     def output(rel: String): DataFrame =
       Option(written.get(rel)).getOrElse(sys.error(s"$rel has not been written in this run"))
@@ -62,7 +63,7 @@ object Pipeline {
         name -> { () =>
           val df = q(spark, sfDir)
           val path = s"$outDir/$dir/$name"
-          df.write.mode("overwrite").parquet(path)
+          sources.Sources.fullRefresh(df, path)
           written.put(s"$dir/$name", spark.read.schema(df.schema).parquet(path))
           ()
         }
@@ -90,11 +91,14 @@ object Pipeline {
       "quality_checks" -> { () =>
         fanOut(spark, "quality_checks", parquetJobs("quality", Seq(
           "checks" -> quality.Quality.qualityChecks _)))
-        // scored from the checks just written: the suite runs once
+        // scored once, from the checks just written, and collected: the
+        // report and the monitoring step read the one-row local relation
         described(spark, "quality_checks", "quality_report") {
-          sources.Sources.writeJsonReport(
-            quality.Quality.reportJson(
-              quality.Quality.qualityScoreOver(spark, sfDir, output("quality/checks"))),
+          val score = quality.Quality.qualityScoreOver(spark, sfDir, output("quality/checks"))
+          val local = spark.createDataFrame(
+            java.util.Arrays.asList(score.collect(): _*), score.schema)
+          written.put("quality/score", local)
+          sources.Sources.writeJsonReport(quality.Quality.reportJson(local),
             s"$outDir/quality/quality_report.json")
         }
       },
@@ -137,7 +141,7 @@ object Pipeline {
           "freshness" -> monitor.Monitor.freshnessLag _)))
         // Consolidated report (pipeline_monitor.py:213-266), rolled up from
         // the freshness and volume rows just written and the quality step's
-        // checks. The reference reads the PREVIOUS run's end time from its
+        // score. The reference reads the PREVIOUS run's end time from its
         // execution report. With a prior report we pair its mtime with
         // wall-clock now; WITHOUT one (first run) both ends fall back to the
         // fixed Det pair — mixing the fixed 2024 LastRunTs with wall-clock
@@ -154,7 +158,7 @@ object Pipeline {
             else (Det.LastRunTs, Det.AsOfTs)
           val rollup = monitor.Monitor.healthRollupOver(lastRun, now)(spark,
             output("monitoring/freshness"), output("monitoring/volume_anomaly"),
-            quality.Quality.qualityScoreOver(spark, sfDir, output("quality/checks")))
+            output("quality/score"))
           sources.Sources.writeJsonReport(
             monitor.Monitor.reportJsonOver(rollup, lastRun, now),
             s"$outDir/monitoring/monitoring_report.json")

@@ -4,12 +4,15 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-/** The ONE place the derived-pricing business rules live. Three layers
-  * apply them — cleansing (`etl.Cleanse`), the warehouse dim
-  * (`warehouse.Warehouse.buildDimPart`), and the quality check
-  * (`quality.Quality`) — and they must agree exactly, or the cleanse
-  * output, the dim, and the validation silently drift apart. The SQL
-  * fragments are the DuckDB twins of the Column builders.
+/** The ONE place the derived-pricing business rules live on the Spark
+  * side. Three layers apply them — cleansing (`etl.Cleanse`), the
+  * warehouse dim (`warehouse.Warehouse.buildDimPart`), and the quality
+  * check (`quality.Quality`) — and they must agree exactly, or the
+  * cleanse output, the dim, and the validation silently drift apart.
+  * Their DuckDB oracles spell the same rules out in their own SQL
+  * (`Cleanse.cleanseProductsSql`, `warehouse.OracleSql.prelude`,
+  * `Quality.qualityChecksSql`), so the oracle check compares each layer
+  * with an independent statement of the rules.
   *
   * Rules (reference: generate_data.py:92 cost = price × uniform(0.5,
   * 0.8) — fixed at 0.60 for determinism; staging_to_production.py:51-58
@@ -32,11 +35,4 @@ object Pricing {
     when(price < BudgetBelow, "Budget")
       .when(price < MidRangeBelow, "Mid-range")
       .otherwise("Premium")
-
-  /** DuckDB twins (price expression interpolated). */
-  def priceSql(retail: String): String = s"CAST($retail AS DECIMAL(18,2))"
-  def costSql(price: String): String =
-    s"CAST(ROUND($price * $CostRate, 2) AS DECIMAL(18,2))"
-  def priceCategorySql(price: String): String =
-    s"CASE WHEN $price < $BudgetBelow THEN 'Budget' WHEN $price < $MidRangeBelow THEN 'Mid-range' ELSE 'Premium' END"
 }

@@ -15,52 +15,53 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     analytics.Analytics.q01(spark, "/root/testdata/sf0.001")
 
-  /** The per-module inventories, merged (left to right) into [[queries]].
-    * Kept as a Seq so the registry spec can prove no key is shadowed by
-    * a later module (`inventorySizes.sum == queries.size`). */
-  private[graft] def inventories: Seq[Map[String, (SparkSession, String) => DataFrame]] = Seq(
-    analytics.Analytics.inventory,
-    etl.Cleanse.inventory,
-    etl.Load.inventory,
-    quality.Quality.inventory,
-    quality.Pii.inventory,
-    monitor.Monitor.inventory,
-    warehouse.WarehouseQueries.inventory,
-    text.TextOps.inventory,
-    sim.Similarity.inventory,
-    sim.Ivf.inventory,
-    sim.Pq.inventory,
-    sim.Ivfpq.inventory,
-    streaming.Streams.inventory,
-    multimodal.Multimodal.inventory,
-    ext.Extensions.inventory,
-    text.DedupClusters.inventory,
-    analytics.WindowOps.inventory,
-    etl.Skew.inventory,
-    ext.TemporalJoins.inventory,
-    ext.Reshape.inventory,
-    analytics.Quantiles.inventory,
-    ext.SetOps.inventory,
-    text.Curation.inventory,
-    text.Packing.inventory,
-    text.Incremental.inventory,
-    text.Relevance.inventory,
-    analytics.Funnels.inventory,
-    quality.Profile.inventory,
-    monitor.Drift.inventory,
-    etl.Cdc.inventory,
-    sim.EmbeddingDrift.inventory,
-    sim.Contrastive.inventory,
-    analytics.Stats.inventory,
-    analytics.Basket.inventory,
-    analytics.Rfm.inventory,
-    analytics.Graph.inventory)
+  /** Each module's (inventory, oracle SQL) pair, merged left to right
+    * into [[queries]] and [[oracleSql]]. Kept as a Seq so the registry
+    * spec can prove no key is shadowed by a later module
+    * (`inventorySizes.sum == queries.size`). */
+  private def modules: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] = Seq(
+    analytics.Analytics.inventory -> analytics.Analytics.oracle,
+    etl.Cleanse.inventory -> etl.Cleanse.oracle,
+    etl.Load.inventory -> etl.Load.oracle,
+    quality.Quality.inventory -> quality.Quality.oracle,
+    quality.Pii.inventory -> quality.Pii.oracle,
+    monitor.Monitor.inventory -> monitor.Monitor.oracle,
+    warehouse.WarehouseQueries.inventory -> warehouse.WarehouseQueries.oracle,
+    text.TextOps.inventory -> text.TextOps.oracle,
+    sim.Similarity.inventory -> sim.Similarity.oracle,
+    sim.Ivf.inventory -> sim.Ivf.oracle,
+    sim.Pq.inventory -> sim.Pq.oracle,
+    sim.Ivfpq.inventory -> sim.Ivfpq.oracle,
+    streaming.Streams.inventory -> streaming.Streams.oracle,
+    multimodal.Multimodal.inventory -> multimodal.Multimodal.oracle,
+    ext.Extensions.inventory -> ext.Extensions.oracle,
+    text.DedupClusters.inventory -> text.DedupClusters.oracle,
+    analytics.WindowOps.inventory -> analytics.WindowOps.oracle,
+    etl.Skew.inventory -> etl.Skew.oracle,
+    ext.TemporalJoins.inventory -> ext.TemporalJoins.oracle,
+    ext.Reshape.inventory -> ext.Reshape.oracle,
+    analytics.Quantiles.inventory -> analytics.Quantiles.oracle,
+    ext.SetOps.inventory -> ext.SetOps.oracle,
+    text.Curation.inventory -> text.Curation.oracle,
+    text.Packing.inventory -> text.Packing.oracle,
+    text.Incremental.inventory -> text.Incremental.oracle,
+    text.Relevance.inventory -> text.Relevance.oracle,
+    analytics.Funnels.inventory -> analytics.Funnels.oracle,
+    quality.Profile.inventory -> quality.Profile.oracle,
+    monitor.Drift.inventory -> monitor.Drift.oracle,
+    etl.Cdc.inventory -> etl.Cdc.oracle,
+    sim.EmbeddingDrift.inventory -> sim.EmbeddingDrift.oracle,
+    sim.Contrastive.inventory -> sim.Contrastive.oracle,
+    analytics.Stats.inventory -> analytics.Stats.oracle,
+    analytics.Basket.inventory -> analytics.Basket.oracle,
+    analytics.Rfm.inventory -> analytics.Rfm.oracle,
+    analytics.Graph.inventory -> analytics.Graph.oracle)
 
-  private[graft] def inventorySizes: Seq[Int] = inventories.map(_.size)
+  private[graft] def inventorySizes: Seq[Int] = modules.map(_._1.size)
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    inventories.reduce(_ ++ _)
+    modules.map(_._1).reduce(_ ++ _)
 
   /** Eval/recall/baseline-contract rows: driver-SF-only verification
     * surfaces whose COST is deliberately not a scale statement — recall
@@ -109,41 +110,5 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    analytics.Analytics.oracle ++
-      etl.Cleanse.oracle ++
-      etl.Load.oracle ++
-      quality.Quality.oracle ++
-      quality.Pii.oracle ++
-      monitor.Monitor.oracle ++
-      warehouse.WarehouseQueries.oracle ++
-      text.TextOps.oracle ++
-      sim.Similarity.oracle ++
-      sim.Ivf.oracle ++
-      sim.Pq.oracle ++
-      sim.Ivfpq.oracle ++
-      streaming.Streams.oracle ++
-      multimodal.Multimodal.oracle ++
-      ext.Extensions.oracle ++
-      text.DedupClusters.oracle ++
-      analytics.WindowOps.oracle ++
-      etl.Skew.oracle ++
-      ext.TemporalJoins.oracle ++
-      ext.Reshape.oracle ++
-      analytics.Quantiles.oracle ++
-      ext.SetOps.oracle ++
-      text.Curation.oracle ++
-      text.Packing.oracle ++
-      text.Incremental.oracle ++
-      text.Relevance.oracle ++
-      analytics.Funnels.oracle ++
-      quality.Profile.oracle ++
-      monitor.Drift.oracle ++
-      etl.Cdc.oracle ++
-      sim.EmbeddingDrift.oracle ++
-      sim.Contrastive.oracle ++
-      analytics.Stats.oracle ++
-      analytics.Basket.oracle ++
-      analytics.Rfm.oracle ++
-      analytics.Graph.oracle
+  def oracleSql: Map[String, String] = modules.map(_._2).reduce(_ ++ _)
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.catalyst.analysis.{TypeCheckResult, UnresolvedAttribute}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -71,8 +72,39 @@ object QDot {
     acc
   }
 
+  /** JVM twin of the grid for driver- or group-side kernels: floor(x·1e7)
+    * as long, per component. */
+  def quantize(v: Array[Float]): Array[Long] = {
+    val q = new Array[Long](v.length)
+    var i = 0
+    while (i < v.length) { q(i) = math.floor(v(i).toDouble * 1e7).toLong; i += 1 }
+    q
+  }
+
+  /** Exact dot product of two already-quantized vectors. */
+  def dot(a: Array[Long], b: Array[Long]): Long = {
+    var acc = 0L
+    var i = 0
+    while (i < a.length) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
+
   /** Column wrapper over named input columns (dots resolve qualifiers). */
   def of(aCol: String, bCol: String): Column =
     org.apache.spark.sql.GraftColumnBridge.toColumn(
       QDot(UnresolvedAttribute(aCol), UnresolvedAttribute(bCol)))
+
+  /** The grid norm sqrt(qdot(a, a)) as a double. */
+  def norm(aCol: String): Column = sqrt(of(aCol, aCol).cast("double"))
+
+  /** The grid cosine qdot(a, b) / (‖a‖·‖b‖): one fixed IEEE expression
+    * tree, which every cosine in `sim/` and `text/` spells this way so
+    * that all of them agree bit for bit with each other and with the
+    * oracles. Callers that precompute the norms pass them in. */
+  def cosine(aCol: String, bCol: String,
+             normA: Column, normB: Column): Column =
+    of(aCol, bCol).cast("double") / (normA * normB)
+
+  def cosine(aCol: String, bCol: String): Column =
+    cosine(aCol, bCol, norm(aCol), norm(bCol))
 }

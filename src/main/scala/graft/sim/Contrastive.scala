@@ -63,10 +63,7 @@ object Contrastive {
       .filter(col("vec_id") =!= col("anchor_id"))
       .withColumn("role",
         when(col("label") === col("anchor_label"), lit("pos")).otherwise(lit("neg")))
-      .withColumn("cosine",
-        graft.functions.QDot.of("q", "embedding").cast("double")
-          / (sqrt(graft.functions.QDot.of("q", "q").cast("double")) *
-             sqrt(graft.functions.QDot.of("embedding", "embedding").cast("double"))))
+      .withColumn("cosine", graft.functions.QDot.cosine("q", "embedding"))
       .withColumn("rank", row_number().over(
         Window.partitionBy("anchor_id", "role")
           .orderBy(desc("cosine"), asc("vec_id"))))
@@ -81,12 +78,7 @@ object Contrastive {
     * text to every other IVF oracle, so the assignment arithmetic
     * cannot drift), then the label join, the cell-local scoring, and
     * the per-(anchor, role) windows. */
-  val contrastiveTriplesSql: String = {
-    val cos = """CAST(list_sum(list_transform(generate_series(1, len(a.aqe)),
-                j -> a.aqe[j] * c.qe[j])) AS DOUBLE)
-           / (sqrt(CAST(list_sum(list_transform(a.aqe, x -> x * x)) AS DOUBLE))
-            * sqrt(CAST(list_sum(list_transform(c.qe, x -> x * x)) AS DOUBLE)))"""
-    s"""
+  val contrastiveTriplesSql: String = s"""
 WITH ${Ivf.ivfCommonCtes},
 lab AS (SELECT vec_id, label FROM embeddings),
 anch AS (
@@ -96,7 +88,7 @@ cand AS (SELECT f.vec_id, f.qe, f.cell, l.label FROM afin f JOIN lab l USING (ve
 scored AS (
   SELECT a.anchor_id, c.vec_id AS cand_id, c.label AS cand_label,
          CASE WHEN c.label = a.anchor_label THEN 'pos' ELSE 'neg' END AS role,
-         $cos AS cosine
+         ${Grid.cosine("a.aqe", "c.qe")} AS cosine
   FROM anch a JOIN cand c ON a.cell = c.cell AND c.vec_id <> a.anchor_id),
 ranked AS (
   SELECT anchor_id, role, ROW_NUMBER() OVER (
@@ -106,7 +98,6 @@ ranked AS (
 SELECT anchor_id, role, rank, cand_id, cand_label, cosine FROM ranked
 WHERE (role = 'pos' AND rank <= 1) OR (role = 'neg' AND rank <= $NNegatives)
 ORDER BY anchor_id, role, rank"""
-  }
 
   /** Per-cell keep cap for [[clusterBalancedSample]]. */
   val CellCap = 4

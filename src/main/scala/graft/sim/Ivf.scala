@@ -43,10 +43,6 @@ object Ivf {
     * 1e-7 grid). */
   final case class IvfIndex(assignments: DataFrame, centroids: DataFrame)
 
-  /** 1e-7-grid quantized component (same rule as [[Similarity]]). */
-  private def qz(x: String): String =
-    s"cast(floor(cast($x as double) * 1e7) as bigint)"
-
   /** Argmin centroid id for each row of `vecs` given driver-side
     * centroids — one native codegen'd expression
     * ([[graft.functions.QArgminCell]]): the embedding quantizes once
@@ -74,10 +70,14 @@ object Ivf {
     * dump).
     */
   private[graft] def assign(vecs: DataFrame, centroids: Array[(Int, Array[Long])]): DataFrame =
-    vecs.withColumn("cell",
-      when(col("embedding").isNull, lit(-1))
-        .otherwise(coalesce(
-          graft.functions.QArgminCell.of("embedding", centroids), lit(-1))))
+    vecs.withColumn("cell", nearestCell(centroids))
+
+  /** The `rank`-th nearest cell of `embedding` (1 or 2), null embeddings
+    * routed to -1 as [[assign]] describes. */
+  private[sim] def nearestCell(centroids: Array[(Int, Array[Long])], rank: Int = 1): Column =
+    when(col("embedding").isNull, lit(-1))
+      .otherwise(coalesce(
+        graft.functions.QArgminCell.of("embedding", centroids, rank), lit(-1)))
 
   /** Fixed-iteration Lloyd k-means over the collection; returns the final
     * centroids as 1e-7-grid integer vectors (the per-iteration groupBy(k)
@@ -87,8 +87,7 @@ object Ivf {
       .orderBy("vec_id").limit(k).collect()
       .zipWithIndex
       .map { case (r, i) =>
-        (i, r.getAs[Seq[Float]]("embedding")
-          .map(f => math.floor(f.toDouble * 1e7).toLong).toArray)
+        (i, graft.functions.QDot.quantize(r.getAs[Seq[Float]]("embedding").toArray))
       }
     val dim = centroids.head._2.length
     (1 to iterations).foreach { _ =>
@@ -108,7 +107,7 @@ object Ivf {
       val means = assign(vecs, centroids)
         .select(col("cell"), posexplode(col("embedding")).as(Seq("dim", "v")))
         .groupBy("cell", "dim")
-        .agg(sum(expr(qz("v"))).as("s"), count(lit(1)).as("n"))
+        .agg(sum(expr(Grid.qz("v"))).as("s"), count(lit(1)).as("n"))
         .collect()
       val updated = means.groupBy(_.getAs[Int]("cell")).map { case (cell, rows) =>
         val comps = new Array[Long](dim)
@@ -176,14 +175,34 @@ object Ivf {
     IvfIndex(t("assignments"), t("centroids"))
   }
 
+  /** The coarse probe: the `nprobe` nearest cells of each of the first
+    * `nQueries` vectors, as (query_id, q, cell) — queries ⨯ broadcast(k
+    * centroids), exact grid L2², ranked by (d2, cell). Shared by
+    * [[search]] and [[Ivfpq.search]]. Queries read the raw table, not
+    * the assignments, so the k-candidate argmin is not evaluated just
+    * to be projected away. */
+  private[sim] def probe(spark: SparkSession, dir: String, centroids: DataFrame,
+                         nprobe: Int, nQueries: Int): DataFrame =
+    Tables.embeddings(spark, dir)
+      .filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q"))
+      .crossJoin(broadcast(centroids))
+      .withColumn("d2",
+        expr(s"""aggregate(zip_with(q, centroid,
+                   (x, y) -> (${Grid.qz("x")} - y) * (${Grid.qz("x")} - y)),
+                 cast(0 as bigint), (a, v) -> a + v)"""))
+      .withColumn("prank", row_number().over(
+        Window.partitionBy("query_id").orderBy(asc("d2"), asc("cell"))))
+      .filter(col("prank") <= nprobe)
+      .select("query_id", "q", "cell")
+
   /** Top-k search probing the `nprobe` nearest cells per query. Queries
     * are the first `nQueries` vectors (self excluded), as in
     * [[Similarity.annCosineTopK]] — so recall against the exact result is
     * directly measurable.
     *
-    * One declarative plan, no per-query jobs: queries ⨯ broadcast(k
-    * centroids) → windowed nprobe-nearest cells → equality join on cell
-    * against the inverted lists → exact quantized cosine
+    * One declarative plan, no per-query jobs: [[probe]] → equality join
+    * on cell against the inverted lists → exact quantized cosine
     * ([[graft.functions.QDot]]) → windowed top-k. Job count is therefore
     * independent of nQueries (spec-asserted).
     */
@@ -192,30 +211,10 @@ object Ivf {
     // at the registered operating point, serve from the persisted
     // index; a non-default k is an experiment — build inline
     val idx = if (k == K) index(spark, dir) else buildIndexFull(spark, dir, k)
-    // queries never use `cell` — read the raw table instead of
-    // idx.assignments so the k-candidate argmin isn't evaluated a
-    // second time just to be projected away
-    val queries = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"))
-
-    val probes = queries
-      .crossJoin(broadcast(idx.centroids))
-      .withColumn("d2",
-        expr(s"""aggregate(zip_with(q, centroid,
-                   (x, y) -> (${qz("x")} - y) * (${qz("x")} - y)),
-                 cast(0 as bigint), (a, v) -> a + v)"""))
-      .withColumn("prank", row_number().over(
-        Window.partitionBy("query_id").orderBy(asc("d2"), asc("cell"))))
-      .filter(col("prank") <= nprobe)
-      .select("query_id", "q", "cell")
-
-    probes.join(idx.assignments, "cell")
+    probe(spark, dir, idx.centroids, nprobe, nQueries)
+      .join(idx.assignments, "cell")
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine",
-        graft.functions.QDot.of("q", "embedding").cast("double")
-          / (sqrt(graft.functions.QDot.of("q", "q").cast("double")) *
-             sqrt(graft.functions.QDot.of("embedding", "embedding").cast("double"))))
+      .withColumn("cosine", graft.functions.QDot.cosine("q", "embedding"))
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))))
       .filter(col("rank") <= topK)
@@ -232,21 +231,23 @@ object Ivf {
   val TopK = 10
   val NQueries = 5
 
-  private val duckD2 =
-    "list_sum(list_transform(generate_series(1, len(%s)), j -> (%s[j] - %s[j]) * (%s[j] - %s[j])))"
-  private[sim] def d2(a: String, b: String): String =
-    duckD2.format(a, a, b, a, b)
+  /** CTE `name` (vec_id, qe, cell): each (vec_id, qe) row of `src`
+    * with its `rank`-th nearest centroid of `cents` (cell, centroid)
+    * under the (d2, cell) order — the oracle face of
+    * [[graft.functions.QArgminCell]]. */
+  private[sim] def nearestCellCte(name: String, src: String, cents: String,
+                                  rank: Int = 1): String = s"""$name AS (
+  SELECT vec_id, qe, cell FROM (
+    SELECT q.vec_id, q.qe, c.cell,
+           ROW_NUMBER() OVER (PARTITION BY q.vec_id
+             ORDER BY ${Grid.d2("q.qe", "c.centroid")}, c.cell) AS rn
+    FROM $src q CROSS JOIN $cents c) WHERE rn = $rank)"""
 
   /** One Lloyd iteration as CTEs: argmin assignment against c{i-1},
     * per-(cell,dim) exact integer sums, floor(sum/n) re-snap, empty
     * cells keep their previous centroid. */
   private def duckIter(i: Int): String = s"""
-a$i AS (
-  SELECT vec_id, qe, cell FROM (
-    SELECT q.vec_id, q.qe, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-             ORDER BY ${d2("q.qe", "c.centroid")}, c.cell) AS rn
-    FROM q CROSS JOIN c${i - 1} c) WHERE rn = 1),
+${nearestCellCte(s"a$i", "q", s"c${i - 1}")},
 m$i AS (
   SELECT cell, dim, CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS comp
   FROM (SELECT cell, generate_subscripts(qe, 1) AS dim, unnest(qe) AS v FROM a$i)
@@ -264,46 +265,35 @@ c$i AS (
     * TRAINING collection (e.g. the base slice for the delta-assign
     * op); empty trains on everything. */
   private[sim] def ivfCommonCtesOver(trainWhere: String): String = s"""q AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1e7) AS BIGINT)) AS qe
-  FROM embeddings$trainWhere),
+  SELECT vec_id, ${Grid.duckQe("embedding")} AS qe FROM embeddings$trainWhere),
 c0 AS (
   SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS cell, qe AS centroid
   FROM (SELECT vec_id, qe FROM q ORDER BY vec_id LIMIT $K)),
 ${(1 to Iterations).map(duckIter).mkString(",")},
-afin AS (
-  SELECT vec_id, qe, cell FROM (
-    SELECT q.vec_id, q.qe, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-             ORDER BY ${d2("q.qe", "c.centroid")}, c.cell) AS rn
-    FROM q CROSS JOIN c$Iterations c) WHERE rn = 1)"""
+${nearestCellCte("afin", "q", s"c$Iterations")}"""
 
   private[sim] val ivfCommonCtes: String = ivfCommonCtesOver("")
+
+  /** The [[probe]] replay over the `afin`/`c$Iterations` CTEs of
+    * [[ivfCommonCtes]]: (query_id, qqe, cell). */
+  private[sim] val probesCte: String = s"""probes AS (
+  SELECT query_id, qqe, cell FROM (
+    SELECT f.vec_id AS query_id, f.qe AS qqe, c.cell,
+           ROW_NUMBER() OVER (PARTITION BY f.vec_id
+             ORDER BY ${Grid.d2("f.qe", "c.centroid")}, c.cell) AS prank
+    FROM (SELECT * FROM afin WHERE vec_id < $NQueries) f CROSS JOIN c$Iterations c)
+  WHERE prank <= $NProbe)"""
 
   /** Full replay of buildIndexFull(k=16, iterations=3) + search(nprobe=4,
     * topK=10, nQueries=5) in DuckDB: same grid quantization, same
     * fixed-point Lloyd, same tie-breaks, same exact-integer cosine. */
   val ivfSearchSql: String = s"""
 WITH $ivfCommonCtes,
-probes AS (
-  SELECT query_id, qqe, cell FROM (
-    SELECT f.vec_id AS query_id, f.qe AS qqe, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY f.vec_id
-             ORDER BY ${d2("f.qe", "c.centroid")}, c.cell) AS prank
-    FROM (SELECT * FROM afin WHERE vec_id < $NQueries) f CROSS JOIN c$Iterations c)
-  WHERE prank <= $NProbe)
+$probesCte
 SELECT query_id, vec_id, cosine, rank FROM (
-  SELECT p.query_id, a.vec_id,
-         CAST(list_sum(list_transform(generate_series(1, len(p.qqe)),
-                j -> p.qqe[j] * a.qe[j])) AS DOUBLE)
-           / (sqrt(CAST(list_sum(list_transform(p.qqe, x -> x * x)) AS DOUBLE))
-            * sqrt(CAST(list_sum(list_transform(a.qe, x -> x * x)) AS DOUBLE))) AS cosine,
-         ROW_NUMBER() OVER (PARTITION BY p.query_id ORDER BY
-           CAST(list_sum(list_transform(generate_series(1, len(p.qqe)),
-                  j -> p.qqe[j] * a.qe[j])) AS DOUBLE)
-             / (sqrt(CAST(list_sum(list_transform(p.qqe, x -> x * x)) AS DOUBLE))
-              * sqrt(CAST(list_sum(list_transform(a.qe, x -> x * x)) AS DOUBLE))) DESC,
-           a.vec_id) AS rank
+  SELECT p.query_id, a.vec_id, ${Grid.cosine("p.qqe", "a.qe")} AS cosine,
+         ROW_NUMBER() OVER (PARTITION BY p.query_id
+           ORDER BY ${Grid.cosine("p.qqe", "a.qe")} DESC, a.vec_id) AS rank
   FROM probes p JOIN afin a ON p.cell = a.cell AND a.vec_id <> p.query_id)
 WHERE rank <= $TopK"""
 
@@ -350,20 +340,34 @@ FROM afin GROUP BY cell"""
     * index whose recall is not measured is not an index, it is a hope —
     * and at 100 TB this exact frame (exact top-k over a small held-out
     * query sample vs the production index) is the recurring quality
-    * probe run after every index rebuild. Left join exact→approx so
-    * misses count as 0, one k-row-per-query aggregation. */
-  def recallVsExact(spark: SparkSession, dir: String): DataFrame = {
-    val approx = search(spark, dir, K, NProbe, TopK, NQueries)
-      .select(col("query_id"), col("vec_id")).withColumn("hit", lit(1L))
-    Similarity.annCosineTopK(spark, dir)
-      .select("query_id", "vec_id")
-      .join(approx, Seq("query_id", "vec_id"), "left")
+    * probe run after every index rebuild. */
+  def recallVsExact(spark: SparkSession, dir: String): DataFrame =
+    recallAtK(Similarity.annCosineTopK(spark, dir),
+      search(spark, dir, K, NProbe, TopK, NQueries), TopK)
+
+  /** Recall@k per query of any approximate top-k against an exact one,
+    * both (query_id, vec_id, …): the share of each query's exact
+    * neighbours the approximation surfaced. A left join exact→approx
+    * counts misses as 0; one k-row-per-query aggregation. Shared by the
+    * IVF, PQ, PQ-rerank and IVF-PQ recall probes. */
+  private[sim] def recallAtK(exact: DataFrame, approx: DataFrame, k: Int): DataFrame =
+    exact.select("query_id", "vec_id")
+      .join(approx.select(col("query_id"), col("vec_id")).withColumn("hit", lit(1L)),
+        Seq("query_id", "vec_id"), "left")
       .groupBy("query_id")
       .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
       .select(col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(TopK.toDouble)).as("recall_at_k"))
+        (col("n_hits").cast("double") / lit(k.toDouble)).as("recall_at_k"))
       .orderBy("query_id")
-  }
+
+  /** [[recallAtK]]'s DuckDB tail over CTEs (or subqueries) `exact` and
+    * `approx` of (query_id, vec_id). */
+  private[sim] def recallSql(exact: String, approx: String, k: Int): String = s"""SELECT e.query_id,
+       CAST(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
+       CAST(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) / ${k.toDouble} AS recall_at_k
+FROM $exact e LEFT JOIN $approx p ON e.query_id = p.query_id AND e.vec_id = p.vec_id
+GROUP BY e.query_id
+ORDER BY e.query_id"""
 
   /** Both sides' oracles nest verbatim as subqueries (their CTE
     * namespaces clash — both define `q`), so the recall oracle verifies
@@ -371,12 +375,7 @@ FROM afin GROUP BY cell"""
   lazy val ivfRecallSql: String = s"""
 WITH approx AS (SELECT query_id, vec_id FROM ($ivfSearchSql)),
 exact AS (SELECT query_id, vec_id FROM (${Similarity.annCosineTopKSql}))
-SELECT e.query_id,
-       CAST(SUM(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       CAST(SUM(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) / ${TopK.toDouble} AS recall_at_k
-FROM exact e LEFT JOIN approx a ON e.query_id = a.query_id AND e.vec_id = a.vec_id
-GROUP BY e.query_id
-ORDER BY e.query_id"""
+${recallSql("exact", "approx", TopK)}"""
 
   // --------------------------------------------- incremental ingest
 
@@ -451,16 +450,8 @@ ORDER BY e.query_id"""
     * the odd-id delta. */
   lazy val ivfDeltaAssignSql: String = s"""
 WITH ${ivfCommonCtesOver(" WHERE vec_id % 2 = 0")},
-qd AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1e7) AS BIGINT)) AS qe
-  FROM embeddings WHERE vec_id % 2 = 1),
-ad AS (
-  SELECT vec_id, cell FROM (
-    SELECT qd.vec_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY qd.vec_id
-             ORDER BY ${d2("qd.qe", "c.centroid")}, c.cell) AS rn
-    FROM qd CROSS JOIN c$Iterations c) WHERE rn = 1)
+qd AS (SELECT vec_id, ${Grid.duckQe("embedding")} AS qe FROM embeddings WHERE vec_id % 2 = 1),
+${nearestCellCte("ad", "qd", s"c$Iterations")}
 SELECT cell, COUNT(*) AS delta_count,
        CAST(SUM(vec_id) AS BIGINT) AS id_checksum,
        MIN(vec_id) AS min_vec_id

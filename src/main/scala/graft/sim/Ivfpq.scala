@@ -2,7 +2,6 @@ package graft.sim
 
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF-PQ — the composite index every production vector store actually
@@ -32,76 +31,25 @@ object Ivfpq {
   /** Serve-path search: BOTH composed indexes load from the store
     * ([[Ivf.index]], [[Pq.index]]) — first touch builds and persists;
     * every later query pays only the probe + ADC joins. */
-  def search(spark: SparkSession, dir: String): DataFrame =
-    searchWith(spark, dir, Ivf.index(spark, dir), Pq.index(spark, dir))
-
-  /** Core over prebuilt artifacts, so a caller composing several
-    * probes (e.g. [[recallVsExact]]) loads each index exactly once. */
-  private[sim] def searchWith(spark: SparkSession, dir: String,
-                              idx: Ivf.IvfIndex, pq: Pq.PqIndex): DataFrame = {
-    val cent = pq.codebook
-    val codes = pq.codes
+  def search(spark: SparkSession, dir: String): DataFrame = {
+    val idx = Ivf.index(spark, dir)
+    val pq = Pq.index(spark, dir)
     // coarse probe: nprobe nearest cells per query (the Ivf.search plan)
-    val queries = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") < Ivf.NQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q"))
-    val probes = queries
-      .crossJoin(broadcast(idx.centroids))
-      .withColumn("d2",
-        expr(s"""aggregate(zip_with(q, centroid,
-                   (x, y) -> (${Pq.qz("x")} - y) * (${Pq.qz("x")} - y)),
-                 cast(0 as bigint), (a, v) -> a + v)"""))
-      .withColumn("prank", row_number().over(
-        Window.partitionBy("query_id").orderBy(asc("d2"), asc("cell"))))
-      .filter(col("prank") <= Ivf.NProbe)
-      .select("query_id", "cell")
-    val candidates = probes.join(idx.assignments.select("vec_id", "cell"), "cell")
+    val candidates = Ivf.probe(spark, dir, idx.centroids, Ivf.NProbe, Ivf.NQueries)
+      .join(idx.assignments.select("vec_id", "cell"), "cell")
       .filter(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id")
     // ADC over the pruned candidates only
-    val dtab = Pq.subvecs(Tables.embeddings(spark, dir)
-        .filter(col("vec_id") < Ivf.NQueries))
-      .withColumnRenamed("vec_id", "query_id")
-      .join(broadcast(cent), "sub")
-      .withColumn("pd2", Pq.subD2)
-      .select("query_id", "sub", "code", "pd2")
-    candidates.join(codes, "vec_id")
-      .join(broadcast(dtab), Seq("query_id", "sub", "code"))
-      .groupBy("query_id", "vec_id")
-      .agg(sum("pd2").cast("bigint").as("approx_d2"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(asc("approx_d2"), asc("vec_id"))))
-      .filter(col("rank") <= Pq.TopK)
-      .select(col("query_id"), col("vec_id"), col("approx_d2"),
-        col("rank").cast("int").as("rank"))
+    val dtab = Pq.distanceTable(Tables.embeddings(spark, dir), pq.codebook)
+    Pq.adcTopK(candidates.join(pq.codes, "vec_id")
+      .join(broadcast(dtab), Seq("query_id", "sub", "code")), Pq.TopK)
   }
 
   /** Recall@k of IVF-PQ against the exact integer-grid L2 top-k: BOTH
     * approximations (cell pruning + code quantization) priced in one
-    * measured number. Uses [[searchWith]] over one pair of loaded
-    * indexes, so the probe never re-pays an index build. */
-  def recallVsExact(spark: SparkSession, dir: String): DataFrame = {
-    val vecs = Tables.embeddings(spark, dir)
-    val qe = expr(s"transform(embedding, x -> ${Pq.qz("x")})")
-    val queries = vecs.filter(col("vec_id") < Ivf.NQueries)
-      .select(col("vec_id").as("query_id"), qe.as("qq"))
-    val exact = vecs.select(col("vec_id"), qe.as("qv"))
-      .crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("d2", graft.functions.QL2.of(col("qq"), col("qv")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(asc("d2"), asc("vec_id"))))
-      .filter(col("rank") <= Pq.TopK)
-      .select("query_id", "vec_id")
-    val approx = searchWith(spark, dir, Ivf.index(spark, dir), Pq.index(spark, dir))
-      .select(col("query_id"), col("vec_id")).withColumn("hit", lit(1L))
-    exact.join(approx, Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(Pq.TopK.toDouble)).as("recall_at_k"))
-      .orderBy("query_id")
-  }
+    * measured number. */
+  def recallVsExact(spark: SparkSession, dir: String): DataFrame =
+    Ivf.recallAtK(Pq.exactTopK(spark, dir), search(spark, dir), Pq.TopK)
 
   // ------------------------------------------------------------- oracle
 
@@ -109,17 +57,10 @@ object Ivfpq {
     * PQ CTEs are pq-prefixed, and the composite CTEs stitch them. */
   private val commonCtes: String = s"""${Ivf.ivfCommonCtes},
 ${Pq.pqCtes("pq")},
-iprobes AS (
-  SELECT query_id, cell FROM (
-    SELECT f.vec_id AS query_id, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY f.vec_id
-             ORDER BY ${Ivf.d2("f.qe", "c.centroid")}, c.cell) AS prank
-    FROM (SELECT * FROM afin WHERE vec_id < ${Ivf.NQueries}) f
-    CROSS JOIN c${Ivf.Iterations} c)
-  WHERE prank <= ${Ivf.NProbe}),
+${Ivf.probesCte},
 icand AS (
   SELECT p.query_id, a.vec_id
-  FROM iprobes p JOIN afin a ON p.cell = a.cell AND a.vec_id <> p.query_id),
+  FROM probes p JOIN afin a ON p.cell = a.cell AND a.vec_id <> p.query_id),
 iadc AS (
   SELECT c.query_id, c.vec_id, CAST(SUM(d.pd2) AS BIGINT) AS approx_d2
   FROM icand c
@@ -139,19 +80,8 @@ SELECT query_id, vec_id, approx_d2, rank FROM iranked WHERE rank <= ${Pq.TopK}""
   val recallSql: String = s"""
 WITH $commonCtes,
 itop AS (SELECT query_id, vec_id FROM iranked WHERE rank <= ${Pq.TopK}),
-iexact AS (
-  SELECT query_id, vec_id FROM (
-    SELECT f.vec_id AS query_id, a.vec_id,
-           ROW_NUMBER() OVER (PARTITION BY f.vec_id
-             ORDER BY ${Pq.d2sql("f.qe", "a.qe")}, a.vec_id) AS rn
-    FROM (SELECT * FROM q WHERE vec_id < ${Ivf.NQueries}) f
-    CROSS JOIN q a WHERE a.vec_id <> f.vec_id) WHERE rn <= ${Pq.TopK})
-SELECT e.query_id,
-       CAST(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       CAST(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) / ${Pq.TopK.toDouble} AS recall_at_k
-FROM iexact e LEFT JOIN itop p ON e.query_id = p.query_id AND e.vec_id = p.vec_id
-GROUP BY e.query_id
-ORDER BY e.query_id"""
+${Pq.exactCte}
+${Ivf.recallSql("exact", "itop", Pq.TopK)}"""
 
   val inventory: Map[String, Q] = Map(
     "ivfpq_search" -> (search _),

@@ -47,15 +47,12 @@ object Pq {
   val TopK = 10
   val NQueries = 5
 
-  private[sim] def qz(x: String): String =
-    s"cast(floor(cast($x as double) * 1e7) as bigint)"
-
   /** One row per (vec_id, sub) with the grid-quantized subvector. */
   private[graft] def subvecs(vecs: DataFrame): DataFrame =
     vecs.select(col("vec_id"),
         explode(expr(s"sequence(0, ${M - 1})")).as("sub"), col("embedding"))
       .select(col("vec_id"), col("sub"),
-        expr(s"transform(slice(embedding, sub * $SubDim + 1, $SubDim), x -> ${qz("x")})")
+        expr(s"transform(slice(embedding, sub * $SubDim + 1, $SubDim), x -> ${Grid.qz("x")})")
           .as("qsub"))
 
   /** Hot-path distance: native [[graft.functions.QL2]] over the
@@ -168,22 +165,38 @@ object Pq {
   private[graft] def searchOver(spark: SparkSession, vecs: DataFrame): DataFrame =
     searchCore(vecs, buildIndexOver(spark, vecs))
 
-  private[sim] def searchCore(queryVecs: DataFrame, idx: PqIndex): DataFrame = {
-    val dtab = subvecs(queryVecs.filter(col("vec_id") < NQueries))
+  /** The full-collection ADC scan: codes ⨝ broadcast distance table,
+    * self excluded, to the top `depth` (see [[adcTopK]]). */
+  private[sim] def searchCore(queryVecs: DataFrame, idx: PqIndex, depth: Int = TopK,
+                              rankCol: String = "rank"): DataFrame =
+    adcTopK(idx.codes.join(broadcast(distanceTable(queryVecs, idx.codebook)), Seq("sub", "code"))
+      .filter(col("vec_id") =!= col("query_id")), depth, rankCol)
+
+  /** The per-query ADC table: the grid L2² from each of the first
+    * [[NQueries]] vectors' subvectors to every codeword of its subspace,
+    * as (query_id, sub, code, pd2). Shared by PQ search, the rerank
+    * shortlist and [[Ivfpq.search]]. */
+  private[sim] def distanceTable(queryVecs: DataFrame, codebook: DataFrame): DataFrame =
+    subvecs(queryVecs.filter(col("vec_id") < NQueries))
       .withColumnRenamed("vec_id", "query_id")
-      .join(broadcast(idx.codebook), "sub")
+      .join(broadcast(codebook), "sub")
       .withColumn("pd2", subD2)
       .select("query_id", "sub", "code", "pd2")
-    idx.codes.join(broadcast(dtab), Seq("sub", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy("query_id", "vec_id")
+
+  /** ADC top-`depth`: each candidate's looked-up partial distances
+    * (query_id, vec_id, pd2) summed to its exact-integer `approx_d2`,
+    * ranked per query by (approx_d2, vec_id) into `rankCol` — `TopK`
+    * for search, [[Shortlist]] (as `arank`, apart from the exact
+    * stage's `rank`) for the rerank. */
+  private[sim] def adcTopK(lookups: DataFrame, depth: Int,
+                           rankCol: String = "rank"): DataFrame =
+    lookups.groupBy("query_id", "vec_id")
       .agg(sum("pd2").cast("bigint").as("approx_d2"))
-      .withColumn("rank", row_number().over(
+      .withColumn(rankCol, row_number().over(
         Window.partitionBy("query_id").orderBy(asc("approx_d2"), asc("vec_id"))))
-      .filter(col("rank") <= TopK)
+      .filter(col(rankCol) <= depth)
       .select(col("query_id"), col("vec_id"), col("approx_d2"),
-        col("rank").cast("int").as("rank"))
-  }
+        col(rankCol).cast("int").as(rankCol))
 
   /** ADC shortlist size for the re-rank stage. */
   val Shortlist = 50
@@ -199,77 +212,49 @@ object Pq {
 
   private def searchRerankCore(spark: SparkSession, dir: String,
                                idx: PqIndex): DataFrame = {
-    val dtab = subvecs(Tables.embeddings(spark, dir).filter(col("vec_id") < NQueries))
-      .withColumnRenamed("vec_id", "query_id")
-      .join(broadcast(idx.codebook), "sub")
-      .withColumn("pd2", subD2)
-      .select("query_id", "sub", "code", "pd2")
-    val shortlist = idx.codes.join(broadcast(dtab), Seq("sub", "code"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy("query_id", "vec_id")
-      .agg(sum("pd2").cast("bigint").as("approx_d2"))
-      .withColumn("arank", row_number().over(
-        Window.partitionBy("query_id").orderBy(asc("approx_d2"), asc("vec_id"))))
-      .filter(col("arank") <= Shortlist)
-      .select("query_id", "vec_id")
-    val qe = expr(s"transform(embedding, x -> ${qz("x")})")
-    val queries = Tables.embeddings(spark, dir).filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), qe.as("qq"))
-    val cand = Tables.embeddings(spark, dir).select(col("vec_id"), qe.as("qv"))
-    shortlist
-      .join(cand, "vec_id")
-      .join(broadcast(queries), "query_id")
-      .withColumn("d2", graft.functions.QL2.of(col("qq"), col("qv")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(asc("d2"), asc("vec_id"))))
-      .filter(col("rank") <= TopK)
+    val vecs = Tables.embeddings(spark, dir)
+    val shortlist = searchCore(vecs, idx, Shortlist, "arank").select("query_id", "vec_id")
+    val cand = vecs.select(col("vec_id"), gridVec.as("qv"))
+    exactRanked(shortlist.join(cand, "vec_id").join(broadcast(queries(vecs)), "query_id"))
       .select(col("query_id"), col("vec_id"), col("d2"),
         col("rank").cast("int").as("rank"))
   }
 
   /** Recall@k of the two-stage (ADC shortlist → exact re-rank) search
     * vs the exact top-k — the operating point a serving tier ships. */
-  def rerankRecall(spark: SparkSession, dir: String): DataFrame = {
-    val approx = searchRerank(spark, dir)
-      .select(col("query_id"), col("vec_id")).withColumn("hit", lit(1L))
-    exactTopK(spark, dir).join(approx, Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(TopK.toDouble)).as("recall_at_k"))
-      .orderBy("query_id")
-  }
+  def rerankRecall(spark: SparkSession, dir: String): DataFrame =
+    Ivf.recallAtK(exactTopK(spark, dir), searchRerank(spark, dir), TopK)
 
-  /** Exact integer-grid L2 top-k over the query sample (shared by both
-    * recall probes). */
-  private def exactTopK(spark: SparkSession, dir: String): DataFrame = {
-    val vecs = Tables.embeddings(spark, dir)
-    val qe = expr(s"transform(embedding, x -> ${qz("x")})")
-    val queries = vecs.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("query_id"), qe.as("qq"))
-    vecs.select(col("vec_id"), qe.as("qv"))
-      .crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("d2", graft.functions.QL2.of(col("qq"), col("qv")))
+  /** The raw embedding on the grid, and the query sample as (query_id, qq). */
+  private def gridVec = expr(s"transform(embedding, x -> ${Grid.qz("x")})")
+  private def queries(vecs: DataFrame): DataFrame =
+    vecs.filter(col("vec_id") < NQueries).select(col("vec_id").as("query_id"), gridVec.as("qq"))
+
+  /** The exact stage: (query, candidate) pairs with grid vectors `qq`
+    * and `qv`, scored by exact integer L2² and ranked per query by
+    * (d2, vec_id) to the top [[TopK]]. Shared by the rerank and by
+    * [[exactTopK]]. */
+  private def exactRanked(pairs: DataFrame): DataFrame =
+    pairs.withColumn("d2", graft.functions.QL2.of(col("qq"), col("qv")))
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id").orderBy(asc("d2"), asc("vec_id"))))
       .filter(col("rank") <= TopK)
+
+  /** Exact integer-grid L2 top-k over the query sample: the baseline of
+    * the PQ, PQ-rerank and IVF-PQ recall probes. */
+  private[sim] def exactTopK(spark: SparkSession, dir: String): DataFrame = {
+    val vecs = Tables.embeddings(spark, dir)
+    exactRanked(vecs.select(col("vec_id"), gridVec.as("qv"))
+        .crossJoin(broadcast(queries(vecs)))
+        .filter(col("vec_id") =!= col("query_id")))
       .select("query_id", "vec_id")
   }
 
   /** Recall@k of ADC search against the EXACT integer-grid L2 top-k
     * (brute force over the query sample — the recurring post-rebuild
     * quality probe, as with [[Ivf.recallVsExact]]). */
-  def recallVsExact(spark: SparkSession, dir: String): DataFrame = {
-    val approx = search(spark, dir)
-      .select(col("query_id"), col("vec_id")).withColumn("hit", lit(1L))
-    exactTopK(spark, dir).join(approx, Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(col("query_id"), col("n_hits"),
-        (col("n_hits").cast("double") / lit(TopK.toDouble)).as("recall_at_k"))
-      .orderBy("query_id")
-  }
+  def recallVsExact(spark: SparkSession, dir: String): DataFrame =
+    Ivf.recallAtK(exactTopK(spark, dir), search(spark, dir), TopK)
 
   /** The persisted codebook, exploded to scalar (sub, code, dim, comp)
     * grain — the oracle-checkable face of the STORED artifact: the
@@ -292,16 +277,17 @@ object Pq {
 
   // ------------------------------------------------------------- oracle
 
-  private[sim] def d2sql(a: String, b: String): String =
-    s"list_sum(list_transform(generate_series(1, len($a)), j -> ($a[j] - $b[j]) * ($a[j] - $b[j])))"
-
-  private def pqIter(i: Int, pfx: String = ""): String = s"""
-${pfx}a$i AS (
+  /** CTE `name` (vec_id, sub, qsub, code): each subvector of `{pfx}sv`
+    * with its nearest codeword of `cents` under the (d2, code) order. */
+  private def nearestCodeCte(name: String, pfx: String, cents: String): String = s"""$name AS (
   SELECT vec_id, sub, qsub, code FROM (
     SELECT s.vec_id, s.sub, s.qsub, c.code,
            ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
-             ORDER BY ${d2sql("s.qsub", "c.codeword")}, c.code) AS rn
-    FROM ${pfx}sv s JOIN ${pfx}c${i - 1} c ON s.sub = c.sub) WHERE rn = 1),
+             ORDER BY ${Grid.d2("s.qsub", "c.codeword")}, c.code) AS rn
+    FROM ${pfx}sv s JOIN $cents c ON s.sub = c.sub) WHERE rn = 1)"""
+
+  private def pqIter(i: Int, pfx: String = ""): String = s"""
+${nearestCodeCte(s"${pfx}a$i", pfx, s"${pfx}c${i - 1}")},
 ${pfx}m$i AS (
   SELECT sub, code, dim, CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS comp
   FROM (SELECT sub, code, generate_subscripts(qsub, 1) AS dim, unnest(qsub) AS v FROM ${pfx}a$i)
@@ -318,10 +304,7 @@ ${pfx}c$i AS (
     * ([[Ivfpq]]); pfx = "" keeps the standalone PQ oracles byte-stable.
     * The query/candidate frames (`q` feeding `{pfx}sv`) stay UNprefixed
     * — both replays quantize identically, so they share one `q`. */
-  private[sim] def pqCtes(pfx: String): String = s"""${if (pfx.isEmpty) s"""q AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1e7) AS BIGINT)) AS qe
-  FROM embeddings),
+  private[sim] def pqCtes(pfx: String): String = s"""${if (pfx.isEmpty) s"""q AS (SELECT vec_id, ${Grid.duckQe("embedding")} AS qe FROM embeddings),
 """ else ""}${pfx}sv AS (
   SELECT vec_id, sub,
          list_transform(generate_series(1, $SubDim), j -> qe[sub * $SubDim + j]) AS qsub
@@ -331,15 +314,10 @@ ${pfx}c0 AS (
     SELECT sub, qsub, ROW_NUMBER() OVER (PARTITION BY sub ORDER BY vec_id) AS rn
     FROM ${pfx}sv) WHERE rn <= $KCodes),
 ${(1 to Iterations).map(pqIter(_, pfx)).mkString(",")},
-${pfx}codes AS (
-  SELECT vec_id, sub, code FROM (
-    SELECT s.vec_id, s.sub, c.code,
-           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.sub
-             ORDER BY ${d2sql("s.qsub", "c.codeword")}, c.code) AS rn
-    FROM ${pfx}sv s JOIN ${pfx}c$Iterations c ON s.sub = c.sub) WHERE rn = 1),
+${nearestCodeCte(s"${pfx}codes", pfx, s"${pfx}c$Iterations")},
 ${pfx}dtab AS (
   SELECT f.vec_id AS query_id, c.sub, c.code,
-         ${d2sql("f.qsub", "c.codeword")} AS pd2
+         ${Grid.d2("f.qsub", "c.codeword")} AS pd2
   FROM (SELECT * FROM ${pfx}sv WHERE vec_id < $NQueries) f
   JOIN ${pfx}c$Iterations c ON f.sub = c.sub)"""
 
@@ -360,61 +338,45 @@ WITH $pqCommonCtes
 SELECT query_id, vec_id, approx_d2, rank FROM ranked WHERE rank <= $TopK
 """
 
-  val pqRecallSql: String = s"""
-WITH $pqCommonCtes,
-pq_top AS (SELECT query_id, vec_id FROM ranked WHERE rank <= $TopK),
-exact AS (
+  /** [[exactTopK]]'s replay over the quantized `q` CTE. */
+  private[sim] val exactCte: String = s"""exact AS (
   SELECT query_id, vec_id FROM (
     SELECT f.vec_id AS query_id, a.vec_id,
            ROW_NUMBER() OVER (PARTITION BY f.vec_id
-             ORDER BY ${d2sql("f.qe", "a.qe")}, a.vec_id) AS rn
+             ORDER BY ${Grid.d2("f.qe", "a.qe")}, a.vec_id) AS rn
     FROM (SELECT * FROM q WHERE vec_id < $NQueries) f
-    CROSS JOIN q a WHERE a.vec_id <> f.vec_id) WHERE rn <= $TopK)
-SELECT e.query_id,
-       CAST(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       CAST(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) / ${TopK.toDouble} AS recall_at_k
-FROM exact e LEFT JOIN pq_top p ON e.query_id = p.query_id AND e.vec_id = p.vec_id
-GROUP BY e.query_id
-ORDER BY e.query_id"""
+    CROSS JOIN q a WHERE a.vec_id <> f.vec_id) WHERE rn <= $TopK)"""
 
-  val pqSearchRerankSql: String = s"""
-WITH $pqCommonCtes,
-shortlist AS (SELECT query_id, vec_id FROM ranked WHERE rank <= $Shortlist)
-SELECT query_id, vec_id, d2, rank FROM (
-  SELECT s.query_id, s.vec_id,
-         CAST(${d2sql("f.qe", "a.qe")} AS BIGINT) AS d2,
-         CAST(ROW_NUMBER() OVER (PARTITION BY s.query_id
-           ORDER BY ${d2sql("f.qe", "a.qe")}, s.vec_id) AS INT) AS rank
-  FROM shortlist s
-  JOIN q a ON s.vec_id = a.vec_id
-  JOIN q f ON s.query_id = f.vec_id)
-WHERE rank <= $TopK"""
-
-  val pqRerankRecallSql: String = s"""
-WITH $pqCommonCtes,
-shortlist AS (SELECT query_id, vec_id FROM ranked WHERE rank <= $Shortlist),
+  /** The two-stage replay: the ADC [[Shortlist]] re-ranked by exact
+    * integer L2², as `rr` (query_id, vec_id, d2, rank). */
+  private val rerankCtes: String = s"""shortlist AS (SELECT query_id, vec_id FROM ranked WHERE rank <= $Shortlist),
 rr AS (
-  SELECT query_id, vec_id FROM (
+  SELECT query_id, vec_id, d2, rank FROM (
     SELECT s.query_id, s.vec_id,
-           ROW_NUMBER() OVER (PARTITION BY s.query_id
-             ORDER BY ${d2sql("f.qe", "a.qe")}, s.vec_id) AS rank
+           CAST(${Grid.d2("f.qe", "a.qe")} AS BIGINT) AS d2,
+           CAST(ROW_NUMBER() OVER (PARTITION BY s.query_id
+             ORDER BY ${Grid.d2("f.qe", "a.qe")}, s.vec_id) AS INT) AS rank
     FROM shortlist s
     JOIN q a ON s.vec_id = a.vec_id
     JOIN q f ON s.query_id = f.vec_id)
-  WHERE rank <= $TopK),
-exact AS (
-  SELECT query_id, vec_id FROM (
-    SELECT f.vec_id AS query_id, a.vec_id,
-           ROW_NUMBER() OVER (PARTITION BY f.vec_id
-             ORDER BY ${d2sql("f.qe", "a.qe")}, a.vec_id) AS rn
-    FROM (SELECT * FROM q WHERE vec_id < $NQueries) f
-    CROSS JOIN q a WHERE a.vec_id <> f.vec_id) WHERE rn <= $TopK)
-SELECT e.query_id,
-       CAST(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-       CAST(SUM(CASE WHEN p.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) / ${TopK.toDouble} AS recall_at_k
-FROM exact e LEFT JOIN rr p ON e.query_id = p.query_id AND e.vec_id = p.vec_id
-GROUP BY e.query_id
-ORDER BY e.query_id"""
+  WHERE rank <= $TopK)"""
+
+  val pqRecallSql: String = s"""
+WITH $pqCommonCtes,
+pq_top AS (SELECT query_id, vec_id FROM ranked WHERE rank <= $TopK),
+$exactCte
+${Ivf.recallSql("exact", "pq_top", TopK)}"""
+
+  val pqSearchRerankSql: String = s"""
+WITH $pqCommonCtes,
+$rerankCtes
+SELECT query_id, vec_id, d2, rank FROM rr"""
+
+  val pqRerankRecallSql: String = s"""
+WITH $pqCommonCtes,
+$rerankCtes,
+$exactCte
+${Ivf.recallSql("exact", "rr", TopK)}"""
 
   val pqIndexCodebookSql: String = s"""
 WITH ${pqCtes("")}

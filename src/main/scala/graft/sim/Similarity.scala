@@ -1,6 +1,8 @@
 package graft.sim
 
 import graft.Tables
+import graft.functions.QDot
+import Grid.{duckQz, qz}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,10 +31,6 @@ import org.apache.spark.sql.functions._
 object Similarity {
   type Q = (SparkSession, String) => DataFrame
 
-  /** 1e-7-grid quantized component. */
-  private def qz(x: String): String =
-    s"cast(floor(cast($x as double) * 1e7) as bigint)"
-
   /** Exact integer dot product of two float arrays (in-row fold — no
     * shuffle, no explode). Magnitudes: |x|<1 → |q|<1e7, 64 products of
     * |q a·q b|<1e14 sum to <1e16 — no 64-bit overflow.
@@ -46,12 +44,6 @@ object Similarity {
   private[graft] def normE(a: String): String =
     s"""sqrt(cast(aggregate(transform($a, x -> ${qz("x")} * ${qz("x")}),
           cast(0 as bigint), (acc, v) -> acc + v) as double))"""
-
-  /** Compiled twins (native Catalyst expression, codegen'd). */
-  private def dotN(a: String, b: String) =
-    graft.functions.QDot.of(a, b).cast("double")
-  private def normN(a: String) =
-    sqrt(graft.functions.QDot.of(a, a).cast("double"))
 
   /** Brute-force cosine top-10 for the first five vectors as queries
     * (self excluded): broadcast the query set, score every vector,
@@ -69,8 +61,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .select(
         col("query_id"), col("vec_id"),
-        (dotN("q", "embedding")
-          / (normN("q") * normN("embedding"))).as("cosine"))
+        QDot.cosine("q", "embedding").as("cosine"))
     scored.groupBy("query_id")
       .agg(graft.functions.TopKBy.of(col("cosine"), col("vec_id"), 10).as("top"))
       .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "p")))
@@ -78,8 +69,12 @@ object Similarity {
         (col("pos") + 1).cast("int").as("rank"))
   }
 
-  private def duckQz(x: String): String =
-    s"CAST(floor(CAST($x AS DOUBLE) * 1e7) AS BIGINT)"
+  /** DuckDB cosine of aliases `a` and `b` over their raw `embedding`
+    * and precomputed `nrm` columns. */
+  private def duckCos(a: String, b: String): String =
+    s"""CAST(list_sum(list_transform(generate_series(1, len($a.embedding)),
+              i -> ${duckQz(s"$a.embedding[i]")} * ${duckQz(s"$b.embedding[i]")})) AS DOUBLE)
+         / ($a.nrm * $b.nrm)"""
   private val duckDot =
     s"""list_sum(list_transform(generate_series(1, len(q)),
          i -> ${duckQz("q[i]")} * ${duckQz("e[i]")}))"""
@@ -106,28 +101,23 @@ SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= 10"""
   def embeddingNearDupPairs(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"),
-        normN("embedding").as("nrm"))
+        QDot.norm("embedding").as("nrm"))
     // single-file input = one partition; spread the streamed side so the
     // O(N^2) dot products parallelize
     e.repartition(spark.sparkContext.defaultParallelism).as("a")
       .join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(
         col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        (dotN("a.embedding", "b.embedding")
-          / (col("a.nrm") * col("b.nrm"))).as("cosine"))
+        QDot.cosine("a.embedding", "b.embedding", col("a.nrm"), col("b.nrm"))
+          .as("cosine"))
       .filter(col("cosine") >= 0.4)
   }
 
   val embeddingNearDupPairsSql: String = s"""
 WITH n AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS nrm FROM embeddings)
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       CAST(list_sum(list_transform(generate_series(1, len(a.embedding)),
-              i -> ${duckQz("a.embedding[i]")} * ${duckQz("b.embedding[i]")})) AS DOUBLE)
-         / (a.nrm * b.nrm) AS cosine
+SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, ${duckCos("a", "b")} AS cosine
 FROM n a JOIN n b ON a.vec_id < b.vec_id
-WHERE CAST(list_sum(list_transform(generate_series(1, len(a.embedding)),
-             i -> ${duckQz("a.embedding[i]")} * ${duckQz("b.embedding[i]")})) AS DOUBLE)
-        / (a.nrm * b.nrm) >= 0.4"""
+WHERE ${duckCos("a", "b")} >= 0.4"""
 
   /** Sign-random-projection LSH bucketing: 8 md5-derived ±1 hyperplanes →
     * an 8-bit bucket per vector; candidates are same-bucket pairs, scored
@@ -406,12 +396,12 @@ FROM s GROUP BY bucket"""
     // rescore side reads the arrays straight off the source: it joins by
     // vec_id (broadcast under the budget, key-shuffle past it), so the
     // round-robin exchange the banding needs would be pure overhead here
-    val n = e.select(col("vec_id"), col("embedding"), normN("embedding").as("nrm"))
+    val n = e.select(col("vec_id"), col("embedding"), QDot.norm("embedding").as("nrm"))
     cand
       .join(n.as("x"), col("vec_a") === col("x.vec_id"))
       .join(n.as("y"), col("vec_b") === col("y.vec_id"))
       .select(col("vec_a"), col("vec_b"),
-        (dotN("x.embedding", "y.embedding") / (col("x.nrm") * col("y.nrm")))
+        QDot.cosine("x.embedding", "y.embedding", col("x.nrm"), col("y.nrm"))
           .as("cosine"))
       .filter(col("cosine") >= threshold)
   }
@@ -446,13 +436,9 @@ ${rescoreSql("n", threshold)}"""
     * `cand` pair joined to `vecs` (vec_id, embedding, nrm) and kept at
     * integer-quantized cosine ≥ `threshold`. */
   private def rescoreSql(vecs: String, threshold: Double): String = s"""SELECT c.vec_a, c.vec_b,
-       CAST(list_sum(list_transform(generate_series(1, len(x.embedding)),
-              i -> ${duckQz("x.embedding[i]")} * ${duckQz("y.embedding[i]")})) AS DOUBLE)
-         / (x.nrm * y.nrm) AS cosine
+       ${duckCos("x", "y")} AS cosine
 FROM cand c JOIN $vecs x ON c.vec_a = x.vec_id JOIN $vecs y ON c.vec_b = y.vec_id
-WHERE CAST(list_sum(list_transform(generate_series(1, len(x.embedding)),
-             i -> ${duckQz("x.embedding[i]")} * ${duckQz("y.embedding[i]")})) AS DOUBLE)
-        / (x.nrm * y.nrm) >= $threshold"""
+WHERE ${duckCos("x", "y")} >= $threshold"""
 
   val annLshNearDupPairsSql: String =
     annLshPairsSqlCore(LshRows.toString, 0.4, LshBucketCap)
@@ -599,21 +585,8 @@ ${rescoreSql("vecs", threshold)}"""
     val n = ms.length
     if (n < 2) Iterator.empty
     else {
-      // exact QDot quantization: floor(x·1e7) as long, per component
-      val q = ms.map { case (_, emb) =>
-        val a = new Array[Long](emb.length)
-        var i = 0
-        while (i < emb.length) {
-          a(i) = math.floor(emb(i).toDouble * 1e7).toLong; i += 1
-        }
-        a
-      }
-      def dot(a: Array[Long], b: Array[Long]): Long = {
-        var acc = 0L; var i = 0
-        while (i < a.length) { acc += a(i) * b(i); i += 1 }
-        acc
-      }
-      val nrm = q.map(a => math.sqrt(dot(a, a).toDouble))
+      val q = ms.map { case (_, emb) => QDot.quantize(emb) }
+      val nrm = q.map(a => math.sqrt(QDot.dot(a, a).toDouble))
       val parent = Array.tabulate(n)(identity)
       def find(x: Int): Int = {
         var r = x
@@ -628,7 +601,7 @@ ${rescoreSql("vecs", threshold)}"""
         while (i < j) {
           val ri = find(i); val rj = find(j)
           if (ri != rj) {
-            val cos = dot(q(i), q(j)).toDouble / (nrm(i) * nrm(j))
+            val cos = QDot.dot(q(i), q(j)).toDouble / (nrm(i) * nrm(j))
             // same IEEE expression tree as the join form's rescore
             if (cos >= threshold) parent(math.max(ri, rj)) = math.min(ri, rj)
           }
@@ -828,20 +801,8 @@ FROM rch r JOIN sizes s ON r.label = s.cluster_id"""
           // per-member sub-bucket per band, from the full signature
           val sub = Array.tabulate(n, bands)((i, b) =>
             (ms(i)._3 >>> (b * rows)) & mask)
-          val q = ms.map { case (_, emb, _) =>
-            val a = new Array[Long](emb.length)
-            var i = 0
-            while (i < emb.length) {
-              a(i) = math.floor(emb(i).toDouble * 1e7).toLong; i += 1
-            }
-            a
-          }
-          def dot(a: Array[Long], b: Array[Long]): Long = {
-            var acc = 0L; var i = 0
-            while (i < a.length) { acc += a(i) * b(i); i += 1 }
-            acc
-          }
-          val nrm = q.map(a => math.sqrt(dot(a, a).toDouble))
+          val q = ms.map { case (_, emb, _) => QDot.quantize(emb) }
+          val nrm = q.map(a => math.sqrt(QDot.dot(a, a).toDouble))
           var nPairs = 0L
           var minC = Double.NaN
           var maxC = Double.NaN
@@ -862,7 +823,7 @@ FROM rch r JOIN sizes s ON r.label = s.cluster_id"""
               }
               if (owner == myBand) {
                 // same IEEE expression tree as the join form's rescore
-                val cos = dot(q(i), q(j)).toDouble / (nrm(i) * nrm(j))
+                val cos = QDot.dot(q(i), q(j)).toDouble / (nrm(i) * nrm(j))
                 if (cos >= threshold) {
                   nPairs += 1
                   if (minC.isNaN || cos < minC) minC = cos
@@ -952,7 +913,7 @@ ORDER BY cluster_size"""
     * elect the min-vec_id representative per component.
     *
     * MULTI-PROBE blocking (round 12): each vector blocks into its TOP-2
-    * nearest centroids ([[graft.functions.QRunnerUpCell]] computes the
+    * nearest centroids ([[graft.functions.QArgminCell]] at rank 2 computes the
     * runner-up from the stored centroids at serve time — the dedup
     * twin of IVF search's nprobe > 1). Single-probe assignment loses
     * every near-dup pair the quantizer splits across a cell boundary —
@@ -1007,20 +968,18 @@ ORDER BY cluster_size"""
     // a degenerate corpus can train fewer than 2 centroids (Ivf init
     // takes LIMIT k of the available vectors) — a 1-cell quantizer has
     // no runner-up, so degrade to single-probe (cell2 = -1) instead of
-    // letting QRunnerUpCell's arity require throw at plan construction
-    val cell2 =
-      if (cents.length < 2) lit(-1)
-      else when(col("embedding").isNull, lit(-1))
-        .otherwise(coalesce(
-          graft.functions.QRunnerUpCell.of("embedding", cents), lit(-1)))
+    // letting the rank-2 arity require throw at plan construction
+    val cell2 = if (cents.length < 2) lit(-1) else Ivf.nearestCell(cents, rank = 2)
     idx.assignments.withColumn("cell2", cell2)
   }
 
   /** Multi-probe core over any (vec_id, embedding, cell, cell2) frame:
     * probe rows → cap-eligible cells → per-cell star edges
     * ([[starEdgesOf]]) → global min-label CC → primary cell joined
-    * back. Output one row per vector, schema identical to the
-    * single-probe core's. */
+    * back. Output one row per vector: (vec_id, cell, cluster_id,
+    * cluster_size, is_keeper). With `cell2 = cell` (no second probe)
+    * every edge stays inside one cell, so this is single-probe SemDeDup:
+    * components never span cells and over-cap cells stay singletons. */
   private[graft] def semanticDedupRepsMultiOver(assign2: DataFrame,
                                                 cellCap: Int): DataFrame = {
     val spark = assign2.sparkSession
@@ -1050,84 +1009,6 @@ ORDER BY cluster_size"""
         col("cluster_size"), col("is_keeper"))
   }
 
-  /** Single-probe SemDeDup core (the original no-global-CC shape, kept
-    * as the spec surface for the strict within-cell contract: one lazy
-    * plan, one shuffle, components never span cells, over-cap cells
-    * stream through as singletons). Takes any (vec_id, embedding,
-    * cell) assignment frame. */
-  private[graft] def semanticDedupRepsOver(assignments: DataFrame,
-                                           cellCap: Int): DataFrame = {
-    val spark = assignments.sparkSession
-    import spark.implicits._
-    assignments.select(col("cell").cast("int"), col("vec_id"), col("embedding"))
-      .as[(Int, Long, Array[Float])]
-      .groupByKey(_._1)
-      .flatMapGroups { (cell: Int, it: Iterator[(Int, Long, Array[Float])]) =>
-        // buffer at most cap+1 members WITH embeddings; past that the
-        // cell is singleton-only and the tail streams as bare ids
-        val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float])]
-        var overflow: List[Long] = Nil
-        var over = false
-        it.foreach { case (_, id, emb) =>
-          if (!over && buf.length <= cellCap) buf += ((id, emb))
-          else { over = true; overflow = id :: overflow }
-        }
-        if (buf.length > cellCap) { over = true }
-        if (over) {
-          // degenerate cell: every member its own keeper
-          (buf.iterator.map(_._1) ++ overflow.iterator)
-            .map(id => (id, cell, id, 1L, true))
-        } else {
-          val ms = buf.toArray.sortBy(_._1)
-          val n = ms.length
-          val q = ms.map { case (_, emb) =>
-            val a = new Array[Long](emb.length)
-            var i = 0
-            while (i < emb.length) {
-              a(i) = math.floor(emb(i).toDouble * 1e7).toLong; i += 1
-            }
-            a
-          }
-          def dot(a: Array[Long], b: Array[Long]): Long = {
-            var acc = 0L; var i = 0
-            while (i < a.length) { acc += a(i) * b(i); i += 1 }
-            acc
-          }
-          val nrm = q.map(a => math.sqrt(dot(a, a).toDouble))
-          val parent = Array.tabulate(n)(identity)
-          def find(x: Int): Int = {
-            var r = x
-            while (parent(r) != r) r = parent(r)
-            var c = x
-            while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-            r
-          }
-          var j = 1
-          while (j < n) {
-            var i = 0
-            while (i < j) {
-              val ri = find(i); val rj = find(j)
-              if (ri != rj) {
-                val cos = dot(q(i), q(j)).toDouble / (nrm(i) * nrm(j))
-                if (cos >= SemanticDedupThreshold)
-                  parent(math.max(ri, rj)) = math.min(ri, rj)
-              }
-              i += 1
-            }
-            j += 1
-          }
-          val byRoot = (0 until n).groupBy(find)
-          byRoot.valuesIterator.flatMap { idxs =>
-            val center = ms(idxs.min)._1
-            val size = idxs.size.toLong
-            idxs.iterator.map(i =>
-              (ms(i)._1, cell, center, size, ms(i)._1 == center))
-          }
-        }
-      }
-      .toDF("vec_id", "cell", "cluster_id", "cluster_size", "is_keeper")
-  }
-
   /** Blocking-loss eval for the semantic dedup — the dedup family's
     * counterpart of `ivf_recall`/`pq_recall`: of all EXACT cosine ≥
     * 0.45 pairs corpus-wide (brute force, the eval baseline — driver-SF
@@ -1147,12 +1028,12 @@ ORDER BY cluster_size"""
       .select(col("vec_id"),
         array(col("cell").cast("int"), col("cell2").cast("int")).as("cells"))
     val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"), normN("embedding").as("nrm"))
+      .select(col("vec_id"), col("embedding"), QDot.norm("embedding").as("nrm"))
     val pairs = e.repartition(spark.sparkContext.defaultParallelism).as("a")
       .join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("va"), col("b.vec_id").as("vb"),
-        (dotN("a.embedding", "b.embedding")
-          / (col("a.nrm") * col("b.nrm"))).as("cosine"))
+        QDot.cosine("a.embedding", "b.embedding", col("a.nrm"), col("b.nrm"))
+          .as("cosine"))
       .filter(col("cosine") >= 0.45)
     pairs
       .join(cells.toDF("va", "cells_a"), "va")
@@ -1173,9 +1054,7 @@ n AS (SELECT vec_id, embedding, ${duckNorm("embedding")} AS nrm FROM embeddings)
 prs AS (
   SELECT a.vec_id AS va, b.vec_id AS vb
   FROM n a JOIN n b ON a.vec_id < b.vec_id
-  WHERE CAST(list_sum(list_transform(generate_series(1, len(a.embedding)),
-               i -> ${duckQz("a.embedding[i]")} * ${duckQz("b.embedding[i]")})) AS DOUBLE)
-          / (a.nrm * b.nrm) >= 0.45),
+  WHERE ${duckCos("a", "b")} >= 0.45),
 cap AS (
   SELECT DISTINCT p.va, p.vb
   FROM prs p
@@ -1187,17 +1066,11 @@ FROM (SELECT COUNT(*) AS n_pairs FROM prs) np
 CROSS JOIN (SELECT CAST(COUNT(*) AS BIGINT) AS n_captured FROM cap) nc"""
 
   /** The runner-up assignment CTE (`a2nd`) — the rn = 2 row of the
-    * exact d2-then-cell ordering `afin` takes rn = 1 from; the oracle
-    * face of [[graft.functions.QRunnerUpCell]]. Shared by the semantic
-    * reps and capture oracles so the probe arithmetic cannot drift. */
-  // lazy: interpolated by vals declared both before and after this
-  // point in the object body (strict init order would null-interpolate)
-  private lazy val ivfRunnerUpCte: String = s"""a2nd AS (
-  SELECT vec_id, qe, cell FROM (
-    SELECT q.vec_id, q.qe, c.cell,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-             ORDER BY ${Ivf.d2("q.qe", "c.centroid")}, c.cell) AS rn
-    FROM q CROSS JOIN c${Ivf.Iterations} c) WHERE rn = 2)"""
+    * exact d2-then-cell ordering `afin` takes rn = 1 from. Shared by the
+    * semantic reps and capture oracles so the probe arithmetic cannot
+    * drift. A def: vals on both sides of it interpolate it. */
+  private def ivfRunnerUpCte: String =
+    Ivf.nearestCellCte("a2nd", "q", s"c${Ivf.Iterations}", rank = 2)
 
   /** DuckDB replay: deterministic Lloyd (the ivf_cells contract) → the
     * TOP-2 probe assignment (afin ∪ the rn = 2 runner-up) → within-cell
@@ -1216,11 +1089,7 @@ elig AS (SELECT * FROM probes ANTI JOIN big USING (cell)),
 prs AS (
   SELECT DISTINCT a.vec_id AS a, b.vec_id AS b
   FROM elig a JOIN elig b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE CAST(list_sum(list_transform(generate_series(1, len(a.qe)),
-               j -> a.qe[j] * b.qe[j])) AS DOUBLE)
-        / (sqrt(CAST(list_sum(list_transform(a.qe, x -> x * x)) AS DOUBLE))
-         * sqrt(CAST(list_sum(list_transform(b.qe, x -> x * x)) AS DOUBLE)))
-        >= $SemanticDedupThreshold),
+  WHERE ${Grid.cosine("a.qe", "b.qe")} >= $SemanticDedupThreshold),
 edges AS (SELECT a, b FROM prs UNION ALL SELECT b, a FROM prs),
 reach(node, label) AS (
   SELECT vec_id, vec_id FROM embeddings

@@ -277,17 +277,6 @@ GROUP BY user_id, session_seq"""
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
 
-  /** Streaming dedup: at-least-once delivery becomes effectively-once by
-    * key with dropDuplicatesWithinWatermark — duplicate event_ids within
-    * the watermark horizon are suppressed, and state for ids older than
-    * the watermark is evicted (bounded memory, unlike plain
-    * dropDuplicates on a stream). */
-  def dedupEventsStream(spark: SparkSession, dir: String): DataFrame =
-    eventsStream(spark, dir)
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-
   /** Streaming twin of [[graft.text.TextOps.dedupExact]]: exact
     * content-hash dedup of a document ingest stream. Keyed on
     * `md5(text)` with `dropDuplicatesWithinWatermark`, so a document

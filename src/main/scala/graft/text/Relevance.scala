@@ -423,10 +423,7 @@ ORDER BY query_id, rrf_rank"""
       .join(broadcast(shortlist), "doc_id")
       .join(broadcast(queries), "query_id")
       .select(col("query_id"), col("doc_id"), col("rrf_rank"),
-        (graft.functions.QDot.of("q", "d").cast("double")
-          / (sqrt(graft.functions.QDot.of("q", "q").cast("double"))
-            * sqrt(graft.functions.QDot.of("d", "d").cast("double"))))
-          .as("ce_score"))
+        graft.functions.QDot.cosine("q", "d").as("ce_score"))
       .withColumn("rerank", row_number().over(
         Window.partitionBy("query_id")
           .orderBy(col("ce_score").desc, col("doc_id").asc))

@@ -59,7 +59,7 @@ class LshAdaptivePropertySpec extends AnyFunSuite {
       }.min._2
       val arr = new org.apache.spark.sql.catalyst.util.GenericArrayData(
         vec.map(java.lang.Float.valueOf))
-      val got = QArgminCell.compute(arr, cents, cids)
+      val got = QArgminCell.compute(arr, cents, cids, rank = 1)
       assert(got == ref,
         s"vec=${vec.toSeq} cents=${cents.map(_.toSeq).toSeq} cids=${cids.toSeq}: got $got want $ref")
     }

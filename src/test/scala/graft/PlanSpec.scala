@@ -430,6 +430,30 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("vector-search plans: embeddings scans and exchanges stay pinned") {
+    // one probe, one ADC top-k, one exact top-k and one recall tail serve
+    // IVF, PQ and IVF-PQ; sharing a stage must never add a scan of the
+    // collection or a shuffle to any op that uses it. Counts recorded at
+    // the per-op implementations the shared stages replaced.
+    Seq(
+      // (op, embeddings FileScans, Exchange operators)
+      ("ivf_search", 1, 3),
+      ("pq_search", 1, 4),
+      ("pq_search_rerank", 3, 6),
+      ("ivfpq_search", 2, 6),
+      ("ivf_recall", 3, 9),
+      ("pq_recall", 3, 10),
+      ("pq_rerank_recall", 5, 12),
+      ("ivfpq_recall", 4, 12)
+    ).foreach { case (name, scans, exchanges) =>
+      val plan = staticPlan(SparkEntry.queries(name)(spark, sf))
+      val got = (plan.linesIterator.count(l => l.contains("FileScan") && l.contains("embeddings")),
+        plan.linesIterator.count(_.contains("Exchange")))
+      assert(got == ((scans, exchanges)),
+        s"$name: (embeddings scans, exchanges) = $got, pinned ($scans, $exchanges):\n${plan.take(4000)}")
+    }
+  }
+
   test("exact prefix-cut ops never row-join the full buckets") {
     // full buckets' contributions come from the bounded histogram, so
     // the corpus is read at most 3× (histogram, straddle descriptor,

@@ -1,8 +1,9 @@
 package graft
 
-import graft.functions.QRunnerUpCell
+import graft.functions.QArgminCell
 import org.apache.spark.sql.functions._
 
+/** The runner-up (rank 2) mode of the nearest-cell expression. */
 class QRunnerUpCellSpec extends SparkSpec {
 
   /** Independent plain-Scala reference: quantize to the 1e-7 grid,
@@ -27,7 +28,7 @@ class QRunnerUpCellSpec extends SparkSpec {
     val cents = someCentroids(16)
     val got = Tables.embeddings(spark, sf).limit(200)
       .select(col("vec_id"), col("embedding"),
-        QRunnerUpCell.of("embedding", cents).as("cell2"))
+        QArgminCell.of("embedding", cents, rank = 2).as("cell2"))
       .collect()
     got.foreach { r =>
       val expected = refRunnerUp(r.getAs[scala.collection.Seq[Float]]("embedding"), cents)
@@ -43,8 +44,8 @@ class QRunnerUpCellSpec extends SparkSpec {
     // three identical centroids: argmin takes cid 3, runner-up cid 5
     val cents = Array(7 -> c, 3 -> c, 5 -> c)
     val out = v.select(
-      graft.functions.QArgminCell.of("embedding", cents).as("cell"),
-      QRunnerUpCell.of("embedding", cents).as("cell2")).head()
+      QArgminCell.of("embedding", cents).as("cell"),
+      QArgminCell.of("embedding", cents, rank = 2).as("cell2")).head()
     assert(out.getAs[Int]("cell") == 3 && out.getAs[Int]("cell2") == 5,
       s"expected (3, 5), got (${out.getAs[Int]("cell")}, ${out.getAs[Int]("cell2")})")
   }
@@ -52,7 +53,7 @@ class QRunnerUpCellSpec extends SparkSpec {
   test("native runner-up participates in whole-stage codegen") {
     val cents = someCentroids(4)
     val plan = Tables.embeddings(spark, sf)
-      .select(QRunnerUpCell.of("embedding", cents).as("cell2"))
+      .select(QArgminCell.of("embedding", cents, rank = 2).as("cell2"))
       .queryExecution.executedPlan
     val codegenStages = plan.collect {
       case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w

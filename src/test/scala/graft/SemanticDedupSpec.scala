@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 /** SemDeDup-style semantic dedup: within-cell union-find over the
   * quantizer assignment. The cell is the blocking function — components
   * must collapse inside a cell, chain through intermediates, and never
-  * leak across cells; degenerate cells fall back to singletons. */
+  * leak across cells; degenerate cells fall back to singletons. The
+  * single-probe cases run the multi-probe core with no second probe
+  * (`cell2 = cell`). */
 class SemanticDedupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -16,9 +18,11 @@ class SemanticDedupSpec extends SparkSpec {
       Seq.fill(dims - 2)(0.0f))
   }
 
+  private def singleProbe(df: org.apache.spark.sql.DataFrame, cap: Int) =
+    Similarity.semanticDedupRepsMultiOver(df.withColumn("cell2", col("cell")), cap)
+
   private def run(rows: Seq[(Long, Seq[Float], Int)], cap: Int = 4096) =
-    Similarity.semanticDedupRepsOver(
-      rows.toDF("vec_id", "embedding", "cell"), cap)
+    singleProbe(rows.toDF("vec_id", "embedding", "cell"), cap)
       .collect()
       .map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2), r.getLong(3),
         r.getBoolean(4))).toMap
@@ -63,9 +67,9 @@ class SemanticDedupSpec extends SparkSpec {
     val rows = (0 until 60).map(i =>
       (i.toLong, unit2((i % 6) * 20.0), i % 4))
     val df = rows.toDF("vec_id", "embedding", "cell")
-    val a = Similarity.semanticDedupRepsOver(df, 4096)
+    val a = singleProbe(df, 4096)
       .collect().map(_.toSeq).toSet
-    val b = Similarity.semanticDedupRepsOver(df.repartition(7), 4096)
+    val b = singleProbe(df.repartition(7), 4096)
       .collect().map(_.toSeq).toSet
     assert(a == b && a.nonEmpty)
   }
