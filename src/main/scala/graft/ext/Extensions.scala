@@ -68,13 +68,12 @@ FROM customer"""
       .limit(50)
   }
 
-  val ngramFreqSql: String = """
-WITH tok AS (SELECT regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
-bg AS (SELECT unnest(CASE WHEN len(w) >= 2 THEN
-                       list_transform(generate_series(1, len(w) - 1),
-                         i -> w[i] || ' ' || w[i+1])
-                     ELSE [] END) AS bigram
-       FROM tok)
+  /** DuckDB twin of [[bigramsCol]]: one `bg` row per bigram occurrence. */
+  private val bigramCtes: String = s"""
+WITH tok AS (SELECT ${graft.text.TextOps.toksSql} AS w FROM documents),
+bg AS (SELECT unnest(${graft.text.TextOps.wordGramsSql(2)}) AS bigram FROM tok)"""
+
+  val ngramFreqSql: String = s"""$bigramCtes
 SELECT bigram, COUNT(*) AS occurrences
 FROM bg GROUP BY bigram
 ORDER BY occurrences DESC, bigram
@@ -220,13 +219,7 @@ ORDER BY d.year, d.month""")
       .orderBy(desc("n_exact"), asc("bigram"))
   }
 
-  val heavyHitterNgramsSql: String = s"""
-WITH tok AS (SELECT regexp_split_to_array(trim(text), '\\s+') AS w FROM documents),
-bg AS (SELECT unnest(CASE WHEN len(w) >= 2 THEN
-                       list_transform(generate_series(1, len(w) - 1),
-                         i -> w[i] || ' ' || w[i+1])
-                     ELSE [] END) AS bigram
-       FROM tok)
+  val heavyHitterNgramsSql: String = s"""$bigramCtes
 SELECT bigram, COUNT(*) AS n_exact, TRUE AS sketch_contract_held
 FROM bg GROUP BY bigram
 ORDER BY n_exact DESC, bigram

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Tables
+import graft.text.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -407,36 +408,36 @@ SELECT phash60, MIN(doc_id) AS keeper_doc_id FROM ph GROUP BY phash60"""
     * filtering an unbounded ingest, and why the streaming form reports
     * shared_shingles but not matched_bench_docs (that rollup needs the
     * batch join). StreamingSpec asserts flag parity with the batch twin. */
-  def decontaminationStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.text.TextOps
-    val vocab = TextOps.benchmarkShingleVocab(spark, dir)
-    docsStream(spark, dir)
-      .filter(col("source") =!= TextOps.BenchmarkSource)
-      .select(col("doc_id"),
-        size(array_intersect(TextOps.shinglesNative, typedLit(vocab)))
-          .cast(LongType).as("shared_shingles"))
-      .filter(col("shared_shingles") >= TextOps.ContaminationMinShared)
-  }
+  def decontaminationStream(spark: SparkSession, dir: String): DataFrame =
+    flagStream(spark, dir, TextOps.shinglesNative,
+      typedLit(TextOps.benchmarkVocab[String](
+        TextOps.cappedShingles(Tables.documents(spark, dir)), "s")),
+      "shared_shingles", TextOps.ContaminationMinShared)
 
   /** Streaming twin of [[graft.text.TextOps.winnowDecontamination]] —
-    * passage-level in-flight decontamination. Stateless like
-    * [[decontaminationStream]]: the static benchmark fingerprint
-    * vocabulary (hot fingerprints already excluded by the df-cap, so no
-    * stream-side cap bookkeeping is needed) ships as one array literal;
-    * each incoming document's winnow fingerprints are intersected with
-    * it. `WinnowFp` output is distinct per document, so the intersect
-    * size equals the batch join's per-document count exactly. */
-  def winnowDecontaminationStream(spark: SparkSession, dir: String): DataFrame = {
-    import graft.text.TextOps
-    val vocab = TextOps.benchmarkWinnowVocab(spark, dir)
+    * passage-level in-flight decontamination, stateless like
+    * [[decontaminationStream]] over the static capped benchmark
+    * fingerprint vocabulary. */
+  def winnowDecontaminationStream(spark: SparkSession, dir: String): DataFrame =
+    flagStream(spark, dir, graft.functions.WinnowFp.of(col("text")),
+      typedLit(TextOps.benchmarkVocab[Long](
+        TextOps.cappedWinnowFps(Tables.documents(spark, dir)), "fp")),
+      "shared_fps", TextOps.WinnowContaminationMinShared)
+
+  /** The stateless decontamination shape: each incoming train
+    * document's `feature` array intersected with the benchmark `vocab`
+    * literal ([[graft.text.TextOps.benchmarkVocab]] — hot keys already
+    * capped out, features distinct per document, so the intersect size
+    * equals the batch join's per-document count exactly), flagged at
+    * `min` shared keys. */
+  private def flagStream(spark: SparkSession, dir: String,
+                         feature: org.apache.spark.sql.Column,
+                         vocab: org.apache.spark.sql.Column,
+                         name: String, min: Int): DataFrame =
     docsStream(spark, dir)
       .filter(col("source") =!= TextOps.BenchmarkSource)
-      .select(col("doc_id"),
-        size(array_intersect(graft.functions.WinnowFp.of(col("text")),
-          typedLit(vocab)))
-          .cast(LongType).as("shared_fps"))
-      .filter(col("shared_fps") >= TextOps.WinnowContaminationMinShared)
-  }
+      .select(col("doc_id"), size(array_intersect(feature, vocab)).cast(LongType).as(name))
+      .filter(col(name) >= min)
 
   val inventory: Map[String, Q] = Map(
     "events_hourly_windows"  -> (eventsHourly _),

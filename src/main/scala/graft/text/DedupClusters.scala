@@ -24,12 +24,15 @@ import org.apache.spark.sql.types.DecimalType
   */
 object DedupClusters {
 
-  /** One materialized propagation per (session, dir): the iterative
-    * build caches its label rounds, and re-running it per bench pass
-    * would stack abandoned cache entries (the [[graft.warehouse
-    * .Warehouse]] materialization pattern, for the same reason). */
+  /** One materialized propagation per (session, dir, corpus vintage):
+    * the iterative build caches its label rounds, and re-running it per
+    * bench pass would stack abandoned cache entries (the [[graft
+    * .warehouse.Warehouse]] materialization pattern, for the same
+    * reason). The documents table's file-metadata fingerprint is part of
+    * the key (the IndexStore staleness convention), so a corpus
+    * rewritten under the same dir propagates again. */
   private val cache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
 
   /** Cluster assignment: every document → the min doc_id reachable
     * through Jaccard >= 0.7 edges (itself if isolated), with cluster
@@ -37,7 +40,8 @@ object DedupClusters {
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
     val appId = spark.sparkContext.applicationId
     cache.keys.filter(_._1 != appId).foreach(cache.remove)
-    cache.getOrElseUpdate((appId, dir), buildDedupClusters(spark, dir))
+    val fp = graft.sim.IndexStore.documentsFingerprint(spark, dir)
+    cache.getOrElseUpdate((appId, dir, fp), buildDedupClusters(spark, dir))
   }
 
   private def buildDedupClusters(spark: SparkSession, dir: String): DataFrame = {
@@ -135,7 +139,7 @@ object DedupClusters {
     * the hot-shingle df cap) are shared with the dedup_jaccard_pairs
     * oracle. */
   private[text] val dedupClustersCtes: String = s"""
-WITH RECURSIVE ${TextOps.shingleCtes(TextOps.HotShingleDfCap)},
+WITH RECURSIVE ${TextOps.shingleCtes},${TextOps.cellPairCtes("s")},
 prs AS (SELECT doc_a AS a, doc_b AS b
         FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
         WHERE CAST(i AS DOUBLE) / CAST(x.n + y.n - i AS DOUBLE) >= 0.7),

@@ -99,7 +99,7 @@ FROM c"""
   }
 
   val chunkDocumentsSql: String = s"""
-WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents),
+WITH t AS (SELECT doc_id, ${TextOps.toksSql} AS w FROM documents),
 k AS (SELECT doc_id, w,
              CASE WHEN len(w) <= $ChunkTokens THEN 1
                   ELSE 1 + CAST(ceil(CAST(len(w) - $ChunkTokens AS DOUBLE)

@@ -76,8 +76,8 @@ object Relevance {
       .orderBy("doc_id", "rank")
   }
 
-  private val tfidfTopTermsSql: String = """
-WITH occ AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS term
+  private val tfidfTopTermsSql: String = s"""
+WITH occ AS (SELECT doc_id, unnest(${TextOps.toksSql}) AS term
              FROM documents WHERE length(trim(text)) > 0),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM occ GROUP BY 1, 2),
 dfreq AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM occ GROUP BY 1),
@@ -123,7 +123,7 @@ ORDER BY doc_id, rank"""
   private val lmQualityScoreSql: String = {
     val lp = "ln(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE))"
     s"""
-WITH occ AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS term
+WITH occ AS (SELECT doc_id, unnest(${TextOps.toksSql}) AS term
              FROM documents WHERE length(trim(text)) > 0),
 counts AS (SELECT term, COUNT(*) AS cnt FROM occ GROUP BY 1),
 tot AS (SELECT COUNT(*) AS total FROM occ)
@@ -281,7 +281,7 @@ ORDER BY doc_id"""
     val values = Bm25Queries.map { case (q, t) => s"('$q', '$t')" }.mkString(", ")
     s"""
 WITH q(query_id, term) AS (VALUES $values),
-occ AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS term
+occ AS (SELECT doc_id, unnest(${TextOps.toksSql}) AS term
         FROM documents WHERE length(trim(text)) > 0),
 lens AS (SELECT doc_id, COUNT(*) AS dl FROM occ GROUP BY doc_id),
 stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS total FROM lens),

@@ -24,19 +24,25 @@ import org.apache.spark.sql.types.LongType
   *  - per-doc ops (stats, lang-id, fingerprint, signatures) are narrow
   *    projections — no shuffle, linear scan, whole-stage codegen;
   *  - exact dedup is one hash-groupBy (map-side partial);
-  *  - Jaccard pairs shuffle (shingle, doc) pairs — shingle blocking keeps
-  *    the join sparse (measured max 7 docs/shingle here); skew-prone hot
-  *    shingles are dropped by the [[HotShingleDfCap]] frequency cap, so
-  *    the worst join key costs cap² however pathological the corpus;
+  *  - the exact overlap ops (Jaccard, containment, winnow pairs and the
+  *    decontamination gates) share one frequency-capped relation
+  *    ([[capped]]: features held by more than `cap` documents are
+  *    dropped) and the pair ops one cell-pair stream over it
+  *    ([[cappedPairCore]]: docs are paired inside each capped feature
+  *    cell, no join), so the worst cell costs cap² pairs however
+  *    pathological the corpus;
   *  - MinHash-LSH is the scale path: candidates come from equality joins
   *    on 4 band hashes instead of all-pairs comparison.
   */
 object TextOps {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Whitespace tokens of trimmed text (shared definition, mirrored as
-    * regexp_split_to_array in the oracle). */
+  /** Whitespace tokens of trimmed text (shared definition, mirrored by
+    * [[toksSql]] in the oracle). */
   val toksE = "split(trim(text), '\\\\s+')"
+  /** DuckDB twin of [[toksE]]: the one tokenizer spelling of every
+    * oracle (DuckDB takes the `\s` of a plain string literally). */
+  val toksSql = """regexp_split_to_array(trim(text), '\s+')"""
 
   /** The 8-word function-word list — ONE definition shared by the
     * quality gate's stopword ratio, language markers, and the
@@ -65,6 +71,15 @@ object TextOps {
                         element_at($toksE, i + 1), ' ',
                         element_at($toksE, i + 2)))
         ELSE array() END)"""
+  /** DuckDB twin of the word n-gram list under [[shinglesE]] (n = 3) and
+    * the bigram table's `bigramsCol` (n = 2), before any distinct: the
+    * in-order n-grams of the token list `w` ([] under n tokens). */
+  private[graft] def wordGramsSql(n: Int): String = {
+    val gram = (0 until n).map(k => if (k == 0) "w[i]" else s"w[i+$k]").mkString(" || ' ' || ")
+    s"""CASE WHEN len(w) >= $n THEN
+           list_transform(generate_series(1, len(w) - ${n - 1}), i -> $gram)
+         ELSE [] END"""
+  }
 
   /** Compiled twin of [[shinglesE]] ([[graft.functions.WordShingles]]
     * over the token split) — same shingle set and first-occurrence
@@ -156,28 +171,23 @@ object TextOps {
           + lit(0.3) * (lit(1.0) - col("punct_ratio"))
           + lit(0.3) * least(lit(1.0), col("stopword_ratio") * lit(4.0))))
 
-  // plain triple-quote with a placeholder (not an s-string: the regex
-  // backslashes would be re-escaped); __EST_BPE__ -> the shared rule
-  private val textStatsSqlRaw: String = """
-WITH t AS (SELECT doc_id, text, regexp_split_to_array(trim(text), '\s+') AS w FROM documents)
+  val textStatsSql: String = s"""
+WITH t AS (SELECT doc_id, text, $toksSql AS w FROM documents)
 SELECT doc_id,
        CAST(len(w) AS BIGINT) AS n_tokens,
        CAST(length(text) AS BIGINT) AS n_chars_actual,
        CAST(list_sum(list_transform(w, x -> length(x))) AS DOUBLE) / CAST(len(w) AS DOUBLE) AS avg_token_len,
-       CAST(length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) AS DOUBLE)
+       CAST(length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g')) AS DOUBLE)
          / CAST(length(text) AS DOUBLE) AS punct_ratio,
        CAST(len(list_filter(w, t -> t IN ('the','a','of','and','to','in','is','it'))) AS DOUBLE)
          / CAST(len(w) AS DOUBLE) AS stopword_ratio,
-       __EST_BPE__ AS est_bpe_tokens,
-       CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS n_tokens_regex,
+       $estBpeTokensSqlE AS est_bpe_tokens,
+       CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS n_tokens_regex,
        100.0 * (0.4 * least(1.0, CAST(len(w) AS DOUBLE) / 100.0)
-              + 0.3 * (1.0 - CAST(length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) AS DOUBLE) / CAST(length(text) AS DOUBLE))
+              + 0.3 * (1.0 - CAST(length(regexp_replace(text, '[a-zA-Z0-9\\s]', '', 'g')) AS DOUBLE) / CAST(length(text) AS DOUBLE))
               + 0.3 * least(1.0, CAST(len(list_filter(w, t -> t IN ('the','a','of','and','to','in','is','it'))) AS DOUBLE)
                                  / CAST(len(w) AS DOUBLE) * 4.0)) AS quality_score
 FROM t"""
-
-  val textStatsSql: String =
-    textStatsSqlRaw.replace("__EST_BPE__", estBpeTokensSqlE)
 
   // -------------------------------------------------------------- lang id
 
@@ -238,8 +248,8 @@ SELECT c.labeled_lang, c.predicted_lang, c.n_docs,
 FROM cnt c JOIN tot t USING (labeled_lang)
 ORDER BY labeled_lang, predicted_lang"""
 
-  val langIdSql: String = """
-WITH t AS (SELECT doc_id, lang, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
+  val langIdSql: String = s"""
+WITH t AS (SELECT doc_id, lang, $toksSql AS w FROM documents),
 m AS (SELECT doc_id, lang AS labeled_lang,
              CAST(len(list_filter(w, t -> t IN ('the','a','is','of','and'))) AS BIGINT) AS en_markers,
              CAST(len(list_filter(w, t -> t IN ('el','la','de','que','los'))) AS BIGINT) AS es_markers,
@@ -288,12 +298,13 @@ FROM documents"""
 
   /** (doc_id, fp) exploded winnow fingerprints of any docs frame. */
   private[graft] def winnowFpsOver(d: DataFrame): DataFrame =
-    // repartition: the single-file documents input would otherwise run
-    // every rolling-hash pass in one task (same guard as dedupMinhashLsh)
+    spread(d).select(col("doc_id"), explode(WinnowFp.of(col("text"))).as("fp"))
+
+  /** A docs frame spread over every core before a rolling-hash pass: the
+    * single-file documents input would otherwise run every pass in one
+    * task (same guard as dedupMinhashLsh). */
+  private def spread(d: DataFrame): DataFrame =
     d.repartition(d.sparkSession.sparkContext.defaultParallelism)
-      .select(
-        col("doc_id"),
-        explode(graft.functions.WinnowFp.of(col("text"))).as("fp"))
 
   /** Plain-Scala reference twin of [[graft.functions.WinnowFp]] (spec
     * use only) — deliberately a DIFFERENT algorithm: direct O(k) re-hash
@@ -319,9 +330,90 @@ FROM documents"""
     else (0 to m - w).map(t => hs.slice(t, t + w).min).distinct.sorted
   }
 
-  /** Shared winnow CTEs (hashes → per-window minima), reused by the
-    * fingerprint dump, the overlap-pairs and the passage-decontamination
-    * oracles (`source` rides along for the latter). */
+  // ------------------------------------------------ capped overlap core
+
+  /** The frequency-capped feature relation every exact overlap op reads:
+    * `rows` minus every `key` value held by more than `cap` rows. Over a
+    * (doc, feature) relation that is distinct per document, the row count
+    * of a key is its document frequency, so the cap drops corpus
+    * boilerplate (license headers, navigation chrome, shared templates)
+    * from the REPRESENTATION — sizes and intersections alike — and the
+    * overlap measures stay exact over the capped sets. The df pass
+    * counts only (no boilerplate key ever collects a corpus-sized doc
+    * list), and the hot list is tiny by construction, so it anti-joins
+    * as a broadcast. */
+  private def capped(rows: DataFrame, key: String, cap: Int): DataFrame = {
+    val hot = rows.groupBy(key).agg(count(lit(1)).as("df"))
+      .filter(col("df") > cap).select(key)
+    rows.join(broadcast(hot), Seq(key), "left_anti")
+  }
+
+  /** DuckDB twin of [[capped]] over the CTE `src`: `hot` holds the keys
+    * held by more than `cap` rows and `kept` the remaining rows. */
+  private[text] def cappedCte(src: String, key: String, cap: Int): String =
+    s"""hot AS (SELECT $key FROM $src GROUP BY $key HAVING COUNT(*) > $cap),
+kept AS (SELECT * FROM $src ANTI JOIN hot USING ($key))"""
+
+  /** The cell-pair stream of the pair ops (Jaccard, containment, winnow
+    * pairs): per-pair shared-key counts `i` and capped per-doc set sizes
+    * `n` over a (doc_id, `key`) relation distinct per document. The
+    * [[capped]] rows group into per-key sorted doc arrays (≤ `cap`
+    * elements), and pairs materialize INSIDE each array via the
+    * combination HOF — the Basket discipline. One key-keyed exchange
+    * carries doc ids only, pairs never shuffle as join probes, and the
+    * per-doc sizes re-derive from the same grouped cells
+    * (ReusedExchange), not another scan. Sorted-array combinations
+    * enumerate exactly the a.key = b.key ∧ doc_a < doc_b matches of a
+    * self-join, and the cap bounds the worst cell at cap² pairs. */
+  private[graft] def cappedPairCore(rows: DataFrame, key: String,
+                                    cap: Int): (DataFrame, DataFrame) = {
+    val cells = capped(rows, key, cap).groupBy(key)
+      .agg(array_sort(collect_list(col("doc_id"))).as("ds"))
+    val inter = cells
+      .select(explode(expr(
+        """flatten(transform(ds, (x, i) ->
+          |  transform(slice(ds, i + 2, size(ds)), y -> struct(x AS a, y AS b))))"""
+          .stripMargin)).as("p"))
+      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
+      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("i"))
+    val sizes = cells.select(explode(col("ds")).as("doc_id"))
+      .groupBy("doc_id").agg(count(lit(1)).as("n"))
+    (inter, sizes)
+  }
+
+  /** DuckDB twin of [[cappedPairCore]] over the `kept` CTE of
+    * [[cappedCte]]: `sz` (doc_id, n) and `inter` (doc_a, doc_b, i), the
+    * pairs as the plain self-join the cells enumerate. */
+  private[text] def cellPairCtes(key: String): String = s"""
+sz AS (SELECT doc_id, COUNT(*) AS n FROM kept GROUP BY doc_id),
+inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
+          FROM kept a JOIN kept b ON a.$key = b.$key AND a.doc_id < b.doc_id
+          GROUP BY a.doc_id, b.doc_id)"""
+
+  /** (doc_id, source, `key`) rows of a per-document feature array over
+    * the docs frame `d`, [[capped]] at `cap` — the relation of the exact
+    * and Bloom shingle decontamination, the passage decontamination and
+    * their streaming twins' vocabularies. */
+  private def cappedBySource(d: DataFrame, feature: org.apache.spark.sql.Column,
+                             key: String, cap: Int): DataFrame =
+    capped(d.select(col("doc_id"), col("source"), explode(feature).as(key)), key, cap)
+
+  /** The benchmark slice's capped vocabulary of a [[cappedBySource]]
+    * relation as sorted driver-side values (eval suites are small by
+    * definition) — ships to executors as one array literal for the
+    * stateless streaming decontamination twins. Hot keys are already
+    * absent and features are distinct per document, so a stream-side
+    * `array_intersect` count equals the batch join count exactly. */
+  def benchmarkVocab[T: Ordering](capped: DataFrame, key: String): Seq[T] =
+    capped.filter(col("source") === BenchmarkSource)
+      .select(key).distinct()
+      .collect().toSeq.map(_.getAs[T](0)).sorted
+
+  // ------------------------------------------------- winnow fingerprints
+
+  /** Shared winnow CTEs (hashes → per-window minima → `fpr`, the
+    * distinct (doc_id, source, fp) rows), reused by the fingerprint
+    * dump, the overlap-pairs and the passage-decontamination oracles. */
   private val winnowCtes: String = s"""hashes AS (
   SELECT doc_id, source,
          list_transform(generate_series(1, length(text) - ${WinnowFp.DefaultK - 1}), i ->
@@ -335,17 +427,18 @@ wins AS (
          CASE WHEN len(hs) <= ${WinnowFp.DefaultW} THEN [list_min(hs)]
               ELSE list_transform(generate_series(1, len(hs) - ${WinnowFp.DefaultW - 1}),
                      t -> list_min(hs[t:t+${WinnowFp.DefaultW - 1}])) END AS fps
-  FROM hashes)"""
+  FROM hashes),
+fpr AS (SELECT DISTINCT doc_id, source, unnest(fps) AS fp FROM wins)"""
 
   val docFingerprintWinnowSql: String = s"""
 WITH $winnowCtes
-SELECT DISTINCT doc_id, unnest(fps) AS fp FROM wins"""
+SELECT doc_id, fp FROM fpr"""
 
-  /** Document-frequency cap for the winnow-overlap join: a fingerprint
+  /** Document-frequency cap for the winnow-overlap ops: a fingerprint
     * present in more than this many documents is corpus boilerplate and
-    * is dropped before pairing, bounding the worst join key at cap²
-    * however pathological the corpus — the [[HotShingleDfCap]] posture
-    * applied to fingerprints. */
+    * is dropped before pairing ([[capped]]), bounding the worst cell at
+    * cap² however pathological the corpus — the [[HotShingleDfCap]]
+    * posture applied to fingerprints. */
   val WinnowDfCap = 50
   /** Minimum shared (surviving) fingerprints for a pair to be reported:
     * each shared fingerprint certifies a shared >= k+w-1-char passage,
@@ -355,38 +448,27 @@ SELECT DISTINCT doc_id, unnest(fps) AS fp FROM wins"""
   /** Passage-overlap candidate pairs from winnowing fingerprints: the
     * document-level composition of [[docFingerprintWinnow]]. Every pair
     * of documents sharing >= [[WinnowSharedMin]] surviving fingerprints,
-    * with the shared count. Scale shape: banded equality self-join on
-    * `fp` (b·N join rows, no all-pairs), hot keys removed by the
-    * broadcast df-cap anti-join, then one hash aggregation on the pair —
-    * the same blocking discipline as the Jaccard/LSH families. */
+    * with the shared count. Scale shape: the Jaccard family's cell-pair
+    * stream ([[cappedPairCore]]) keyed on `fp` — hot fingerprints
+    * removed by the broadcast df-cap anti-join, docs paired inside each
+    * capped fingerprint cell (no join, no all-pairs), then one hash
+    * aggregation on the pair. [[WinnowFp]] output is sorted and distinct
+    * per document, so a pair's cell count is its shared-fingerprint
+    * count. */
   def winnowOverlapPairs(spark: SparkSession, dir: String): DataFrame =
     winnowOverlapPairsOver(docs(spark, dir))
 
   /** Parameterized core over any docs frame — the planted-passage
     * recall spec drives the REGISTERED detector through this. */
-  private[graft] def winnowOverlapPairsOver(d: DataFrame): DataFrame = {
-    val fps = winnowFpsOver(d)
-    val hot = fps.groupBy("fp")
-      .agg(count(lit(1)).as("df"))
-      .filter(col("df") > WinnowDfCap)
-      .select("fp")
-    val kept = fps.join(broadcast(hot), Seq("fp"), "left_anti")
-    kept.as("a")
-      .join(kept.as("b"),
-        col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("shared_fps"))
+  private[graft] def winnowOverlapPairsOver(d: DataFrame): DataFrame =
+    cappedPairCore(winnowFpsOver(d), "fp", WinnowDfCap)._1
+      .withColumnRenamed("i", "shared_fps")
       .filter(col("shared_fps") >= WinnowSharedMin)
-  }
 
   val winnowOverlapPairsSql: String = s"""
 WITH $winnowCtes,
-fpr AS (SELECT DISTINCT doc_id, unnest(fps) AS fp FROM wins),
-hot AS (SELECT fp FROM fpr GROUP BY fp HAVING COUNT(*) > $WinnowDfCap),
-kept AS (SELECT * FROM fpr ANTI JOIN hot USING (fp))
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared_fps
-FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-GROUP BY 1, 2 HAVING COUNT(*) >= $WinnowSharedMin"""
+${cappedCte("fpr", "fp", WinnowDfCap)},${cellPairCtes("fp")}
+SELECT doc_a, doc_b, i AS shared_fps FROM inter WHERE i >= $WinnowSharedMin"""
 
   /** Passage-level contamination threshold: distinct shared (non-hot)
     * fingerprints at which a train document is flagged against the
@@ -399,25 +481,8 @@ GROUP BY 1, 2 HAVING COUNT(*) >= $WinnowSharedMin"""
 
   /** (doc_id, source, fp) with corpus-wide hot fingerprints removed —
     * shared by [[winnowDecontamination]] and its streaming twin. */
-  private[graft] def cappedSourceWinnowFps(spark: SparkSession, dir: String): DataFrame = {
-    val fps = docs(spark, dir).repartition(spark.sparkContext.defaultParallelism)
-      .select(col("doc_id"), col("source"),
-        explode(WinnowFp.of(col("text"))).as("fp"))
-    val hot = fps.groupBy("fp").agg(count(lit(1)).as("df"))
-      .filter(col("df") > WinnowDfCap).select("fp")
-    fps.join(broadcast(hot), Seq("fp"), "left_anti")
-  }
-
-  /** The benchmark slice's capped fingerprint vocabulary as driver-side
-    * values (eval suites are small by definition) — ships to executors
-    * as one array literal for the stateless streaming twin. Hot
-    * fingerprints are already absent, so a stream-side
-    * `array_intersect` count equals the batch join count exactly. */
-  def benchmarkWinnowVocab(spark: SparkSession, dir: String): Seq[Long] =
-    cappedSourceWinnowFps(spark, dir)
-      .filter(col("source") === BenchmarkSource)
-      .select("fp").distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
+  private[graft] def cappedWinnowFps(d: DataFrame): DataFrame =
+    cappedBySource(spread(d), WinnowFp.of(col("text")), "fp", WinnowDfCap)
 
   /** Passage-level train/benchmark decontamination — [[decontamination]]
     * catches verbatim word-trigram overlap; this catches COPIED PASSAGES
@@ -428,7 +493,7 @@ GROUP BY 1, 2 HAVING COUNT(*) >= $WinnowSharedMin"""
     * benchmark slice are flagged. Scale: vocab is benchmark-sized
     * (broadcast), the join is fp-equality, the df-cap bounds hot keys. */
   def winnowDecontamination(spark: SparkSession, dir: String): DataFrame = {
-    val capped = cappedSourceWinnowFps(spark, dir)
+    val capped = cappedWinnowFps(docs(spark, dir))
     val vocab = capped.filter(col("source") === BenchmarkSource)
       .select("fp").distinct()
     capped.filter(col("source") =!= BenchmarkSource)
@@ -441,9 +506,7 @@ GROUP BY 1, 2 HAVING COUNT(*) >= $WinnowSharedMin"""
   // body — an eager val would capture null at initialization order
   lazy val winnowDecontaminationSql: String = s"""
 WITH $winnowCtes,
-fpr AS (SELECT DISTINCT doc_id, source, unnest(fps) AS fp FROM wins),
-hot AS (SELECT fp FROM fpr GROUP BY fp HAVING COUNT(*) > $WinnowDfCap),
-kept AS (SELECT * FROM fpr ANTI JOIN hot USING (fp)),
+${cappedCte("fpr", "fp", WinnowDfCap)},
 vocab AS (SELECT DISTINCT fp FROM kept WHERE source = '$BenchmarkSource')
 SELECT k.doc_id, COUNT(*) AS shared_fps
 FROM kept k JOIN vocab v ON k.fp = v.fp
@@ -496,58 +559,23 @@ SELECT md5(${canonicalTpl("\\s", ", 'g'")}) AS canonical_md5,
        COUNT(*) AS dup_count, MIN(doc_id) AS keeper_doc_id
 FROM documents GROUP BY 1"""
 
-  /** Document-frequency cap for the Jaccard/cluster blocking join: a
-    * shingle present in more than this many documents is boilerplate
-    * (license headers, navigation chrome) and is dropped from the
-    * shingle REPRESENTATION — both sizes and intersections — so the
+  /** Document-frequency cap for the shingle overlap ops: a shingle
+    * present in more than this many documents is boilerplate (license
+    * headers, navigation chrome) and is dropped from the shingle
+    * REPRESENTATION ([[capped]]) — both sizes and intersections — so the
     * Jaccard stays an exact set similarity over the capped sets. The
-    * join cost per shingle is df², so the cap bounds the worst key at
-    * cap² regardless of corpus size; the hot list itself is tiny by
-    * construction and anti-joins as a broadcast. Measured max df here is
-    * 7 (sf0.01) / 25 (sf0.1), so the default never binds on the test
-    * corpora — JaccardCapSpec exercises a corpus where it does. */
+    * pairing cost per shingle is df², so the cap bounds the worst cell at
+    * cap² regardless of corpus size. Measured max df here is 7 (sf0.01) /
+    * 25 (sf0.1), so the default never binds on the test corpora —
+    * JaccardCapSpec exercises a corpus where it does. */
   val HotShingleDfCap = 100
-
-  /** Shared candidate-pair core of the Jaccard and containment ops:
-    * per-pair intersection counts and capped per-doc set sizes over a
-    * (doc_id, s) DISTINCT-shingle relation. Pass 1 computes df per
-    * shingle and drops the > `dfCap` hot set (broadcast anti-join) —
-    * this stays a count-only pass so no boilerplate shingle ever
-    * collects a corpus-sized doc list. Pass 2 groups the capped stream
-    * into per-shingle sorted doc arrays (≤ dfCap elements) and
-    * materializes pairs INSIDE each array via the combination HOF —
-    * the Basket discipline. Versus the previous shingle-equality
-    * self-join this removes two full scan+shingle explodes (the plan
-    * read documents 4×: hot, both join sides, sizes; now 2×) and the
-    * join itself: one (s)-keyed exchange carries doc ids only, pairs
-    * never shuffle as join probes, and the per-doc sizes re-derive
-    * from the same grouped cells (ReusedExchange), not a third scan.
-    * Pair stream and results are identical: sorted-array combinations
-    * enumerate exactly the a.s = b.s ∧ doc_a < doc_b matches. */
-  private def cappedPairCore(sh: DataFrame, dfCap: Int): (DataFrame, DataFrame) = {
-    val hot = sh.groupBy("s").agg(count(lit(1)).as("df"))
-      .filter(col("df") > dfCap).select("s")
-    val capped = sh.join(broadcast(hot), Seq("s"), "left_anti")
-    val cells = capped.groupBy("s")
-      .agg(array_sort(collect_list(col("doc_id"))).as("ds"))
-    val inter = cells
-      .select(explode(expr(
-        """flatten(transform(ds, (x, i) ->
-          |  transform(slice(ds, i + 2, size(ds)), y -> struct(x AS a, y AS b))))"""
-          .stripMargin)).as("p"))
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("i"))
-    val sizes = cells.select(explode(col("ds")).as("doc_id"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n"))
-    (inter, sizes)
-  }
 
   /** Jaccard >= `threshold` near-dup pairs over a (doc_id, s) shingle
     * relation, with the df > `dfCap` hot shingles removed from the
     * representation before pairing ([[cappedPairCore]]). */
   def jaccardPairsOverShingles(sh: DataFrame, dfCap: Int = HotShingleDfCap,
                                threshold: Double = 0.7): DataFrame = {
-    val (inter0, sizes) = cappedPairCore(sh, dfCap)
+    val (inter0, sizes) = cappedPairCore(sh, "s", dfCap)
     val inter = inter0.withColumnRenamed("i", "inter")
     inter
       .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
@@ -566,26 +594,16 @@ FROM documents GROUP BY 1"""
     jaccardPairsOverShingles(
       docs(spark, dir).select(col("doc_id"), explode(shinglesNative).as("s")))
 
-  /** Shared oracle CTEs: tokenize → distinct shingles → df-capped
-    * shingles (mirrors [[jaccardPairsOverShingles]]; reused by the
-    * dedup_clusters oracle). */
-  private[text] def shingleCtes(cap: Int): String = s"""
-tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents),
-sh0 AS (SELECT DISTINCT doc_id,
-              unnest(CASE WHEN len(w) >= 3 THEN
-                       list_transform(generate_series(1, len(w) - 2),
-                         i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-                     ELSE [] END) AS s
-       FROM tok),
-hot AS (SELECT s FROM sh0 GROUP BY s HAVING COUNT(*) > $cap),
-sh AS (SELECT doc_id, s FROM sh0 ANTI JOIN hot USING (s)),
-sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id)"""
+  /** Shared oracle CTEs: tokenize → distinct (doc_id, source, s)
+    * shingles → the df-capped `kept` rows ([[cappedCte]]), reused by
+    * every shingle overlap oracle and the dedup_clusters oracle. */
+  private[text] def shingleCtes: String = s"""
+tok AS (SELECT doc_id, source, $toksSql AS w FROM documents),
+sh0 AS (SELECT DISTINCT doc_id, source, unnest(${wordGramsSql(3)}) AS s FROM tok),
+${cappedCte("sh0", "s", HotShingleDfCap)}"""
 
   val dedupJaccardPairsSql: String = s"""
-WITH ${shingleCtes(HotShingleDfCap)}
+WITH $shingleCtes,${cellPairCtes("s")}
 SELECT doc_a, doc_b,
        CAST(i AS DOUBLE) / CAST(x.n + y.n - i AS DOUBLE) AS jaccard
 FROM inter JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
@@ -612,7 +630,7 @@ WHERE CAST(i AS DOUBLE) / CAST(x.n + y.n - i AS DOUBLE) >= 0.7"""
   def containmentPairsOverShingles(sh: DataFrame,
                                    dfCap: Int = HotShingleDfCap,
                                    threshold: Double = ContainmentThreshold): DataFrame = {
-    val (inter0, sizes) = cappedPairCore(sh, dfCap)
+    val (inter0, sizes) = cappedPairCore(sh, "s", dfCap)
     val inter = inter0.withColumnRenamed("i", "n_common")
     inter
       .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "n_a"), "doc_a")
@@ -629,7 +647,7 @@ WHERE CAST(i AS DOUBLE) / CAST(x.n + y.n - i AS DOUBLE) >= 0.7"""
       docs(spark, dir).select(col("doc_id"), explode(shinglesNative).as("s")))
 
   val dedupContainmentPairsSql: String = s"""
-WITH ${shingleCtes(HotShingleDfCap)}
+WITH $shingleCtes,${cellPairCtes("s")}
 SELECT doc_a, doc_b, CAST(i AS BIGINT) AS n_common,
        CAST(x.n AS BIGINT) AS n_a, CAST(y.n AS BIGINT) AS n_b,
        CAST(i AS DOUBLE) / CAST(least(x.n, y.n) AS DOUBLE) AS containment
@@ -644,6 +662,12 @@ WHERE CAST(i AS DOUBLE) / CAST(least(x.n, y.n) AS DOUBLE) >= $ContainmentThresho
     * contaminated. */
   val ContaminationMinShared = 3
 
+  /** (doc_id, source, s) with the df > [[HotShingleDfCap]] shingles
+    * removed — shared by the exact and Bloom decontamination and the
+    * streaming twin. */
+  private[graft] def cappedShingles(d: DataFrame): DataFrame =
+    cappedBySource(d, shinglesNative, "s", HotShingleDfCap)
+
   /** Train/benchmark decontamination — the overlap check every training
     * pipeline runs before shipping a corpus: a train document sharing
     * ≥ [[ContaminationMinShared]] distinct (df-capped) shingles with any
@@ -654,28 +678,8 @@ WHERE CAST(i AS DOUBLE) / CAST(least(x.n, y.n) AS DOUBLE) >= $ContainmentThresho
     * corpus (broadcastable), the join is shingle-equality (never
     * all-pairs), and [[HotShingleDfCap]] keeps boilerplate shingles from
     * counting as contamination or exploding the join. */
-  /** (doc_id, source, s) with the df > [[HotShingleDfCap]] shingles
-    * removed — shared by [[decontamination]] and its streaming twin. */
-  private[graft] def cappedSourceShingles(spark: SparkSession, dir: String): DataFrame = {
-    val sh = docs(spark, dir)
-      .select(col("doc_id"), col("source"), explode(shinglesNative).as("s"))
-    val hot = sh.groupBy("s").agg(count(lit(1)).as("df"))
-      .filter(col("df") > HotShingleDfCap).select("s")
-    sh.join(broadcast(hot), Seq("s"), "left_anti")
-  }
-
-  /** The capped benchmark shingle vocabulary as driver-side values —
-    * bounded by the benchmark corpus (eval suites are small by
-    * definition), it ships to executors as one array literal for the
-    * stateless streaming decontamination filter. */
-  def benchmarkShingleVocab(spark: SparkSession, dir: String): Seq[String] =
-    cappedSourceShingles(spark, dir)
-      .filter(col("source") === BenchmarkSource)
-      .select("s").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-
   def decontamination(spark: SparkSession, dir: String): DataFrame = {
-    val capped = cappedSourceShingles(spark, dir)
+    val capped = cappedShingles(docs(spark, dir))
     val bench = capped.filter(col("source") === BenchmarkSource)
       .select(col("s"), col("doc_id").as("bench_doc"))
     capped.filter(col("source") =!= BenchmarkSource)
@@ -689,17 +693,9 @@ WHERE CAST(i AS DOUBLE) / CAST(least(x.n, y.n) AS DOUBLE) >= $ContainmentThresho
   }
 
   val decontaminationSql: String = s"""
-WITH tok AS (SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents),
-sh0 AS (SELECT DISTINCT doc_id, source,
-              unnest(CASE WHEN len(w) >= 3 THEN
-                       list_transform(generate_series(1, len(w) - 2),
-                         i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-                     ELSE [] END) AS s
-       FROM tok),
-hot AS (SELECT s FROM sh0 GROUP BY s HAVING COUNT(*) > $HotShingleDfCap),
-sh AS (SELECT doc_id, source, s FROM sh0 ANTI JOIN hot USING (s)),
-bench AS (SELECT s, doc_id AS bench_doc FROM sh WHERE source = '$BenchmarkSource'),
-tr AS (SELECT doc_id, s FROM sh WHERE source <> '$BenchmarkSource')
+WITH $shingleCtes,
+bench AS (SELECT s, doc_id AS bench_doc FROM kept WHERE source = '$BenchmarkSource'),
+tr AS (SELECT doc_id, s FROM kept WHERE source <> '$BenchmarkSource')
 SELECT tr.doc_id,
        COUNT(DISTINCT tr.s) AS shared_shingles,
        COUNT(DISTINCT bench.bench_doc) AS matched_bench_docs
@@ -732,7 +728,7 @@ HAVING COUNT(DISTINCT tr.s) >= $ContaminationMinShared"""
     * (BloomDecontaminationSpec). */
   def bloomDecontamination(spark: SparkSession, dir: String): DataFrame = {
     val b = org.apache.spark.sql.GraftColumnBridge
-    val capped = cappedSourceShingles(spark, dir)
+    val capped = cappedShingles(docs(spark, dir))
     val benchVocab = capped.filter(col("source") === BenchmarkSource)
       .select("s").distinct()
     // conf-default sizing (1M expected members ≈ 1 MB) — eval-suite
@@ -771,17 +767,9 @@ HAVING COUNT(DISTINCT tr.s) >= $ContaminationMinShared"""
   }
 
   val bloomDecontaminationSql: String = s"""
-WITH tok AS (SELECT doc_id, source, regexp_split_to_array(trim(text), '\\s+') AS w FROM documents),
-sh0 AS (SELECT DISTINCT doc_id, source,
-              unnest(CASE WHEN len(w) >= 3 THEN
-                       list_transform(generate_series(1, len(w) - 2),
-                         i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
-                     ELSE [] END) AS s
-       FROM tok),
-hot AS (SELECT s FROM sh0 GROUP BY s HAVING COUNT(*) > $HotShingleDfCap),
-sh AS (SELECT doc_id, source, s FROM sh0 ANTI JOIN hot USING (s)),
-bench AS (SELECT DISTINCT s FROM sh WHERE source = '$BenchmarkSource'),
-tr AS (SELECT doc_id, s FROM sh WHERE source <> '$BenchmarkSource')
+WITH $shingleCtes,
+bench AS (SELECT DISTINCT s FROM kept WHERE source = '$BenchmarkSource'),
+tr AS (SELECT doc_id, s FROM kept WHERE source <> '$BenchmarkSource')
 SELECT tr.doc_id,
        COUNT(DISTINCT tr.s) AS shared_shingles,
        TRUE AS bloom_no_false_negative
@@ -806,14 +794,11 @@ HAVING COUNT(DISTINCT tr.s) >= $ContaminationMinShared"""
             / col("n_shingles_total").cast("double")))
   }
 
-  val textRepetitionSql: String = """
-WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
+  val textRepetitionSql: String = s"""
+WITH t AS (SELECT doc_id, $toksSql AS w FROM documents),
 c AS (SELECT doc_id,
              CAST(greatest(0, len(w) - 2) AS BIGINT) AS n_shingles_total,
-             CAST(CASE WHEN len(w) >= 3 THEN
-                    len(list_distinct(list_transform(generate_series(1, len(w) - 2),
-                      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])))
-                  ELSE 0 END AS BIGINT) AS n_shingles_distinct
+             CAST(len(list_distinct(${wordGramsSql(3)})) AS BIGINT) AS n_shingles_distinct
       FROM t)
 SELECT doc_id, n_shingles_total, n_shingles_distinct,
        CASE WHEN n_shingles_total > 0 THEN
@@ -892,11 +877,9 @@ FROM c"""
   /** Shared DuckDB CTE block reproducing [[minhashBands]]'s
     * tokens → shingles → 16-hash signature → 4 band hashes, used by both
     * the pairwise oracle below and [[Incremental.dedupIncrementalSql]]. */
-  private[text] val minhashBandCtes: String = """
-WITH tok AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
-shl AS (SELECT doc_id,
-               list_distinct(list_transform(generate_series(1, len(w) - 2),
-                 i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
+  private[text] val minhashBandCtes: String = s"""
+WITH tok AS (SELECT doc_id, $toksSql AS w FROM documents),
+shl AS (SELECT doc_id, list_distinct(${wordGramsSql(3)}) AS sh
         FROM tok WHERE len(w) >= 3),
 mh AS (SELECT doc_id,
               list_transform(generate_series(1, 16), i ->
@@ -1015,9 +998,9 @@ GROUP BY 1, 2 ORDER BY 1, 2"""
     graft.sim.BandedPairs.hamming60Pairs(d.select(col("doc_id"),
       graft.functions.SimHashSig.of(expr(contentToksE)).as("simhash60")), "simhash60", bucketCap)
 
-  val dedupSimhashPairsSql: String = """
+  val dedupSimhashPairsSql: String = s"""
 WITH tok AS (SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(text), '\s+'),
+             list_filter($toksSql,
                          t -> t NOT IN ('the', 'a', 'of', 'and', 'to', 'in', 'is', 'it')) AS w
              FROM documents),
 hs AS (SELECT doc_id,

@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
 class AnalyticsSpec extends SparkSpec {
 
   test("every registered query returns rows and matches its oracle key set") {
-    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet ||
-      SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
     // the registry is a ++ of per-module maps: a duplicate key would
     // silently SHADOW an earlier module's op (later-wins), replacing a
     // verified row with a different query under the same name

@@ -28,6 +28,23 @@ class DedupClustersSpec extends SparkSpec {
     }
   }
 
+  test("a documents table rewritten under the same dir is clustered again") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("dedup_clusters_vintage").toString
+    val (dup, other) = ("the quick brown fox jumps over the lazy dog again",
+      "a completely different sentence about rivers and hills today")
+    def vintage(texts: Seq[String]): Map[Long, Long] = {
+      texts.zipWithIndex.map { case (t, i) => (i.toLong + 1, t, "en", "src1") }
+        .toDF("doc_id", "text", "lang", "source")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      DedupClusters.dedupClusters(spark, dir).select("doc_id", "cluster_id")
+        .as[(Long, Long)].collect().toMap
+    }
+    assert(vintage(Seq(dup, dup, other)) == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
+    // same session, same dir, new rows: docs 2 and 3 are now the clones
+    assert(vintage(Seq(other, dup, dup)) == Map(1L -> 1L, 2L -> 2L, 3L -> 2L))
+  }
+
   test("stratified sample respects per-language rates") {
     val sample = DedupClusters.stratifiedSample(spark, sf)
       .groupBy("lang").agg(count(lit(1)).as("kept")).collect()

@@ -454,6 +454,36 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("text-overlap plans: documents scans, exchanges and feature evaluations stay pinned") {
+    // one capped relation and one cell-pair stream serve the exact
+    // overlap ops; sharing them must never add a scan of the corpus, a
+    // shuffle or a feature evaluation to any op that uses them. Counts
+    // recorded at the per-op implementations the shared core replaced,
+    // except winnow_overlap_pairs, which moved from a kept ⋈ kept
+    // self-join (2, 8, 3, one inner join) onto the cell-pair stream.
+    def inner(l: String) = l.contains("Join") && l.contains("Inner")
+    Seq(
+      // (op, documents FileScans, Exchange operators, wordshingles/winnowfp operators)
+      ("dedup_jaccard_pairs", 2, 9, 2),
+      ("dedup_containment_pairs", 2, 9, 2),
+      ("text_decontamination", 3, 6, 3),
+      ("bloom_decontamination", 3, 6, 3),
+      ("winnow_decontamination", 3, 9, 3),
+      ("corpus_published", 6, 13, 3),
+      ("winnow_overlap_pairs", 2, 6, 2)
+    ).foreach { case (name, scans, exchanges, features) =>
+      val plan = staticPlan(SparkEntry.queries(name)(spark, sf))
+      val got = (plan.linesIterator.count(l => l.contains("FileScan") && l.contains("documents")),
+        plan.linesIterator.count(_.contains("Exchange")),
+        plan.linesIterator.count(l => l.contains("wordshingles(") || l.contains("winnowfp(")))
+      assert(got == ((scans, exchanges, features)),
+        s"$name: (documents scans, exchanges, feature operators) = $got, " +
+          s"pinned ($scans, $exchanges, $features):\n${plan.take(4000)}")
+      if (name == "winnow_overlap_pairs")
+        assert(!plan.linesIterator.exists(inner), s"$name joins:\n${plan.take(4000)}")
+    }
+  }
+
   test("exact prefix-cut ops never row-join the full buckets") {
     // full buckets' contributions come from the bounded histogram, so
     // the corpus is read at most 3× (histogram, straddle descriptor,

@@ -25,6 +25,11 @@ def canon(df):
     return df
 
 n_pass = n_fail = 0
+# a result Verify dumped with no oracle entry would otherwise never be
+# compared: fail it by name (filtered runs want a fresh <verifyOutDir>)
+for name in sorted(os.listdir(outdir)):
+    if os.path.isdir(os.path.join(outdir, name)) and name not in oracle:
+        print(f"FAIL {name}: result without an oracle_sql.json entry"); n_fail += 1
 for name, sql in sorted(oracle.items()):
     respath = os.path.join(outdir, name)
     try:
