@@ -36,29 +36,22 @@ object Joins {
     * shuffle join is the right plan anyway. */
   val MaxBroadcastRows = 1000000L
 
-  /** Memoized gate decisions, keyed by (applicationId, canonicalized
-    * analyzed-plan hash, budget). The measuring `count()` is an eager
-    * Spark job, and before memoization it executed inside every gated
-    * query invocation — i.e. in the TIMED serve path (measured: q06
-    * 0.26→0.41 s, q07 0.31→0.49 s, +56% each, once the stored-dim
-    * serve made the query itself cheaper than its gate). The decision
-    * is a pure function of the dim's data, and within one application
-    * the dims it gates are immutable vintages (stored parquet assets,
-    * or deterministic builds of read-only source tables), so one count
-    * per (app, plan) is sound. Keying on the canonicalized plan hash
-    * means any structurally identical `dim.select(...)` re-derivation
-    * hits — callers don't thread cache keys — while a different data
-    * directory (different parquet relation) or a different projection
-    * misses and measures fresh. Entries of stopped applications are
-    * evicted on the next call (same idiom as Warehouse.cache). */
-  private[graft] val decisions =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Long), Boolean]
-
-  /** The measured-size broadcast gate (see object scaladoc). */
+  /** The measured-size broadcast gate (see object scaladoc). The
+    * measuring `count()` is an eager Spark job; before memoization it
+    * ran inside every gated query invocation, i.e. in the TIMED serve
+    * path (measured: q06 0.26→0.41 s, q07 0.31→0.49 s, +56% each, once
+    * the stored-dim serve made the query cheaper than its gate). The
+    * decision is a pure function of the dim's data, and within one
+    * application the dims it gates are immutable vintages (stored
+    * parquet assets, or deterministic builds of read-only source
+    * tables), so it is memoized once per application in the [[Memo]]
+    * slot (canonicalized analyzed-plan hash, budget): any structurally
+    * identical `dim.select(...)` re-derivation hits, and concurrent
+    * first callers (the analytics fan-out gates one projection from
+    * several queries at once) wait for one count, while a different
+    * data directory or projection misses and measures fresh. */
   def broadcastIfSmall(df: DataFrame, maxRows: Long = MaxBroadcastRows): DataFrame = {
-    val appId = df.sparkSession.sparkContext.applicationId
-    decisions.keys.filter(_._1 != appId).foreach(decisions.remove)
-    val key = (appId, df.queryExecution.analyzed.semanticHash(), maxRows)
-    if (decisions.getOrElseUpdate(key, df.count() <= maxRows)) broadcast(df) else df
+    val slot = ("broadcast_gate", df.queryExecution.analyzed.semanticHash(), maxRows)
+    if (Memo(df.sparkSession, slot, "")(df.count() <= maxRows)) broadcast(df) else df
   }
 }

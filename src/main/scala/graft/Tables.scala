@@ -20,32 +20,15 @@ import org.apache.spark.sql.types.StructType
   * dozens of times for the same files.
   */
 object Tables {
-  /** Inferred schemas keyed by (path, [[IndexStore.tableFingerprint]],
-    * `nanosAsLong`). A rewritten table lists new part files, so its
-    * fingerprint and key change and it is inferred again; the legacy
-    * nanos flag changes what a TIMESTAMP(NANOS) column reads as. */
-  private val schemas =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), StructType]()
-  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** The schema `spark.read.parquet` infers for `<dir>/<name>.parquet`,
-    * inferred once per vintage; concurrent first readers wait for one
-    * inference instead of each starting a job. */
+    * inferred once per vintage through [[Memo]]: a rewritten table lists
+    * new part files, so its vintage changes and it is inferred again;
+    * the legacy nanos flag, part of the slot, changes what a
+    * TIMESTAMP(NANOS) column reads as. */
   private[graft] def schemaOf(spark: SparkSession, dir: String, name: String): StructType = {
     val path = s"$dir/$name.parquet"
-    val key = (path, IndexStore.tableFingerprint(spark, dir, name),
-      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
-    Option(schemas.get(key)).getOrElse {
-      locks.computeIfAbsent(path, _ => new Object).synchronized {
-        Option(schemas.get(key)).getOrElse {
-          val schema = spark.read.parquet(path).schema
-          // a superseded vintage of this path can never be read again
-          schemas.keySet.removeIf(k => k._1 == path && k._2 != key._2)
-          schemas.put(key, schema)
-          schema
-        }
-      }
-    }
+    Memo(spark, ("schema", path, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")),
+      IndexStore.vintage(spark, dir, Seq(name)))(spark.read.parquet(path).schema)
   }
 
   private def rd(spark: SparkSession, dir: String, name: String): DataFrame =

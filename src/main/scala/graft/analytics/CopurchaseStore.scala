@@ -48,14 +48,12 @@ object CopurchaseStore {
   private val TableNames =
     Seq("pair_counts", "item_orders", "order_stats", "trade_edges")
 
-  private def fingerprint(spark: SparkSession, dir: String): String =
-    Seq("lineitem", "orders", "customer", "supplier", "nation")
-      .map(IndexStore.tableFingerprint(spark, dir, _)).mkString("|")
+  private val SourceTables = Seq("lineitem", "orders", "customer", "supplier", "nation")
 
   /** Load (or build once per collection vintage) the stored tables. */
   def tables(spark: SparkSession, dir: String): Map[String, DataFrame] =
     IndexStore.loadOrBuild(spark, dir, "copurchase", Version,
-      fingerprint(spark, dir), TableNames) {
+      IndexStore.vintage(spark, dir, SourceTables), TableNames) {
       val li = Tables.lineitem(spark, dir).select("l_orderkey", "l_partkey")
       val op = li.dropDuplicates("l_orderkey", "l_partkey")
       Map(

@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -49,8 +49,10 @@ import java.nio.file.Paths
   * name, temp renamed in, parked copy deleted) — a reader in another
   * process sees either the complete old vintage, nothing (rebuilds),
   * or the complete new vintage, never a half-overwritten table, and
-  * the destination is unoccupied only between the two renames.
-  * In-JVM builds additionally serialize on a per-path lock.
+  * the destination is unoccupied only between the two renames
+  * ([[swapIn]], which [[graft.sources.Sources.compactParquet]] shares).
+  * In-JVM builds additionally serialize on the index's [[graft.Memo]]
+  * slot lock.
   *
   * Location: `GRAFT_INDEX_DIR` (default: a `graft-indexes` directory
   * under java.io.tmpdir), keyed by the canonical data directory — the
@@ -65,7 +67,7 @@ object IndexStore {
     * dirs (scheme://…) are keyed verbatim — nio canonicalization would
     * resolve them against the driver cwd, which is meaningless for a
     * remote scheme and unstable across processes. */
-  private def indexDir(dataDir: String, name: String): String = {
+  private[graft] def indexDir(dataDir: String, name: String): String = {
     val canon =
       if (dataDir.contains("://")) dataDir
       else Paths.get(dataDir).toAbsolutePath.normalize.toString
@@ -74,6 +76,13 @@ object IndexStore {
       .map("%02x".format(_)).mkString.take(16)
     s"$root/${canon.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(48)}-$key/$name"
   }
+
+  /** The vintage of a set of source tables: each table's staleness
+    * fingerprint, joined by `|` — for one table exactly its fingerprint,
+    * the string stored manifests record. Every stored asset and every
+    * [[graft.Memo]] slot keyed on source data names its vintage here. */
+  def vintage(spark: SparkSession, dataDir: String, tables: Seq[String]): String =
+    tables.map(tableFingerprint(spark, dataDir, _)).mkString("|")
 
   /** Staleness fingerprint of one source table: an MD5 over the sorted
     * (path, length, modification time) of every data file under the
@@ -91,8 +100,8 @@ object IndexStore {
     * batch) — metadata listing is O(#files) and keeps the serve path
     * truly decoupled from collection size, which at 100 TB is the only
     * option anyway. */
-  def tableFingerprint(spark: SparkSession, dataDir: String,
-                       table: String): String = {
+  private def tableFingerprint(spark: SparkSession, dataDir: String,
+                               table: String): String = {
     val p = new HPath(s"$dataDir/$table.parquet")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) s"$table:absent"
@@ -103,62 +112,29 @@ object IndexStore {
       // subdirectories with equal (name, length, mtime) could swap
       // without a basename-keyed fingerprint noticing
       val rootUri = p.toUri.getPath
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val s = it.next()
+      // the files `listFiles(p, recursive = true)` yields, walked with
+      // plain `listStatus`: listFiles wraps each status in a
+      // LocatedFileStatus, which on the local filesystem without
+      // Hadoop's native library starts a `stat` process per file for
+      // permissions this digest never reads (measured ~5 ms per
+      // single-file table against ~0.02 ms)
+      def walk(s: FileStatus): Unit =
+        if (s.isDirectory) fs.listStatus(s.getPath).foreach(walk)
         // _SUCCESS/.crc markers churn without data meaning; data files
         // (part-*.parquet) are what the scan reads
-        if (!s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")) {
+        else if (!s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith(".")) {
           val full = s.getPath.toUri.getPath
           val rel =
             if (full.startsWith(rootUri)) full.drop(rootUri.length).stripPrefix("/")
             else full
           entries += s"$rel|${s.getLen}|${s.getModificationTime}"
         }
-      }
+      fs.listStatus(p).foreach(walk)
       val md = java.security.MessageDigest.getInstance("MD5")
       entries.sorted.foreach(e => md.update(e.getBytes(StandardCharsets.UTF_8)))
       s"$table:n=${entries.size};md5=" +
         md.digest().map("%02x".format(_)).mkString
     }
-  }
-
-  /** The embeddings collection's staleness guard (vector indexes). */
-  def embeddingsFingerprint(spark: SparkSession, dataDir: String): String =
-    tableFingerprint(spark, dataDir, "embeddings")
-
-  /** The documents corpus's staleness guard ([[graft.text.Relevance]]'s
-    * BM25 postings). */
-  def documentsFingerprint(spark: SparkSession, dataDir: String): String =
-    tableFingerprint(spark, dataDir, "documents")
-
-  /** Serialize build-once semantics per index path within this JVM; the
-    * temp-dir + rename protocol covers cross-process readers. */
-  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Per-session memo of the SERVE handles — the warehouse-store
-    * pattern ([[graft.warehouse.Warehouse]]'s `cache`), hoisted into the
-    * store itself so every family gets it: a hit costs a map lookup
-    * instead of a stale-vintage sweep + manifest read + one
-    * `spark.read.parquet` (file listing + footer) PER TABLE — measured
-    * 0.29–0.37 s per serve call on a 4-table store at sf0.1, pure
-    * metadata IO repeated identically on every call. The memo holds
-    * DataFrame HANDLES, not results: every action still reads the
-    * stored parquet. Staleness detection is untouched because the
-    * caller-computed source FINGERPRINT is part of the key — callers
-    * still fingerprint their source tables per call (O(#files)
-    * listing), and any collection rewrite changes the fingerprint,
-    * missing the memo and re-entering the full manifest/rebuild path.
-    * Keyed by applicationId and evicted across sessions so a stopped
-    * session's plans are never served to a new one. */
-  private val served = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, String, String), Map[String, DataFrame]]()
-
-  /** Test hook: the memo's current keys
-    * (appId, dataDir, name, version+tables, fingerprint). */
-  private[graft] def servedKeys: Set[(String, String, String, String, String)] = {
-    import scala.jdk.CollectionConverters._
-    served.keySet().asScala.toSet
   }
 
   private def fsOf(spark: SparkSession, path: String): FileSystem =
@@ -182,49 +158,29 @@ object IndexStore {
     * returned table into a temp directory, commit via manifest-last +
     * atomic directory rename, and read the tables back — so the caller
     * ALWAYS serves from the stored parquet (identical plans on the hit
-    * and miss paths). */
+    * and miss paths).
+    *
+    * The serve HANDLES are memoized per application in the index
+    * directory's [[graft.Memo]] slot, with version, tables and
+    * fingerprint as the vintage: a hit costs a map lookup instead of a
+    * stale-vintage sweep + manifest read + one `spark.read.parquet`
+    * (file listing + footer) PER TABLE — measured 0.29–0.37 s per serve
+    * call on a 4-table store at sf0.1. The memo holds DataFrame
+    * handles, not results: every action still reads the stored parquet.
+    * Staleness detection is untouched because callers compute the
+    * source fingerprint per call (an O(#files) listing, [[vintage]]),
+    * and any collection rewrite changes it, misses the memo and
+    * re-enters the manifest/rebuild path. */
   def loadOrBuild(spark: SparkSession, dataDir: String, name: String,
                   version: String, fingerprint: String, tables: Seq[String])
                  (build: => Map[String, DataFrame]): Map[String, DataFrame] = {
-    val appId = spark.sparkContext.applicationId
-    val key = (appId, dataDir, name,
-      s"$version\n${tables.mkString(",")}", fingerprint)
-    val hit = served.get(key)
-    if (hit != null) return hit
     val dir = indexDir(dataDir, name)
-    locks.computeIfAbsent(dir, _ => new Object).synchronized {
-      // a thread that waited here while another built this vintage
-      // serves that thread's handles instead of reading the store again
-      val built = served.get(key)
-      if (built != null) built
-      else {
-        // Eviction on the miss path, two rules:
-        //  - SUPERSEDED vintages of THIS index for THIS app (same dataDir +
-        //    name, different version/fingerprint) can never hit again — a
-        //    collection rewrite changed the fingerprint — and would
-        //    otherwise pin their DataFrame plans for the session's
-        //    lifetime.
-        //  - entries of STOPPED applications only: a blanket
-        //    "everything foreign" sweep made two live sessions in one JVM
-        //    mutually evict each other's memo on every miss, defeating it.
-        //    Liveness is read off the stored handles themselves (a
-        //    DataFrame carries its session); a handle-less entry is dead
-        //    weight either way.
-        served.entrySet().removeIf { e =>
-          val k = e.getKey
-          (k._1 == appId && k._2 == dataDir && k._3 == name && k != key) ||
-            (k._1 != appId && e.getValue.values.headOption.forall(
-              _.sparkSession.sparkContext.isStopped))
-        }
-        val loaded = loadOrBuildLocked(spark, dir, name, version, fingerprint, tables)(build)
-        served.put(key, loaded)
-        loaded
-      }
-    }
+    graft.Memo(spark, ("index", dir), s"$version\n${tables.mkString(",")}\n$fingerprint")(
+      loadOrBuildLocked(spark, dir, name, version, fingerprint, tables)(build))
   }
 
   /** The manifest check and, on a miss, the build and commit; the
-    * caller holds `dir`'s lock. */
+    * caller holds `dir`'s memo slot. */
   private def loadOrBuildLocked(spark: SparkSession, dir: String, name: String,
                                 version: String, fingerprint: String, tables: Seq[String])
                  (build: => Map[String, DataFrame]): Map[String, DataFrame] = {
@@ -234,7 +190,7 @@ object IndexStore {
     // build never swapped in, or a `.old-*` parked copy whose final
     // delete (or best-effort restore) failed — both are dead weight
     // that would otherwise accumulate on disk indefinitely. Under the
-    // per-path lock, and only siblings of THIS index's directory.
+    // index's memo slot lock, and only siblings of THIS index's directory.
     val parent = dirP.getParent
     if (parent != null && fs.exists(parent)) {
       val base = dirP.getName
@@ -265,36 +221,41 @@ object IndexStore {
           built(t).write.mode("overwrite").parquet(new HPath(tmpP, t).toString))
         val out = fs.create(new HPath(tmpP, "_manifest"), true)
         try out.write(want.getBytes(StandardCharsets.UTF_8)) finally out.close()
-        // rename-ASIDE commit (not delete-then-rename): park the old
-        // vintage under a unique .old name, swap the temp dir in, then
-        // delete the parked copy — the destination is unoccupied for
-        // only the instant between two renames, so a concurrent builder
-        // in another process recreating it mid-commit (which would make
-        // Hadoop rename NEST tmp inside it) has the narrowest possible
-        // window, and a failed swap restores the old vintage instead of
-        // leaving nothing
         fs.mkdirs(dirP.getParent)
-        val oldP = new HPath(s"$dir.old-${java.util.UUID.randomUUID().toString.take(8)}")
-        val parked = fs.exists(dirP) && fs.rename(dirP, oldP)
-        if (!fs.rename(tmpP, dirP)) {
-          // restore the parked vintage; a failed restore must be LOUD —
-          // silently losing it would leave no committed index at all
-          // (the stranded .old-* is swept at next loadOrBuild entry)
-          val restored = parked && fs.rename(oldP, dirP)
-          throw new java.io.IOException(
-            s"could not commit index build: rename $tmpP -> $dirP failed" +
-              (if (parked && !restored)
-                s"; restore of parked vintage $oldP ALSO failed — old index stranded aside"
-              else if (restored) "; old vintage restored"
-              else ""))
-        }
-        if (parked && !fs.delete(oldP, true))
-          System.err.println(s"[indexstore] could not delete parked vintage $oldP (swept at next entry)")
+        swapIn(fs, tmpP, dirP)
         tables.map(t => t -> built(t).schema).toMap
       }
     tables.map { t =>
       val path = new HPath(dirP, t).toString
       t -> written.get(t).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
     }.toMap
+  }
+
+  /** Commit `staged` as `dest` with a rename-ASIDE swap (not
+    * delete-then-rename): park the old `dest` under a unique `.old-*`
+    * sibling, rename `staged` in, then delete the parked copy. The
+    * destination is unoccupied only between the two renames, so a
+    * concurrent writer in another process recreating it mid-commit
+    * (which would make Hadoop rename NEST `staged` inside it) has the
+    * narrowest possible window. Any failed rename throws, and a failed
+    * swap first restores the parked copy — `dest` is never left
+    * without a complete version while one existed. */
+  private[graft] def swapIn(fs: FileSystem, staged: HPath, dest: HPath): Unit = {
+    val oldP = new HPath(s"$dest.old-${java.util.UUID.randomUUID().toString.take(8)}")
+    val parked = fs.exists(dest)
+    if (parked && !fs.rename(dest, oldP))
+      throw new java.io.IOException(s"could not commit $staged: rename $dest -> $oldP failed; $dest unchanged")
+    if (!fs.rename(staged, dest)) {
+      // restore the parked copy; a failed restore must be LOUD —
+      // silently losing it would leave no committed version at all
+      val restored = parked && fs.rename(oldP, dest)
+      throw new java.io.IOException(
+        s"could not commit $staged: rename $staged -> $dest failed" +
+          (if (parked && !restored) s"; restore of parked copy $oldP ALSO failed — stranded aside"
+          else if (restored) "; old copy restored"
+          else ""))
+    }
+    if (parked && !fs.delete(oldP, true))
+      System.err.println(s"[indexstore] could not delete parked copy $oldP")
   }
 }

@@ -167,7 +167,7 @@ object Ivf {
   def index(spark: SparkSession, dir: String): IvfIndex = {
     val t = IndexStore.loadOrBuild(spark, dir, "ivf",
       s"ivf-v1-k$K-it$Iterations",
-      IndexStore.embeddingsFingerprint(spark, dir),
+      IndexStore.vintage(spark, dir, Seq("embeddings")),
       Seq("assignments", "centroids")) {
       val b = buildIndexFull(spark, dir, K, Iterations)
       Map("assignments" -> b.assignments, "centroids" -> b.centroids)
@@ -420,7 +420,7 @@ ${recallSql("exact", "approx", TopK)}"""
       dir: String): Array[(Int, Array[Long])] = {
     val stored = IndexStore.loadOrBuild(spark, dir, "ivf_base",
       s"ivf-base-v1-k$K-it$Iterations-even",
-      IndexStore.embeddingsFingerprint(spark, dir),
+      IndexStore.vintage(spark, dir, Seq("embeddings")),
       Seq("centroids")) {
       val base = Tables.embeddings(spark, dir)
         .filter(col("vec_id") % 2 === 0)

@@ -145,7 +145,7 @@ object Pq {
     * then the ADC plan alone, decoupled from training. */
   def index(spark: SparkSession, dir: String): PqIndex = {
     val t = IndexStore.loadOrBuild(spark, dir, "pq", indexVersion,
-      IndexStore.embeddingsFingerprint(spark, dir), Seq("codebook", "codes")) {
+      IndexStore.vintage(spark, dir, Seq("embeddings")), Seq("codebook", "codes")) {
       val b = buildIndex(spark, dir)
       Map("codebook" -> b.codebook, "codes" -> b.codes)
     }

@@ -620,14 +620,6 @@ ${rescoreSql("vecs", threshold)}"""
     }
   }
 
-  /** One materialized CC run per (session, dir) — the iterative label
-    * propagation executes jobs eagerly at construction and caches label
-    * rounds, so re-running it per bench pass would stack abandoned
-    * cache entries (the [[graft.text.DedupClusters.dedupClusters]]
-    * pattern, for the same reason). */
-  private val repsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
   /** The output-BOUNDED form of embedding deduplication — what a 100 TB
     * pipeline actually ships: [[annLshDedupPairs]] emits one row per
     * near-duplicate PAIR, which is intrinsically quadratic in clone
@@ -646,18 +638,16 @@ ${rescoreSql("vecs", threshold)}"""
     * out at 0.51/0.60 < 0.8), so every vector is its own keeper — the
     * oracle checks exactly that fixpoint via the same recursive CTE;
     * AnnDedupGradeSpec drives clone piles and asserts each pile
-    * collapses to one representative. */
-  def annDedupReps(spark: SparkSession, dir: String): DataFrame = {
-    val appId = spark.sparkContext.applicationId
-    repsCache.keys.filter(_._1 != appId).foreach(repsCache.remove)
-    // key includes the collection fingerprint (an O(#files) metadata
-    // listing, the IndexStore invalidation currency): a regenerated
-    // corpus under the same path within one session must not serve the
-    // stale materialized CC result
-    repsCache.getOrElseUpdate(
-      (appId, dir + "#" + IndexStore.embeddingsFingerprint(spark, dir)),
+    * collapses to one representative.
+    *
+    * One materialized CC run per application and collection vintage
+    * ([[graft.Memo]]): the label propagation executes jobs eagerly at
+    * construction and caches label rounds, so re-running it per bench
+    * pass would stack abandoned cache entries, and a regenerated corpus
+    * under the same path must not serve the stale result. */
+  def annDedupReps(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo(spark, ("ann_dedup_reps", dir), IndexStore.vintage(spark, dir, Seq("embeddings")))(
       annDedupRepsOver(Tables.embeddings(spark, dir)))
-  }
 
   /** Core over any (vec_id, embedding) frame (spec surface). The CC
     * input is [[annLshStarEdgesOver]] — connectivity-equivalent to the
@@ -934,26 +924,16 @@ ORDER BY cluster_size"""
     * state is still ≤ 2n edge rows, never pair-shaped). Differs from
     * [[annDedupReps]] in blocking semantics: LSH bands approximate the
     * FULL similarity graph; the semantic op blocks by a TRAINED
-    * quantizer — the shape used to thin web-scale embedding corpora. */
-  def semanticDedupReps(spark: SparkSession, dir: String): DataFrame = {
-    val appId = spark.sparkContext.applicationId
-    semRepsCache.keys.filter(_._1 != appId).foreach(semRepsCache.remove)
-    // the fingerprint in the key is the same string that keys the
-    // persisted IVF index: a regenerated corpus (or a rebuilt index
-    // vintage, which the fingerprint also forces) within one session
-    // invalidates the materialized CC result instead of serving stale
-    semRepsCache.getOrElseUpdate(
-      (appId, dir + "#" + IndexStore.embeddingsFingerprint(spark, dir)),
+    * quantizer — the shape used to thin web-scale embedding corpora.
+    *
+    * Memoized like [[annDedupReps]]; its vintage is the same string that
+    * keys the persisted IVF index, so a regenerated corpus (or the index
+    * vintage it forces) within one session builds the result again. */
+  def semanticDedupReps(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo(spark, ("semantic_dedup_reps", dir),
+      IndexStore.vintage(spark, dir, Seq("embeddings")))(
       semanticDedupRepsMultiOver(
         multiProbeAssignments(Ivf.index(spark, dir)), SemanticCellCap))
-  }
-
-  /** One materialized multi-probe CC run per (session, dir) — the
-    * [[annDedupReps]] caching rationale: iterative label propagation
-    * executes eagerly at construction, so re-running per bench pass
-    * would stack abandoned cache entries. */
-  private val semRepsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
 
   /** Top-2 probe assignment under a frozen index: the stored `cell`
     * (nearest centroid, persisted with the index) plus `cell2` (the

@@ -153,9 +153,11 @@ object Sources {
     * Bin-packs the directory to ceil(bytes / targetBytes) files via a
     * round-robin repartition (pure size balancing — no key semantics to
     * preserve; use [[writeZOrdered]]/[[writeBucketed]] when layout IS
-    * semantic), writing to a staging path first and swapping in via
-    * rename so a crashed compaction never leaves the table half-written.
-    * Returns (filesBefore, filesAfter). */
+    * semantic), writing to a staging path first and committing it with
+    * the index store's rename-aside swap ([[graft.sim.IndexStore
+    * .swapIn]]), so a crashed or failed compaction never leaves the
+    * table half-written or gone: a failed swap restores the original
+    * and throws. Returns (filesBefore, filesAfter). */
   def compactParquet(spark: SparkSession, path: String,
                      targetBytes: Long): (Int, Int) = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
@@ -168,10 +170,7 @@ object Sources {
     val staging = new org.apache.hadoop.fs.Path(path + "._compacting")
     spark.read.parquet(path).repartition(nOut)
       .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    val backup = new org.apache.hadoop.fs.Path(path + "._pre_compact")
-    fs.rename(hPath, backup)
-    fs.rename(staging, hPath)
-    fs.delete(backup, true)
+    graft.sim.IndexStore.swapIn(fs, staging, hPath)
     val after = fs.listStatus(hPath)
       .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     (parts.length, after)

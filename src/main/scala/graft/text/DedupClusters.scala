@@ -24,25 +24,16 @@ import org.apache.spark.sql.types.DecimalType
   */
 object DedupClusters {
 
-  /** One materialized propagation per (session, dir, corpus vintage):
-    * the iterative build caches its label rounds, and re-running it per
-    * bench pass would stack abandoned cache entries (the [[graft
-    * .warehouse.Warehouse]] materialization pattern, for the same
-    * reason). The documents table's file-metadata fingerprint is part of
-    * the key (the IndexStore staleness convention), so a corpus
-    * rewritten under the same dir propagates again. */
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
-
   /** Cluster assignment: every document → the min doc_id reachable
     * through Jaccard >= 0.7 edges (itself if isolated), with cluster
-    * size and a keeper flag. */
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val appId = spark.sparkContext.applicationId
-    cache.keys.filter(_._1 != appId).foreach(cache.remove)
-    val fp = graft.sim.IndexStore.documentsFingerprint(spark, dir)
-    cache.getOrElseUpdate((appId, dir, fp), buildDedupClusters(spark, dir))
-  }
+    * size and a keeper flag. One materialized propagation per
+    * application and corpus vintage ([[graft.Memo]]): the iterative
+    * build caches its label rounds, and re-running it per bench pass
+    * would stack abandoned cache entries; a corpus rewritten under the
+    * same dir propagates again. */
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
+    graft.Memo(spark, ("dedup_clusters", dir),
+      graft.sim.IndexStore.vintage(spark, dir, Seq("documents")))(buildDedupClusters(spark, dir))
 
   private def buildDedupClusters(spark: SparkSession, dir: String): DataFrame = {
     val pairs = TextOps.dedupJaccardPairs(spark, dir)

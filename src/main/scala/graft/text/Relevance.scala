@@ -203,7 +203,7 @@ ORDER BY doc_id"""
     * re-derived postings/df/idf on every call). */
   private def bm25Index(spark: SparkSession, dir: String): Map[String, DataFrame] =
     graft.sim.IndexStore.loadOrBuild(spark, dir, "bm25", Bm25IndexVersion,
-      graft.sim.IndexStore.documentsFingerprint(spark, dir),
+      graft.sim.IndexStore.vintage(spark, dir, Seq("documents")),
       Seq("postings", "df", "stats")) {
       bm25IndexTablesOver(docs(spark, dir))
     }

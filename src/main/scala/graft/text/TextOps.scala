@@ -1156,7 +1156,7 @@ ORDER BY rank"""
       spark: SparkSession, dir: String): Map[String, DataFrame] =
     graft.sim.IndexStore.loadOrBuild(spark, dir, "bpe_vocab",
       BpeVocabStoreVersion,
-      graft.sim.IndexStore.documentsFingerprint(spark, dir),
+      graft.sim.IndexStore.vintage(spark, dir, Seq("documents")),
       Seq("source_vocab", "source_stats")) {
       val d = docs(spark, dir)
       Map(
@@ -1196,25 +1196,18 @@ ORDER BY rank"""
     * bounded by Σ|word| over DISTINCT words, independent of corpus row
     * count — and collects exactly one row. This is precisely how an
     * industrial BPE trainer runs at 100 TB: one pass to the
-    * word-frequency table, merge iterations over the vocabulary alone. */
-  /** Learned merge table per (app, corpus vintage, budget) — training
-    * runs ONCE per corpus however many apply-side ops (histogram,
-    * accounting, exact packing) ask for it in a session. Keyed on the
-    * documents table's file-metadata fingerprint (the IndexStore
-    * staleness convention), so a regenerated corpus retrains and a
-    * stable one never does; other apps' entries evict on first touch
-    * (the Warehouse.materialized discipline). */
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String, Int), Seq[(Long, String, String, Long)]]
-
+    * word-frequency table, merge iterations over the vocabulary alone.
+    *
+    * The learned table is memoized per (app, corpus vintage, budget) in
+    * [[graft.Memo]]: training runs ONCE per corpus however many
+    * apply-side ops (histogram, accounting, exact packing) ask for it
+    * in a session; a regenerated corpus retrains and a stable one never
+    * does. */
   private[text] def bpeTrainedMerges(
-      spark: SparkSession, dir: String): Seq[(Long, String, String, Long)] = {
-    val appId = spark.sparkContext.applicationId
-    mergeCache.keys.filter(_._1 != appId).foreach(mergeCache.remove)
-    val fp = graft.sim.IndexStore.documentsFingerprint(spark, dir)
-    mergeCache.getOrElseUpdate((appId, dir, fp, BpeTrainIters),
+      spark: SparkSession, dir: String): Seq[(Long, String, String, Long)] =
+    graft.Memo(spark, ("bpe_merges", dir, BpeTrainIters),
+      graft.sim.IndexStore.vintage(spark, dir, Seq("documents")))(
       bpeTrainedMergesOver(bpeVocab(spark, dir)))
-  }
 
   /** Parameterized trainer over any (word, cnt) vocabulary frame — the
     * drift diagnostic trains it on corpus halves.

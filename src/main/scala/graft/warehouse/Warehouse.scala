@@ -54,8 +54,10 @@ object Warehouse {
     * consumer real file statistics instead of opaque RDD-backed
     * estimates, and costs one columnar write per collection vintage —
     * amortized across sessions by the manifest/fingerprint guard. */
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
+  private def materialized(spark: SparkSession, dir: String, name: String)(
+      build: => DataFrame): DataFrame =
+    graft.sim.IndexStore.loadOrBuild(spark, dir, s"warehouse_$name", StoreVersion,
+      graft.sim.IndexStore.vintage(spark, dir, SourceTables), Seq(name))(Map(name -> build))(name)
 
   /** Bump when any dim/fact derivation changes. */
   private val StoreVersion =
@@ -65,24 +67,7 @@ object Warehouse {
     * read by nothing here, and including it meant a supplier-only
     * regeneration spuriously invalidated (and re-built, 427 s at the
     * 300× rung) every warehouse asset. */
-  private def sourceFingerprint(spark: SparkSession, dir: String): String =
-    Seq("region", "nation", "customer", "part", "orders", "lineitem")
-      .map(graft.sim.IndexStore.tableFingerprint(spark, dir, _)).mkString("|")
-
-  private def materialized(spark: SparkSession, dir: String, name: String)(
-      build: => DataFrame): DataFrame = {
-    // entries of stopped applications can never hit again (fresh appId)
-    // but would pin their DataFrames for the JVM's lifetime — evict them.
-    // The per-session map only memoizes the manifest check; the data
-    // itself lives in the store, shared across sessions per vintage.
-    val appId = spark.sparkContext.applicationId
-    cache.keys.filter(_._1 != appId).foreach(cache.remove)
-    cache.getOrElseUpdate(
-      (appId, dir, name),
-      graft.sim.IndexStore.loadOrBuild(spark, dir, s"warehouse_$name",
-        StoreVersion, sourceFingerprint(spark, dir), Seq(name))(
-        Map(name -> build))(name))
-  }
+  private val SourceTables = Seq("region", "nation", "customer", "part", "orders", "lineitem")
 
   /** Global 1-based rank of a UNIQUE natural key without a
     * single-partition window (SURVEY §7.4) — see [[graft.Dist]] for the

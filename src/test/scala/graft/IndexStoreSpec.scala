@@ -43,9 +43,9 @@ class IndexStoreSpec extends SparkSpec {
   test("fingerprint distinguishes component changes at fixed count and keys") {
     val dir = java.nio.file.Files.createTempDirectory("idxstore-fp").toString
     writeCorpus(dir, 0.0f)
-    val f0 = IndexStore.embeddingsFingerprint(spark, dir)
+    val f0 = IndexStore.vintage(spark, dir, Seq("embeddings"))
     writeCorpus(dir, 0.25f)
-    assert(IndexStore.embeddingsFingerprint(spark, dir) != f0)
+    assert(IndexStore.vintage(spark, dir, Seq("embeddings")) != f0)
   }
 
   test("fingerprint sees a change confined to one non-zero dimension") {
@@ -63,9 +63,9 @@ class IndexStoreSpec extends SparkSpec {
       }.toDF("vec_id", "embedding", "label")
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     write(0.0f)
-    val f0 = IndexStore.embeddingsFingerprint(spark, dir)
+    val f0 = IndexStore.vintage(spark, dir, Seq("embeddings"))
     write(0.5f)
-    assert(IndexStore.embeddingsFingerprint(spark, dir) != f0,
+    assert(IndexStore.vintage(spark, dir, Seq("embeddings")) != f0,
       "a dim-7-only edit must change the fingerprint")
   }
 
@@ -81,31 +81,66 @@ class IndexStoreSpec extends SparkSpec {
       }.toDF("vec_id", "embedding", "label")
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     write(swap = false)
-    val f0 = IndexStore.embeddingsFingerprint(spark, dir)
+    val f0 = IndexStore.vintage(spark, dir, Seq("embeddings"))
     write(swap = true)
-    assert(IndexStore.embeddingsFingerprint(spark, dir) != f0,
+    assert(IndexStore.vintage(spark, dir, Seq("embeddings")) != f0,
       "a component swap must change the fingerprint")
+  }
+
+  test("vintage is the recursive-listing digest stored manifests record") {
+    // the digest over `listFiles(recursive)` — the form every stored
+    // manifest's fingerprint was written with — recomputed here, on a
+    // partitioned layout with a nested marker directory and on a
+    // single-file table, so a change of listing cannot silently
+    // invalidate (or, worse, alias) stored vintages
+    val dir = java.nio.file.Files.createTempDirectory("idxstore-digest").toString
+    Tables.lineitem(spark, sf).repartition(3).write.partitionBy("l_returnflag")
+      .parquet(s"$dir/parted.parquet")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/parted.parquet/_temporary/0"))
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/parted.parquet/_temporary/0/part-x.parquet"), "x")
+    def listed(dataDir: String, table: String): String = {
+      val p = new org.apache.hadoop.fs.Path(s"$dataDir/$table.parquet")
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val root = p.toUri.getPath
+      val it = fs.listFiles(p, true)
+      val entries = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+        .map { s =>
+          val full = s.getPath.toUri.getPath
+          val rel = if (full.startsWith(root)) full.drop(root.length).stripPrefix("/") else full
+          s"$rel|${s.getLen}|${s.getModificationTime}"
+        }.toSeq.sorted
+      val md = java.security.MessageDigest.getInstance("MD5")
+      entries.foreach(e => md.update(e.getBytes("UTF-8")))
+      s"$table:n=${entries.size};md5=" + md.digest().map("%02x".format(_)).mkString
+    }
+    assert(IndexStore.vintage(spark, dir, Seq("parted")) == listed(dir, "parted"))
+    assert(IndexStore.vintage(spark, sf, Seq("orders", "part")) ==
+      listed(sf, "orders") + "|" + listed(sf, "part"))
+    assert(IndexStore.vintage(spark, dir, Seq("missing")) == "missing:absent")
   }
 
   test("serve memo evicts superseded vintages, keeps this session's other indexes") {
     // within one long-lived session a collection rewrite changes the
     // fingerprint; the superseded entry can never hit again and must
     // not pin its DataFrame plans — while a MISS on one index must not
-    // evict this session's memo for other indexes (nor, by the same
-    // rule, a live sibling session's — liveness is read off the stored
-    // handles, only stopped apps are swept).
+    // evict this session's memo for other indexes (nor a sibling
+    // session's, which shares the application: only other
+    // applications' entries are swept, MemoSpec).
     val dir = java.nio.file.Files.createTempDirectory("idxstore-memo").toString
     def build = Map("t" -> spark.range(3).toDF("v"))
+    // the fingerprint is the last line of the index slot's vintage
+    def vintages(name: String): Set[String] =
+      Memo.entries.get(("index", IndexStore.indexDir(dir, name)))
+        .map(_._2.linesIterator.toSeq.last).toSet
     IndexStore.loadOrBuild(spark, dir, "memo_probe", "v1", "fpA", Seq("t"))(build)
-    assert(IndexStore.servedKeys.exists(k => k._3 == "memo_probe" && k._5 == "fpA"))
+    assert(vintages("memo_probe") == Set("fpA"))
     IndexStore.loadOrBuild(spark, dir, "memo_probe", "v1", "fpB", Seq("t"))(build)
-    val vintages = IndexStore.servedKeys.filter(k =>
-      k._2 == dir && k._3 == "memo_probe").map(_._5)
-    assert(vintages == Set("fpB"),
-      s"superseded vintage must be evicted on insert, got $vintages")
+    assert(vintages("memo_probe") == Set("fpB"),
+      s"superseded vintage must be evicted on insert, got ${vintages("memo_probe")}")
     IndexStore.loadOrBuild(spark, dir, "memo_probe2", "v1", "fpC", Seq("t"))(build)
-    assert(IndexStore.servedKeys.exists(k =>
-      k._2 == dir && k._3 == "memo_probe" && k._5 == "fpB"),
+    assert(vintages("memo_probe") == Set("fpB"),
       "a miss on another index must not evict this session's live entries")
   }
 
@@ -126,6 +161,28 @@ class IndexStoreSpec extends SparkSpec {
       assert(stored.endsWith(s"warehouse_$name/$name"), stored)
       assert(served.schema == spark.read.parquet(stored).schema, name)
     }
+  }
+
+  test("a source rewritten within one session serves the new warehouse vintage") {
+    val dir = java.nio.file.Files.createTempDirectory("idxstore-rewrite").toString
+    Seq("region", "nation", "customer", "part", "orders", "lineitem").foreach { t =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/$t.parquet"),
+        java.nio.file.Paths.get(s"$dir/$t.parquet"))
+    }
+    import graft.warehouse.Warehouse
+    val all = Warehouse.dimPart(spark, dir).count()
+    assert(all == Tables.part(spark, sf).count())
+    // rewrite part.parquet in place with fewer rows, same session
+    val kept = Tables.part(spark, sf).filter(col("p_partkey") <= all / 2)
+    kept.write.parquet(s"$dir/part_new.parquet")
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$dir/part.parquet"), true))
+    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/part_new.parquet"),
+      new org.apache.hadoop.fs.Path(s"$dir/part.parquet")))
+    val served = Warehouse.dimPart(spark, dir)
+    assert(served.count() == kept.count() && kept.count() < all,
+      "the served dim_part must be the rewritten source's vintage")
+    assert(served.exceptAll(Warehouse.buildDimPart(spark, dir)).isEmpty)
   }
 
   test("a thread that waited on the build lock serves the handles built meanwhile") {

@@ -34,25 +34,37 @@ class JoinsSpec extends SparkSpec {
     assert(joined.count() == 100)
   }
 
+  /** The gate's [[Memo]] slots: (tag, canonicalized plan hash, budget). */
+  private def gateSlots: Set[Any] = Memo.entries.keySet.filter {
+    case ("broadcast_gate", _, _) => true
+    case _ => false
+  }
+
+  private def gateSlot(df: org.apache.spark.sql.DataFrame, maxRows: Long) =
+    ("broadcast_gate", df.queryExecution.analyzed.semanticHash(), maxRows)
+
   test("the gate decision is memoized per (app, plan, budget) — one count per key") {
     // the measuring count() must leave the timed serve path after the
     // first invocation: structurally identical re-derivations of the
     // same dim projection hit the memo (r14 judge finding: the eager
     // count inside every gated query cost q06/q07 +56%)
-    Joins.decisions.clear()
-    val dim = (1 to 10).map(i => (i.toLong, s"d$i")).toDF("k", "v")
-    Joins.broadcastIfSmall(dim, maxRows = 10)
-    assert(Joins.decisions.size == 1, "first call records one decision")
+    val before = gateSlots
+    def added = (gateSlots -- before).size
+    val dim = (1 to 10).map(i => (i.toLong, s"memo$i")).toDF("k", "v")
+    assert(jobsIn("gate-first")(Joins.broadcastIfSmall(dim, maxRows = 10)) > 0,
+      "the first call measures")
+    assert(added == 1, "first call records one decision")
     // same logical plan, fresh DataFrame object → same canonicalized key
-    val again = (1 to 10).map(i => (i.toLong, s"d$i")).toDF("k", "v")
-    Joins.broadcastIfSmall(again, maxRows = 10)
-    assert(Joins.decisions.size == 1, "identical plan re-uses the decision")
+    val again = (1 to 10).map(i => (i.toLong, s"memo$i")).toDF("k", "v")
+    assert(jobsIn("gate-again")(Joins.broadcastIfSmall(again, maxRows = 10)) == 0,
+      "an identical plan re-uses the decision without counting")
+    assert(added == 1, "identical plan re-uses the decision")
     // a different budget is a different decision
     Joins.broadcastIfSmall(dim, maxRows = 5)
-    assert(Joins.decisions.size == 2, "budget is part of the key")
+    assert(added == 2, "budget is part of the key")
     // a different projection is a different plan → measured fresh
     Joins.broadcastIfSmall(dim.select("k"), maxRows = 10)
-    assert(Joins.decisions.size == 3, "different plan measures fresh")
+    assert(added == 3, "different plan measures fresh")
   }
 
   test("q01/q04/q08 route dim_part through the gate (broadcast at spec scale)") {
@@ -60,14 +72,16 @@ class JoinsSpec extends SparkSpec {
     // spec scale the gate must still CHOOSE broadcast (the planner's
     // opaque stats would sort-merge), and the memo must show the
     // decisions came from the gate, not a hint
-    Joins.decisions.clear()
     Seq(analytics.Analytics.q01 _, analytics.Analytics.q04 _, analytics.Analytics.q08 _)
       .foreach { q =>
         val plan = q(spark, sf).queryExecution.executedPlan.toString
         assert(plan.contains("BroadcastHashJoin"), s"expected broadcast dim join:\n$plan")
         assert(!plan.contains("SortMergeJoin"), "dim join fell back to sort-merge")
       }
-    assert(Joins.decisions.nonEmpty, "expected gate decisions to be recorded")
+    val dp = graft.warehouse.Warehouse.dimPart(spark, sf)
+    Seq(dp.select("product_key", "p_name", "p_brand"), dp.select("product_key", "p_type"))
+      .foreach(p => assert(gateSlots(gateSlot(p, Joins.MaxBroadcastRows)),
+        s"expected a gate decision for ${p.columns.mkString(",")}"))
   }
 
   test("the fact build's scaling-dim joins arrive via broadcast at spec scale") {

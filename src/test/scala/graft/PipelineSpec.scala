@@ -358,7 +358,31 @@ class PipelineSpec extends SparkSpec {
     assert(back.count() == docs.count())
     assert(back.agg(sum("n_chars")).head().getLong(0) == charSum)
     assert(!new java.io.File(dir + "._compacting").exists())
-    assert(!new java.io.File(dir + "._pre_compact").exists())
+    // the swap's parked copy of the old layout is deleted after commit
+    assert(new java.io.File(dir).getParentFile.list().toSeq == Seq("docs"))
+  }
+
+  test("a failed compaction swap keeps the table whole and throws") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.failrename.impl", classOf[FailingRenameFs].getName)
+    val docs = Tables.documents(spark, sf)
+    val parent = java.nio.file.Files.createTempDirectory("graft_compact_fail").toString
+    val dir = s"$parent/docs"
+    docs.repartition(8).write.parquet(dir)
+    def layout = new java.io.File(dir).listFiles().map(f => f.getName -> f.length).toSet
+    val before = layout
+    // fail the staging -> table rename, then the table -> parked rename
+    Seq[org.apache.hadoop.fs.Path => Boolean](
+      _.getName == "docs._compacting", _.getName == "docs").foreach { fails =>
+      FailingRenameFs.failing.set(fails)
+      try intercept[java.io.IOException](
+        graft.sources.Sources.compactParquet(spark, s"failrename://$dir", 1L << 30))
+      finally FailingRenameFs.failing.set(_ => false)
+      assert(layout == before, "the table's files changed")
+      assert(new java.io.File(parent).list().forall(n => n == "docs" || n == "docs._compacting"),
+        new java.io.File(parent).list().toSeq)
+      assert(spark.read.parquet(dir).count() == docs.count())
+    }
   }
 
   test("mergeSchema read unions evolving schemas with NULL backfill") {

@@ -70,20 +70,28 @@ class SessionsSpec extends AnyFunSuite {
     // Pipeline keeps its own session: the local profile changes its
     // written output size (output_mb 0.960 -> 1.330 MB, AQE profile),
     // beyond what its benchmark bound allows
-    val allowed = Set("Sessions.scala", "Pipeline.scala")
+    val offenders = SessionsSpec.mainSourcesMatching("""SparkSession\s*\.\s*builder\s*\(""".r,
+      allowed = Set("Sessions.scala", "Pipeline.scala"))
+    assert(offenders.isEmpty,
+      s"SparkSession.builder() outside Sessions (start through Sessions.local/fromEnv): $offenders")
+  }
+}
+
+object SessionsSpec {
+
+  /** Paths of the `src/main/scala` sources, other than the `allowed`
+    * file names, in which `pattern` occurs. */
+  def mainSourcesMatching(pattern: scala.util.matching.Regex, allowed: Set[String]): Seq[String] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"source root not found from ${root.getAbsolutePath}")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-    val builder = """SparkSession\s*\.\s*builder\s*\(""".r
-    val offenders = walk(root)
+    walk(root)
       .filter(f => f.getName.endsWith(".scala") && !allowed(f.getName))
       .filter { f =>
         val src = scala.io.Source.fromFile(f, "UTF-8")
-        try builder.findFirstIn(src.mkString).isDefined finally src.close()
+        try pattern.findFirstIn(src.mkString).isDefined finally src.close()
       }
       .map(_.getPath)
-    assert(offenders.isEmpty,
-      s"SparkSession.builder() outside Sessions (start through Sessions.local/fromEnv): $offenders")
   }
 }

@@ -16,6 +16,10 @@ cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 WORK="$(mktemp -d /tmp/graft-ci.XXXXXX)"
 trap 'rm -rf "$WORK"' EXIT
+# a private store root: every stored asset (warehouse, ANN indexes, BM25,
+# co-purchase) is built and committed by this checkout's code, never
+# served from a vintage an earlier checkout left in the shared default
+export GRAFT_INDEX_DIR="$WORK/index"
 
 echo "== [1/6] compile =="
 sbt -batch compile Test/compile
