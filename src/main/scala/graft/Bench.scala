@@ -9,53 +9,14 @@ import org.apache.spark.sql.SparkSession
   * local DB.
   */
 object Bench {
-  val headline: Seq[String] = Seq(
-    "q01_top_products", "q02_monthly_trend", "q03_customer_segments",
-    "q04_category_performance", "q05_payment_distribution", "q06_geo_revenue",
-    "q07_customer_ltv", "q08_product_profitability", "q09_dow_pattern",
-    "q10_discount_impact")
+  val headline: Seq[String] = keys(Op.Headline)
 
   /** The extension-operator roster (dedup, ANN, text, curation, temporal):
-    * timed in Bench's ext pass, and the `ext`/`listing` classes of
-    * [[SparkEntry.rosterClass]]. */
-  val extOps: Seq[String] = Seq(
-    "dedup_exact", "dedup_minhash_lsh", "dedup_simhash_pairs",
-    "dedup_clusters", "ann_cosine_topk", "ann_lsh_buckets",
-    "ann_lsh_near_dup_pairs_demo", "ann_lsh_dedup_pairs", "ann_dedup_reps",
-    "ivf_search",
-    "text_stats", "corpus_curation", "quantiles_line_total",
-    "asof_click_attribution", "range_join_click_purchase",
-    "doc_fingerprint_winnow", "winnow_overlap_pairs",
-    "dedup_canonical", "heavy_hitter_ngrams", "bloom_decontamination",
-    "chunk_documents", "events_type_transitions", "cdc_orders_diff",
-    "ivm_daily_sales", "bm25_search", "rfm_segments", "basket_pairs",
-    "events_active_users", "embedding_drift",
-    "pq_search", "pq_search_rerank", "ivfpq_search", "fuzzy_name_pairs",
-    "token_budget_exact", "pagerank_nation_trade", "scd2_pit_orders",
-    "monitor_seasonal_anomaly",
-    "ivf_delta_assign", "hybrid_rrf_search",
-    "stratified_sample_exact", "pii_referential_rollup",
-    // the output-bounded dedup-family rollups: the rows a 300× rung runs
-    // where the pair LISTING's collect can't
-    "ann_dedup_pair_stats", "ann_dedup_cluster_hist",
-    "multimodal_phash_pairs",
-    "dedup_containment_pairs", "semantic_dedup_reps",
-    // the DOULION-sampled census is the exact census's scale-path twin;
-    // the exact census is an eval row (SparkEntry.evalOnly), which never
-    // rides a rung
-    "triangle_doulion_copurchase",
-    "hybrid_rerank_search", "dedup_stream_phash", "bpe_merge_pairs",
-    "bpe_train_merges", "bpe_token_histogram",
-    "bpe_source_token_accounting",
-    "contrastive_triples",
-    "length_bucket_batches",
-    "cluster_balanced_sample",
-    "dedup_source_matrix",
-    "pack_sequences_bpe",
-    // the warehouse aggregate tables: timed so their collapse grains
-    // (no COUNT(DISTINCT) Expand) are measured, not only plan-dumped
-    "agg_daily_sales", "agg_product_performance", "agg_customer_metrics",
-    "bpe_merge_drift")
+    * timed in Bench's ext pass, in registry order. */
+  val extOps: Seq[String] = keys(Op.Ext, Op.Listing)
+
+  private def keys(classes: Op.Roster*): Seq[String] =
+    SparkEntry.ops.filter(o => classes.contains(o.roster)).map(_.key)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -65,7 +26,6 @@ object Bench {
     // both (Sessions.clusterDefaults).
     val spark = Sessions.fromEnv()
 
-    val qs = headline.filter(SparkEntry.queries.contains)
     // Warm-up: materialize the star schema once (the reference times its
     // queries against a pre-loaded warehouse, generate_analytics.py:20-24)
     // and run each query so JIT/codegen is steady-state — the baseline's
@@ -77,7 +37,7 @@ object Bench {
       warehouse.Warehouse.dimDate(spark, sfDir).count()
       warehouse.Warehouse.dimCustomer(spark, sfDir).count()
       warehouse.Warehouse.dimPayment(spark, sfDir).count()
-      warmUp(spark, sfDir, qs, passes = 4, label = "warm-up")
+      warmUp(spark, sfDir, headline, passes = 4, label = "warm-up")
     } catch {
       case e: Throwable => // fact/dim materialization above
         System.err.println(s"[bench] warm-up failed: ${e.getClass.getName}: ${e.getMessage}")
@@ -102,7 +62,7 @@ object Bench {
           System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
           (name, -1.0, 0.0, -1L)
       }
-    val results = qs.map(timed)
+    val results = headline.map(timed)
     // Extension-operator pass: folded into the same artifact so a
     // regression in the native expressions (WordShingles/MinHashSig/
     // SimHashSig/SrpSig/QDot/TopKBy) is caught round-over-round. "value"
@@ -113,9 +73,7 @@ object Bench {
     // absent from the artifact.
     val skipClasses = sys.env.get("SPARK_GRAFT_BENCH_SKIP_CLASS")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty)
-    val rosterClass = SparkEntry.rosterClass
-    val extQs = extOps.filter(SparkEntry.queries.contains)
-      .filterNot(q => skipClasses.contains(rosterClass(q)))
+    val extQs = extOps.filterNot(q => skipClasses.contains(SparkEntry.rosterClass(q)))
     warmUp(spark, sfDir, extQs, passes = 2, label = "ext warm-up")
     val extResults = extQs.map(timed)
 

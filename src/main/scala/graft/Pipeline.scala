@@ -28,8 +28,6 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * Usage: `runMain graft.Pipeline <sfDir> <outDir>`.
   */
 object Pipeline {
-  private type Q = (SparkSession, String) => DataFrame
-
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -58,7 +56,7 @@ object Pipeline {
       Option(written.get(rel)).getOrElse(sys.error(s"$rel has not been written in this run"))
     // one job per query of a step: build it and overwrite
     // `<outDir>/<dir>/<name>` as Parquet
-    def parquetJobs(dir: String, qs: Seq[(String, Q)]): Seq[(String, () => Unit)] =
+    def parquetJobs(dir: String, qs: Seq[(String, Op.Q)]): Seq[(String, () => Unit)] =
       qs.map { case (name, q) =>
         name -> { () =>
           val df = q(spark, sfDir)
@@ -107,7 +105,7 @@ object Pipeline {
         // asset's build on its own lock, so the fact waits for the dims
         // it joins and every asset is still built once
         fanOut(spark, "load_warehouse",
-          parquetJobs("warehouse", warehouse.WarehouseQueries.inventory.toSeq))
+          parquetJobs("warehouse", warehouse.WarehouseQueries.ops.map(o => o.key -> o.run)))
         // loader-as-a-step: per-table row counts vs source expectation
         // into the execution flow (load_warehouse.py logs the same
         // reconciliation into its report; the reference fails the stage
@@ -129,9 +127,10 @@ object Pipeline {
         }
       },
       "analytics" -> { () =>
-        fanOut(spark, "analytics", analytics.Analytics.inventory.toSeq.map { case (name, q) =>
-          name -> { () =>
-            sources.Sources.writeCsv(q(spark, sfDir).repartition(1), s"$outDir/analytics/$name")
+        fanOut(spark, "analytics", analytics.Analytics.ops.map { op =>
+          op.key -> { () =>
+            sources.Sources.writeCsv(op.run(spark, sfDir).repartition(1),
+              s"$outDir/analytics/${op.key}")
           }
         })
       },

@@ -15,10 +15,7 @@ object Probe {
     val sfDir = args(0)
     val name = args(1)
     val runs = if (args.length > 2) args(2).toInt else 1
-    val q = SparkEntry.queries.getOrElse(name, {
-      System.err.println(s"[probe] $name is not in SparkEntry.queries")
-      sys.exit(1)
-    })
+    val q = SparkEntry.lookup(Seq(name)).head.run
     val spark = Sessions.fromEnv()
     // noop sink (guide §1.4): count() lets the optimizer prune aggregate
     // expressions (a probed COUNT(DISTINCT) op would lose its Expand and

@@ -4,11 +4,12 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (local iteration
-    // only — the driver always calls with 2 args and gets the full dump)
     val (sfDir, outDir) = (args(0), args(1))
+    // optional 3rd arg: comma-separated query-name filter, for local
+    // iteration (the full correctness dump takes 2 args); an unknown name
+    // fails here, before the session starts
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      args.lift(2).map(a => SparkEntry.lookup(a.split(",").toSeq).map(_.key).toSet)
     // the bench session (Sessions.fromEnv), whose GraftExtensions make
     // graft SQL functions (nfc_normalize in the canonical-dedup digest)
     // resolvable by name

@@ -1,6 +1,7 @@
 package graft.analytics
 
-import graft.{Det, Sql}
+import graft.{Det, Op, Sql}
+import graft.Op.Headline
 import graft.warehouse.{OracleSql, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,8 +27,6 @@ import org.apache.spark.sql.types._
   * TakeOrderedAndProject (no global sort materialization).
   */
 object Analytics {
-  type Q = (SparkSession, String) => DataFrame
-
   private val asOf = to_date(lit(Det.AsOfDate))
 
   /** Q1 top-10 products by revenue (analytical_queries.sql:4-15). */
@@ -430,27 +429,15 @@ FROM fact
 GROUP BY discount_range
 ORDER BY total_revenue DESC, discount_range""")
 
-  val inventory: Map[String, Q] = Map(
-    "q01_top_products"       -> (q01 _),
-    "q02_monthly_trend"      -> (q02 _),
-    "q03_customer_segments"  -> (q03 _),
-    "q04_category_performance" -> (q04 _),
-    "q05_payment_distribution" -> (q05 _),
-    "q06_geo_revenue"        -> (q06 _),
-    "q07_customer_ltv"       -> (q07 _),
-    "q08_product_profitability" -> (q08 _),
-    "q09_dow_pattern"        -> (q09 _),
-    "q10_discount_impact"    -> (q10 _))
-
-  val oracle: Map[String, String] = Map(
-    "q01_top_products"       -> q01Sql,
-    "q02_monthly_trend"      -> q02Sql,
-    "q03_customer_segments"  -> q03Sql,
-    "q04_category_performance" -> q04Sql,
-    "q05_payment_distribution" -> q05Sql,
-    "q06_geo_revenue"        -> q06Sql,
-    "q07_customer_ltv"       -> q07Sql,
-    "q08_product_profitability" -> q08Sql,
-    "q09_dow_pattern"        -> q09Sql,
-    "q10_discount_impact"    -> q10Sql)
+  val ops: Seq[Op] = Seq(
+    Op("q01_top_products", q01, q01Sql, Headline),
+    Op("q02_monthly_trend", q02, q02Sql, Headline),
+    Op("q03_customer_segments", q03, q03Sql, Headline),
+    Op("q04_category_performance", q04, q04Sql, Headline),
+    Op("q05_payment_distribution", q05, q05Sql, Headline),
+    Op("q06_geo_revenue", q06, q06Sql, Headline),
+    Op("q07_customer_ltv", q07, q07Sql, Headline),
+    Op("q08_product_profitability", q08, q08Sql, Headline),
+    Op("q09_dow_pattern", q09, q09Sql, Headline),
+    Op("q10_discount_impact", q10, q10Sql, Headline))
 }

@@ -1,6 +1,7 @@
 package graft.analytics
 
-import graft.Tables
+import graft.Op
+import graft.Op.Ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -35,8 +36,6 @@ import org.apache.spark.sql.types._
   * over exact long counts (each long < 2⁵³ converts exactly).
   */
 object Basket {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Pass-1 candidate pool: pairs among this many top-support items
     * derive the prune bound. C(100,2) ≈ 5k candidate keys — bounded
     * work at any corpus size. */
@@ -243,9 +242,6 @@ JOIN item ib ON t.part_b = ib.l_partkey
 CROSS JOIN n
 ORDER BY pair_orders DESC, part_a ASC, part_b ASC"""
 
-  val inventory: Map[String, Q] = Map(
-    "basket_pairs" -> (basketPairs _))
-
-  val oracle: Map[String, String] = Map(
-    "basket_pairs" -> basketPairsSql)
+  val ops: Seq[Op] = Seq(
+    Op("basket_pairs", basketPairs, basketPairsSql, Ext))
 }

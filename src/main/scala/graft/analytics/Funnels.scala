@@ -1,6 +1,7 @@
 package graft.analytics
 
-import graft.Tables
+import graft.{Op, Tables}
+import graft.Op.Ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,8 +21,6 @@ import org.apache.spark.sql.types._
   * events.
   */
 object Funnels {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Ordered view → click → purchase funnel, first-touch semantics: a
     * user reaches step k when their FIRST step-k event is strictly
     * later than their first step-(k-1) event. One conditional-min pass
@@ -319,19 +318,11 @@ SELECT dow, hod, n_events,
 FROM cells CROSS JOIN tot
 ORDER BY dow, hod"""
 
-  val inventory: Map[String, Q] = Map(
-    "events_hourly_heatmap"    -> (hourlyHeatmap _),
-    "events_active_users"      -> (activeUsers _),
-    "events_user_funnel"       -> (eventsUserFunnel _),
-    "events_cohort_retention"  -> (cohortRetention _),
-    "events_type_transitions"  -> (typeTransitions _),
-    "funnel_time_to_convert"   -> (funnelTimeToConvert _))
-
-  val oracle: Map[String, String] = Map(
-    "events_hourly_heatmap"    -> hourlyHeatmapSql,
-    "events_active_users"      -> activeUsersSql,
-    "events_user_funnel"       -> eventsUserFunnelSql,
-    "events_cohort_retention"  -> cohortRetentionSql,
-    "events_type_transitions"  -> typeTransitionsSql,
-    "funnel_time_to_convert"   -> funnelTimeToConvertSql)
+  val ops: Seq[Op] = Seq(
+    Op("events_hourly_heatmap", hourlyHeatmap, hourlyHeatmapSql),
+    Op("events_active_users", activeUsers, activeUsersSql, Ext),
+    Op("events_user_funnel", eventsUserFunnel, eventsUserFunnelSql),
+    Op("events_cohort_retention", cohortRetention, cohortRetentionSql),
+    Op("events_type_transitions", typeTransitions, typeTransitionsSql, Ext),
+    Op("funnel_time_to_convert", funnelTimeToConvert, funnelTimeToConvertSql))
 }

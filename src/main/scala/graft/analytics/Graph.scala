@@ -1,6 +1,7 @@
 package graft.analytics
 
-import graft.Tables
+import graft.{Op, Tables}
+import graft.Op.{Eval, Ext}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -37,8 +38,6 @@ import org.apache.spark.sql.types.LongType
   * frame, so AQE does exactly that).
   */
 object Graph {
-  type Q = (SparkSession, String) => DataFrame
-
   /** 1.0 of rank in integer units. */
   val RankInit = 1000000000000L
 
@@ -454,15 +453,11 @@ SELECT etri.t AS n_triangles_exact,
        TRUE AS in_bounds
 FROM stri CROSS JOIN etri"""
 
-  val inventory: Map[String, Q] = Map(
-    "pagerank_nation_trade" -> (pagerankNationTrade _),
-    "triangle_count_copurchase" -> (triangleCount _),
-    "triangle_doulion_copurchase" -> (triangleDoulion _),
-    "triangle_doulion_check" -> (triangleDoulionCheck _))
-
-  val oracle: Map[String, String] = Map(
-    "pagerank_nation_trade" -> pagerankNationTradeSql,
-    "triangle_count_copurchase" -> triangleCountSql,
-    "triangle_doulion_copurchase" -> triangleDoulionSql,
-    "triangle_doulion_check" -> triangleDoulionCheckSql)
+  val ops: Seq[Op] = Seq(
+    Op("pagerank_nation_trade", pagerankNationTrade, pagerankNationTradeSql, Ext),
+    // the exact census is eval; its DOULION-sampled twin is its ladder
+    // representative, and the check row runs BOTH censuses
+    Op("triangle_count_copurchase", triangleCount, triangleCountSql, Eval),
+    Op("triangle_doulion_copurchase", triangleDoulion, triangleDoulionSql, Ext),
+    Op("triangle_doulion_check", triangleDoulionCheck, triangleDoulionCheckSql, Eval))
 }

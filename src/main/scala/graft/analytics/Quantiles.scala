@@ -1,5 +1,7 @@
 package graft.analytics
 
+import graft.Op
+import graft.Op.Ext
 import graft.warehouse.{OracleSql, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -23,8 +25,6 @@ import org.apache.spark.sql.types._
   * countDistinct/approx_count_distinct pairing.
   */
 object Quantiles {
-  type Q = (SparkSession, String) => DataFrame
-
   private val ps = Seq("p50" -> 0.5, "p90" -> 0.9, "p99" -> 0.99)
 
   /** p50/p90/p99 of line_total (as exact micros) per payment method.
@@ -319,17 +319,10 @@ GROUP BY o_orderpriority
 ORDER BY o_orderpriority"""
   }
 
-  val inventory: Map[String, Q] = Map(
-    "quantiles_line_total"        -> (quantilesLineTotal _),
-    "quantiles_tokens_by_lang"    -> (quantilesTokensByLang _),
-    "quantiles_doc_length_weighted" -> (quantilesDocLengthWeighted _),
-    "fulfillment_lag"             -> (fulfillmentLag _),
-    "approx_quantiles_line_total" -> (approxQuantilesLineTotal _))
-
-  val oracle: Map[String, String] = Map(
-    "quantiles_line_total"        -> quantilesLineTotalSql,
-    "quantiles_tokens_by_lang"    -> quantilesTokensByLangSql,
-    "quantiles_doc_length_weighted" -> quantilesDocLengthWeightedSql,
-    "fulfillment_lag"             -> fulfillmentLagSql,
-    "approx_quantiles_line_total" -> approxQuantilesLineTotalSql)
+  val ops: Seq[Op] = Seq(
+    Op("quantiles_line_total", quantilesLineTotal, quantilesLineTotalSql, Ext),
+    Op("quantiles_tokens_by_lang", quantilesTokensByLang, quantilesTokensByLangSql),
+    Op("quantiles_doc_length_weighted", quantilesDocLengthWeighted, quantilesDocLengthWeightedSql),
+    Op("fulfillment_lag", fulfillmentLag, fulfillmentLagSql),
+    Op("approx_quantiles_line_total", approxQuantilesLineTotal, approxQuantilesLineTotalSql))
 }

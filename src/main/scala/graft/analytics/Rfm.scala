@@ -1,6 +1,7 @@
 package graft.analytics
 
-import graft.{Det, Tables}
+import graft.{Det, Op, Tables}
+import graft.Op.Ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -27,8 +28,6 @@ import org.apache.spark.sql.types._
   * any ranking.
   */
 object Rfm {
-  type Q = (SparkSession, String) => DataFrame
-
   private val qs = Seq(0.2, 0.4, 0.6, 0.8)
 
   /** score 1–5: 1 + number of quintile bounds strictly below v. */
@@ -159,9 +158,6 @@ SELECT segment, COUNT(*) AS n_customers,
 FROM lab GROUP BY segment ORDER BY segment"""
   }
 
-  val inventory: Map[String, Q] = Map(
-    "rfm_segments" -> (rfmSegments _))
-
-  val oracle: Map[String, String] = Map(
-    "rfm_segments" -> rfmSegmentsSql)
+  val ops: Seq[Op] = Seq(
+    Op("rfm_segments", rfmSegments, rfmSegmentsSql, Ext))
 }

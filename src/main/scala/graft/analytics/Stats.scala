@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.Tables
+import graft.{Op, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,8 +23,6 @@ import org.apache.spark.sql.types._
   * rows.
   */
 object Stats {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Key-skew diagnosis for the events.user_id shuffle key: the top-5
     * heaviest keys with their share of all rows and their multiple of
     * the mean key load, alongside the corpus-level scalars (distinct
@@ -357,19 +355,11 @@ SELECT p_brand, n AS n_rows,
                  / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) END AS slope_per_pct
 FROM m ORDER BY p_brand"""
 
-  val inventory: Map[String, Q] = Map(
-    "ols_by_brand"          -> (olsByBrand _),
-    "skew_diagnosis"        -> (skewDiagnosis _),
-    "equi_depth_histogram"  -> (equiDepthHistogram _),
-    "revenue_concentration" -> (revenueConcentration _),
-    "ols_discount_quantity" -> (olsDiscountQuantity _),
-    "spearman_discount_quantity" -> (spearmanDiscountQuantity _))
-
-  val oracle: Map[String, String] = Map(
-    "ols_by_brand"          -> olsByBrandSql,
-    "skew_diagnosis"        -> skewDiagnosisSql,
-    "equi_depth_histogram"  -> equiDepthHistogramSql,
-    "revenue_concentration" -> revenueConcentrationSql,
-    "ols_discount_quantity" -> olsDiscountQuantitySql,
-    "spearman_discount_quantity" -> spearmanDiscountQuantitySql)
+  val ops: Seq[Op] = Seq(
+    Op("ols_by_brand", olsByBrand, olsByBrandSql),
+    Op("skew_diagnosis", skewDiagnosis, skewDiagnosisSql),
+    Op("equi_depth_histogram", equiDepthHistogram, equiDepthHistogramSql),
+    Op("revenue_concentration", revenueConcentration, revenueConcentrationSql),
+    Op("ols_discount_quantity", olsDiscountQuantity, olsDiscountQuantitySql),
+    Op("spearman_discount_quantity", spearmanDiscountQuantity, spearmanDiscountQuantitySql))
 }

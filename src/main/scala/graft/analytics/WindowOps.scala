@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.{Det, Sql}
+import graft.{Det, Op, Sql}
 import graft.warehouse.OracleSql
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -17,8 +17,6 @@ import org.apache.spark.sql.types._
   * partition — no per-function re-sort (same partitionBy/orderBy spec).
   */
 object WindowOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Per-customer order timeline: rank, days since previous order,
     * running revenue (rows-between frame), and share of the customer's
     * total. Grain: one row per (customer, order). */
@@ -95,11 +93,7 @@ FROM (
   FROM fact
   GROUP BY o_custkey, l_orderkey, order_date)""")
 
-  val inventory: Map[String, Q] = Map(
-    "window_customer_timeline" -> (customerTimeline _),
-    "window_trailing_30d"      -> (customerTrailing _))
-
-  val oracle: Map[String, String] = Map(
-    "window_customer_timeline" -> customerTimelineSql,
-    "window_trailing_30d"      -> customerTrailingSql)
+  val ops: Seq[Op] = Seq(
+    Op("window_customer_timeline", customerTimeline, customerTimelineSql),
+    Op("window_trailing_30d", customerTrailing, customerTrailingSql))
 }

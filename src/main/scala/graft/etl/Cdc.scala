@@ -1,6 +1,7 @@
 package graft.etl
 
-import graft.Tables
+import graft.{Op, Tables}
+import graft.Op.Ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,8 +24,6 @@ import org.apache.spark.sql.types._
   * proportional to the CHANGED set.
   */
 object Cdc {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Generic core: rows of `newDf` minus/changed-from `oldDf` by `key`.
     * Emits (key, change_type) for every differing key; unchanged rows
     * produce nothing. Both frames must share a schema. */
@@ -173,11 +172,7 @@ FROM modified
 GROUP BY day
 ORDER BY day"""
 
-  val inventory: Map[String, Q] = Map(
-    "cdc_orders_diff" -> (cdcOrdersDiff _),
-    "ivm_daily_sales" -> (ivmDailySales _))
-
-  val oracle: Map[String, String] = Map(
-    "cdc_orders_diff" -> cdcOrdersDiffSql,
-    "ivm_daily_sales" -> ivmDailySalesSql)
+  val ops: Seq[Op] = Seq(
+    Op("cdc_orders_diff", cdcOrdersDiff, cdcOrdersDiffSql, Ext),
+    Op("ivm_daily_sales", ivmDailySales, ivmDailySalesSql, Ext))
 }

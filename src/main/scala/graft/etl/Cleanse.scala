@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.Tables
+import graft.{Op, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,8 +19,6 @@ import org.apache.spark.sql.types._
   * fully pushed into whole-stage codegen; filters reach the parquet scan.
   */
 object Cleanse {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Customer cleansing (staging_to_production.py:26-35): trim all
     * strings, lowercase the segment (email-lowercase analogue), strip
     * non-digits (phone-strip analogue, regexp), title-case the name,
@@ -119,13 +117,8 @@ SELECT l_orderkey AS order_id,
 FROM lineitem
 WHERE l_quantity > 0 AND l_extendedprice > 0"""
 
-  val inventory: Map[String, Q] = Map(
-    "cleanse_customers" -> (cleanseCustomers _),
-    "cleanse_products"  -> (cleanseProducts _),
-    "cleanse_lineitems" -> (cleanseLineitems _))
-
-  val oracle: Map[String, String] = Map(
-    "cleanse_customers" -> cleanseCustomersSql,
-    "cleanse_products"  -> cleanseProductsSql,
-    "cleanse_lineitems" -> cleanseLineitemsSql)
+  val ops: Seq[Op] = Seq(
+    Op("cleanse_customers", cleanseCustomers, cleanseCustomersSql),
+    Op("cleanse_products", cleanseProducts, cleanseProductsSql),
+    Op("cleanse_lineitems", cleanseLineitems, cleanseLineitemsSql))
 }

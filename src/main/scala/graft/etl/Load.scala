@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.{Det, Tables}
+import graft.{Det, Op, Tables}
 import graft.warehouse.{OracleSql, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,8 +18,6 @@ import org.apache.spark.sql.types._
   * scalar counts.
   */
 object Load {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Incremental append: orders not yet present in the "already loaded"
     * set (simulated deterministically as keys with o_orderkey % 3 != 0).
     * Reference: staging_to_production.py:160-181; SURVEY §2.1 S6, §2.2 P5.
@@ -153,15 +151,9 @@ SELECT status, age_bucket, COUNT(*) AS n_orders,
 FROM aged GROUP BY status, age_bucket
 ORDER BY status, age_bucket"""
 
-  val inventory: Map[String, Q] = Map(
-    "incremental_new_orders" -> (incrementalNewOrders _),
-    "reconcile_counts"       -> (reconcileCounts _),
-    "backlog_aging"          -> (backlogAging _),
-    "freshness_union"        -> (freshnessUnion _))
-
-  val oracle: Map[String, String] = Map(
-    "incremental_new_orders" -> incrementalNewOrdersSql,
-    "reconcile_counts"       -> reconcileCountsSql,
-    "backlog_aging"          -> backlogAgingSql,
-    "freshness_union"        -> freshnessUnionSql)
+  val ops: Seq[Op] = Seq(
+    Op("incremental_new_orders", incrementalNewOrders, incrementalNewOrdersSql),
+    Op("reconcile_counts", reconcileCounts, reconcileCountsSql),
+    Op("backlog_aging", backlogAging, backlogAgingSql),
+    Op("freshness_union", freshnessUnion, freshnessUnionSql))
 }

@@ -1,6 +1,6 @@
 package graft.etl
 
-import graft.{Det, Sql, Tables}
+import graft.{Det, Op, Sql, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,8 +13,6 @@ import org.apache.spark.sql.functions._
   * plain GROUP BY with no salt — proves.
   */
 object Skew {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Deterministic salt from row identity (never rand() — reruns and
     * retried tasks must agree). */
   private def salt(idCol: Column, buckets: Int): Column =
@@ -81,11 +79,7 @@ FROM lineitem JOIN part ON l_partkey = p_partkey
 GROUP BY p_brand
 ORDER BY p_brand"""
 
-  val inventory: Map[String, Q] = Map(
-    "salted_priority_revenue" -> ((s: SparkSession, d: String) => saltedPriorityRevenue(s, d)),
-    "salted_brand_revenue"    -> ((s: SparkSession, d: String) => saltedBrandRevenue(s, d)))
-
-  val oracle: Map[String, String] = Map(
-    "salted_priority_revenue" -> saltedPriorityRevenueSql,
-    "salted_brand_revenue"    -> saltedBrandRevenueSql)
+  val ops: Seq[Op] = Seq(
+    Op("salted_priority_revenue", (s, d) => saltedPriorityRevenue(s, d), saltedPriorityRevenueSql),
+    Op("salted_brand_revenue", (s, d) => saltedBrandRevenue(s, d), saltedBrandRevenueSql))
 }

@@ -1,6 +1,7 @@
 package graft.ext
 
-import graft.{Det, Sql, Tables}
+import graft.{Det, Op, Sql, Tables}
+import graft.Op.Ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,8 +13,6 @@ import org.apache.spark.sql.types._
   * approximate-distinct scale escape hatch (SURVEY §7.4).
   */
 object Extensions {
-  type Q = (SparkSession, String) => DataFrame
-
   /** PII scrubbing: redact emails, URLs and long digit runs (the id/phone
     * shape) via regexp passes — the standard pre-training scrub. Applied
     * to `customer` whose names carry 9-digit id runs, so the redaction
@@ -282,21 +281,12 @@ FROM nm a JOIN nm b ON a.name < b.name
 WHERE levenshtein(a.name, b.name) <= 1
 ORDER BY name_a, name_b"""
 
-  val inventory: Map[String, Q] = Map(
-    "fuzzy_name_pairs"     -> (fuzzyNamePairs _),
-    "pii_scrub"            -> (piiScrub _),
-    "text_ngram_freq"      -> (ngramFreq _),
-    "events_props_extract" -> (propsExtract _),
-    "rollup_revenue"       -> (rollupRevenue _),
-    "approx_monthly_transactions" -> (approxMonthlyTransactions _),
-    "heavy_hitter_ngrams"  -> (heavyHitterNgrams _))
-
-  val oracle: Map[String, String] = Map(
-    "fuzzy_name_pairs"     -> fuzzyNamePairsSql,
-    "pii_scrub"            -> piiScrubSql,
-    "text_ngram_freq"      -> ngramFreqSql,
-    "events_props_extract" -> propsExtractSql,
-    "rollup_revenue"       -> rollupRevenueSql,
-    "approx_monthly_transactions" -> approxMonthlyTransactionsSql,
-    "heavy_hitter_ngrams"  -> heavyHitterNgramsSql)
+  val ops: Seq[Op] = Seq(
+    Op("fuzzy_name_pairs", fuzzyNamePairs, fuzzyNamePairsSql, Ext),
+    Op("pii_scrub", piiScrub, piiScrubSql),
+    Op("text_ngram_freq", ngramFreq, ngramFreqSql),
+    Op("events_props_extract", propsExtract, propsExtractSql),
+    Op("rollup_revenue", rollupRevenue, rollupRevenueSql),
+    Op("approx_monthly_transactions", approxMonthlyTransactions, approxMonthlyTransactionsSql),
+    Op("heavy_hitter_ngrams", heavyHitterNgrams, heavyHitterNgramsSql, Ext))
 }

@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.{Det, Sql, Tables}
+import graft.{Det, Op, Sql, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,8 +16,6 @@ import org.apache.spark.sql.types._
   * before the shuffle, so keep k small and the pre-aggregation partial.
   */
 object Reshape {
-  type Q = (SparkSession, String) => DataFrame
-
   private val priorities = Seq(
     "1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
   private val prioAlias = Map(
@@ -159,15 +157,9 @@ FROM fact GROUP BY date_key"""
 ${melts.mkString("", "\nUNION ALL\n", "\nORDER BY date_key, measure")}""")
   }
 
-  val inventory: Map[String, Q] = Map(
-    "pivot_nation_priority"  -> (pivotNationPriority _),
-    "cube_region_segment"    -> (cubeRegionSegment _),
-    "grouping_sets_revenue"  -> (groupingSetsRevenue _),
-    "unpivot_daily_measures" -> (unpivotDailyMeasures _))
-
-  val oracle: Map[String, String] = Map(
-    "pivot_nation_priority"  -> pivotNationPrioritySql,
-    "cube_region_segment"    -> cubeRegionSegmentSql,
-    "grouping_sets_revenue"  -> groupingSetsRevenueSql,
-    "unpivot_daily_measures" -> unpivotDailyMeasuresSql)
+  val ops: Seq[Op] = Seq(
+    Op("pivot_nation_priority", pivotNationPriority, pivotNationPrioritySql),
+    Op("cube_region_segment", cubeRegionSegment, cubeRegionSegmentSql),
+    Op("grouping_sets_revenue", groupingSetsRevenue, groupingSetsRevenueSql),
+    Op("unpivot_daily_measures", unpivotDailyMeasures, unpivotDailyMeasuresSql))
 }

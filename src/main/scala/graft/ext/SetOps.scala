@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.Tables
+import graft.{Op, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DateType
@@ -11,8 +11,6 @@ import org.apache.spark.sql.types.DateType
   * partial-distinct map side; never a materialized intermediate set).
   */
 object SetOps {
-  type Q = (SparkSession, String) => DataFrame
-
   private def buyersIn(spark: SparkSession, dir: String, y: Int): DataFrame =
     Tables.orders(spark, dir)
       .filter(year(col("o_orderdate").cast(DateType)) === y)
@@ -60,13 +58,8 @@ UNION
 SELECT o_custkey FROM orders WHERE year(CAST(o_orderdate AS DATE)) = 1996
 ORDER BY o_custkey"""
 
-  val inventory: Map[String, Q] = Map(
-    "set_repeat_buyers"      -> (repeatBuyers _),
-    "set_lapsed_customers"   -> (lapsedCustomers _),
-    "set_either_year_buyers" -> (eitherYearBuyers _))
-
-  val oracle: Map[String, String] = Map(
-    "set_repeat_buyers"      -> repeatBuyersSql,
-    "set_lapsed_customers"   -> lapsedCustomersSql,
-    "set_either_year_buyers" -> eitherYearBuyersSql)
+  val ops: Seq[Op] = Seq(
+    Op("set_repeat_buyers", repeatBuyers, repeatBuyersSql),
+    Op("set_lapsed_customers", lapsedCustomers, lapsedCustomersSql),
+    Op("set_either_year_buyers", eitherYearBuyers, eitherYearBuyersSql))
 }

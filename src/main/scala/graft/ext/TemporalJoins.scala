@@ -1,6 +1,7 @@
 package graft.ext
 
-import graft.Tables
+import graft.{Op, Tables}
+import graft.Op.Ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,8 +27,6 @@ import org.apache.spark.sql.types._
   *    pair is produced exactly once (no dedup pass).
   */
 object TemporalJoins {
-  type Q = (SparkSession, String) => DataFrame
-
   private val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
   /** Generic AS-OF join: for every left row, attach `payload` columns from
@@ -171,11 +170,7 @@ FROM e c JOIN e p
  AND p.us >= c.us AND p.us <= c.us + 21600000000
 ORDER BY click_event_id, purchase_event_id"""
 
-  val inventory: Map[String, Q] = Map(
-    "asof_click_attribution"    -> (asofClickAttribution _),
-    "range_join_click_purchase" -> (rangeClickPurchase _))
-
-  val oracle: Map[String, String] = Map(
-    "asof_click_attribution"    -> asofClickAttributionSql,
-    "range_join_click_purchase" -> rangeClickPurchaseSql)
+  val ops: Seq[Op] = Seq(
+    Op("asof_click_attribution", asofClickAttribution, asofClickAttributionSql, Ext),
+    Op("range_join_click_purchase", rangeClickPurchase, rangeClickPurchaseSql, Ext))
 }

@@ -1,6 +1,6 @@
 package graft.monitor
 
-import graft.{Det, Tables}
+import graft.{Det, Op, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -31,8 +31,6 @@ import org.apache.spark.sql.types._
   * DECIMAL(18,6) sum of per-term doubles, order-independent.
   */
 object Drift {
-  type Q = (SparkSession, String) => DataFrame
-
   def driftPsi(spark: SparkSession, dir: String): DataFrame =
     driftPsiOver(Tables.events(spark, dir))
 
@@ -103,9 +101,6 @@ SELECT * FROM (
   FROM terms)
 ORDER BY event_type"""
 
-  val inventory: Map[String, Q] = Map(
-    "monitor_drift_psi" -> (driftPsi _))
-
-  val oracle: Map[String, String] = Map(
-    "monitor_drift_psi" -> driftPsiSql)
+  val ops: Seq[Op] = Seq(
+    Op("monitor_drift_psi", driftPsi, driftPsiSql))
 }

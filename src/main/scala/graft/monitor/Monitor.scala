@@ -1,6 +1,7 @@
 package graft.monitor
 
-import graft.{Det, Tables}
+import graft.{Det, Op, Tables}
+import graft.Op.Ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,8 +20,6 @@ import org.apache.spark.sql.types._
   * a distributed float stddev aggregate, whose summation order is not.
   */
 object Monitor {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Daily event counts in the 30-day window before as-of, flagged when
     * outside mean ± 3σ (pipeline_monitor.py:171-183). */
   def volumeAnomaly(spark: SparkSession, dir: String): DataFrame =
@@ -393,17 +392,10 @@ JOIN nd n ON o.dow = n.dow
 WHERE o.cnt * n.n_dates > 2 * c.cell_total OR 2 * o.cnt * n.n_dates < c.cell_total
 ORDER BY event_date, o.hod"""
 
-  val inventory: Map[String, Q] = Map(
-    "monitor_volume_anomaly"   -> (volumeAnomaly _),
-    "monitor_mad_anomaly"      -> (madAnomaly _),
-    "monitor_seasonal_anomaly" -> (seasonalAnomaly _),
-    "monitor_freshness_lag"    -> (freshnessLag _),
-    "monitor_health"           -> (healthRollup _))
-
-  val oracle: Map[String, String] = Map(
-    "monitor_volume_anomaly"   -> volumeAnomalySql,
-    "monitor_mad_anomaly"      -> madAnomalySql,
-    "monitor_seasonal_anomaly" -> seasonalAnomalySql,
-    "monitor_freshness_lag"    -> freshnessLagSql,
-    "monitor_health"           -> healthRollupSql)
+  val ops: Seq[Op] = Seq(
+    Op("monitor_volume_anomaly", volumeAnomaly, volumeAnomalySql),
+    Op("monitor_mad_anomaly", madAnomaly, madAnomalySql),
+    Op("monitor_seasonal_anomaly", seasonalAnomaly, seasonalAnomalySql, Ext),
+    Op("monitor_freshness_lag", freshnessLag, freshnessLagSql),
+    Op("monitor_health", healthRollup, healthRollupSql))
 }

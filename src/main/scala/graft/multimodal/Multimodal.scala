@@ -1,6 +1,7 @@
 package graft.multimodal
 
-import graft.Tables
+import graft.{Op, Tables}
+import graft.Op.Ext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,8 +23,6 @@ import org.apache.spark.sql.functions._
   * init per partition, the reason mapPartitions beats a per-row UDF).
   */
 object Multimodal {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Media-asset view: payload as a binary column + deterministic fake
     * dimensions from the 56-bit fingerprint, plus sampled "frames"
     * (four fixed-offset 8-byte slices — the frame-sample analogue),
@@ -243,17 +242,10 @@ ph AS (
   val phashPairsSql: String = s"WITH $phashCte," +
     graft.sim.BandedPairs.hamming60PairsSql("ph", "phash60", PhashBucketCap)
 
-  val inventory: Map[String, Q] = Map(
-    "multimodal_features" -> (mediaFeatures _),
-    "multimodal_decode"   -> (decodeFeaturesQ _),
-    "multimodal_resize"   -> (resizeThumbnails _),
-    "multimodal_phash"    -> (phash _),
-    "multimodal_phash_pairs" -> (phashPairs _))
-
-  val oracle: Map[String, String] = Map(
-    "multimodal_features" -> mediaFeaturesSql,
-    "multimodal_decode"   -> decodeFeaturesSql,
-    "multimodal_resize"   -> resizeThumbnailsSql,
-    "multimodal_phash"    -> phashSql,
-    "multimodal_phash_pairs" -> phashPairsSql)
+  val ops: Seq[Op] = Seq(
+    Op("multimodal_features", mediaFeatures, mediaFeaturesSql),
+    Op("multimodal_decode", decodeFeaturesQ, decodeFeaturesSql),
+    Op("multimodal_resize", resizeThumbnails, resizeThumbnailsSql),
+    Op("multimodal_phash", phash, phashSql),
+    Op("multimodal_phash_pairs", phashPairs, phashPairsSql, Ext))
 }

@@ -1,6 +1,7 @@
 package graft.quality
 
-import graft.{Det, Sql, Tables}
+import graft.{Det, Op, Sql, Tables}
+import graft.Op.Ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
@@ -42,8 +43,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
   * `k_anonymity_audit` flags at k=1 for exact balances).
   */
 object Pii {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Salted pseudonym of a customer key: 16 hex chars of
     * md5("pii:" + key) — identical expression in both engines. */
   private def pseudonym(key: String) =
@@ -126,11 +125,7 @@ FROM op JOIN cp USING (pseudonym)
 GROUP BY c_mktsegment
 ORDER BY mktsegment"""
 
-  val inventory: Map[String, Q] = Map(
-    "pii_pseudonymize"       -> (scrubCustomers _),
-    "pii_referential_rollup" -> (referentialRollup _))
-
-  val oracle: Map[String, String] = Map(
-    "pii_pseudonymize"       -> scrubCustomersSql,
-    "pii_referential_rollup" -> referentialRollupSql)
+  val ops: Seq[Op] = Seq(
+    Op("pii_pseudonymize", scrubCustomers, scrubCustomersSql),
+    Op("pii_referential_rollup", referentialRollup, referentialRollupSql, Ext))
 }

@@ -1,6 +1,6 @@
 package graft.quality
 
-import graft.Tables
+import graft.{Op, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -31,8 +31,6 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * order-dependent float summation anywhere.
   */
 object Profile {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Column kinds drive which metrics apply. */
   sealed private trait Kind
   private case object Num extends Kind // numeric: min/max
@@ -168,11 +166,7 @@ FROM cells CROSS JOIN tot
 WHERE cell_size < $KAnon
 ORDER BY nationkey, segment, acctbal_band_k"""
 
-  val inventory: Map[String, Q] = Map(
-    "profile_tables"    -> (profileTables _),
-    "k_anonymity_audit" -> (kAnonymityAudit _))
-
-  val oracle: Map[String, String] = Map(
-    "profile_tables"    -> profileTablesSql,
-    "k_anonymity_audit" -> kAnonymityAuditSql)
+  val ops: Seq[Op] = Seq(
+    Op("profile_tables", profileTables, profileTablesSql),
+    Op("k_anonymity_audit", kAnonymityAudit, kAnonymityAuditSql))
 }

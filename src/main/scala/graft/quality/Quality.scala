@@ -1,6 +1,6 @@
 package graft.quality
 
-import graft.Tables
+import graft.{Op, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -25,8 +25,6 @@ import org.apache.spark.sql.types._
   * one join against a per-order rollup. Nothing collects to the driver.
   */
 object Quality {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Checks over one relation as one aggregate: a single pass computes
     * every `(name, category, violations)` aggregate, then the one-row
     * result melts to one row per check, in the given order. */
@@ -211,11 +209,7 @@ SELECT t.total_records, v.total_violations,
 FROM tot t CROSS JOIN v"""
   }
 
-  val inventory: Map[String, Q] = Map(
-    "quality_checks" -> (qualityChecks _),
-    "quality_score"  -> (qualityScore _))
-
-  val oracle: Map[String, String] = Map(
-    "quality_checks" -> qualityChecksSql,
-    "quality_score"  -> qualityScoreSql)
+  val ops: Seq[Op] = Seq(
+    Op("quality_checks", qualityChecks, qualityChecksSql),
+    Op("quality_score", qualityScore, qualityScoreSql))
 }

@@ -1,6 +1,7 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Op, Tables}
+import graft.Op.Ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,8 +37,6 @@ import org.apache.spark.sql.functions._
   * than [[NNegatives]] different-label members emit fewer `neg` rows.
   */
 object Contrastive {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Anchor batch size of the registered op (vec_id < NAnchors — the
     * [[Ivf.search]] query-selection convention, so the mined triples
     * are directly comparable with the search family's rows). */
@@ -151,11 +150,7 @@ SELECT cell, keep_rank, vec_id, label, cell_size
 FROM ranked WHERE keep_rank <= $CellCap
 ORDER BY cell, keep_rank"""
 
-  val inventory: Map[String, Q] = Map(
-    "contrastive_triples" -> (contrastiveTriples _),
-    "cluster_balanced_sample" -> (clusterBalancedSample _))
-
-  val oracle: Map[String, String] = Map(
-    "contrastive_triples" -> contrastiveTriplesSql,
-    "cluster_balanced_sample" -> clusterBalancedSampleSql)
+  val ops: Seq[Op] = Seq(
+    Op("contrastive_triples", contrastiveTriples, contrastiveTriplesSql, Ext),
+    Op("cluster_balanced_sample", clusterBalancedSample, clusterBalancedSampleSql, Ext))
 }

@@ -1,6 +1,7 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Op, Tables}
+import graft.Op.Ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -31,8 +32,6 @@ import org.apache.spark.sql.types._
   * distributed shape for centroid math at any corpus size.
   */
 object EmbeddingDrift {
-  type Q = (SparkSession, String) => DataFrame
-
   def embeddingDrift(spark: SparkSession, dir: String): DataFrame =
     embeddingDriftOver(Tables.embeddings(spark, dir))
 
@@ -98,9 +97,6 @@ SELECT label, n_a, n_b,
        sqrt(CAST(d2 AS DOUBLE)) / (CAST(n_a * n_b AS DOUBLE) * 1e7) AS centroid_l2_shift
 FROM g ORDER BY label"""
 
-  val inventory: Map[String, Q] = Map(
-    "embedding_drift" -> (embeddingDrift _))
-
-  val oracle: Map[String, String] = Map(
-    "embedding_drift" -> embeddingDriftSql)
+  val ops: Seq[Op] = Seq(
+    Op("embedding_drift", embeddingDrift, embeddingDriftSql, Ext))
 }

@@ -1,6 +1,7 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Op, Tables}
+import graft.Op.{Eval, Ext}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,8 +37,6 @@ import org.apache.spark.sql.functions._
   * is |collection| × nprobe / k per query batch.
   */
 object Ivf {
-  type Q = (SparkSession, String) => DataFrame
-
   /** The built index: per-vector cell assignments (vec_id, embedding,
     * cell) and the k centroid rows (cell, centroid: array<bigint> on the
     * 1e-7 grid). */
@@ -457,17 +456,11 @@ SELECT cell, COUNT(*) AS delta_count,
        MIN(vec_id) AS min_vec_id
 FROM ad GROUP BY cell ORDER BY cell"""
 
-  val inventory: Map[String, Q] = Map(
-    "ivf_search" -> ((s, dir) => search(s, dir, K, NProbe, TopK, NQueries)),
-    "ivf_cells"  -> ((s, dir) => cells(s, dir, K)),
-    "ivf_recall" -> (recallVsExact _),
-    "ivf_index_centroids" -> (indexCentroids _),
-    "ivf_delta_assign" -> (deltaAssign _))
-
-  val oracle: Map[String, String] = Map(
-    "ivf_search" -> ivfSearchSql,
-    "ivf_cells"  -> ivfCellsSql,
-    "ivf_recall" -> ivfRecallSql,
-    "ivf_index_centroids" -> ivfIndexCentroidsSql,
-    "ivf_delta_assign" -> ivfDeltaAssignSql)
+  val ops: Seq[Op] = Seq(
+    Op("ivf_search", (s, dir) => search(s, dir, K, NProbe, TopK, NQueries), ivfSearchSql, Ext),
+    Op("ivf_cells", (s, dir) => cells(s, dir, K), ivfCellsSql),
+    // eval: recall re-runs the brute-force exact baseline
+    Op("ivf_recall", recallVsExact, ivfRecallSql, Eval),
+    Op("ivf_index_centroids", indexCentroids, ivfIndexCentroidsSql),
+    Op("ivf_delta_assign", deltaAssign, ivfDeltaAssignSql, Ext))
 }

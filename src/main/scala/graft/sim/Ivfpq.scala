@@ -1,6 +1,7 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Op, Tables}
+import graft.Op.{Eval, Ext}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,8 +27,6 @@ import org.apache.spark.sql.functions._
   * vec_id) and to the broadcast distance table — cost is
   * |candidates|·M lookup rows, never |collection|. */
 object Ivfpq {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Serve-path search: BOTH composed indexes load from the store
     * ([[Ivf.index]], [[Pq.index]]) — first touch builds and persists;
     * every later query pays only the probe + ADC joins. */
@@ -83,11 +82,8 @@ itop AS (SELECT query_id, vec_id FROM iranked WHERE rank <= ${Pq.TopK}),
 ${Pq.exactCte}
 ${Ivf.recallSql("exact", "itop", Pq.TopK)}"""
 
-  val inventory: Map[String, Q] = Map(
-    "ivfpq_search" -> (search _),
-    "ivfpq_recall" -> (recallVsExact _))
-
-  val oracle: Map[String, String] = Map(
-    "ivfpq_search" -> searchSql,
-    "ivfpq_recall" -> recallSql)
+  val ops: Seq[Op] = Seq(
+    Op("ivfpq_search", search, searchSql, Ext),
+    // eval: recall re-runs the brute-force exact baseline
+    Op("ivfpq_recall", recallVsExact, recallSql, Eval))
 }

@@ -1,6 +1,7 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Op, Tables}
+import graft.Op.{Eval, Ext}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,8 +39,6 @@ import org.apache.spark.sql.functions._
   * is ever quadratic in the collection.
   */
 object Pq {
-  type Q = (SparkSession, String) => DataFrame
-
   val M = 8
   val SubDim = 8
   val KCodes = 16
@@ -389,19 +388,12 @@ FROM c$Iterations"""
 WITH ${pqCtes("")}
 SELECT vec_id, CAST(sub AS INT) AS sub, CAST(code AS INT) AS code FROM codes"""
 
-  val inventory: Map[String, Q] = Map(
-    "pq_search"         -> (search _),
-    "pq_search_rerank"  -> (searchRerank _),
-    "pq_recall"         -> (recallVsExact _),
-    "pq_rerank_recall"  -> (rerankRecall _),
-    "pq_index_codebook" -> (indexCodebook _),
-    "pq_index_codes"    -> (indexCodes _))
-
-  val oracle: Map[String, String] = Map(
-    "pq_search"         -> pqSearchSql,
-    "pq_search_rerank"  -> pqSearchRerankSql,
-    "pq_recall"         -> pqRecallSql,
-    "pq_rerank_recall"  -> pqRerankRecallSql,
-    "pq_index_codebook" -> pqIndexCodebookSql,
-    "pq_index_codes"    -> pqIndexCodesSql)
+  val ops: Seq[Op] = Seq(
+    Op("pq_search", search, pqSearchSql, Ext),
+    Op("pq_search_rerank", searchRerank, pqSearchRerankSql, Ext),
+    // eval: recall re-runs the brute-force exact baseline
+    Op("pq_recall", recallVsExact, pqRecallSql, Eval),
+    Op("pq_rerank_recall", rerankRecall, pqRerankRecallSql, Eval),
+    Op("pq_index_codebook", indexCodebook, pqIndexCodebookSql),
+    Op("pq_index_codes", indexCodes, pqIndexCodesSql))
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{Op, Tables}
+import graft.Op.Ext
 import graft.text.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -27,8 +28,6 @@ import org.apache.spark.sql.types._
   * object per active user.
   */
 object Streams {
-  type Q = (SparkSession, String) => DataFrame
-
   private val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
   // ------------------------------------------------------ tumbling window
@@ -439,17 +438,10 @@ SELECT phash60, MIN(doc_id) AS keeper_doc_id FROM ph GROUP BY phash60"""
       .select(col("doc_id"), size(array_intersect(feature, vocab)).cast(LongType).as(name))
       .filter(col(name) >= min)
 
-  val inventory: Map[String, Q] = Map(
-    "events_hourly_windows"  -> (eventsHourly _),
-    "events_sliding_windows" -> (eventsSliding _),
-    "events_sessionization"  -> (eventsSessions _),
-    "dedup_stream_content_hash" -> (dedupContentBatch _),
-    "dedup_stream_phash" -> (phashDedupBatch _))
-
-  val oracle: Map[String, String] = Map(
-    "events_hourly_windows"  -> eventsHourlySql,
-    "events_sliding_windows" -> eventsSlidingSql,
-    "events_sessionization"  -> eventsSessionsSql,
-    "dedup_stream_content_hash" -> dedupContentBatchSql,
-    "dedup_stream_phash" -> phashDedupBatchSql)
+  val ops: Seq[Op] = Seq(
+    Op("events_hourly_windows", eventsHourly, eventsHourlySql),
+    Op("events_sliding_windows", eventsSliding, eventsSlidingSql),
+    Op("events_sessionization", eventsSessions, eventsSessionsSql),
+    Op("dedup_stream_content_hash", dedupContentBatch, dedupContentBatchSql),
+    Op("dedup_stream_phash", phashDedupBatch, phashDedupBatchSql, Ext))
 }

@@ -1,6 +1,7 @@
 package graft.text
 
-import graft.{Det, Tables}
+import graft.{Det, Op, Tables}
+import graft.Op.Ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -23,8 +24,6 @@ import org.apache.spark.sql.types.LongType
   * regardless of corpus size.
   */
 object Curation {
-  type Q = (SparkSession, String) => DataFrame
-
   /** The per-document curated corpus — exact-dedup representatives ∩
     * stratified sample, quality-gated — carrying text and the stats a
     * training dataloader wants per row. [[corpusCuration]] is its
@@ -604,27 +603,15 @@ FROM c WHERE cum_before < sample_target
 GROUP BY lang, stratum_docs, sample_target
 ORDER BY lang"""
 
-  val inventory: Map[String, Q] = Map(
-    "dataset_split"           -> (datasetSplit _),
-    "stratified_sample_exact" -> (stratifiedSample _),
-    "token_budget_exact"      -> (tokenBudgetExact _),
-    "source_accounting"       -> (sourceAccounting _),
-    "temperature_mix"         -> (temperatureMix _),
-    "corpus_curation"         -> (corpusCuration _),
-    "corpus_curated_docs"     -> (curatedDocs _),
-    "corpus_published"        -> (publishedCorpus _),
-    "corpus_mix_budget"       -> (corpusMixBudget _),
-    "corpus_token_accounting" -> (corpusTokenAccounting _))
-
-  val oracle: Map[String, String] = Map(
-    "dataset_split"           -> datasetSplitSql,
-    "stratified_sample_exact" -> stratifiedSampleSql,
-    "token_budget_exact"      -> tokenBudgetExactSql,
-    "source_accounting"       -> sourceAccountingSql,
-    "temperature_mix"         -> temperatureMixSql,
-    "corpus_curation"         -> corpusCurationSql,
-    "corpus_curated_docs"     -> curatedDocsSql,
-    "corpus_published"        -> publishedCorpusSql,
-    "corpus_mix_budget"       -> corpusMixBudgetSql,
-    "corpus_token_accounting" -> corpusTokenAccountingSql)
+  val ops: Seq[Op] = Seq(
+    Op("dataset_split", datasetSplit, datasetSplitSql),
+    Op("stratified_sample_exact", stratifiedSample, stratifiedSampleSql, Ext),
+    Op("token_budget_exact", tokenBudgetExact, tokenBudgetExactSql, Ext),
+    Op("source_accounting", sourceAccounting, sourceAccountingSql),
+    Op("temperature_mix", temperatureMix, temperatureMixSql),
+    Op("corpus_curation", corpusCuration, corpusCurationSql, Ext),
+    Op("corpus_curated_docs", curatedDocs, curatedDocsSql),
+    Op("corpus_published", publishedCorpus, publishedCorpusSql),
+    Op("corpus_mix_budget", corpusMixBudget, corpusMixBudgetSql),
+    Op("corpus_token_accounting", corpusTokenAccounting, corpusTokenAccountingSql))
 }

@@ -1,6 +1,7 @@
 package graft.text
 
-import graft.Tables
+import graft.{Op, Tables}
+import graft.Op.Ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -23,7 +24,6 @@ import org.apache.spark.sql.types.DecimalType
   * graph). Convergence is checked with a count of changed labels.
   */
 object DedupClusters {
-
   /** Cluster assignment: every document → the min doc_id reachable
     * through Jaccard >= 0.7 edges (itself if isolated), with cluster
     * size and a keeper flag. One materialized propagation per
@@ -261,15 +261,9 @@ WHERE (lang = 'en' AND CAST(('0x' || substr(md5('sample:' || CAST(doc_id AS VARC
     ).mkString("", "\nUNION ALL\n", "\nORDER BY stage")
   }
 
-  val inventory: Map[String, TextOps.Q] = Map(
-    "dedup_clusters"    -> (dedupClusters _),
-    "dedup_keep_best"   -> (dedupKeepBest _),
-    "dedup_funnel"      -> (dedupFunnel _),
-    "stratified_sample" -> (stratifiedSample _))
-
-  val oracle: Map[String, String] = Map(
-    "dedup_clusters"    -> dedupClustersSql,
-    "dedup_keep_best"   -> dedupKeepBestSql,
-    "dedup_funnel"      -> dedupFunnelSql,
-    "stratified_sample" -> stratifiedSampleSql)
+  val ops: Seq[Op] = Seq(
+    Op("dedup_clusters", dedupClusters, dedupClustersSql, Ext),
+    Op("dedup_keep_best", dedupKeepBest, dedupKeepBestSql),
+    Op("dedup_funnel", dedupFunnel, dedupFunnelSql),
+    Op("stratified_sample", stratifiedSample, stratifiedSampleSql))
 }

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Op, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,8 +36,6 @@ import org.apache.spark.sql.functions._
   * [[TextOps.dedupMinhashLsh]].
   */
 object Incremental {
-  import TextOps.Q
-
   /** Per-increment-document membership verdict against the corpus band
     * index: `matched_bands` ∈ 0..4 indexed buckets hit, `is_novel` when
     * none. One signature pass over the table feeds BOTH sides (the split
@@ -74,9 +72,6 @@ FROM inc LEFT JOIN idx ON inc.band = idx.band AND inc.bucket = idx.bucket
 GROUP BY inc.doc_id
 ORDER BY doc_id"""
 
-  val inventory: Map[String, Q] = Map(
-    "dedup_incremental" -> (dedupIncremental _))
-
-  val oracle: Map[String, String] = Map(
-    "dedup_incremental" -> dedupIncrementalSql)
+  val ops: Seq[Op] = Seq(
+    Op("dedup_incremental", dedupIncremental, dedupIncrementalSql))
 }

@@ -1,6 +1,7 @@
 package graft.text
 
-import graft.Tables
+import graft.{Op, Tables}
+import graft.Op.Ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,8 +24,6 @@ import org.apache.spark.sql.functions._
   * rule as [[graft.warehouse.Warehouse]]'s key numbering).
   */
 object Packing {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Tokens per training sequence. */
   val SeqLen = 2048L
 
@@ -243,15 +242,9 @@ SELECT bucket,
        CAST(SUM(mx_tok * n_in_batch) - SUM(sum_tok) AS BIGINT) AS wasted_tokens
 FROM g GROUP BY bucket ORDER BY bucket"""
 
-  val inventory: Map[String, Q] = Map(
-    "pack_sequences"  -> (packSequences _),
-    "pack_sequences_bpe" -> (packSequencesBpe _),
-    "chunk_documents" -> (chunkDocuments _),
-    "length_bucket_batches" -> (lengthBucketBatches _))
-
-  val oracle: Map[String, String] = Map(
-    "pack_sequences"  -> packSequencesSql,
-    "pack_sequences_bpe" -> packSequencesBpeSql,
-    "chunk_documents" -> chunkDocumentsSql,
-    "length_bucket_batches" -> lengthBucketBatchesSql)
+  val ops: Seq[Op] = Seq(
+    Op("pack_sequences", packSequences, packSequencesSql),
+    Op("pack_sequences_bpe", packSequencesBpe, packSequencesBpeSql, Ext),
+    Op("chunk_documents", chunkDocuments, chunkDocumentsSql, Ext),
+    Op("length_bucket_batches", lengthBucketBatches, lengthBucketBatchesSql, Ext))
 }

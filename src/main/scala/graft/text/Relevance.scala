@@ -1,6 +1,7 @@
 package graft.text
 
-import graft.{Det, Sql, Tables}
+import graft.{Det, Op, Sql, Tables}
+import graft.Op.Ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,8 +29,6 @@ import org.apache.spark.sql.types.LongType
   * hash-matches despite distributed summation.
   */
 object Relevance {
-  import TextOps.Q
-
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
 
@@ -458,17 +457,10 @@ SELECT query_id, rerank, doc_id, ce_score, rrf_rank FROM (
 ORDER BY query_id, rerank"""
   }
 
-  val inventory: Map[String, Q] = Map(
-    "tfidf_top_terms"  -> (tfidfTopTerms _),
-    "lm_quality_score" -> (lmQualityScore _),
-    "bm25_search"      -> (bm25Search _),
-    "hybrid_rrf_search" -> (hybridRrfSearch _),
-    "hybrid_rerank_search" -> (hybridRerankSearch _))
-
-  val oracle: Map[String, String] = Map(
-    "tfidf_top_terms"  -> tfidfTopTermsSql,
-    "lm_quality_score" -> lmQualityScoreSql,
-    "bm25_search"      -> bm25SearchSql,
-    "hybrid_rrf_search" -> hybridRrfSearchSql,
-    "hybrid_rerank_search" -> hybridRerankSearchSql)
+  val ops: Seq[Op] = Seq(
+    Op("tfidf_top_terms", tfidfTopTerms, tfidfTopTermsSql),
+    Op("lm_quality_score", lmQualityScore, lmQualityScoreSql),
+    Op("bm25_search", bm25Search, bm25SearchSql, Ext),
+    Op("hybrid_rrf_search", hybridRrfSearch, hybridRrfSearchSql, Ext),
+    Op("hybrid_rerank_search", hybridRerankSearch, hybridRerankSearchSql, Ext))
 }

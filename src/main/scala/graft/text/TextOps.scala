@@ -1,6 +1,7 @@
 package graft.text
 
-import graft.Tables
+import graft.{Op, Tables}
+import graft.Op.Ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,8 +36,6 @@ import org.apache.spark.sql.types.LongType
   *    on 4 band hashes instead of all-pairs comparison.
   */
 object TextOps {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Whitespace tokens of trimmed text (shared definition, mirrored by
     * [[toksSql]] in the oracle). */
   val toksE = "split(trim(text), '\\\\s+')"
@@ -1574,51 +1573,27 @@ est AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
 SELECT source, n_docs, n_words, n_distinct_words, exact_tokens, est_tokens
 FROM per JOIN est USING (source) ORDER BY source"""
 
-  val inventory: Map[String, Q] = Map(
-    "text_stats"           -> (textStats _),
-    "text_lang_id"         -> (langId _),
-    "lang_confusion"       -> (langConfusion _),
-    "doc_fingerprint"      -> (docFingerprint _),
-    "dedup_exact"          -> (dedupExact _),
-    "dedup_canonical"      -> (dedupCanonical _),
-    "dedup_jaccard_pairs"  -> (dedupJaccardPairs _),
-    "dedup_containment_pairs" -> (dedupContainmentPairs _),
-    "dedup_minhash_lsh"    -> (dedupMinhashLsh _),
-    "dedup_source_matrix"  -> (dedupSourceMatrix _),
-    "dedup_simhash_pairs"  -> (dedupSimhashPairs _),
-    "text_decontamination" -> (decontamination _),
-    "bloom_decontamination" -> (bloomDecontamination _),
-    "text_repetition"      -> (textRepetition _),
-    "doc_fingerprint_winnow" -> (docFingerprintWinnow _),
-    "winnow_overlap_pairs" -> (winnowOverlapPairs _),
-    "winnow_decontamination" -> (winnowDecontamination _),
-    "bpe_merge_pairs"      -> (bpeMergePairs _),
-    "bpe_train_merges"     -> (bpeTrainMerges _),
-    "bpe_token_histogram"  -> (bpeTokenHistogram _),
-    "bpe_source_token_accounting" -> (bpeSourceTokenAccounting _),
-    "bpe_merge_drift"      -> (bpeMergeDrift _))
-
-  val oracle: Map[String, String] = Map(
-    "text_stats"           -> textStatsSql,
-    "text_lang_id"         -> langIdSql,
-    "lang_confusion"       -> langConfusionSql,
-    "doc_fingerprint"      -> docFingerprintSql,
-    "dedup_exact"          -> dedupExactSql,
-    "dedup_canonical"      -> dedupCanonicalSql,
-    "dedup_jaccard_pairs"  -> dedupJaccardPairsSql,
-    "dedup_containment_pairs" -> dedupContainmentPairsSql,
-    "dedup_minhash_lsh"    -> dedupMinhashLshSql,
-    "dedup_source_matrix"  -> dedupSourceMatrixSql,
-    "dedup_simhash_pairs"  -> dedupSimhashPairsSql,
-    "text_decontamination" -> decontaminationSql,
-    "bloom_decontamination" -> bloomDecontaminationSql,
-    "text_repetition"      -> textRepetitionSql,
-    "doc_fingerprint_winnow" -> docFingerprintWinnowSql,
-    "winnow_overlap_pairs" -> winnowOverlapPairsSql,
-    "winnow_decontamination" -> winnowDecontaminationSql,
-    "bpe_merge_pairs"      -> bpeMergePairsSql,
-    "bpe_train_merges"     -> bpeTrainMergesSql,
-    "bpe_token_histogram"  -> bpeTokenHistogramSql,
-    "bpe_source_token_accounting" -> bpeSourceTokenAccountingSql,
-    "bpe_merge_drift"      -> bpeMergeDriftSql)
+  val ops: Seq[Op] = Seq(
+    Op("text_stats", textStats, textStatsSql, Ext),
+    Op("text_lang_id", langId, langIdSql),
+    Op("lang_confusion", langConfusion, langConfusionSql),
+    Op("doc_fingerprint", docFingerprint, docFingerprintSql),
+    Op("dedup_exact", dedupExact, dedupExactSql, Ext),
+    Op("dedup_canonical", dedupCanonical, dedupCanonicalSql, Ext),
+    Op("dedup_jaccard_pairs", dedupJaccardPairs, dedupJaccardPairsSql),
+    Op("dedup_containment_pairs", dedupContainmentPairs, dedupContainmentPairsSql, Ext),
+    Op("dedup_minhash_lsh", dedupMinhashLsh, dedupMinhashLshSql, Ext),
+    Op("dedup_source_matrix", dedupSourceMatrix, dedupSourceMatrixSql, Ext),
+    Op("dedup_simhash_pairs", dedupSimhashPairs, dedupSimhashPairsSql, Ext),
+    Op("text_decontamination", decontamination, decontaminationSql),
+    Op("bloom_decontamination", bloomDecontamination, bloomDecontaminationSql, Ext),
+    Op("text_repetition", textRepetition, textRepetitionSql),
+    Op("doc_fingerprint_winnow", docFingerprintWinnow, docFingerprintWinnowSql, Ext),
+    Op("winnow_overlap_pairs", winnowOverlapPairs, winnowOverlapPairsSql, Ext),
+    Op("winnow_decontamination", winnowDecontamination, winnowDecontaminationSql),
+    Op("bpe_merge_pairs", bpeMergePairs, bpeMergePairsSql, Ext),
+    Op("bpe_train_merges", bpeTrainMerges, bpeTrainMergesSql, Ext),
+    Op("bpe_token_histogram", bpeTokenHistogram, bpeTokenHistogramSql, Ext),
+    Op("bpe_source_token_accounting", bpeSourceTokenAccounting, bpeSourceTokenAccountingSql, Ext),
+    Op("bpe_merge_drift", bpeMergeDrift, bpeMergeDriftSql, Ext))
 }

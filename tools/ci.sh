@@ -3,10 +3,11 @@
 # reference's end-to-end workflow (.github/workflows/ci.yml: service DB
 # -> DDL -> generate -> ingest -> transform -> load -> pytest -> row
 # sanity). Here the stages are: compile -> full test suite -> oracle
-# correctness gate at sf0.01 and sf0.001 (every registered query vs
-# DuckDB) -> a smoke of the Probe and ExplainDump dev mains -> one
-# end-to-end Pipeline smoke run -> benchmark self-test (every
-# benchmarked op's output hash against perfbench/expected.json).
+# correctness gate at sf0.01 and sf0.001, and at sf0.001 under the
+# ladder's AQE profile (every registered query vs DuckDB) -> a smoke of
+# the Probe and ExplainDump dev mains -> one end-to-end Pipeline smoke
+# run -> benchmark self-test (every benchmarked op's output hash against
+# perfbench/expected.json).
 # Nonzero exit on any failure.
 #
 # Usage: tools/ci.sh [sfDir]   (default /root/testdata/sf0.01)
@@ -30,7 +31,7 @@ sbt -batch test
 # the 168/168 bar holds at both driver scales: the given dir and its
 # sf0.001 sibling
 SMALL="$(dirname "$SF")/sf0.001"
-echo "== [3/6] oracle correctness gate ($SF, $SMALL) =="
+echo "== [3/6] oracle correctness gate ($SF, $SMALL, $SMALL with AQE) =="
 for dir in "$SF" "$SMALL"; do
   out="$WORK/verify-$(basename "$dir")"
   [ -d "$out" ] && continue # SF is itself the sf0.001 dir
@@ -38,6 +39,11 @@ for dir in "$SF" "$SMALL"; do
   # check.py exits nonzero on any FAIL line (set -e propagates it)
   python3 tools/check.py "$dir" "$out"
 done
+# the scale ladder runs the AQE profile (Sessions.fromEnv with
+# SPARK_GRAFT_AQE=1): hold it to the same bar once, at sf0.001
+out="$WORK/verify-aqe-$(basename "$SMALL")"
+SPARK_GRAFT_AQE=1 sbt -batch "runMain graft.Verify $SMALL $out"
+python3 tools/check.py "$SMALL" "$out"
 
 echo "== [4/6] dev mains smoke ($SF) =="
 # Probe and ExplainDump start through the same Sessions path as Bench and
