@@ -25,18 +25,16 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   * `warehouse/warehouse_load_report`. Every Spark job a step starts
   * carries the description `<step>/<output>`, except the stream's
   * micro-batches, which keep Spark's streaming description.
+  *
+  * A small input runs interpreted: below [[InterpretedBelowBytes]] of
+  * source tables, the DAG runs without code generation
+  * ([[InterpretedConfs]]); at or above it, the session is left as it is.
   * Usage: `runMain graft.Pipeline <sfDir> <outDir>`.
   */
 object Pipeline {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val report = run(spark, sfDir, outDir)
@@ -46,8 +44,20 @@ object Pipeline {
     if (report.status != "success") sys.exit(1)
   }
 
-  /** The eight-stage DAG as orchestrated steps. */
+  /** [[main]]'s session builder, unstarted, so a spec can read its
+    * options. */
+  private[graft] def builder(cpus: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[sources.NioLocalFileSystem].getName)
+
+  /** The eight-stage DAG as orchestrated steps, under the evaluation
+    * profile [[interpretedProfile]] picks from the source bytes. */
   def run(spark: SparkSession, sfDir: String, outDir: String): Orchestrator.Report = {
+    val profile = if (interpretedProfile(spark, sfDir)) InterpretedConfs else Nil
     // the results this run computed, keyed `<dir>/<name>`: handles on the
     // parquet outputs, read with the schema they were written with (no
     // inference job), and the quality score collected to the driver
@@ -66,7 +76,7 @@ object Pipeline {
           ()
         }
       }
-    Orchestrator.run(Seq(
+    val steps = Seq(
       // Streaming ingest FIRST — the events feed lands via the
       // AvailableNow incremental sink so a re-run (or a replayed
       // at-least-once upstream) appends only unseen event_ids: the
@@ -181,7 +191,55 @@ object Pipeline {
       "retention_cleanup" -> { () =>
         orchestrate.Housekeeping.cleanupOldFiles(s"$outDir/tmp", retentionDays = 7)
         ()
-      }))
+      })
+    withConfs(spark, profile)(Orchestrator.run(steps))
+  }
+
+  /** Every source table of a data directory (TESTDATA.md). */
+  private val SourceTables = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Source bytes below which the DAG runs interpreted. A run-once DAG
+    * in a fresh JVM executes every stage once, so on small inputs the
+    * Janino compiles (533 classes per sf0.001 DAG) and the JIT's work on
+    * the generated classes cost more than compiled evaluation saves.
+    * Interpreted against compiled, DAG time on 4 cores, 2 alternating
+    * pairs per input: 1.87 MB (sf0.01) −10%/−4%, 4.29 MB (sf0.01 ×3)
+    * −7%/−18%, 6.84 MB (sf0.01 ×6) +27%/+8%, 17.5 MB (sf0.1)
+    * +19%/+19% (docs/PERF_NOTES.md, "Interpreted evaluation for small
+    * DAGs"). The constant sits just below 4.29 MB, the largest input
+    * where interpreted evaluation still won. */
+  val InterpretedBelowBytes: Long = 4L << 20
+
+  /** Whether the DAG over `sfDir` runs interpreted: its source tables,
+    * listed as [[graft.sim.IndexStore.vintage]] lists them, hold fewer
+    * than [[InterpretedBelowBytes]]. */
+  private[graft] def interpretedProfile(spark: SparkSession, sfDir: String): Boolean =
+    sim.IndexStore.sourceBytes(spark, sfDir, SourceTables) < InterpretedBelowBytes
+
+  /** The interpreted profile: no whole-stage code generation, and
+    * expressions (projections, predicates) evaluated by Spark's
+    * interpreted implementations instead of compiled ones.
+    * `spark.sql.codegen.factoryMode` is an internal Spark conf (its
+    * documented use is tests), but it is the only switch for expression
+    * codegen: with whole-stage off alone, each operator compiles its own
+    * projections, and an sf0.001 DAG compiled 564–575 classes instead of
+    * 533–536, with no DAG-time change outside the noise (3 pairs).
+    * PipelineSpec fails if Spark stops honouring it. */
+  private[graft] val InterpretedConfs = Seq(
+    "spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  /** Run `body` with `confs` set on the session, then put back what
+    * was explicitly set before (or unset what was not). */
+  private[graft] def withConfs[T](spark: SparkSession, confs: Seq[(String, String)])(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Shard count for the published corpus: sized so one shard ≈ one

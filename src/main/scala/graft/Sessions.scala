@@ -73,6 +73,7 @@ object Sessions {
       // sessions — constant value, so the write is race-free)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[sources.NioLocalFileSystem].getName)
     val tuned =
       if (adaptive) b
         .config("spark.sql.shuffle.partitions", initialPartitions.toString)

@@ -5,7 +5,6 @@ import graft.Op.Ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Temporal join operators Spark lacks natively: AS-OF join and bounded
   * time-RANGE join. Both are composed from built-in operators (the

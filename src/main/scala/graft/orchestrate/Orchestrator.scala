@@ -3,6 +3,7 @@ package graft.orchestrate
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ExecutionException, Executors, ThreadFactory}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 import scala.util.control.NonFatal
@@ -25,8 +26,13 @@ import scala.util.control.NonFatal
   */
 object Orchestrator {
 
+  /** One step's outcome. `codegenCompiles` counts the classes Spark's
+    * code generator compiled (Janino) while the step ran: the JVM-wide
+    * `CodegenMetrics` count read before and after it, which splits
+    * exactly by step because steps run one after another. */
   final case class StepResult(name: String, status: String, attempts: Int,
-                              durationMs: Long, error: Option[String])
+                              durationMs: Long, error: Option[String],
+                              codegenCompiles: Long = 0)
   final case class Report(status: String, totalDurationMs: Long,
                           steps: Seq[StepResult])
 
@@ -48,6 +54,7 @@ object Orchestrator {
     while (!failed && it.hasNext) {
       val (name, fn) = it.next()
       val s0 = System.nanoTime()
+      val c0 = compiles()
       var attempt = 0
       var lastErr: Option[String] = None
       var ok = false
@@ -62,7 +69,8 @@ object Orchestrator {
         }
       }
       val ms = (System.nanoTime() - s0) / 1000000
-      results += StepResult(name, if (ok) "success" else "failed", attempt, ms, lastErr)
+      results += StepResult(name, if (ok) "success" else "failed", attempt, ms, lastErr,
+        compiles() - c0)
       if (!ok) failed = true
     }
     val skipped = steps.drop(results.size).map { case (n, _) =>
@@ -71,6 +79,9 @@ object Orchestrator {
     Report(if (failed) "failed" else "success",
       (System.nanoTime() - t0) / 1000000, results.toSeq ++ skipped)
   }
+
+  /** Janino compiles so far in this JVM. */
+  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Most threads one [[fanOut]] starts: one per output, and no step
     * has more than ten. */
@@ -132,7 +143,7 @@ object Orchestrator {
     }
     val steps = r.steps.map { s =>
       val err = s.error.map(e => s""","error":"${esc(e)}"""").getOrElse("")
-      s"""{"name":"${esc(s.name)}","status":"${s.status}","attempts":${s.attempts},"duration_ms":${s.durationMs}$err}"""
+      s"""{"name":"${esc(s.name)}","status":"${s.status}","attempts":${s.attempts},"duration_ms":${s.durationMs},"codegen_compiles":${s.codegenCompiles}$err}"""
     }.mkString("[", ",", "]")
     s"""{"status":"${r.status}","total_duration_ms":${r.totalDurationMs},"steps":$steps}"""
   }

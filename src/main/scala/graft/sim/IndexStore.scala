@@ -84,6 +84,12 @@ object IndexStore {
   def vintage(spark: SparkSession, dataDir: String, tables: Seq[String]): String =
     tables.map(tableFingerprint(spark, dataDir, _)).mkString("|")
 
+  /** Total length of the data files of a set of source tables: the
+    * files [[vintage]] fingerprints, from the same listing. An absent
+    * table counts zero. */
+  def sourceBytes(spark: SparkSession, dataDir: String, tables: Seq[String]): Long =
+    tables.flatMap(dataFiles(spark, dataDir, _).getOrElse(Nil)).map(_._2.getLen).sum
+
   /** Staleness fingerprint of one source table: an MD5 over the sorted
     * (path, length, modification time) of every data file under the
     * table directory — file METADATA, no content scan.
@@ -101,13 +107,28 @@ object IndexStore {
     * truly decoupled from collection size, which at 100 TB is the only
     * option anyway. */
   private def tableFingerprint(spark: SparkSession, dataDir: String,
-                               table: String): String = {
+                               table: String): String =
+    dataFiles(spark, dataDir, table) match {
+      case None => s"$table:absent"
+      case Some(files) =>
+        val entries = files.map { case (rel, s) => s"$rel|${s.getLen}|${s.getModificationTime}" }
+        val md = java.security.MessageDigest.getInstance("MD5")
+        entries.sorted.foreach(e => md.update(e.getBytes(StandardCharsets.UTF_8)))
+        s"$table:n=${entries.size};md5=" +
+          md.digest().map("%02x".format(_)).mkString
+    }
+
+  /** The data files of source table `<dataDir>/<table>.parquet`, each
+    * with its path relative to the table root, or None when the table
+    * is absent. */
+  private def dataFiles(spark: SparkSession, dataDir: String,
+                        table: String): Option[Seq[(String, FileStatus)]] = {
     val p = new HPath(s"$dataDir/$table.parquet")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) s"$table:absent"
+    if (!fs.exists(p)) None
     else {
-      val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-      // entries key on the path RELATIVE to the table root, not the
+      val files = scala.collection.mutable.ArrayBuffer.empty[(String, FileStatus)]
+      // each file is keyed on its path RELATIVE to the table root, not the
       // basename: in a partitioned layout two files in different
       // subdirectories with equal (name, length, mtime) could swap
       // without a basename-keyed fingerprint noticing
@@ -116,7 +137,7 @@ object IndexStore {
       // plain `listStatus`: listFiles wraps each status in a
       // LocatedFileStatus, which on the local filesystem without
       // Hadoop's native library starts a `stat` process per file for
-      // permissions this digest never reads (measured ~5 ms per
+      // permissions this walk never reads (measured ~5 ms per
       // single-file table against ~0.02 ms)
       def walk(s: FileStatus): Unit =
         if (s.isDirectory) fs.listStatus(s.getPath).foreach(walk)
@@ -127,13 +148,10 @@ object IndexStore {
           val rel =
             if (full.startsWith(rootUri)) full.drop(rootUri.length).stripPrefix("/")
             else full
-          entries += s"$rel|${s.getLen}|${s.getModificationTime}"
+          files += rel -> s
         }
       fs.listStatus(p).foreach(walk)
-      val md = java.security.MessageDigest.getInstance("MD5")
-      entries.sorted.foreach(e => md.update(e.getBytes(StandardCharsets.UTF_8)))
-      s"$table:n=${entries.size};md5=" +
-        md.digest().map("%02x".format(_)).mkString
+      Some(files.toSeq)
     }
   }
 

@@ -5,7 +5,6 @@ import graft.Op.{Eval, Ext, Listing}
 import graft.functions.QDot
 import Grid.{duckQz, qz}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (vec_id, Array[Float]

@@ -54,7 +54,7 @@ class AnalyticsSpec extends SparkSpec {
     val dp = Warehouse.dimPart(spark, sf)
     val n = dp.count()
     assert(dp.select("product_key").distinct().count() == n)
-    assert(dp.agg(max("product_key")).head.getLong(0) == n)
+    assert(dp.agg(max("product_key")).head().getLong(0) == n)
     // deterministic across rebuilds
     val again = Warehouse.dimPart(spark, sf).select("product_key", "p_partkey")
     assert(dp.select("product_key", "p_partkey").except(again).count() == 0)

@@ -5,7 +5,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.multimodal.Multimodal
-import graft.sim.{BandedPairs, Similarity}
+import graft.sim.BandedPairs
 import graft.text.TextOps
 
 /** The bucket cap is the safety valve of every banded-LSH pair family:

@@ -1,7 +1,6 @@
 package graft
 
 import graft.analytics.{Basket, Rfm}
-import org.apache.spark.sql.functions._
 
 /** Market-basket pair mining and RFM segmentation semantics. */
 class BasketRfmSpec extends SparkSpec {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.text.TextOps
-import org.scalatest.funsuite.AnyFunSuite
 
 class BpeMergeSpec extends SparkSpec {
 

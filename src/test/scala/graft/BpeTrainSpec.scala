@@ -2,7 +2,6 @@ package graft
 
 import graft.text.TextOps
 import org.apache.spark.sql.functions.expr
-import org.scalatest.funsuite.AnyFunSuite
 
 import scala.collection.mutable
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sim.{Contrastive, Ivf}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the contrastive-triple miner against a from-scratch Scala
   * recomputation over the SAME index assignments (IvfSpec already pins

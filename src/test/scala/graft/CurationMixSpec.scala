@@ -136,7 +136,6 @@ class CurationMixSpec extends SparkSpec {
   }
 
   test("dataset split partitions the corpus with stable membership") {
-    import org.apache.spark.sql.functions._
     val rows = graft.text.Curation.datasetSplit(spark, sf).collect()
     val n = Tables.documents(spark, sf).count()
     assert(rows.map(_.getAs[Long]("n_docs")).sum == n, "splits must partition all docs")

@@ -15,7 +15,7 @@ class EtlQualitySpec extends SparkSpec {
 
   test("cleanse_customers title-cases and strips digits") {
     val row = Cleanse.cleanseCustomers(spark, sf)
-      .filter(col("customer_id") === 1).head
+      .filter(col("customer_id") === 1).head()
     assert(row.getAs[String]("name_clean").startsWith("Customer#"))
     assert(row.getAs[String]("id_digits").forall(_.isDigit))
     assert(row.getAs[String]("segment") == row.getAs[String]("segment").toLowerCase)
@@ -72,7 +72,7 @@ class EtlQualitySpec extends SparkSpec {
   }
 
   test("quality_score is a valid grade over actual records") {
-    val r = Quality.qualityScore(spark, sf).head
+    val r = Quality.qualityScore(spark, sf).head()
     val score = r.getAs[Double]("quality_score")
     assert(score >= 0.0 && score <= 100.0)
     assert(Set("A", "B", "C", "D").contains(r.getAs[String]("grade")))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -27,7 +26,7 @@ class EventsVintageSpec extends SparkSpec {
       .write.mode("overwrite").parquet(p)
     val df = Tables.normalizeTs(spark.read.parquet(p))
     assert(df.schema("ts").dataType == TimestampType)
-    assert(df.select(unix_micros(col("ts"))).head.getLong(0) == instantMicros)
+    assert(df.select(unix_micros(col("ts"))).head().getLong(0) == instantMicros)
   }
 
   test("TIMESTAMP_NTZ vintage normalizes to TimestampType preserving the instant (UTC session)") {
@@ -40,7 +39,7 @@ class EventsVintageSpec extends SparkSpec {
     assert(raw.schema("ts").dataType == TimestampNTZType) // written as naive micros
     val df = Tables.normalizeTs(raw)
     assert(df.schema("ts").dataType == TimestampType)
-    assert(df.select(unix_micros(col("ts"))).head.getLong(0) == instantMicros)
+    assert(df.select(unix_micros(col("ts"))).head().getLong(0) == instantMicros)
   }
 
   test("TimestampType vintage passes through untouched") {
@@ -50,7 +49,7 @@ class EventsVintageSpec extends SparkSpec {
       .write.mode("overwrite").parquet(p)
     val df = Tables.normalizeTs(spark.read.parquet(p))
     assert(df.schema("ts").dataType == TimestampType)
-    assert(df.select(unix_micros(col("ts"))).head.getLong(0) == instantMicros)
+    assert(df.select(unix_micros(col("ts"))).head().getLong(0) == instantMicros)
   }
 
   test("every driver testdata dir reads events.ts as TimestampType") {
@@ -60,7 +59,7 @@ class EventsVintageSpec extends SparkSpec {
         val df = Tables.events(spark, dir)
         assert(df.schema("ts").dataType == TimestampType, s"vintage drift in $dir")
         // unix_micros is the downstream contract (temporal joins, monitors)
-        assert(df.select(unix_micros(col("ts"))).head.getLong(0) > 0L)
+        assert(df.select(unix_micros(col("ts"))).head().getLong(0) > 0L)
       }
     }
   }

@@ -43,7 +43,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("approx count distinct stays within 5% of exact") {
     val approx = Extensions.approxMonthlyTransactionsRaw(spark, sf)
-      .agg(sum("approx_transactions")).head.getLong(0)
+      .agg(sum("approx_transactions")).head().getLong(0)
     val exact = graft.warehouse.Warehouse.fact(spark, sf)
       .select("l_orderkey", "date_key").distinct().count()
     assert(math.abs(approx - exact).toDouble / exact < 0.05,
@@ -70,7 +70,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("fuzzy join on parts matches the brute-force answer") {
-    import spark.implicits._
     val nm = Tables.part(spark, sf).select(col("p_name").as("name")).distinct()
     val brute = nm.as("a").crossJoin(nm.as("b"))
       .filter(col("a.name") < col("b.name")

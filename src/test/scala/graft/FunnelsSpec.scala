@@ -1,7 +1,6 @@
 package graft
 
 import graft.analytics.Funnels
-import org.apache.spark.sql.functions._
 
 class FunnelsSpec extends SparkSpec {
   import spark.implicits._

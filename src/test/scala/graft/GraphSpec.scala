@@ -1,7 +1,6 @@
 package graft
 
 import graft.analytics.Graph
-import org.apache.spark.sql.functions._
 
 /** Integer PageRank invariants (the oracle proves cross-engine value
   * equality; these prove the algorithm's contract). */

@@ -3,7 +3,7 @@ package graft
 import graft.datagen.DataGen
 import graft.orchestrate.{Housekeeping, Scheduler}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.nio.file.attribute.FileTime
 import java.time.LocalDate
 

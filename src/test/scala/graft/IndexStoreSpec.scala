@@ -20,6 +20,16 @@ class IndexStoreSpec extends SparkSpec {
   private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
 
+  test("source bytes sum the data files the vintage lists, and an absent table counts zero") {
+    val dir = java.nio.file.Files.createTempDirectory("idxbytes").toString
+    writeCorpus(dir, 0.0f)
+    val table = new java.io.File(s"$dir/embeddings.parquet")
+    // part files only: _SUCCESS and the .crc checksums are not data
+    val parts = table.listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.nonEmpty && table.listFiles().exists(_.getName.startsWith(".")))
+    assert(IndexStore.sourceBytes(spark, dir, Seq("embeddings", "absent")) == parts.map(_.length).sum)
+  }
+
   test("a changed collection under the same path rebuilds the index") {
     val dir = java.nio.file.Files.createTempDirectory("idxstore").toString
     writeCorpus(dir, 0.0f)

@@ -59,7 +59,6 @@ class MonitorSpec extends SparkSpec {
   }
 
   test("seasonal anomaly flags agree with the cell-mean gates") {
-    import org.apache.spark.sql.functions._
     val rows = Monitor.seasonalAnomaly(spark, sf).collect()
     rows.foreach { r =>
       val ratio = r.getAs[Double]("ratio")

@@ -4,7 +4,9 @@ import graft.multimodal.Multimodal
 import graft.orchestrate.Orchestrator
 import graft.sources.Sources
 import graft.warehouse.Scd2
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
@@ -12,6 +14,36 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 class PipelineSpec extends SparkSpec {
+
+  /** Classes Spark's code generator compiles while `body` runs. */
+  private def compilesIn(body: => Any): Long = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+  }
+
+  /** Compiles a whole sf0.001 DAG ran under the interpreted profile: 55
+    * in a fresh JVM (`runMain graft.Pipeline`), against 533 compiled. */
+  private val InterpretedDagCompiles = 70
+
+  test("the evaluation profile is picked from the source bytes") {
+    val testdata = new java.io.File(sf).getParent
+    Seq("sf0.001" -> true, "sf0.01" -> true, "sf0.1" -> false).foreach { case (d, interpreted) =>
+      assert(Pipeline.interpretedProfile(spark, s"$testdata/$d") == interpreted, d)
+    }
+  }
+
+  test("Spark honours the interpreted profile: a fresh query compiles no class") {
+    // a literal no earlier query used, so the code generator's cache
+    // cannot serve the compiled side
+    val tag = System.nanoTime()
+    def query() = spark.range(1000).selectExpr(s"id * $tag + 1 AS v")
+      .filter(s"v % 7 = ${tag % 7}").collect()
+    val interpreted = compilesIn(Pipeline.withConfs(spark, Pipeline.InterpretedConfs)(query()))
+    assert(interpreted == 0, s"$interpreted classes compiled under ${Pipeline.InterpretedConfs}")
+    assert(!spark.conf.getAll.contains("spark.sql.codegen.factoryMode"), "the profile was not put back")
+    assert(compilesIn(query()) > 0, "the compiled profile compiled nothing")
+  }
 
   test("orchestrator retries with backoff then succeeds") {
     var calls = 0
@@ -167,8 +199,8 @@ class PipelineSpec extends SparkSpec {
     val updates = Seq((1L, "platinum"), (2L, "bronze")).toDF("id", "tier")
     val out = Scd2.applyUpdates(current, updates, "id", Seq("tier"), "2024-06-01")
     assert(out.count() == 3)
-    assert(out.filter(col("id") === 1 && col("is_current")).head.getAs[String]("tier") == "platinum")
-    assert(out.filter(col("id") === 1 && !col("is_current")).head
+    assert(out.filter(col("id") === 1 && col("is_current")).head().getAs[String]("tier") == "platinum")
+    assert(out.filter(col("id") === 1 && !col("is_current")).head()
       .getAs[java.sql.Date]("end_date").toString == "2024-06-01")
     // unchanged key untouched
     assert(out.filter(col("id") === 2).count() == 1)
@@ -185,7 +217,7 @@ class PipelineSpec extends SparkSpec {
     val updates = Seq((1L, "gold"), (3L, "silver")).toDF("id", "tier")
     val out = Scd2.applyUpdates(current, updates, "id", Seq("tier"), "2024-06-01")
     assert(out.count() == 2)
-    val fresh = out.filter(col("id") === 3).head
+    val fresh = out.filter(col("id") === 3).head()
     assert(fresh.getAs[String]("tier") == "silver")
     assert(fresh.getAs[Boolean]("is_current"))
     assert(fresh.getAs[java.sql.Date]("effective_date").toString == "2024-06-01")
@@ -205,11 +237,11 @@ class PipelineSpec extends SparkSpec {
     val updates = Seq((9L, "silver")).toDF("id", "tier")
     val out = Scd2.applyUpdates(current, updates, "id", Seq("tier"), "2024-06-01")
     assert(out.count() == 2)
-    val reopened = out.filter(col("is_current")).head
+    val reopened = out.filter(col("is_current")).head()
     assert(reopened.getAs[String]("tier") == "silver")
     assert(reopened.getAs[java.sql.Date]("effective_date").toString == "2024-06-01")
     // the closed history row is untouched
-    assert(out.filter(!col("is_current")).head.getAs[String]("tier") == "gold")
+    assert(out.filter(!col("is_current")).head().getAs[String]("tier") == "gold")
   }
 
   test("scd2 applyUpdates rejects duplicate keys in one batch") {
@@ -253,6 +285,14 @@ class PipelineSpec extends SparkSpec {
       r
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(report.status == "success")
+    // sf0.001 is below the gate: the DAG ran interpreted, and the report
+    // counts each step's compiles
+    val compiles = report.steps.map(_.codegenCompiles).sum
+    assert(compiles <= InterpretedDagCompiles,
+      s"$compiles classes compiled: ${report.steps.map(s => s.name -> s.codegenCompiles)}")
+    assert(Orchestrator.toJson(report).contains("\"codegen_compiles\":"))
+    assert(Pipeline.InterpretedConfs.forall { case (k, _) => !spark.conf.getAll.contains(k) },
+      "the run did not put the session's codegen settings back")
     val steps = Seq("stream_ingest_events",
       "cleanse_production", "quality_checks", "load_warehouse", "analytics",
       "monitoring", "curate_corpus", "retention_cleanup")
@@ -291,6 +331,49 @@ class PipelineSpec extends SparkSpec {
       Files.readAllBytes(java.nio.file.Paths.get(s"$out/warehouse/load_report.json"))))
       .map(_.group(1)).toSeq
     assert(loadStatus.size == 5 && loadStatus.forall(_ == "loaded"), loadStatus)
+
+    // every output equals, row for row, its query evaluated with code
+    // generation on (the profile Verify holds to DuckDB), written by the
+    // same writer
+    def parquet(q: Op.Q): String => Unit = path => Sources.fullRefresh(q(spark, sf), path)
+    val withCodegen: Map[String, String => Unit] = (
+      graft.analytics.Analytics.ops.map(op => s"analytics/${op.key}" -> { (path: String) =>
+        Sources.writeCsv(op.run(spark, sf).repartition(1), path) }) ++
+        graft.warehouse.WarehouseQueries.ops.map(op => s"warehouse/${op.key}" -> parquet(op.run)) ++
+        Seq(
+          "production/customers" -> parquet(graft.etl.Cleanse.cleanseCustomers _),
+          "production/products" -> parquet(graft.etl.Cleanse.cleanseProducts _),
+          "production/lineitems" -> parquet(graft.etl.Cleanse.cleanseLineitems _),
+          "quality/checks" -> parquet(graft.quality.Quality.qualityChecks _),
+          "monitoring/volume_anomaly" -> parquet(graft.monitor.Monitor.volumeAnomaly _),
+          "monitoring/freshness" -> parquet(graft.monitor.Monitor.freshnessLag _),
+          "streaming/events" -> { (path: String) =>
+            graft.streaming.Streams.streamToIncrementalParquet(spark, sf, path).awaitTermination() },
+          "corpus" -> { (path: String) =>
+            Sources.writeSharded(graft.text.Curation.publishedCorpus(spark, sf), path, "doc_id",
+              Pipeline.CorpusShards) })).toMap
+    assert(withCodegen.keySet == outputs.map(_._1).toSet)
+    def render(v: Any): String = v match {
+      case null => "null"
+      case b: Array[Byte] => b.map("%02x".format(_)).mkString("0x", "", "")
+      case r: Row => r.toSeq.map(render).mkString("[", ",", "]")
+      case m: scala.collection.Map[_, _] =>
+        m.toSeq.map { case (k, x) => s"${render(k)}->${render(x)}" }.sorted.mkString("{", ",", "}")
+      case xs: scala.collection.Seq[_] => xs.map(render).mkString("[", ",", "]")
+      case x => x.toString
+    }
+    def rows(dir: String, format: String): Seq[String] =
+      if (format == "csv")
+        new java.io.File(dir).listFiles().filter(_.getName.endsWith(".csv")).toSeq
+          .flatMap(f => Files.readAllLines(f.toPath).asScala).sorted
+      else spark.read.parquet(dir).collect().map(render).toSeq.sorted
+    val ref = Files.createTempDirectory("graft_pipe_codegen").toString
+    outputs.foreach { case (rel, format) =>
+      withCodegen(rel)(s"$ref/$rel")
+      val (interpreted, compiled) = (rows(s"$out/$rel", format), rows(s"$ref/$rel", format))
+      assert(interpreted == compiled, s"$rel: ${interpreted.diff(compiled).take(3)} vs " +
+        s"${compiled.diff(interpreted).take(3)}")
+    }
 
     // streaming stage landed every distinct event exactly once …
     val landed = spark.read.parquet(s"$out/streaming/events")

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sim.Pq
-import org.apache.spark.sql.functions._
 
 /** Product-quantization invariants (the oracle proves the bit-exact
   * replay; these prove the encoding/search contract). */

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sim.Similarity
-import org.apache.spark.sql.functions._
 
 /** Int8 quantization must preserve cosine geometry well enough to rank
   * with: reconstruct vectors from the codes and bound the cosine error

@@ -113,7 +113,6 @@ class RelevanceSpec extends SparkSpec {
   }
 
   test("hybrid RRF fuses exactly 1/(k+b_rank) + 1/(k+a_rank) of its inputs") {
-    import org.apache.spark.sql.functions._
     val out = Relevance.hybridRrfSearch(spark, sf).collect()
     assert(out.length == 30, "3 queries x top-10")
     // recompute every fused score from the two REGISTERED source ops
@@ -141,7 +140,6 @@ class RelevanceSpec extends SparkSpec {
   }
 
   test("hybrid rerank: permutes exactly the fused shortlist, scores recomputable from raw embeddings") {
-    import org.apache.spark.sql.functions._
     val out = Relevance.hybridRerankSearch(spark, sf).collect()
     val fused = Relevance.hybridRrfSearch(spark, sf).collect()
     // same (query, doc) set as the first stage — rerank reorders, never

@@ -51,6 +51,15 @@ class SessionsSpec extends AnyFunSuite {
     assert(opts("spark.sql.shuffle.partitions") == "8")
     assert(opts("spark.shuffle.compress") == "false")
     assert(opts("spark.shuffle.spill.compress") == "false")
+    assert(opts("spark.hadoop.fs.file.impl") == classOf[sources.NioLocalFileSystem].getName)
+  }
+
+  test("pipeline session: UTC, cores as partitions, the NIO local filesystem") {
+    val opts = builderOptions(Pipeline.builder("3"))
+    assert(opts("spark.master") == "local[3]")
+    assert(opts("spark.sql.shuffle.partitions") == "3")
+    assert(opts("spark.sql.session.timeZone") == "UTC")
+    assert(opts("spark.hadoop.fs.file.impl") == classOf[sources.NioLocalFileSystem].getName)
   }
 
   test("local adaptive profile: 256-partition floor, parallelismFirst off, a larger count honored") {

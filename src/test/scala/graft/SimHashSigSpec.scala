@@ -36,7 +36,7 @@ class SimHashSigSpec extends SparkSpec {
   test("simhash of an empty token array is 0 (all counters negative or zero)") {
     import spark.implicits._
     val out = Seq(Array.empty[String]).toDF("toks")
-      .select(SimHashSig.of(col("toks")).as("s")).head.getLong(0)
+      .select(SimHashSig.of(col("toks")).as("s")).head().getLong(0)
     assert(out == 0L)
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.text.TextOps
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the cross-source near-dup matrix against a from-scratch rollup
   * of the (already spec- and oracle-pinned) MinHash-LSH pair frame. */

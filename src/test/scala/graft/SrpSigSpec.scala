@@ -19,7 +19,7 @@ class SrpSigSpec extends SparkSpec {
   test("srp buckets stay in the 8-bit range") {
     val mm = Tables.embeddings(spark, sf)
       .select(SrpSig.of(col("embedding")).as("b"))
-      .agg(min("b"), max("b")).head
+      .agg(min("b"), max("b")).head()
     assert(mm.getInt(0) >= 0 && mm.getInt(1) <= 255)
   }
 

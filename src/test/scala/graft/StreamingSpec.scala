@@ -46,7 +46,7 @@ class StreamingSpec extends SparkSpec {
     val gapSecs = 30L * 60
     val ev = Tables.events(spark, sf)
       .select(col("user_id"), unix_micros(col("ts")).as("m"))
-    val finalWatermarkMs = ev.agg(max("m")).head.getLong(0) / 1000
+    val finalWatermarkMs = ev.agg(max("m")).head().getLong(0) / 1000
     val openUsers = ev.groupBy("user_id").agg(max("m").as("last_m"))
       .filter((expr("last_m div 1000000") + gapSecs + 1) * 1000 > finalWatermarkMs)
       .select("user_id")
@@ -345,7 +345,7 @@ class StreamingSpec extends SparkSpec {
 
   test("sliding windows double-count each event") {
     val total = Streams.eventsSliding(spark, sf)
-      .agg(sum("n_events")).head.getLong(0)
+      .agg(sum("n_events")).head().getLong(0)
     assert(total == 2 * Tables.events(spark, sf).count())
   }
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ext.TemporalJoins
-import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 

@@ -39,7 +39,7 @@ class TemporalJoinsSpec extends SparkSpec {
     val right = Seq((1L, 50L, Some(5.0), 1L), (1L, 90L, None, 2L))
       .toDF("k", "rt", "v", "rid")
     val out = TemporalJoins.asofJoin(left, right, Seq("k"), "t", "rt",
-      payload = Seq("v", "rid"), rightTieBreak = Seq("rid")).head
+      payload = Seq("v", "rid"), rightTieBreak = Seq("rid")).head()
     assert(out.getAs[Long]("rid") == 2L)
     assert(out.isNullAt(out.fieldIndex("v")),
       s"payload mixed fields across right rows: $out")

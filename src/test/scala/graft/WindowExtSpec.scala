@@ -1,7 +1,6 @@
 package graft
 
 import graft.analytics.WindowOps
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 class WindowExtSpec extends SparkSpec {
@@ -21,16 +20,16 @@ class WindowExtSpec extends SparkSpec {
   test("minhash_sig is callable from SQL once registered") {
     graft.functions.GraftExtensions.register(spark)
     val sig = spark.sql("SELECT minhash_sig(array('a b c', 'b c d')) AS m")
-      .head.getSeq[Long](0)
+      .head().getSeq[Long](0)
     assert(sig.length == 16 && sig.forall(_ > 0))
     val sig4 = spark.sql("SELECT minhash_sig(array('a b c'), 4) AS m")
-      .head.getSeq[Long](0)
+      .head().getSeq[Long](0)
     assert(sig4.length == 4)
     // matches the Column-API expression
     import spark.implicits._
     val viaCol = Seq(Seq("a b c", "b c d")).toDF("sh")
       .select(graft.functions.MinHashSig.signatureOf("sh").as("m"))
-      .head.getSeq[Long](0)
+      .head().getSeq[Long](0)
     assert(viaCol == sig)
   }
 }

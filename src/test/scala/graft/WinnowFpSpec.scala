@@ -46,7 +46,7 @@ class WinnowFpSpec extends SparkSpec {
     // windows of 2: min(25027,25285)=25027, min(25285,25543)=25285
     val out = Seq("abcd").toDF("text")
       .select(WinnowFp.of(col("text"), k = 2, w = 2).as("fps"))
-      .head.getSeq[Long](0)
+      .head().getSeq[Long](0)
     assert(out == Seq(25027L, 25285L))
   }
 
@@ -119,7 +119,6 @@ class WinnowFpSpec extends SparkSpec {
   }
 
   test("truncated multi-byte UTF-8 tail degrades gracefully instead of overrunning") {
-    import spark.implicits._
     // '漢' is 3 bytes (e6 bc a2); keeping only the first 1-2 bytes makes
     // a malformed tail — reachable via cast(binary as string) or corrupt
     // data. The decode must stop at the partial character (dropping it),
@@ -141,10 +140,10 @@ class WinnowFpSpec extends SparkSpec {
   test("winnow_fp is callable from SQL via the extension registration") {
     graft.functions.GraftExtensions.register(spark)
     val viaSql = spark.sql(
-      "SELECT winnow_fp('abcd', 2, 2) AS fps").head.getSeq[Long](0)
+      "SELECT winnow_fp('abcd', 2, 2) AS fps").head().getSeq[Long](0)
     assert(viaSql == Seq(25027L, 25285L))
     val defaults = spark.sql(
-      "SELECT winnow_fp('the quick brown fox jumps over') AS fps").head.getSeq[Long](0)
+      "SELECT winnow_fp('the quick brown fox jumps over') AS fps").head().getSeq[Long](0)
     assert(defaults == TextOps.winnowReference(
       "the quick brown fox jumps over", WinnowFp.DefaultK, WinnowFp.DefaultW))
   }

@@ -57,7 +57,7 @@ class WordShinglesSpec extends SparkSpec {
     import spark.implicits._
     val out = Seq("x y x y x y").toDF("text")
       .select(WordShingles.of(expr("split(text, ' ')")).as("sh"))
-      .head.getSeq[String](0)
+      .head().getSeq[String](0)
     assert(out == Seq("x y x", "y x y"))
   }
 }

@@ -1,7 +1,6 @@
 package graft.analytics
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** The rank-selection cores are shared generic machinery (payment
   * methods, languages, priorities today — arbitrary group columns

@@ -4,9 +4,10 @@
 # -> DDL -> generate -> ingest -> transform -> load -> pytest -> row
 # sanity). Here the stages are: compile -> full test suite -> oracle
 # correctness gate at sf0.01 and sf0.001, and at sf0.001 under the
-# ladder's AQE profile (every registered query vs DuckDB) -> a smoke of
-# the Probe and ExplainDump dev mains -> one end-to-end Pipeline smoke
-# run -> benchmark self-test (every benchmarked op's output hash against
+# ladder's AQE profile and on one core (every registered query vs
+# DuckDB) -> a smoke of the Probe and ExplainDump dev mains -> end-to-end
+# Pipeline runs on each side of its evaluation-profile gate -> benchmark
+# self-test (every benchmarked op's output hash against
 # perfbench/expected.json).
 # Nonzero exit on any failure.
 #
@@ -31,7 +32,7 @@ sbt -batch test
 # the 168/168 bar holds at both driver scales: the given dir and its
 # sf0.001 sibling
 SMALL="$(dirname "$SF")/sf0.001"
-echo "== [3/6] oracle correctness gate ($SF, $SMALL, $SMALL with AQE) =="
+echo "== [3/6] oracle correctness gate ($SF, $SMALL, $SMALL with AQE, $SMALL on one core) =="
 for dir in "$SF" "$SMALL"; do
   out="$WORK/verify-$(basename "$dir")"
   [ -d "$out" ] && continue # SF is itself the sf0.001 dir
@@ -44,6 +45,11 @@ done
 out="$WORK/verify-aqe-$(basename "$SMALL")"
 SPARK_GRAFT_AQE=1 sbt -batch "runMain graft.Verify $SMALL $out"
 python3 tools/check.py "$SMALL" "$out"
+# and on one core: one task slot, so no result may depend on tasks
+# running side by side
+out="$WORK/verify-1cpu-$(basename "$SMALL")"
+SPARK_GRAFT_CPUS=1 sbt -batch "runMain graft.Verify $SMALL $out"
+python3 tools/check.py "$SMALL" "$out"
 
 echo "== [4/6] dev mains smoke ($SF) =="
 # Probe and ExplainDump start through the same Sessions path as Bench and
@@ -53,14 +59,26 @@ grep -q 'q01_top_products rows=' "$WORK/probe.log"
 sbt -batch "runMain graft.ExplainDump $SF $WORK/plans.md q01_top_products"
 grep -q '^## q01_top_products' "$WORK/plans.md"
 
-echo "== [5/6] pipeline smoke run =="
-sbt -batch "runMain graft.Pipeline $SF $WORK/pipeline"
-test -s "$WORK/pipeline/pipeline_execution_report.json"
-# the run succeeded, every warehouse table loaded its source's rows, and
-# the monitoring report carries the score the quality step handed on
-python3 - "$WORK/pipeline" <<'PY'
+# the DAG on each side of its evaluation-profile gate (Pipeline.
+# InterpretedBelowBytes): $SF is below it and runs interpreted, its sf0.1
+# sibling is above it and runs with code generation, as every query did
+# before the gate; the reports' compile counts show which profile ran
+LARGE="$(dirname "$SF")/sf0.1"
+echo "== [5/6] pipeline runs ($SF interpreted, $LARGE compiled) =="
+for dir in "$SF" "$LARGE"; do
+  out="$WORK/pipeline-$(basename "$dir")"
+  [ -d "$out" ] && continue # SF is itself the sf0.1 dir
+  profile=interpreted
+  [ "$dir" = "$LARGE" ] && profile=compiled
+  sbt -batch "runMain graft.Pipeline $dir $out"
+  test -s "$out/pipeline_execution_report.json"
+  # the run succeeded, every warehouse table loaded its source's rows,
+  # the monitoring report carries the score the quality step handed on,
+  # and the DAG compiled as many classes as its profile does (at most 70
+  # interpreted, as PipelineSpec bounds it; about 530 compiled)
+  python3 - "$out" "$profile" <<'PY'
 import json, sys
-out = sys.argv[1]
+out, profile = sys.argv[1], sys.argv[2]
 report = json.load(open(f"{out}/pipeline_execution_report.json"))
 assert report["status"] == "success", f"pipeline status {report['status']}"
 loads = json.load(open(f"{out}/warehouse/load_report.json"))
@@ -70,7 +88,12 @@ quality = json.load(open(f"{out}/quality/quality_report.json"))["quality_score"]
 monitored = json.load(open(f"{out}/monitoring/monitoring_report.json"))[
     "checks"]["data_quality"]["quality_score"]
 assert monitored == quality, f"monitoring quality_score {monitored} != quality report's {quality}"
+compiles = sum(s["codegen_compiles"] for s in report["steps"])
+ok = compiles <= 70 if profile == "interpreted" else compiles >= 300
+assert ok, f"{compiles} codegen compiles: not the {profile} profile"
+print(f"pipeline {out}: {profile}, {compiles} codegen compiles")
 PY
+done
 
 echo "== [6/6] benchmark self-test =="
 # Both benchmark workloads briefly, every output checked against the
