@@ -5,8 +5,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** One registered op, declared once in its module's `ops`: the key, the
   * Spark query over an sf directory, the DuckDB-equivalent oracle SQL over
   * the same parquet tables (column names and values match exactly — see
-  * [[Det]]), and the op's bench roster class. */
-final case class Op(key: String, run: Op.Q, oracleSql: String, roster: Op.Roster = Op.Eval)
+  * [[Det]]), the op's bench roster class, and the plan hazards its
+  * physical plan is allowed, each with the one-line reason it is safe
+  * ([[PlanAudit]] fails on a hazard without a reason and on a reason
+  * without its hazard). */
+final case class Op(key: String, run: Op.Q, oracleSql: String, roster: Op.Roster = Op.Eval,
+                    hazards: Map[Op.Hazard, String] = Map.empty)
 
 object Op {
   /** A registered query: (session, sf dir) → its result. */
@@ -32,6 +36,22 @@ object Op {
     * every op) but never ride a bench rung: round 12's 300× rung overran
     * its round by hours because a capture row sat on the roster. */
   case object Eval extends Roster("eval")
+
+  /** A physical-plan node that is a scale hazard unless its input is
+    * bounded; `name` is its field in `docs/PLAN_AUDIT.json`. */
+  sealed abstract class Hazard(val name: String)
+  /** `ExpandExec`: multiplies its input rows (distinct aggregates,
+    * grouping sets, unpivot). */
+  case object Expand extends Hazard("expand")
+  /** `SortAggregateExec`: sorts its whole input instead of hashing it. */
+  case object SortAggregate extends Hazard("sort_aggregate")
+  /** `CartesianProductExec`: every row of one side against every row of
+    * the other. */
+  case object CartesianProduct extends Hazard("cartesian_product")
+  /** `WindowExec` with an empty `partitionSpec`: every row through one
+    * task. */
+  case object GlobalWindow extends Hazard("global_window")
+  val Hazards: Seq[Hazard] = Seq(Expand, SortAggregate, CartesianProduct, GlobalWindow)
 
   /** Key → op; throws on a key declared twice, naming it. */
   def index(ops: Seq[Op]): Map[String, Op] = {

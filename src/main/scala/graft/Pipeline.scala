@@ -53,6 +53,8 @@ object Pipeline {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl", classOf[sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[sources.NioLocalFileSystem.Fs].getName)
 
   /** The eight-stage DAG as orchestrated steps, under the evaluation
     * profile [[interpretedProfile]] picks from the source bytes. */

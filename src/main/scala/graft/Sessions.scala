@@ -74,6 +74,8 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl", classOf[sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[sources.NioLocalFileSystem.Fs].getName)
     val tuned =
       if (adaptive) b
         .config("spark.sql.shuffle.partitions", initialPartitions.toString)
@@ -89,17 +91,16 @@ object Sessions {
     tuned.withExtensions(new functions.GraftExtensions)
   }
 
-  /** Every unpartitioned window a registered query plans runs over a
-    * provably BOUNDED frame — a top-k result after a limit
-    * (`analytics/Stats.scala:47`: 5 rows), distinct-value slabs of a
-    * fixed domain (`Stats.scala:268`: ≤101 discount / ~50 quantity
-    * values), a ≤30-row daily roster (`monitor/Monitor.scala:113`),
-    * letter-pair and vocab-bounded BPE ranks (`text/TextOps.scala:1117,
-    * 1445`) — anything corpus-sized goes through [[Dist]]'s
-    * range-partitioned cumsums instead. WindowExec cannot see that
-    * invariant, so its per-instance "No Partition Defined" WARN is pure
-    * noise here, and dozens of them flooded the r15 bench tail, burying
-    * real plan warnings. Pin that ONE logger package to ERROR.
+  /** Every unpartitioned window a registered query plans is listed in
+    * its op's [[Op.hazards]] under [[Op.GlobalWindow]], with the reason
+    * its frame is bounded or, for the one that is not
+    * (`funnel_time_to_convert`), why not; PlanAuditSpec fails on one
+    * that is not listed. Anything corpus-sized goes through [[Dist]]'s
+    * range-partitioned cumsums instead. WindowExec cannot see those
+    * bounds, so its per-instance "No Partition Defined" WARN says
+    * nothing the allowlist does not, and dozens of them flooded the r15
+    * bench tail, burying real plan warnings. Pin that ONE logger
+    * package to ERROR.
     *
     * `sparkContext.setLogLevel` goes through log4j2's `setAllLevels`,
     * which rewrites EVERY existing logger config — including this one —

@@ -324,5 +324,8 @@ ORDER BY dow, hod"""
     Op("events_user_funnel", eventsUserFunnel, eventsUserFunnelSql),
     Op("events_cohort_retention", cohortRetention, cohortRetentionSql),
     Op("events_type_transitions", typeTransitions, typeTransitionsSql, Ext),
-    Op("funnel_time_to_convert", funnelTimeToConvert, funnelTimeToConvertSql))
+    Op("funnel_time_to_convert", funnelTimeToConvert, funnelTimeToConvertSql, hazards = Map(
+      Op.GlobalWindow -> ("NOT bounded: rankSelect partitions by the constant cohort 'all', " +
+        "which the optimizer folds away, so its running sum runs in one task over every " +
+        "distinct conversion duration, a frame that grows with converting users"))))
 }

@@ -121,9 +121,10 @@ object Graph {
     * as the hard `broadcast(nation)` hints), so iterating Spark jobs
     * over it is pure scheduling overhead — the previous distributed
     * form planned 18 Exchanges / 14 scans of a ≤ 625-row parquet
-    * (plans/r16/pagerank_nation_trade_before.txt). The distributed
-    * [[pagerank]] core remains the form for unbounded edge lists and
-    * GraphSpec pins local ≡ distributed on this graph bit-for-bit. */
+    * (`git show 8d51299:plans/r16/pagerank_nation_trade_before.txt`).
+    * The distributed [[pagerank]] core remains the form for unbounded
+    * edge lists and GraphSpec pins local ≡ distributed on this graph
+    * bit-for-bit. */
   def pagerankNationTrade(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val edges = CopurchaseStore.tables(spark, dir)("trade_edges")

@@ -357,9 +357,12 @@ FROM m ORDER BY p_brand"""
 
   val ops: Seq[Op] = Seq(
     Op("ols_by_brand", olsByBrand, olsByBrandSql),
-    Op("skew_diagnosis", skewDiagnosis, skewDiagnosisSql),
+    Op("skew_diagnosis", skewDiagnosis, skewDiagnosisSql, hazards = Map(
+      Op.GlobalWindow -> "the rank window numbers the 5 rows of the distributed top-k")),
     Op("equi_depth_histogram", equiDepthHistogram, equiDepthHistogramSql),
     Op("revenue_concentration", revenueConcentration, revenueConcentrationSql),
     Op("ols_discount_quantity", olsDiscountQuantity, olsDiscountQuantitySql),
-    Op("spearman_discount_quantity", spearmanDiscountQuantity, spearmanDiscountQuantitySql))
+    Op("spearman_discount_quantity", spearmanDiscountQuantity, spearmanDiscountQuantitySql,
+      hazards = Map(Op.GlobalWindow -> ("the two rank maps' running sums run over the distinct " +
+        "discount (at most 101) and quantity (about 50) values"))))
 }

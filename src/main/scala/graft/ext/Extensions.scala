@@ -286,7 +286,9 @@ ORDER BY name_a, name_b"""
     Op("pii_scrub", piiScrub, piiScrubSql),
     Op("text_ngram_freq", ngramFreq, ngramFreqSql),
     Op("events_props_extract", propsExtract, propsExtractSql),
-    Op("rollup_revenue", rollupRevenue, rollupRevenueSql),
+    Op("rollup_revenue", rollupRevenue, rollupRevenueSql, hazards = Map(
+      Op.Expand -> ("ROLLUP(year, month) expands each order ×3 before the partial aggregate; " +
+        "the shuffle carries only the grouped partials"))),
     Op("approx_monthly_transactions", approxMonthlyTransactions, approxMonthlyTransactionsSql),
     Op("heavy_hitter_ngrams", heavyHitterNgrams, heavyHitterNgramsSql, Ext))
 }

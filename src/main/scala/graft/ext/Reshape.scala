@@ -159,7 +159,12 @@ ${melts.mkString("", "\nUNION ALL\n", "\nORDER BY date_key, measure")}""")
 
   val ops: Seq[Op] = Seq(
     Op("pivot_nation_priority", pivotNationPriority, pivotNationPrioritySql),
-    Op("cube_region_segment", cubeRegionSegment, cubeRegionSegmentSql),
-    Op("grouping_sets_revenue", groupingSetsRevenue, groupingSetsRevenueSql),
-    Op("unpivot_daily_measures", unpivotDailyMeasures, unpivotDailyMeasuresSql))
+    Op("cube_region_segment", cubeRegionSegment, cubeRegionSegmentSql, hazards = Map(
+      Op.Expand -> ("CUBE(region, segment) expands each order ×4 before the partial " +
+        "aggregate; the shuffle carries only the grouped partials"))),
+    Op("grouping_sets_revenue", groupingSetsRevenue, groupingSetsRevenueSql, hazards = Map(
+      Op.Expand -> ("GROUPING SETS ((yr), (priority)) expands each order ×2 before the " +
+        "partial aggregate; the shuffle carries only the grouped partials"))),
+    Op("unpivot_daily_measures", unpivotDailyMeasures, unpivotDailyMeasuresSql, hazards = Map(
+      Op.Expand -> "the unpivot of five measures expands agg_daily_sales' rows, one per date, ×5")))
 }

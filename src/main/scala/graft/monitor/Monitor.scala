@@ -394,8 +394,13 @@ ORDER BY event_date, o.hod"""
 
   val ops: Seq[Op] = Seq(
     Op("monitor_volume_anomaly", volumeAnomaly, volumeAnomalySql),
-    Op("monitor_mad_anomaly", madAnomaly, madAnomalySql),
+    Op("monitor_mad_anomaly", madAnomaly, madAnomalySql, hazards = Map(
+      Op.GlobalWindow -> ("two value-count medians, each a running sum and a total over " +
+        "the distinct daily counts of a 30-day window: at most 30 rows per window"))),
     Op("monitor_seasonal_anomaly", seasonalAnomaly, seasonalAnomalySql, Ext),
     Op("monitor_freshness_lag", freshnessLag, freshnessLagSql),
-    Op("monitor_health", healthRollup, healthRollupSql))
+    Op("monitor_health", healthRollup, healthRollupSql, hazards = Map(
+      Op.SortAggregate -> ("max_by(is_anomaly, day) over the volume check's 30 daily rows: " +
+        "a string ordering key is not hash-aggregatable, so its partial and final " +
+        "aggregates sort at most 30 rows"))))
 }

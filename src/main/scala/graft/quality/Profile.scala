@@ -167,6 +167,9 @@ WHERE cell_size < $KAnon
 ORDER BY nationkey, segment, acctbal_band_k"""
 
   val ops: Seq[Op] = Seq(
-    Op("profile_tables", profileTables, profileTablesSql),
+    Op("profile_tables", profileTables, profileTablesSql, hazards = Map(
+      Op.Expand -> ("one Expand per profiled table (documents, orders): an exact COUNT(DISTINCT) " +
+        "per column is the profile's definition, so each row is expanded once per distinct " +
+        "column plus one before the partial aggregate; approx_count_distinct is the scale form"))),
     Op("k_anonymity_audit", kAnonymityAudit, kAnonymityAuditSql))
 }

@@ -440,7 +440,9 @@ SELECT phash60, MIN(doc_id) AS keeper_doc_id FROM ph GROUP BY phash60"""
 
   val ops: Seq[Op] = Seq(
     Op("events_hourly_windows", eventsHourly, eventsHourlySql),
-    Op("events_sliding_windows", eventsSliding, eventsSlidingSql),
+    Op("events_sliding_windows", eventsSliding, eventsSlidingSql, hazards = Map(
+      Op.Expand -> ("a 1-hour window sliding by 30 minutes holds each event twice: a ×2 " +
+        "Expand of the events before the partial count"))),
     Op("events_sessionization", eventsSessions, eventsSessionsSql),
     Op("dedup_stream_content_hash", dedupContentBatch, dedupContentBatchSql),
     Op("dedup_stream_phash", phashDedupBatch, phashDedupBatchSql, Ext))

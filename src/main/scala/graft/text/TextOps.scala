@@ -1585,15 +1585,21 @@ FROM per JOIN est USING (source) ORDER BY source"""
     Op("dedup_minhash_lsh", dedupMinhashLsh, dedupMinhashLshSql, Ext),
     Op("dedup_source_matrix", dedupSourceMatrix, dedupSourceMatrixSql, Ext),
     Op("dedup_simhash_pairs", dedupSimhashPairs, dedupSimhashPairsSql, Ext),
-    Op("text_decontamination", decontamination, decontaminationSql),
+    Op("text_decontamination", decontamination, decontaminationSql, hazards = Map(
+      Op.Expand -> ("two COUNT(DISTINCT)s per training doc: the ×3 Expand runs over the " +
+        "train ⋈ benchmark shingle matches only, at most the benchmark's shingles times " +
+        "the df cap, not over the corpus"))),
     Op("bloom_decontamination", bloomDecontamination, bloomDecontaminationSql, Ext),
     Op("text_repetition", textRepetition, textRepetitionSql),
     Op("doc_fingerprint_winnow", docFingerprintWinnow, docFingerprintWinnowSql, Ext),
     Op("winnow_overlap_pairs", winnowOverlapPairs, winnowOverlapPairsSql, Ext),
     Op("winnow_decontamination", winnowDecontamination, winnowDecontaminationSql),
-    Op("bpe_merge_pairs", bpeMergePairs, bpeMergePairsSql, Ext),
+    Op("bpe_merge_pairs", bpeMergePairs, bpeMergePairsSql, Ext, Map(
+      Op.GlobalWindow -> "the rank window runs over the distinct letter pairs: at most 26² = 676 rows")),
     Op("bpe_train_merges", bpeTrainMerges, bpeTrainMergesSql, Ext),
-    Op("bpe_token_histogram", bpeTokenHistogram, bpeTokenHistogramSql, Ext),
+    Op("bpe_token_histogram", bpeTokenHistogram, bpeTokenHistogramSql, Ext, Map(
+      Op.GlobalWindow -> ("the rank window runs over the distinct tokens of the trained " +
+        "segmentation: the letters plus one token per learned merge"))),
     Op("bpe_source_token_accounting", bpeSourceTokenAccounting, bpeSourceTokenAccountingSql, Ext),
     Op("bpe_merge_drift", bpeMergeDrift, bpeMergeDriftSql, Ext))
 }

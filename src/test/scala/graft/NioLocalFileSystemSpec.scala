@@ -2,16 +2,20 @@ package graft
 
 import java.nio.file.{Files, Path => JPath}
 import java.nio.file.attribute.PosixFilePermissions
+import java.util.EnumSet
 
 import graft.sources.NioLocalFileSystem
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The local filesystem the sessions register as `fs.file.impl` sets
-  * the same modes as Hadoop's own, which starts a `chmod` per call. */
+/** The local filesystem the sessions register as `fs.file.impl` (and
+  * its `FileContext` twin, `fs.AbstractFileSystem.file.impl`) sets the
+  * same modes as Hadoop's own, which starts a `chmod` per call. */
 class NioLocalFileSystemSpec extends AnyFunSuite {
+
+  private def mode(p: JPath) = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
 
   /** Modes of a directory pair, a created file and its checksum, and a
     * file set to 0600, as `impl` leaves them. */
@@ -28,7 +32,6 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
       fs.create(new Path(base, "a/b/f")).close()
       fs.create(new Path(base, "a/g")).close()
       fs.setPermission(new Path(base, "a/g"), new FsPermission("600"))
-      def mode(p: JPath) = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
       Seq("a", "a/b", "a/b/f", "a/b/.f.crc", "a/g").map(r => mode(root.resolve(r)))
     } finally fs.close()
   }
@@ -37,5 +40,17 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
     val nio = modes(classOf[NioLocalFileSystem])
     assert(nio == Seq("rwxr-xr-x", "rwxr-xr-x", "rw-r--r--", "rw-r--r--", "rw-------"))
     assert(nio == modes(classOf[LocalFileSystem]))
+  }
+
+  test("a FileContext create resolves to the NIO filesystem and writes mode 0644") {
+    // Spark's streaming checkpoint writes through FileContext, whose file
+    // scheme reads fs.AbstractFileSystem.file.impl, not fs.file.impl
+    val conf = new Configuration()
+    conf.set("fs.AbstractFileSystem.file.impl", classOf[NioLocalFileSystem.Fs].getName)
+    val root = Files.createTempDirectory("graft_nio_fc")
+    val fc = FileContext.getFileContext(root.toUri, conf)
+    assert(fc.getDefaultFileSystem.getClass == classOf[NioLocalFileSystem.Fs])
+    fc.create(new Path(new Path(root.toUri), "f"), EnumSet.of(CreateFlag.CREATE)).close()
+    assert(Seq("f", ".f.crc").map(r => mode(root.resolve(r))) == Seq("rw-r--r--", "rw-r--r--"))
   }
 }

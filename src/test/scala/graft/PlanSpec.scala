@@ -12,19 +12,13 @@ class PlanSpec extends SparkSpec {
   private def physicalPlan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  /** Collect WindowExec nodes THROUGH the AQE wrappers — a bare
-    * `plan.collect` stops at AdaptiveSparkPlanExec and reports an empty
-    * list, silently making window-shape assertions vacuous. */
+  /** WindowExec nodes THROUGH the AQE wrappers, subqueries and cached
+    * plans ([[PlanAudit.nodes]]) — a bare `plan.collect` stops at
+    * AdaptiveSparkPlanExec and reports an empty list, silently making
+    * window-shape assertions vacuous. */
   private def windowsOf(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.window.WindowExec] = p match {
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      windowsOf(a.executedPlan)
-    case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      windowsOf(s.plan)
-    case w: org.apache.spark.sql.execution.window.WindowExec =>
-      w +: w.children.flatMap(windowsOf)
-    case other => other.children.flatMap(windowsOf)
-  }
+      : Seq[org.apache.spark.sql.execution.window.WindowExec] =
+    PlanAudit.nodes(p).collect { case (_, w: org.apache.spark.sql.execution.window.WindowExec) => w }
 
   test("cleanse filters are pushed down to the parquet scan") {
     val plan = physicalPlan(Cleanse.cleanseProducts(spark, sf))
@@ -111,41 +105,25 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("no single-partition window anywhere in dim builds or q05") {
+  test("no single-partition window anywhere in dim builds") {
     // a WindowExec with an empty partitionSpec funnels ALL rows through
     // one task — the dim surrogate keys use partition-offset numbering
-    // and q05 a broadcast grand-total join precisely to avoid this.
-    // The dim plans come from the BUILD functions, not SparkEntry: the
-    // served dims are parquet scans of the stored assets, so asserting
-    // on those would be vacuous (any window lives in the build plan).
+    // precisely to avoid this. The dim plans come from the BUILD
+    // functions, not SparkEntry: the served dims are parquet scans of
+    // the stored assets, which the plan audit (PlanAuditSpec) covers, so
+    // asserting on those would be vacuous (any window lives in the build
+    // plan).
     val w = warehouse.Warehouse
     val dimBuilds: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
       "dim_part build"     -> w.buildDimPart(spark, sf),
       "dim_customer build" -> w.buildDimCustomer(spark, sf),
       "dim_date build"     -> w.buildDimDate(spark, sf),
-      "dim_payment build"  -> w.buildDimPayment(spark, sf),
-      "q05_payment_distribution" -> SparkEntry.queries("q05_payment_distribution")(spark, sf))
+      "dim_payment build"  -> w.buildDimPayment(spark, sf))
     dimBuilds.foreach { case (q, df) =>
       val global = windowsOf(df.queryExecution.executedPlan)
         .filter(_.partitionSpec.isEmpty)
       assert(global.isEmpty,
         s"$q has a zero-partition window:\n${df.queryExecution.executedPlan}")
-    }
-  }
-
-  test("q05/q06/q07/q09 aggregate at collapse grain — no Expand over the fact") {
-    // COUNT(DISTINCT key) in the same aggregate as a sum plans an
-    // Expand that doubles the shuffled fact (measured 47.5 s at the
-    // dim-scaled 300× rung before q07's collapse); the q02-style
-    // pre-aggregation to the distinct key's grain makes it a plain
-    // count. A reintroduced distinct-over-lines would bring Expand
-    // back — fail the build, not just drift the 300× bench.
-    Seq("q05" -> Analytics.q05 _, "q06" -> Analytics.q06 _,
-        "q07" -> Analytics.q07 _, "q09" -> Analytics.q09 _).foreach {
-      case (name, q) =>
-        val plan = physicalPlan(q(spark, sf))
-        assert(!plan.contains("Expand"),
-          s"$name re-grew a fact-wide Expand:\n${plan.take(2000)}")
     }
   }
 
@@ -175,30 +153,6 @@ class PlanSpec extends SparkSpec {
     assert(scans == 1, s"expected exactly one orders scan, got $scans:\n${plan.take(3000)}")
     assert(!plan.contains("InMemoryTableScan"),
       s"rfm bounds cache leaked into the served plan:\n${plan.take(3000)}")
-  }
-
-  test("q05/q09 per-order collapse hash-aggregates (no SortAggregate over the fact)") {
-    // the collapse key set must stay hash-aggregatable: carrying a
-    // STRING through min() (not a fixed-size agg buffer) silently
-    // degrades the per-order pre-aggregation to a SortAggregate — a
-    // full sort of the fact, worse than the Expand the rewrite removes.
-    Seq("q05" -> Analytics.q05 _, "q09" -> Analytics.q09 _).foreach {
-      case (name, q) =>
-        val plan = physicalPlan(q(spark, sf))
-        assert(!plan.contains("SortAggregate"),
-          s"$name sort-aggregates the fact collapse:\n${plan.take(3000)}")
-    }
-  }
-
-  test("no query plan contains a cartesian product") {
-    // cross joins are only legal against single-row or broadcast stats
-    // relations (grand totals); a CartesianProduct over two big inputs
-    // is always a bug.
-    Seq("q02_monthly_trend", "q06_geo_revenue", "dedup_jaccard_pairs")
-      .foreach { q =>
-        val plan = physicalPlan(SparkEntry.queries(q)(spark, sf))
-        assert(!plan.contains("CartesianProduct"), s"$q has a cartesian product")
-      }
   }
 
   test("corpus curation scans documents twice and joins once") {
@@ -373,27 +327,6 @@ class PlanSpec extends SparkSpec {
         "don't infer an IsNotNull filter that re-evaluates the argmin")
   }
 
-  test("agg_* warehouse tables aggregate at collapse grain — no Expand, no SortAggregate") {
-    // the r16 audit missed these three: agg_daily_sales ran TWO
-    // COUNT(DISTINCT)s per date (a ×3 Expand of the shuffled fact —
-    // the q07-at-300× cliff shape), the other two the 4-aggregate
-    // single-distinct chain. All three now pre-aggregate to the
-    // distinct key's grain (orders never span dates; an order has one
-    // customer/product row set), so a reintroduced distinct-over-lines
-    // fails here, not on the 300× rung.
-    Seq(
-      "agg_daily_sales" -> (warehouse.Warehouse.aggDailySales _),
-      "agg_product_performance" -> (warehouse.Warehouse.aggProductPerformance _),
-      "agg_customer_metrics" -> (warehouse.Warehouse.aggCustomerMetrics _)
-    ).foreach { case (name, q) =>
-      val plan = physicalPlan(q(spark, sf))
-      assert(!plan.contains("Expand"),
-        s"$name re-grew a fact-wide Expand:\n${plan.take(2000)}")
-      assert(!plan.contains("SortAggregate"),
-        s"$name sort-aggregates the fact collapse:\n${plan.take(2000)}")
-    }
-  }
-
   /** Static plan with exchange reuse decided at PLANNING (AQE defers it
     * to stage materialization, which static string assertions can't
     * see) — conf restored afterwards. */
@@ -430,72 +363,26 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("vector-search plans: embeddings scans and exchanges stay pinned") {
-    // one probe, one ADC top-k, one exact top-k and one recall tail serve
-    // IVF, PQ and IVF-PQ; sharing a stage must never add a scan of the
-    // collection or a shuffle to any op that uses it. Counts recorded at
-    // the per-op implementations the shared stages replaced.
-    Seq(
-      // (op, embeddings FileScans, Exchange operators)
-      ("ivf_search", 1, 3),
-      ("pq_search", 1, 4),
-      ("pq_search_rerank", 3, 6),
-      ("ivfpq_search", 2, 6),
-      ("ivf_recall", 3, 9),
-      ("pq_recall", 3, 10),
-      ("pq_rerank_recall", 5, 12),
-      ("ivfpq_recall", 4, 12)
-    ).foreach { case (name, scans, exchanges) =>
-      val plan = staticPlan(SparkEntry.queries(name)(spark, sf))
-      val got = (plan.linesIterator.count(l => l.contains("FileScan") && l.contains("embeddings")),
-        plan.linesIterator.count(_.contains("Exchange")))
-      assert(got == ((scans, exchanges)),
-        s"$name: (embeddings scans, exchanges) = $got, pinned ($scans, $exchanges):\n${plan.take(4000)}")
-    }
-  }
-
-  test("text-overlap plans: documents scans, exchanges and feature evaluations stay pinned") {
+  test("text-overlap plans: feature evaluations stay pinned") {
     // one capped relation and one cell-pair stream serve the exact
-    // overlap ops; sharing them must never add a scan of the corpus, a
-    // shuffle or a feature evaluation to any op that uses them. Counts
-    // recorded at the per-op implementations the shared core replaced,
-    // except winnow_overlap_pairs, which moved from a kept ⋈ kept
-    // self-join (2, 8, 3, one inner join) onto the cell-pair stream.
-    def inner(l: String) = l.contains("Join") && l.contains("Inner")
+    // overlap ops; sharing them must never add a feature evaluation to
+    // any op that uses them (their scans, exchanges and joins are pinned
+    // by the plan audit, PlanAuditSpec). Counts recorded at the per-op
+    // implementations the shared core replaced.
     Seq(
-      // (op, documents FileScans, Exchange operators, wordshingles/winnowfp operators)
-      ("dedup_jaccard_pairs", 2, 9, 2),
-      ("dedup_containment_pairs", 2, 9, 2),
-      ("text_decontamination", 3, 6, 3),
-      ("bloom_decontamination", 3, 6, 3),
-      ("winnow_decontamination", 3, 9, 3),
-      ("corpus_published", 6, 13, 3),
-      ("winnow_overlap_pairs", 2, 6, 2)
-    ).foreach { case (name, scans, exchanges, features) =>
+      // (op, wordshingles/winnowfp operators)
+      ("dedup_jaccard_pairs", 2),
+      ("dedup_containment_pairs", 2),
+      ("text_decontamination", 3),
+      ("bloom_decontamination", 3),
+      ("winnow_decontamination", 3),
+      ("corpus_published", 3),
+      ("winnow_overlap_pairs", 2)
+    ).foreach { case (name, features) =>
       val plan = staticPlan(SparkEntry.queries(name)(spark, sf))
-      val got = (plan.linesIterator.count(l => l.contains("FileScan") && l.contains("documents")),
-        plan.linesIterator.count(_.contains("Exchange")),
-        plan.linesIterator.count(l => l.contains("wordshingles(") || l.contains("winnowfp(")))
-      assert(got == ((scans, exchanges, features)),
-        s"$name: (documents scans, exchanges, feature operators) = $got, " +
-          s"pinned ($scans, $exchanges, $features):\n${plan.take(4000)}")
-      if (name == "winnow_overlap_pairs")
-        assert(!plan.linesIterator.exists(inner), s"$name joins:\n${plan.take(4000)}")
-    }
-  }
-
-  test("exact prefix-cut ops never row-join the full buckets") {
-    // full buckets' contributions come from the bounded histogram, so
-    // the corpus is read at most 3× (histogram, straddle descriptor,
-    // boundary bucket ordering) — the pre-r17 row-level form read it
-    // 4× and streamed every selected row through a join + union just
-    // to re-aggregate it.
-    Seq("token_budget_exact", "stratified_sample_exact").foreach { name =>
-      val plan = staticPlan(SparkEntry.queries(name)(spark, sf))
-      val scans = plan.linesIterator.count(l =>
-        l.contains("FileScan") && l.contains("documents"))
-      assert(scans <= 3,
-        s"$name reads documents $scans times:\n${plan.take(3000)}")
+      val got = plan.linesIterator.count(l => l.contains("wordshingles(") || l.contains("winnowfp("))
+      assert(got == features,
+        s"$name: $got feature operators, pinned $features:\n${plan.take(4000)}")
     }
   }
 }

@@ -52,6 +52,8 @@ class SessionsSpec extends AnyFunSuite {
     assert(opts("spark.shuffle.compress") == "false")
     assert(opts("spark.shuffle.spill.compress") == "false")
     assert(opts("spark.hadoop.fs.file.impl") == classOf[sources.NioLocalFileSystem].getName)
+    assert(opts("spark.hadoop.fs.AbstractFileSystem.file.impl") ==
+      classOf[sources.NioLocalFileSystem.Fs].getName)
   }
 
   test("pipeline session: UTC, cores as partitions, the NIO local filesystem") {
@@ -60,6 +62,8 @@ class SessionsSpec extends AnyFunSuite {
     assert(opts("spark.sql.shuffle.partitions") == "3")
     assert(opts("spark.sql.session.timeZone") == "UTC")
     assert(opts("spark.hadoop.fs.file.impl") == classOf[sources.NioLocalFileSystem].getName)
+    assert(opts("spark.hadoop.fs.AbstractFileSystem.file.impl") ==
+      classOf[sources.NioLocalFileSystem.Fs].getName)
   }
 
   test("local adaptive profile: 256-partition floor, parallelismFirst off, a larger count honored") {

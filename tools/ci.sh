@@ -5,7 +5,8 @@
 # sanity). Here the stages are: compile -> full test suite -> oracle
 # correctness gate at sf0.01 and sf0.001, and at sf0.001 under the
 # ladder's AQE profile and on one core (every registered query vs
-# DuckDB) -> a smoke of the Probe and ExplainDump dev mains -> end-to-end
+# DuckDB) -> a smoke of the Probe and ExplainDump dev mains, and the plan
+# audit regenerated and compared with docs/PLAN_AUDIT.json -> end-to-end
 # Pipeline runs on each side of its evaluation-profile gate -> benchmark
 # self-test (every benchmarked op's output hash against
 # perfbench/expected.json).
@@ -51,13 +52,18 @@ out="$WORK/verify-1cpu-$(basename "$SMALL")"
 SPARK_GRAFT_CPUS=1 sbt -batch "runMain graft.Verify $SMALL $out"
 python3 tools/check.py "$SMALL" "$out"
 
-echo "== [4/6] dev mains smoke ($SF) =="
+echo "== [4/6] dev mains smoke ($SF), plan audit ($SMALL) =="
 # Probe and ExplainDump start through the same Sessions path as Bench and
 # Verify; run each once so a rewiring cannot rot them silently
 sbt -batch "runMain graft.Probe $SF q01_top_products 2" | tee "$WORK/probe.log"
 grep -q 'q01_top_products rows=' "$WORK/probe.log"
 sbt -batch "runMain graft.ExplainDump $SF $WORK/plans.md q01_top_products"
 grep -q '^## q01_top_products' "$WORK/plans.md"
+# the plan audit of every registered key, regenerated in a JVM of its own
+# against the stores stages 2-3 built, is the committed one byte for byte
+# (PlanAuditSpec checks the same in a test JVM of its own)
+sbt -batch "runMain graft.ExplainDump $SMALL $WORK/PLAN_AUDIT.json"
+cmp "$WORK/PLAN_AUDIT.json" docs/PLAN_AUDIT.json
 
 # the DAG on each side of its evaluation-profile gate (Pipeline.
 # InterpretedBelowBytes): $SF is below it and runs interpreted, its sf0.1
