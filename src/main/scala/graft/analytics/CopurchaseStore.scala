@@ -54,18 +54,28 @@ object CopurchaseStore {
   def tables(spark: SparkSession, dir: String): Map[String, DataFrame] =
     IndexStore.loadOrBuild(spark, dir, "copurchase", Version,
       IndexStore.vintage(spark, dir, SourceTables), TableNames) {
-      val li = Tables.lineitem(spark, dir).select("l_orderkey", "l_partkey")
-      val op = li.dropDuplicates("l_orderkey", "l_partkey")
-      Map(
-        "pair_counts" -> Basket.pairCountsOf(li),
-        "item_orders" -> op.groupBy("l_partkey")
-          .agg(count(lit(1)).as("item_orders")),
-        "order_stats" -> op.agg(countDistinct(col("l_orderkey")).as("n_orders")),
-        "trade_edges" -> Graph.tradeEdges(spark, dir))
+      basketTablesOf(Tables.lineitem(spark, dir).select("l_orderkey", "l_partkey")) +
+        ("trade_edges" -> Graph.tradeEdges(spark, dir))
     }
+
+  /** The three lineitem-derived tables over an (l_orderkey, l_partkey)
+    * frame: `pair_counts` ([[Basket.pairCountsOf]]), `item_orders` and
+    * `order_stats`. The store builds them from lineitem; specs build
+    * them from hand-made baskets and run the same serve tails over them. */
+  private[graft] def basketTablesOf(li: DataFrame): Map[String, DataFrame] = {
+    val op = li.dropDuplicates("l_orderkey", "l_partkey")
+    Map(
+      "pair_counts" -> Basket.pairCountsOf(li),
+      "item_orders" -> op.groupBy("l_partkey")
+        .agg(count(lit(1)).as("item_orders")),
+      "order_stats" -> op.agg(countDistinct(col("l_orderkey")).as("n_orders")))
+  }
 
   /** The stored undirected co-purchase edge set (a < b). */
   def edges(spark: SparkSession, dir: String): DataFrame =
-    tables(spark, dir)("pair_counts")
-      .select(col("part_a").as("a"), col("part_b").as("b"))
+    edgesOf(tables(spark, dir))
+
+  /** The undirected edge set (a < b) of the basket tables' pair counts. */
+  private[graft] def edgesOf(t: Map[String, DataFrame]): DataFrame =
+    t("pair_counts").select(col("part_a").as("a"), col("part_b").as("b"))
 }

@@ -29,41 +29,18 @@ import org.apache.spark.sql.types.LongType
   * per source nation sits well under that).
   *
   * Scale posture: the edge build pays ONE big-big shuffle (lineitem ⋈
-  * orders on the order key) with every dim broadcast; edges aggregate
-  * to node-pair grain before any iteration, so each PageRank step is a
-  * join + partial-combined aggregate on frames bounded by |V| and |E|
-  * — never by fact rows. Each step shuffles on the join key once; at
-  * a 100 TB edge list you'd pre-partition `edges` by src and reuse the
-  * exchange across all five steps (the loop reuses one cached edge
-  * frame, so AQE does exactly that).
+  * orders on the order key) with every dim broadcast, once per
+  * collection vintage ([[CopurchaseStore]]); edges aggregate to
+  * nation-pair grain, so the graph is bounded by the nation SCHEMA
+  * (≤ 25² edges at any corpus scale) and the five rank steps run on
+  * the driver ([[pagerankLocal]]). The triangle censuses below read
+  * the co-purchase edge set the same store holds.
   */
 object Graph {
   /** 1.0 of rank in integer units. */
   val RankInit = 1000000000000L
 
   val Iters = 5
-
-  /** Generic integer-arithmetic weighted PageRank over an edge frame
-    * `(src, dst, w)`. Damping 0.85 as exact integer 85/100 splits. */
-  private[graft] def pagerank(edges: DataFrame, iters: Int = Iters): DataFrame = {
-    val nodes = edges.select(col("src").as("node"))
-      .union(edges.select(col("dst"))).distinct()
-    val outw = edges.groupBy("src").agg(sum("w").cast(LongType).as("ow"))
-    val ew = edges.join(outw, "src")
-      .select(col("src"), col("dst"), col("w"), col("ow"))
-    var ranks = nodes.withColumn("r", lit(RankInit))
-    for (_ <- 1 to iters) {
-      val contrib = ew.join(ranks, ew("src") === ranks("node"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(expr("(r div ow) * w + ((r % ow) * w) div ow"))
-          .cast(LongType).as("contrib"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (lit(15L * RankInit / 100L) +
-            expr("(85 * coalesce(contrib, 0L)) div 100")).as("r"))
-    }
-    ranks
-  }
 
   /** Customer-nation → supplier-nation edges weighted by lineitem
     * count: one order-key shuffle; dim join strategy is the planner's
@@ -86,12 +63,11 @@ object Graph {
       .agg(count(lit(1)).as("w"))
   }
 
-  /** Driver-local twin of [[pagerank]] for SCHEMA-BOUNDED graphs: the
-    * identical integer recurrence over an in-memory edge list. Scala's
-    * `/` and `%` on non-negative Longs are the same floor-division /
-    * modulus Spark's `div`/`%` and DuckDB's `//`/`%` compute, so the
-    * ranks are bit-equal to the distributed loop (GraphSpec pins the
-    * equivalence on the real trade graph). Iteration order never
+  /** Integer weighted PageRank for SCHEMA-BOUNDED graphs, over an
+    * in-memory (src, dst, w) edge list; damping 0.85 as exact integer
+    * 85/100 splits. Scala's `/` and `%` on non-negative Longs are the
+    * same floor-division / modulus DuckDB's `//`/`%` computes, so the
+    * oracle's unrolled replay is bit-equal. Iteration order never
     * matters: each step is a pure sum over edges. */
   private[graft] def pagerankLocal(edges: Seq[(String, String, Long)],
                                    iters: Int = Iters): Map[String, Long] = {
@@ -121,10 +97,7 @@ object Graph {
     * as the hard `broadcast(nation)` hints), so iterating Spark jobs
     * over it is pure scheduling overhead — the previous distributed
     * form planned 18 Exchanges / 14 scans of a ≤ 625-row parquet
-    * (`git show 8d51299:plans/r16/pagerank_nation_trade_before.txt`).
-    * The distributed [[pagerank]] core remains the form for unbounded
-    * edge lists and GraphSpec pins local ≡ distributed on this graph
-    * bit-for-bit. */
+    * (`git show 8d51299:plans/r16/pagerank_nation_trade_before.txt`). */
   def pagerankNationTrade(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val edges = CopurchaseStore.tables(spark, dir)("trade_edges")
@@ -202,33 +175,6 @@ ORDER BY rank_units DESC, nation"""
     * (orientation choice cannot change the census). */
   def triangleCount(spark: SparkSession, dir: String): DataFrame =
     censusRowOf(spark, CopurchaseStore.edges(spark, dir))
-
-  /** Raw co-purchase pair stream (pre-distinct): one order-key shuffle
-    * builds each basket, pairs materialize inside the sorted array
-    * (quadratic only in basket size). */
-  private def pairStream(li: DataFrame): DataFrame = li
-    .groupBy("l_orderkey")
-    .agg(array_sort(collect_set("l_partkey")).as("parts"))
-    .select(explode(expr(
-      """flatten(transform(parts, (x, i) ->
-        |  transform(slice(parts, i + 2, size(parts)), y -> struct(x AS a, y AS b))))"""
-        .stripMargin)).as("p"))
-    .select(col("p.a").as("a"), col("p.b").as("b"))
-
-  /** Distinct undirected co-purchase edges a<b. */
-  private[graft] def undirectedEdges(li: DataFrame): DataFrame =
-    pairStream(li).distinct()
-
-  /** DOULION edge sparsification (Tsourakakis et al., KDD 2009): keep
-    * each undirected edge with probability 1/k via a deterministic
-    * md5 coin on the EDGE KEY — a pure function of (a, b), so every
-    * occurrence of an edge flips the same coin (sampling the edge SET,
-    * not the pair stream), any run or cluster layout keeps the same
-    * edges, and the DuckDB oracle replays the draw bit-for-bit. The
-    * filter sits BEFORE the distinct, so the pair-stream shuffle —
-    * not just the wedge stage — shrinks by ~1/k too. */
-  private[graft] def sampledUndirectedEdges(li: DataFrame, k: Int): DataFrame =
-    pairStream(li).filter(expr(doulionCoinE(k))).distinct()
 
   /** Per-node degree of an undirected (a<b) edge list. */
   private[graft] def degreesOf(edges: DataFrame): DataFrame =
@@ -326,12 +272,10 @@ ORDER BY rank_units DESC, nation"""
   private[graft] def trianglesOfEdges(edges: DataFrame): Long =
     censusOf(edges)._4
 
-  private[graft] def triangleCountOver(li: DataFrame): DataFrame =
-    censusRowOf(li.sparkSession, undirectedEdges(li))
-
-  /** Census row over any undirected (a < b) edge frame — the shared
-    * tail of the inline and the served (stored-asset) forms. */
-  private def censusRowOf(spark: SparkSession, edges: DataFrame): DataFrame = {
+  /** Census row over any undirected (a < b) edge frame — the registered
+    * op's tail; specs run it over hand-made baskets'
+    * [[CopurchaseStore.edgesOf]]. */
+  private[graft] def censusRowOf(spark: SparkSession, edges: DataFrame): DataFrame = {
     import spark.implicits._
     val (nv, ne, nw, t) = censusOf(edges)
     // both t and nw < 2⁵³ ⇒ exact double conversion, one IEEE
@@ -342,10 +286,13 @@ ORDER BY rank_units DESC, nation"""
         "transitivity")
   }
 
-  /** The md5 edge coin shared by the inline sampler and the served
-    * form (a pure function of the edge key — filtering the STORED
-    * distinct edge set equals filtering the fresh pair stream). */
-  private def doulionCoinE(k: Int): String =
+  /** DOULION edge sparsification (Tsourakakis et al., KDD 2009): keep
+    * each undirected edge with probability 1/k via a deterministic md5
+    * coin on the EDGE KEY — a pure function of (a, b), so filtering the
+    * stored distinct edge set samples the edge SET, any run or cluster
+    * layout keeps the same edges, and the DuckDB oracle replays the
+    * draw bit-for-bit. */
+  private[graft] def doulionCoinE(k: Int): String =
     s"""pmod(cast(conv(substr(md5(concat('tri:', cast(a as string), '_',
        |cast(b as string))), 1, 8), 16, 10) as bigint), $k) = 0"""
       .stripMargin.replace("\n", " ")
@@ -380,15 +327,13 @@ FROM tri"""
   /** The PRODUCTION sampled census — what a 100 TB co-purchase graph
     * runs when the exact [[triangleCount]] is too expensive: the same
     * degree-ordered enumeration over the 1/k md5-sampled edge set
-    * ([[sampledUndirectedEdges]]), estimate scaled by k³. Exact on the
+    * ([[doulionCoinE]]), estimate scaled by k³. Exact on the
     * sampled graph and fully deterministic (the coin is a hash), so
     * the oracle replays it bit-for-bit — no weaker rows-only check
     * needed, unlike an RNG-seeded sampler. */
   def triangleDoulion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // served: the stored distinct edge set filtered by the same md5
-    // coin — identical to sampling the fresh pair stream (the coin is
-    // a pure function of the edge key; set semantics unchanged)
+    // the stored distinct edge set filtered by the md5 coin
     val (_, ne, _, ts) = censusOf(
       CopurchaseStore.edges(spark, dir).filter(expr(doulionCoinE(DoulionK))))
     val k3 = DoulionK.toLong * DoulionK * DoulionK

@@ -297,18 +297,11 @@ SELECT hours_since_last_run,
        quality_score AS overall_health_score
 FROM c"""
 
-  /** Render the rollup as the reference's consolidated monitoring report
-    * JSON (pipeline_monitor.py:213-266): pipeline_health, per-check
-    * blocks, an alerts array, overall_health_score. Runs the rollup once;
-    * written by the pipeline's monitoring stage. */
-  def monitoringReportJson(spark: SparkSession, dir: String,
-                           lastRunTs: String = Det.LastRunTs,
-                           monitoringTime: String = Det.AsOfTs): String =
-    reportJsonOver(healthRollupAt(lastRunTs, monitoringTime)(spark, dir),
-      lastRunTs, monitoringTime)
-
-  /** [[monitoringReportJson]] for a rollup relation built with the same
-    * `lastRunTs` and `monitoringTime` (e.g. by [[healthRollupOver]]). */
+  /** Render a rollup relation as the reference's consolidated monitoring
+    * report JSON (pipeline_monitor.py:213-266): pipeline_health, per-check
+    * blocks, an alerts array, overall_health_score. `rollup` must be built
+    * with the same `lastRunTs` and `monitoringTime` (by [[healthRollupAt]]
+    * or [[healthRollupOver]]); written by the pipeline's monitoring stage. */
   def reportJsonOver(rollup: DataFrame, lastRunTs: String, monitoringTime: String): String = {
     val r = rollup.head()
     def s(c: String) = r.getAs[String](c)

@@ -97,7 +97,6 @@ object Orchestrator {
     * attempt is still writing. Each job's Spark jobs carry the
     * description `<step>/<name>` in listener and event-log records. */
   def fanOut(spark: SparkSession, step: String, jobs: Seq[(String, () => Unit)]): Unit = {
-    val sc = spark.sparkContext
     val threads: ThreadFactory = { r =>
       val t = new Thread(r, s"fanout-$step")
       t.setDaemon(true)

@@ -439,12 +439,6 @@ ${recallSql("exact", "approx", TopK)}"""
       .sortBy(_._1)
   }
 
-  /** Frozen-centroid cell assignment of any (vec_id, embedding) frame
-    * — the stateless per-row map the ingest stream runs. */
-  private[graft] def assignFrozen(vecs: DataFrame,
-      centroids: Array[(Int, Array[Long])]): DataFrame =
-    assign(vecs, centroids)
-
   /** Lloyd over the even-id base, then frozen-centroid assignment of
     * the odd-id delta. */
   lazy val ivfDeltaAssignSql: String = s"""

@@ -285,7 +285,7 @@ object Pq {
              ORDER BY ${Grid.d2("s.qsub", "c.codeword")}, c.code) AS rn
     FROM ${pfx}sv s JOIN $cents c ON s.sub = c.sub) WHERE rn = 1)"""
 
-  private def pqIter(i: Int, pfx: String = ""): String = s"""
+  private def pqIter(i: Int, pfx: String): String = s"""
 ${nearestCodeCte(s"${pfx}a$i", pfx, s"${pfx}c${i - 1}")},
 ${pfx}m$i AS (
   SELECT sub, code, dim, CAST(floor(CAST(SUM(v) AS DOUBLE) / COUNT(*)) AS BIGINT) AS comp

@@ -5,8 +5,8 @@ import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsServerDefaults, LocalFileSystem, Path,
-  RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FSLinkResolver, FsServerDefaults,
+  LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -26,13 +26,43 @@ class NioLocalFileSystem extends LocalFileSystem(new NioLocalFileSystem.Raw)
 
 object NioLocalFileSystem {
 
-  /** The raw (checksum-free) half: only `setPermission` differs. A
-    * sticky mode, which NIO cannot spell, goes to Hadoop's own path. */
+  /** The raw (checksum-free) half: `setPermission` and the link lookups
+    * differ. A sticky mode, which NIO cannot spell, goes to Hadoop's own
+    * path.
+    *
+    * Without the native library, Hadoop's link-status lookup runs a
+    * `readlink` process per call (`FileUtil.readLink`), and passes it
+    * the `file:` URI string, which `readlink` cannot resolve, so a real
+    * symlink comes back as a plain file. Spark's streaming checkpoint
+    * asks `FileContext` for link status on every metadata write (32
+    * processes per small pipeline DAG). Here `java.nio` reads the link:
+    * a regular file or directory gets its `getFileStatus`, a symlink
+    * its target's status with the link's target, as Hadoop documents. */
   class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, permission: FsPermission): Unit =
       if (permission.getStickyBit) super.setPermission(p, permission)
       else Files.setPosixFilePermissions(pathToFile(p).toPath,
         PosixFilePermissions.fromString(permission.toString))
+
+    override def getFileLinkStatus(p: Path): FileStatus = {
+      val f = pathToFile(p).toPath
+      if (!Files.isSymbolicLink(f)) getFileStatus(p)
+      else {
+        val target = FSLinkResolver.qualifySymlinkTarget(getUri, p, getLinkTarget(p))
+        if (!Files.exists(f)) // dangling: Hadoop's zero status
+          new FileStatus(0, false, 0, 0, 0, 0, FsPermission.getDefault, "", "", target, p)
+        else {
+          val st = getFileStatus(p)
+          new FileStatus(st.getLen, false, st.getReplication, st.getBlockSize,
+            st.getModificationTime, st.getAccessTime, st.getPermission, st.getOwner,
+            st.getGroup, target, p)
+        }
+      }
+    }
+
+    /** The unqualified target; a path that is not a link throws. */
+    override def getLinkTarget(p: Path): Path =
+      new Path(Files.readSymbolicLink(pathToFile(p).toPath).toString)
   }
 
   /** The local filesystem of Hadoop's `FileContext` API (Spark's

@@ -385,7 +385,7 @@ SELECT phash60, MIN(doc_id) AS keeper_doc_id FROM ph GROUP BY phash60"""
     * the batch delta path row-for-row. */
   def annIngestStream(vecs: DataFrame,
       centroids: Array[(Int, Array[Long])]): DataFrame =
-    graft.sim.Ivf.assignFrozen(vecs, centroids)
+    graft.sim.Ivf.assign(vecs, centroids)
       .select(col("vec_id"), col("cell"))
 
   /** The documents parquet as a bounded file stream (the ingest-time

@@ -165,7 +165,7 @@ ORDER BY doc_id"""
     * DECIMAL(18,6) snap so distributed summation order cannot matter;
     * ranking orders by the exact decimal sum with doc_id tiebreak. */
   def bm25Search(spark: SparkSession, dir: String): DataFrame =
-    bm25Served(spark, dir)
+    bm25ServedFrom(bm25Index(spark, dir))
 
   /** Layout version of the persisted text index: bump when the
     * tokenizer ([[TextOps.toksE]]) or the table schema changes. */
@@ -207,61 +207,34 @@ ORDER BY doc_id"""
       bm25IndexTablesOver(docs(spark, dir))
     }
 
-  /** SERVE path: a STATIC `isin` on the fixed query vocabulary reaches
-    * the postings scan as a pushed parquet filter (the term-ordered
-    * layout makes row-group skipping effective), the tiny query list
-    * broadcasts onto what survives, and dl rides inside each posting —
-    * no corpus-sized scan, join, or aggregation anywhere on the query
-    * path. Scoring math is shared with the inline form
-    * ([[bm25ScoredFrom]]), and stored tf/df/dl/stats values equal the
-    * inline ones by construction, so the DuckDB oracle keeps
-    * hash-proving the served answer (RelevanceSpec also asserts
-    * served == inline row for row). */
-  private def bm25Served(spark: SparkSession, dir: String): DataFrame = {
+  /** The scorer over the inverted-index tables ([[bm25IndexTablesOver]]):
+    * a STATIC `isin` on the fixed query vocabulary reaches the postings
+    * scan as a pushed parquet filter (the term-ordered layout makes
+    * row-group skipping effective), the tiny query list broadcasts onto
+    * what survives, and dl rides inside each posting — no corpus-sized
+    * scan, join, or aggregation anywhere on the query path. Then
+    * tfq ⋈ broadcast df ⋈ broadcast stats → Σ per-(query, doc)
+    * decimal-snapped term scores → top-10 per query; both joined sides
+    * are bounded by the query vocabulary, so corpus size never enters.
+    * The registered op runs it over the stored index; RelevanceSpec
+    * runs it over index tables built in memory, so served == in-memory
+    * checks the store round trip. */
+  private def bm25ServedFrom(idx: Map[String, DataFrame]): DataFrame = {
+    val spark = idx("postings").sparkSession
     import spark.implicits._
-    val idx = bm25Index(spark, dir)
     val terms = Bm25Queries.map(_._2).distinct
     val q = Bm25Queries.toDF("query_id", "term")
     val tfq = idx("postings").filter(col("term").isin(terms: _*))
       .join(broadcast(q), "term")
       .select("query_id", "term", "doc_id", "tf", "dl")
-    bm25ScoredFrom(tfq, idx("df").filter(col("term").isin(terms: _*)),
-      idx("stats"))
-  }
-
-  /** Inline twin over any (doc_id, text) frame (RelevanceSpec surface;
-    * also the shape a one-shot scoring job without a persisted index
-    * runs). Must stay value-identical to the served path — the spec
-    * asserts it. */
-  private[graft] def bm25SearchOver(d: DataFrame): DataFrame = {
-    val spark = d.sparkSession
-    import spark.implicits._
-    val q = Bm25Queries.toDF("query_id", "term")
-    val occ = occurrencesOver(d)
-    val lens = occ.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-    val stats = lens.agg(count(lit(1)).as("n_docs"), sum("dl").as("total"))
-    val qocc = occ.join(broadcast(q), "term")
-    val tf = qocc.groupBy("query_id", "term", "doc_id").agg(count(lit(1)).as("tf"))
-    val dfq = qocc.select("term", "doc_id").distinct()
-      .groupBy("term").agg(count(lit(1)).as("df"))
-    bm25ScoredFrom(tf.join(lens, "doc_id")
-      .select("query_id", "term", "doc_id", "tf", "dl"), dfq, stats)
-  }
-
-  /** Shared scorer: tfq (query_id, term, doc_id, tf, dl) ⋈ broadcast
-    * df ⋈ broadcast stats → Σ per-(query, doc) decimal-snapped term
-    * scores → top-10 per query. Both joined sides are bounded by the
-    * query vocabulary (≤ |terms| rows), so this subtree's cost is the
-    * posting mass of the query terms — corpus size never enters. */
-  private def bm25ScoredFrom(tfq: DataFrame, dfT: DataFrame,
-                             stats: DataFrame): DataFrame = {
+    val dfT = idx("df").filter(col("term").isin(terms: _*))
     def D(c: String) = col(c).cast("double")
     val avgdl = D("total") / D("n_docs")
     val idf = log((D("n_docs") - D("df") + lit(0.5)) / (D("df") + lit(0.5)) + lit(1.0))
     val termScore = idf * (D("tf") * lit(K1 + 1.0)) /
       (D("tf") + lit(K1) * (lit(1.0 - B) + lit(B) * D("dl") / avgdl))
     val scored = tfq.join(broadcast(dfT), "term")
-      .crossJoin(broadcast(stats))
+      .crossJoin(broadcast(idx("stats")))
       .groupBy("query_id", "doc_id")
       .agg(sum(Det.dec6(termScore)).as("s"))
     scored
@@ -275,6 +248,12 @@ ORDER BY doc_id"""
           .as("bm25"))
       .orderBy("query_id", "rank")
   }
+
+  /** [[bm25Search]] over any (doc_id, text) frame, through index tables
+    * built in memory instead of the store (RelevanceSpec's surface for
+    * hand-made corpora). */
+  private[graft] def bm25SearchOver(d: DataFrame): DataFrame =
+    bm25ServedFrom(bm25IndexTablesOver(d))
 
   private val bm25SearchSql: String = {
     val values = Bm25Queries.map { case (q, t) => s"('$q', '$t')" }.mkString(", ")

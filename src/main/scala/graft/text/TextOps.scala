@@ -1093,9 +1093,11 @@ ORDER BY rank"""
     * adjacent pair remains. */
   val BpeTrainIters = 64
 
-  /** Vocabulary-size ceiling for DRIVER-SIDE training: above it the
-    * trainer falls back to the distributed per-iteration loop. The
-    * vocab is DISTINCT lowercase letter-runs — bounded by the language
+  /** Vocabulary-size ceiling for DRIVER-SIDE training: a larger
+    * vocabulary fails training with a defined error (the test corpora
+    * hold 31 distinct words at sf0.001–sf0.1, and the scale generator's
+    * ~440-word vocabulary stays far below it at every rung). The vocab
+    * is DISTINCT lowercase letter-runs — bounded by the language
     * (a few million types covers web-scale English), not by corpus
     * rows, which is why every industrial BPE trainer runs exactly this
     * shape: one distributed word-count pass, then local merge
@@ -1111,28 +1113,6 @@ ORDER BY rank"""
   /** Initial segmentation: the word as space-joined characters. */
   private val bpeCharSegE =
     "array_join(transform(sequence(1, length(word)), i -> substring(word, i, 1)), ' ')"
-
-  /** One BPE merge rule (a, b) applied to a space-joined symbol string
-    * as a single left fold — the standard greedy left-to-right apply.
-    * The accumulator is the already-merged prefix (space-joined); a
-    * merge fires when the prefix's LAST symbol is exactly `a` (checked
-    * via the `' ' || a` suffix so `xa` never false-matches `a`) and the
-    * incoming symbol is `b`. A left fold is equivalent to the textbook
-    * "merge the leftmost occurrence, repeat" loop for any single rule:
-    * the merged symbol `ab` can never re-form the pair's left element
-    * with the NEXT token (its name differs from `a`), so one pass
-    * suffices — BpeTrainSpec pins this against a from-scratch
-    * repeat-leftmost implementation on adversarial runs (`aaaaaa`,
-    * `ababab`). Symbols are lowercase letter-runs, so inlining them in
-    * single quotes is safe. */
-  private def bpeFoldE(segE: String, a: String, b: String): String = {
-    val la = a.length
-    s"""aggregate(split($segE, ' '), '', (acc, x) ->
-       |  CASE WHEN acc = '' THEN x
-       |       WHEN (acc = '$a' OR right(acc, ${la + 1}) = ' $a') AND x = '$b'
-       |         THEN concat(substring(acc, 1, length(acc) - $la), '${a + b}')
-       |       ELSE concat(acc, ' ', x) END)""".stripMargin
-  }
 
   /** The word-frequency vocabulary as a PERSISTED asset ([[graft.sim
     * .IndexStore]] protocol, the BM25-postings split applied to the
@@ -1223,25 +1203,24 @@ ORDER BY rank"""
     * fold chain to EVERY word EVERY iteration — O(K²·vocab), plus a
     * Spark argmax job per merge; at a 64-merge budget the driver
     * round-trips alone dominated). A vocabulary past
-    * [[BpeMaxLocalVocab]] falls back to the distributed loop
-    * ([[bpeTrainedMergesDistributed]]). Semantics are bit-identical
-    * across both paths and the DuckDB replay: counts are exact longs,
+    * [[BpeMaxLocalVocab]] fails the `require`. Semantics are
+    * bit-identical to the DuckDB replay: counts are exact longs,
     * the argmax order is (count desc, a asc, b asc) over ASCII
     * letter-run symbols (binary == lexicographic), and the greedy
     * left-to-right apply is BpeTrainSpec-pinned against the fold. */
   private[text] def bpeTrainedMergesOver(
       vocabDf: DataFrame): Seq[(Long, String, String, Long)] = {
     val head = vocabDf.limit(BpeMaxLocalVocab + 1).collect()
-    if (head.length > BpeMaxLocalVocab) bpeTrainedMergesDistributed(vocabDf)
-    else {
-      val wIdx = head.headOption.map(_.fieldIndex("word")).getOrElse(0)
-      val cIdx = head.headOption.map(_.fieldIndex("cnt")).getOrElse(1)
-      bpeTrainLocal(head.map(r => (r.getString(wIdx), r.getLong(cIdx))))
-    }
+    require(head.length <= BpeMaxLocalVocab,
+      s"BPE vocabulary exceeds $BpeMaxLocalVocab distinct words: driver-side training " +
+        "needs a min-frequency floor or a smaller corpus")
+    val wIdx = head.headOption.map(_.fieldIndex("word")).getOrElse(0)
+    val cIdx = head.headOption.map(_.fieldIndex("cnt")).getOrElse(1)
+    bpeTrainLocal(head.map(r => (r.getString(wIdx), r.getLong(cIdx))))
   }
 
   /** The greedy left-to-right single-rule apply, loop form — exactly
-    * [[bpeFoldE]]'s fold: merge when the output's LAST symbol is `a`
+    * the per-rule fold of [[bpeSegEFor]]: merge when the output's LAST symbol is `a`
     * and the incoming symbol is `b` (the merged token's name differs
     * from `a`, so one pass suffices; BpeTrainSpec pins fold == loop ==
     * textbook repeat-leftmost). */
@@ -1312,44 +1291,6 @@ ORDER BY rank"""
     merges.result()
   }
 
-  /** Distributed per-iteration fallback for vocabularies past the local
-    * ceiling: the round-13 loop — each iteration one argmax over the
-    * exploded adjacent pairs of the CACHED vocab under the rules
-    * learned so far (k-deep fold chain), one bounded collect. Correct
-    * at any vocabulary size; pays an extra vocab pass per iteration,
-    * which is why the local path is the default. */
-  private[text] def bpeTrainedMergesDistributed(
-      vocabDf: DataFrame): Seq[(Long, String, String, Long)] = {
-    val vocab = vocabDf.persist()
-    try {
-      val merges = Seq.newBuilder[(Long, String, String, Long)]
-      var segE = bpeCharSegE
-      var k = 1
-      var exhausted = false
-      while (k <= BpeTrainIters && !exhausted) {
-        val best = vocab
-          .select(col("cnt"), split(expr(segE), " ").as("l"))
-          .filter(size(col("l")) >= 2)
-          .select(col("cnt"), explode(expr(
-            "transform(sequence(1, size(l) - 1), " +
-              "i -> struct(element_at(l, i) AS a, element_at(l, i + 1) AS b))")).as("p"))
-          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-          .agg(sum(col("cnt")).cast(LongType).as("c"))
-          .orderBy(col("c").desc, col("a").asc, col("b").asc)
-          .limit(1)
-          .collect()
-        if (best.isEmpty) exhausted = true
-        else {
-          val (a, b, c) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-          merges += ((k.toLong, a, b, c))
-          segE = bpeFoldE(segE, a, b)
-          k += 1
-        }
-      }
-      merges.result()
-    } finally { vocab.unpersist(); () }
-  }
-
   /** The learned merge table — rank, the two merged symbols, and the
     * pair count that won the iteration. Registered so the oracle
     * replays the ENTIRE training loop (all [[BpeTrainIters]] argmax +
@@ -1385,7 +1326,7 @@ ORDER BY rank"""
   /** The unrolled training replay shared by both BPE-training oracles:
     * CTEs seg0..segN carry the evolving vocabulary segmentation, each
     * m<k> is that iteration's argmax, and the fold inside seg<k> is the
-    * same greedy left-to-right apply as [[bpeFoldE]] (string
+    * same greedy left-to-right apply as [[bpeSegEFor]] (string
     * accumulator via list_reduce with a prepended '' sentinel, since
     * DuckDB's reduce has no explicit zero). */
   /** The CTE list (no WITH keyword) for one training replay, with a
@@ -1494,8 +1435,15 @@ WHERE rank <= $BpeTopTokens ORDER BY rank"""
   /** The trained tokenizer as ONE segmentation expression: an outer
     * fold over the learned RULES array (driver constants after
     * [[bpeTrainedMerges]]'s bounded collect), whose step is the same
-    * greedy per-rule fold as [[bpeFoldE]] with the rule symbols read
-    * from the outer lambda variable. Sequential rule application in
+    * greedy left-to-right per-rule fold as the training loop's
+    * [[bpeApplyRule]], with the rule symbols read from the outer lambda
+    * variable. The fold's accumulator is the already-merged prefix; a
+    * merge fires when its LAST symbol is exactly `a` (checked via the
+    * `' ' || a` suffix so `xa` never false-matches `a`) and the incoming
+    * symbol is `b`. One pass per rule equals the textbook "merge the
+    * leftmost occurrence, repeat" loop, because the merged symbol `ab`
+    * can never re-form the rule's left element (BpeTrainSpec pins this
+    * on adversarial runs such as `aaaaaa` and `ababab`). Sequential rule application in
     * rank order — semantically the chained-literal-fold form, but the
     * expression TREE stays constant-size however big the merge budget:
     * at 64 rules the chained form was a 64-deep nested-aggregate tree

@@ -50,19 +50,15 @@ object Scd2 {
     * SCD2 batch contract) — duplicates would fan out the current rows
     * through the join, so they are rejected loudly. */
   def applyUpdates(current: DataFrame, updates: DataFrame, key: String,
-                   attrs: Seq[String], asOf: String,
-                   validate: Boolean = true): DataFrame = {
+                   attrs: Seq[String], asOf: String): DataFrame = {
     // The duplicate check runs an extra (small) job at call time — the
     // updates batch is the day's delta, orders of magnitude smaller
-    // than the dimension. Callers with pre-validated batches can pass
-    // validate = false to skip it.
-    if (validate) {
-      val dup = updates.groupBy(col(key)).count().filter(col("count") > 1).limit(1).collect()
-      if (dup.nonEmpty)
-        throw new IllegalArgumentException(
-          s"SCD2 updates batch has multiple rows for key $key=${dup.head.get(0)}; " +
-            "collapse the batch to one row per key first")
-    }
+    // than the dimension.
+    val dup = updates.groupBy(col(key)).count().filter(col("count") > 1).limit(1).collect()
+    if (dup.nonEmpty)
+      throw new IllegalArgumentException(
+        s"SCD2 updates batch has multiple rows for key $key=${dup.head.get(0)}; " +
+          "collapse the batch to one row per key first")
     // \u0001 separator / \u0000 null sentinel keep the change hash
     // unambiguous when attribute values contain each other's text.
     val changeHash = (df: DataFrame) => df.withColumn("_h", md5(concat_ws("\u0001",

@@ -1,19 +1,29 @@
 package graft
 
-import graft.analytics.Graph
+import graft.analytics.{CopurchaseStore, Graph}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.expr
 
-/** Integer PageRank invariants (the oracle proves cross-engine value
-  * equality; these prove the algorithm's contract). */
+/** Integer PageRank and triangle-census invariants (the oracle proves
+  * cross-engine value equality; these prove the algorithm's contract).
+  * Census cases build the co-purchase tables from hand-made baskets
+  * with the store's own build function and run the registered tail. */
 class GraphSpec extends SparkSpec {
   import spark.implicits._
+
+  private def edgesOf(li: DataFrame): DataFrame =
+    CopurchaseStore.edgesOf(CopurchaseStore.basketTablesOf(li))
+
+  private def censusOf(li: DataFrame) = Graph.censusRowOf(spark, edgesOf(li)).head()
+
+  private def sampledEdgesOf(li: DataFrame): DataFrame =
+    edgesOf(li).filter(expr(Graph.doulionCoinE(Graph.DoulionK)))
 
   test("hand-computed two-node graph, one iteration") {
     // A -> B (w=1). outw(A)=1. After 1 iter:
     //   contrib(B) = (INIT*1) div 1 = INIT
     //   r(B) = 15%INIT + 85%INIT = INIT; r(A) = 15%INIT (no in-edges)
-    val edges = Seq(("A", "B", 1L)).toDF("src", "dst", "w")
-    val r = Graph.pagerank(edges, iters = 1).collect()
-      .map(x => x.getString(0) -> x.getLong(1)).toMap
+    val r = Graph.pagerankLocal(Seq(("A", "B", 1L)), iters = 1)
     val base = 15L * Graph.RankInit / 100L
     assert(r("A") == base)
     assert(r("B") == base + 85L * Graph.RankInit / 100L)
@@ -30,27 +40,14 @@ class GraphSpec extends SparkSpec {
     assert(total <= ranks.length * Graph.RankInit)
   }
 
-  test("driver-local rank loop is bit-equal to the distributed core") {
-    // pagerankNationTrade runs the integer recurrence on the driver
-    // (the nation graph is schema-bounded); the distributed pagerank
-    // over the same edges must produce the identical rank map
-    val edgesDf = Graph.tradeEdges(spark, sf)
-    val dist = Graph.pagerank(edgesDf).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val local = Graph.pagerankLocal(
-      edgesDf.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq)
-    assert(local == dist, "local and distributed ranks diverged")
-    // and the registered query returns exactly the distributed ranks
+  test("driver-local rank loop over fresh trade edges equals the served ranks") {
+    // the registered query ranks the STORED trade edges; the same loop
+    // over edges derived fresh from the fact tables gives the same map
+    val local = Graph.pagerankLocal(Graph.tradeEdges(spark, sf).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq)
     val served = Graph.pagerankNationTrade(spark, sf).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(served == dist)
-  }
-
-  test("iteration is deterministic under repartitioning") {
-    val edges = Graph.tradeEdges(spark, sf)
-    val a = Graph.pagerank(edges, 3).orderBy("node").collect().toSeq
-    val b = Graph.pagerank(edges.repartition(7), 3).orderBy("node").collect().toSeq
-    assert(a == b, "rank values depend on partitioning")
+    assert(local.nonEmpty && served == local)
   }
 
   test("triangle census on a hand-computed co-purchase graph") {
@@ -63,14 +60,14 @@ class GraphSpec extends SparkSpec {
       (40L, 5L),
       (10L, 1L)) // duplicate line must not create a self-edge or recount
       .toDF("l_orderkey", "l_partkey")
-    val r = Graph.triangleCountOver(li).head()
+    val r = censusOf(li)
     assert(r.getAs[Long]("n_vertices") == 4L) // isolated part 5 excluded
     assert(r.getAs[Long]("n_edges") == 5L)
     assert(r.getAs[Long]("n_wedges") == 8L)
     assert(r.getAs[Long]("n_triangles") == 2L)
     assert(r.getAs[Double]("transitivity") == 3.0 * 2L / 8L)
     // census is partition-layout invariant
-    val again = Graph.triangleCountOver(li.repartition(7)).head()
+    val again = censusOf(li.repartition(7))
     assert(r.toSeq == again.toSeq)
   }
 
@@ -79,7 +76,7 @@ class GraphSpec extends SparkSpec {
     // zeros and a NULL transitivity, not NPE on a null wedge sum or
     // divide 0/0 into NaN
     val li = Seq((10L, 1L), (20L, 2L)).toDF("l_orderkey", "l_partkey")
-    val r = Graph.triangleCountOver(li).head()
+    val r = censusOf(li)
     assert(r.getAs[Long]("n_vertices") == 0L)
     assert(r.getAs[Long]("n_edges") == 0L)
     assert(r.getAs[Long]("n_wedges") == 0L)
@@ -92,14 +89,14 @@ class GraphSpec extends SparkSpec {
     // kept edge must appear in the exact edge set (sampling the edge
     // SET, deterministic under repartitioning)
     val li = (1 to 12).map(p => (1L, p.toLong)).toDF("l_orderkey", "l_partkey")
-    val exact = Graph.undirectedEdges(li).collect()
+    val exact = edgesOf(li).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val sampled = Graph.sampledUndirectedEdges(li, Graph.DoulionK).collect()
+    val sampled = sampledEdgesOf(li).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(sampled.subsetOf(exact))
     assert(sampled.nonEmpty && sampled.size < exact.size,
       s"coin should keep a strict nonempty subset: ${sampled.size}/${exact.size}")
-    val again = Graph.sampledUndirectedEdges(li.repartition(5), Graph.DoulionK)
+    val again = sampledEdgesOf(li.repartition(5))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(again == sampled, "the md5 coin must be layout-invariant")
   }
@@ -114,9 +111,8 @@ class GraphSpec extends SparkSpec {
         // 4-item baskets over a 60-part catalog: triangle-rich overlap
         (0 until 4).map(s => (o.toLong, ((o * 7 + s * 13) % 60).toLong))
       }.toDF("l_orderkey", "l_partkey")
-      val exact = Graph.triangleCountOver(li).head().getAs[Long]("n_triangles")
-      val ts = Graph.trianglesOfEdges(
-        Graph.sampledUndirectedEdges(li, Graph.DoulionK))
+      val exact = censusOf(li).getAs[Long]("n_triangles")
+      val ts = Graph.trianglesOfEdges(sampledEdgesOf(li))
       val est = ts * k3
       assert(math.abs(est - exact).toDouble <=
         5.0 * math.sqrt((exact + 1).toDouble * k3),

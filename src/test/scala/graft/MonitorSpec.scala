@@ -47,14 +47,15 @@ class MonitorSpec extends SparkSpec {
   }
 
   test("monitoring report JSON carries the verdict and alerts consistently") {
-    val json = Monitor.monitoringReportJson(spark, sf,
-      lastRunTs = "2024-01-30 12:00:00")
+    def report(lastRun: String) =
+      Monitor.reportJsonOver(Monitor.healthRollupAt(lastRun)(spark, sf), lastRun, Det.AsOfTs)
+    val json = report("2024-01-30 12:00:00")
     assert(json.contains(""""pipeline_health":"critical""""))
     assert(json.contains(""""check":"last_execution""""))
     assert(json.contains(""""threshold_hours":25"""))
     assert(json.contains(""""overall_health_score":"""))
     // healthy-side report has no critical alert
-    val ok = Monitor.monitoringReportJson(spark, sf)
+    val ok = report(Det.LastRunTs)
     assert(!ok.contains(""""severity":"critical""""))
   }
 

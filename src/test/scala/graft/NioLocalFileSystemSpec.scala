@@ -53,4 +53,28 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
     fc.create(new Path(new Path(root.toUri), "f"), EnumSet.of(CreateFlag.CREATE)).close()
     assert(Seq("f", ".f.crc").map(r => mode(root.resolve(r))) == Seq("rw-r--r--", "rw-r--r--"))
   }
+
+  test("link status through FileContext: a file is its own status, a symlink names its target") {
+    // Spark's streaming checkpoint asks FileContext for link status;
+    // Hadoop's lookup starts a readlink process per call without the
+    // native library
+    val conf = new Configuration()
+    conf.set("fs.AbstractFileSystem.file.impl", classOf[NioLocalFileSystem.Fs].getName)
+    val root = Files.createTempDirectory("graft_nio_link")
+    val fc = FileContext.getFileContext(root.toUri, conf)
+    val f = new Path(new Path(root.toUri), "f")
+    val out = fc.create(f, EnumSet.of(CreateFlag.CREATE))
+    out.write(Array[Byte](1, 2, 3))
+    out.close()
+    val (link, st) = (fc.getFileLinkStatus(f), fc.getFileStatus(f))
+    assert(!link.isSymlink && link.isFile)
+    assert((link.getPath, link.getLen, link.getModificationTime, link.getPermission) ==
+      (st.getPath, st.getLen, st.getModificationTime, st.getPermission))
+    Files.createSymbolicLink(root.resolve("l"), root.resolve("f"))
+    val l = fc.getFileLinkStatus(new Path(new Path(root.toUri), "l"))
+    assert(l.isSymlink, s"a symlink reported as $l")
+    assert(l.getSymlink.toUri.getPath == root.resolve("f").toString)
+    assert(fc.getLinkTarget(new Path(new Path(root.toUri), "l")).toUri.getPath ==
+      root.resolve("f").toString)
+  }
 }

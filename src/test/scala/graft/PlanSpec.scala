@@ -74,26 +74,6 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("partitioned parquet layout prunes partitions at planning time") {
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString + "/orders"
-    val orders = Tables.orders(spark, sf)
-      .withColumn("order_year", year(col("o_orderdate").cast("date")))
-    graft.sources.Sources.writePartitioned(orders, dir, Seq("order_year"))
-
-    val pruned = spark.read.parquet(dir).filter(col("order_year") === 1995)
-    val plan = pruned.queryExecution.executedPlan.toString
-    val pf = plan.linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
-    assert(pf.contains("order_year"), s"expected a partition filter, plan:\n${plan.take(1500)}")
-    // pruning must reach the scan: only the one matching directory is read
-    val scanned = pruned.queryExecution.executedPlan.collectFirst {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.selectedPartitions.partitionCount
-    }
-    assert(scanned.contains(1), s"expected exactly 1 partition scanned, got $scanned")
-    // and the data round-trips
-    assert(pruned.count() == orders.filter(col("order_year") === 1995).count())
-  }
-
   test("headline queries broadcast every dimension (no sort-merge fallback)") {
     // the per-query latency story rests on dims arriving via broadcast;
     // a statistics or threshold regression that flips one to sort-merge
@@ -267,7 +247,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val li = Tables.lineitem(spark, sf)
       .select(col("l_orderkey"), col("l_partkey"))
-    val edges = analytics.Graph.undirectedEdges(li)
+    val edges = analytics.CopurchaseStore.edgesOf(analytics.CopurchaseStore.basketTablesOf(li))
     val oriented = analytics.Graph.orientedOver(edges,
       analytics.Graph.degreesOf(edges))
     val plan = physicalPlan(analytics.Graph.triangleBaseCounts(oriented))

@@ -100,9 +100,9 @@ class RelevanceSpec extends SparkSpec {
 
   test("served bm25 (persisted index) equals the inline computation row for row") {
     // the registered op serves from the IndexStore vintage; the inline
-    // twin re-derives postings/df/lens/stats per call — they must be
+    // form scores the same index tables built in memory — they must be
     // value-identical (same scores, same ranks, same ties), or the
-    // build/serve split silently changed the operator
+    // store's write/read round trip changed the operator
     val served = Relevance.bm25Search(spark, sf).collect().map(_.toSeq)
     val inline = Relevance.bm25SearchOver(Tables.documents(spark, sf))
       .collect().map(_.toSeq)

@@ -92,19 +92,22 @@ class SessionsSpec extends AnyFunSuite {
 
 object SessionsSpec {
 
-  /** Paths of the `src/main/scala` sources, other than the `allowed`
-    * file names, in which `pattern` occurs. */
-  def mainSourcesMatching(pattern: scala.util.matching.Regex, allowed: Set[String]): Seq[String] = {
+  /** Each `src/main/scala` source file with its text, in path order. */
+  def mainSources(): Seq[(java.io.File, String)] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"source root not found from ${root.getAbsolutePath}")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-    walk(root)
-      .filter(f => f.getName.endsWith(".scala") && !allowed(f.getName))
-      .filter { f =>
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try pattern.findFirstIn(src.mkString).isDefined finally src.close()
-      }
-      .map(_.getPath)
+    walk(root).filter(_.getName.endsWith(".scala")).sortBy(_.getPath).map { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try f -> src.mkString finally src.close()
+    }
   }
+
+  /** Paths of the `src/main/scala` sources, other than the `allowed`
+    * file names, in which `pattern` occurs. */
+  def mainSourcesMatching(pattern: scala.util.matching.Regex, allowed: Set[String]): Seq[String] =
+    mainSources().collect {
+      case (f, text) if !allowed(f.getName) && pattern.findFirstIn(text).isDefined => f.getPath
+    }
 }
