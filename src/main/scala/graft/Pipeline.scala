@@ -50,11 +50,7 @@ object Pipeline {
     SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[sources.NioLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[sources.NioLocalFileSystem.Fs].getName)
+      .config(Sessions.LocalConfs.toMap)
 
   /** The eight-stage DAG as orchestrated steps, under the evaluation
     * profile [[interpretedProfile]] picks from the source bytes. */

@@ -66,16 +66,12 @@ object Sessions {
       .config("spark.shuffle.compress", "false")
       .config("spark.shuffle.spill.compress", "false")
       .config("spark.locality.wait", "0")
-      .config("spark.sql.session.timeZone", "UTC")
+      .config(LocalConfs.toMap)
       // events.ts nanos vintage reads as long (Tables.normalizeTs);
       // set at construction so concurrent callers never mutate runtime
       // conf (Tables.events still sets it defensively for foreign
       // sessions — constant value, so the write is race-free)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl", classOf[sources.NioLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[sources.NioLocalFileSystem.Fs].getName)
     val tuned =
       if (adaptive) b
         .config("spark.sql.shuffle.partitions", initialPartitions.toString)
@@ -90,6 +86,40 @@ object Sessions {
         .config("spark.sql.adaptive.enabled", "false")
     tuned.withExtensions(new functions.GraftExtensions)
   }
+
+  /** Capacity of Spark's cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100): every
+    * class the registered ops generate stays resident for the life of
+    * the JVM, so a warm session compiles each once. The cache evicts
+    * least-recently-used, so a rotation over more distinct classes than
+    * it holds evicts each before it comes round again: the 10
+    * `corpus_ops` benchmark ops generate 160 classes and recompiled
+    * 119–138 of them on every warm pass. One pass over every registered key at
+    * sf0.001 generates 2,254 classes (static profile) or 2,323
+    * (`SPARK_GRAFT_AQE=1`), and at Spark's default its second pass
+    * recompiled 3,009; at this capacity it compiles none, and Metaspace
+    * holds under 200 MB (docs/PERF_NOTES.md, "One compile per generated
+    * class"). Bounded, with room for the surface to grow about
+    * threefold, so a long-lived session cannot grow without limit. A
+    * static conf, read once when Spark's code generator is first used,
+    * so it is set at session construction ([[EngineConfs]]). */
+  val CodegenCacheEntries: Int = 8192
+
+  /** The settings every graft session carries, local or cluster: UTC
+    * (every date oracle depends on it) and the [[CodegenCacheEntries]]
+    * capacity. */
+  private[graft] val EngineConfs: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString)
+
+  /** [[EngineConfs]] and the single-JVM settings every local session
+    * ([[localBuilder]], `graft.Pipeline`) carries: no web UI, and the
+    * local filesystem through [[sources.NioLocalFileSystem]] for both
+    * Hadoop filesystem APIs. A cluster keeps its UI and filesystems. */
+  private[graft] val LocalConfs: Seq[(String, String)] = EngineConfs ++ Seq(
+    "spark.ui.enabled" -> "false",
+    "spark.hadoop.fs.file.impl" -> classOf[sources.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[sources.NioLocalFileSystem.Fs].getName)
 
   /** Every unpartitioned window a registered query plans is listed in
     * its op's [[Op.hazards]] under [[Op.GlobalWindow]], with the reason
@@ -121,7 +151,8 @@ object Sessions {
     *  - broadcast threshold raised to 64 MB: every dimension in this
     *    schema fits and must never sort-merge.
     *  - compression back ON (network/disk bound, not CPU bound).
-    *  - UTC timezone is load-bearing for the date logic; the
+    *  - [[EngineConfs]]: the UTC timezone is load-bearing for the date
+    *    logic, and every generated class stays compiled; the
     *    GraftExtensions registration makes minhash_sig/qdot/topk_by
     *    available to plain SQL users.
     */
@@ -134,7 +165,7 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", "2000")
       .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
       .config("spark.sql.files.maxPartitionBytes", "256m")
-      .config("spark.sql.session.timeZone", "UTC")
+      .config(EngineConfs.toMap)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .withExtensions(new functions.GraftExtensions)
 }

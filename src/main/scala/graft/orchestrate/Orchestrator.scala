@@ -81,7 +81,7 @@ object Orchestrator {
   }
 
   /** Janino compiles so far in this JVM. */
-  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  private[graft] def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Most threads one [[fanOut]] starts: one per output, and no step
     * has more than ten. */

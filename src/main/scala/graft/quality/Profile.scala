@@ -1,6 +1,7 @@
 package graft.quality
 
-import graft.{Op, Tables}
+import graft.{Memo, Op, Tables}
+import graft.sim.IndexStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -106,9 +107,21 @@ object Profile {
 
   /** Registered op: profiles of `documents` and `orders`, unioned. */
   def profileTables(spark: SparkSession, dir: String): DataFrame =
-    profileOver(Tables.documents(spark, dir), "documents", docCols)
-      .unionAll(profileOver(Tables.orders(spark, dir), "orders", orderCols))
+    profileOver(source(spark, dir, "documents")(Tables.documents), "documents", docCols)
+      .unionAll(profileOver(source(spark, dir, "orders")(Tables.orders), "orders", orderCols))
       .orderBy("tbl", "col_name", "metric")
+
+  /** A profiled table as one handle per session and table vintage.
+    * Spark's distinct-aggregate rewrite orders the Expand's projections
+    * and the aggregate's grouping keys by the hash of each distinct
+    * column's expression id. A fresh read gives the columns fresh ids,
+    * so each call generated differently ordered code and compiled its
+    * classes again (10–12 per call); one handle keeps the ids, hence the
+    * code, the same on every call. */
+  private def source(spark: SparkSession, dir: String, table: String)(
+      read: (SparkSession, String) => DataFrame): DataFrame =
+    Memo(spark, ("profile_source", dir, table), IndexStore.vintage(spark, dir, Seq(table)))(
+      read(spark, dir))
 
   val profileTablesSql: String =
     s"""WITH ${sqlOver("documents", docCols)},

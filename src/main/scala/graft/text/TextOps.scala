@@ -678,12 +678,20 @@ WHERE CAST(i AS DOUBLE) / CAST(least(x.n, y.n) AS DOUBLE) >= $ContainmentThresho
     * all-pairs), and [[HotShingleDfCap]] keeps boilerplate shingles from
     * counting as contamination or exploding the join. */
   def decontamination(spark: SparkSession, dir: String): DataFrame = {
-    val capped = cappedShingles(docs(spark, dir))
-    val bench = capped.filter(col("source") === BenchmarkSource)
-      .select(col("s"), col("doc_id").as("bench_doc"))
-    capped.filter(col("source") =!= BenchmarkSource)
-      .select("doc_id", "s")
-      .join(bench, "s")
+    // one handle per session and vintage: Spark orders the two distinct
+    // counts' generated code by their columns' expression ids, so a
+    // frame built per call compiled one of two orderings at random
+    // (graft.quality.Profile.source)
+    val matches = graft.Memo(spark, ("decontamination_matches", dir),
+      graft.sim.IndexStore.vintage(spark, dir, Seq("documents"))) {
+      val capped = cappedShingles(docs(spark, dir))
+      val bench = capped.filter(col("source") === BenchmarkSource)
+        .select(col("s"), col("doc_id").as("bench_doc"))
+      capped.filter(col("source") =!= BenchmarkSource)
+        .select("doc_id", "s")
+        .join(bench, "s")
+    }
+    matches
       .groupBy("doc_id")
       .agg(
         countDistinct(col("s")).as("shared_shingles"),
@@ -1455,7 +1463,7 @@ WHERE rank <= $BpeTopTokens ORDER BY rank"""
 
   /** The rules-array segmentation expression for a fixed merge table
     * (symbols are lowercase letter-runs — single-quote-inline safe). */
-  private[text] def bpeSegEFor(merges: Seq[(Long, String, String, Long)]): String =
+  private[graft] def bpeSegEFor(merges: Seq[(Long, String, String, Long)]): String =
     if (merges.isEmpty) bpeCharSegE
     else {
       val rules = merges

@@ -13,7 +13,8 @@ import scala.collection.mutable
   * pair via the repeat-leftmost loop, re-count. The Spark side applies
   * each rule as a single left fold — the equivalence of fold and
   * repeat-leftmost for a single rule is exactly what the adversarial
-  * fold test exercises (self-overlapping runs are where a naive
+  * fold test exercises on the served expression,
+  * [[TextOps.bpeSegEFor]] (self-overlapping runs are where a naive
   * replace-all diverges). */
 class BpeTrainSpec extends SparkSpec {
 
@@ -114,16 +115,9 @@ class BpeTrainSpec extends SparkSpec {
     // (a,a) then (aa,aa) -> 'aaaa aa', never 'aa aaaa' or 'aaa aaa')
     val words = Seq("aaaaaa", "aaaa", "aaa", "ababab", "baab", "xyzzy", "a")
     val rules = Seq(("a", "a"), ("aa", "aa"), ("a", "b"), ("z", "z"))
-    val segE = rules.foldLeft(
-      "array_join(transform(sequence(1, length(word)), i -> substring(word, i, 1)), ' ')") {
-      case (e, (a, b)) =>
-        val la = a.length
-        s"""aggregate(split($e, ' '), '', (acc, x) ->
-           |  CASE WHEN acc = '' THEN x
-           |       WHEN (acc = '$a' OR right(acc, ${la + 1}) = ' $a') AND x = '$b'
-           |         THEN concat(substring(acc, 1, length(acc) - $la), '${a + b}')
-           |       ELSE concat(acc, ' ', x) END)""".stripMargin
-    }
+    // the expression the tokenizer serves, over these rules as a merge
+    // table in rank order
+    val segE = TextOps.bpeSegEFor(rules.zipWithIndex.map { case ((a, b), i) => (i + 1L, a, b, 0L) })
     import spark.implicits._
     val got = words.toDF("word").select(expr(segE)).as[String].collect().toSeq
     val want = words.map { w =>

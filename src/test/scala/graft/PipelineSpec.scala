@@ -4,7 +4,6 @@ import graft.multimodal.Multimodal
 import graft.orchestrate.Orchestrator
 import graft.sources.Sources
 import graft.warehouse.Scd2
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -14,13 +13,6 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 class PipelineSpec extends SparkSpec {
-
-  /** Classes Spark's code generator compiles while `body` runs. */
-  private def compilesIn(body: => Any): Long = {
-    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    body
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
-  }
 
   /** Compiles a whole sf0.001 DAG ran under the interpreted profile: 55
     * in a fresh JVM (`runMain graft.Pipeline`), against 533 compiled. */

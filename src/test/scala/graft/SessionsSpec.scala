@@ -40,6 +40,7 @@ class SessionsSpec extends AnyFunSuite {
     assert(opts("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(opts("spark.sql.autoBroadcastJoinThreshold").toLong == 64L * 1024 * 1024)
     assert(opts("spark.sql.files.maxPartitionBytes") == "256m")
+    assert(opts("spark.sql.codegen.cache.maxEntries") == Sessions.CodegenCacheEntries.toString)
   }
 
   test("local profile: UTC, nanos-as-long, compression off, AQE off at the given partition count") {
@@ -51,6 +52,7 @@ class SessionsSpec extends AnyFunSuite {
     assert(opts("spark.sql.shuffle.partitions") == "8")
     assert(opts("spark.shuffle.compress") == "false")
     assert(opts("spark.shuffle.spill.compress") == "false")
+    assert(opts("spark.sql.codegen.cache.maxEntries") == Sessions.CodegenCacheEntries.toString)
     assert(opts("spark.hadoop.fs.file.impl") == classOf[sources.NioLocalFileSystem].getName)
     assert(opts("spark.hadoop.fs.AbstractFileSystem.file.impl") ==
       classOf[sources.NioLocalFileSystem.Fs].getName)
@@ -61,6 +63,7 @@ class SessionsSpec extends AnyFunSuite {
     assert(opts("spark.master") == "local[3]")
     assert(opts("spark.sql.shuffle.partitions") == "3")
     assert(opts("spark.sql.session.timeZone") == "UTC")
+    assert(opts("spark.sql.codegen.cache.maxEntries") == Sessions.CodegenCacheEntries.toString)
     assert(opts("spark.hadoop.fs.file.impl") == classOf[sources.NioLocalFileSystem].getName)
     assert(opts("spark.hadoop.fs.AbstractFileSystem.file.impl") ==
       classOf[sources.NioLocalFileSystem.Fs].getName)
@@ -74,6 +77,7 @@ class SessionsSpec extends AnyFunSuite {
     assert(opts("spark.sql.adaptive.coalescePartitions.parallelismFirst") == "false")
     assert(opts("spark.sql.session.timeZone") == "UTC")
     assert(opts("spark.shuffle.compress") == "false")
+    assert(opts("spark.sql.codegen.cache.maxEntries") == Sessions.CodegenCacheEntries.toString)
     val big = builderOptions(Sessions.localBuilder(cores = 4, shufflePartitions = 512, adaptive = true))
     assert(big("spark.sql.shuffle.partitions") == "512")
     assert(big("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "512")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,6 +24,13 @@ trait SparkSpec extends AnyFunSuite {
     }
     cur
   }
+
+  /** Classes Spark's code generator compiles while `body` runs. */
+  def compilesIn(body: => Any): Long = {
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+  }
 }
 
 object SparkSpec {
@@ -30,7 +38,8 @@ object SparkSpec {
     val s = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+      // UTC and the production codegen cache capacity
+      .config(Sessions.EngineConfs.toMap)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

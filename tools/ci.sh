@@ -57,6 +57,9 @@ echo "== [4/6] dev mains smoke ($SF), plan audit ($SMALL) =="
 # Verify; run each once so a rewiring cannot rot them silently
 sbt -batch "runMain graft.Probe $SF q01_top_products 2" | tee "$WORK/probe.log"
 grep -q 'q01_top_products rows=' "$WORK/probe.log"
+# the second call compiles no class: the op generates the same code on
+# every call, and its classes stay in the code generator's cache
+grep -Eq '^\[probe\] q01_top_products compiles per call: [0-9]+ 0$' "$WORK/probe.log"
 sbt -batch "runMain graft.ExplainDump $SF $WORK/plans.md q01_top_products"
 grep -q '^## q01_top_products' "$WORK/plans.md"
 # the plan audit of every registered key, regenerated in a JVM of its own
